@@ -37,15 +37,6 @@ HEAP = "3g"
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 840
 NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
 
 
 def fail(msg):
@@ -86,15 +77,20 @@ def source_stamp():
 
 def build():
     """Compile engine + benchmark once per source state; returns the
-    runtime classpath."""
+    runtime classpath and the JVM flags the build names."""
     cp_file = os.path.join(HERE, "target", "classpath.txt")
+    opts_file = os.path.join(HERE, "target", "java-options.txt")
     stamp_file = os.path.join(BUILD, "build.stamp")
     stamp = source_stamp()
-    if os.path.exists(cp_file) and os.path.exists(stamp_file):
+
+    def built():
+        with open(cp_file) as fh, open(opts_file) as oh:
+            return fh.read().strip(), oh.read().split()
+
+    if all(os.path.exists(f) for f in (cp_file, opts_file, stamp_file)):
         with open(stamp_file) as fh:
             if fh.read() == stamp:
-                with open(cp_file) as fh:
-                    return fh.read().strip()
+                return built()
     if shutil.which("sbt") is None:
         fail("sbt not found on PATH")
     tmp = os.path.join(BUILD, "sbt-tmp")
@@ -105,12 +101,11 @@ def build():
                                 f"-Djava.io.tmpdir={tmp}", "writeClasspath"],
                                HERE, BUILD_TIMEOUT_S, stdout=fh, stderr=subprocess.STDOUT,
                                stdin=subprocess.DEVNULL)
-    if code != 0 or not os.path.exists(cp_file):
+    if code != 0 or not (os.path.exists(cp_file) and os.path.exists(opts_file)):
         fail(f"build failed (exit {code}); see {log}")
     with open(stamp_file, "w") as fh:
         fh.write(stamp)
-    with open(cp_file) as fh:
-        return fh.read().strip()
+    return built()
 
 
 def main():
@@ -128,21 +123,18 @@ def main():
     if shutil.which("java") is None:
         fail("java not found on PATH")
 
-    classpath = build()
+    classpath, java_opts = build()
     run_dir = os.path.join(BUILD, "run")
     shutil.rmtree(run_dir, ignore_errors=True)
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp)
-    threads = min(4, len(os.sched_getaffinity(0)))
-    opens = [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
     # -XX:-UsePerfData: no hsperfdata file outside the checkout
-    cmd = ["java", *opens, f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:-UsePerfData",
+    cmd = ["java", *java_opts, f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:-UsePerfData",
            f"-Djava.io.tmpdir={tmp}",
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
            "-cp", classpath, "perfbench.Main",
            "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-           "--trace", a.trace, "--dir", os.path.join(run_dir, a.workload),
-           "--threads", str(threads)]
+           "--trace", a.trace, "--dir", os.path.join(run_dir, a.workload)]
     with open(os.path.join(BUILD, "last_run.log"), "w") as err:
         code, out, _ = run_group(cmd, ROOT, RUN_TIMEOUT_S, stdout=subprocess.PIPE,
                                  stderr=err, stdin=subprocess.DEVNULL, text=True)

@@ -19,7 +19,7 @@ final class EtlBatch(val ctx: Ctx) extends Workload {
   def warmupOps: Int = 1
   def cycleSeconds: Double = 12.0
 
-  def generate(): Map[String, Any] = {
+  def generate(ops: Int): Map[String, Any] = {
     Gen.lineitem(spark, lineitemRows, ctx.seed, dupShare).write.parquet(li)
     Gen.orders(spark, lineitemRows / 4, ctx.seed).write.parquet(ord)
     val liRows = spark.read.parquet(li).count()

@@ -9,6 +9,20 @@ import graft.tools.ZipfText
   * same files under any partitioning. Text comes from [[ZipfText]]. */
 object Gen {
 
+  /** A generator for row `id` under `seed`. The pair is hashed first:
+    * `java.util.Random` seeded with nearby values gives correlated first
+    * draws, so seeds 11, 12, 13, ... would give inputs that drift
+    * together instead of independent ones. */
+  def rng(seed: Long, id: Long): scala.util.Random = new scala.util.Random(mix(mix(seed) ^ id))
+
+  /** The splitmix64 finalizer. */
+  def mix(x: Long): Long = {
+    var z = x + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
   // ---------------------------------------------------------------- star
 
   /** A uniform draw in [0, m) for column `salt` of row `id`. */
@@ -74,7 +88,7 @@ object Gen {
     @transient private lazy val vocab = ZipfText.vocabulary(30000)
     @transient private lazy val cdf = ZipfText.zipfCdf(vocab.length)
 
-    private def rnd(id: Long) = new scala.util.Random(seed * 1000003L + id)
+    private def rnd(id: Long) = rng(seed, id)
 
     /** Near duplicates need long sources: replacing one of n >= 70
       * tokens keeps word-3-shingle Jaccard above 0.9. */
@@ -88,7 +102,7 @@ object Gen {
 
     private def original(id: Long): String = {
       val r = rnd(id ^ 0x5bd1e995L)
-      val body = ZipfText.doc(id, vocab, cdf, minTokens, maxTokens, seed)
+      val body = ZipfText.doc(id, vocab, cdf, minTokens, maxTokens, mix(seed))
       r.nextInt(40) match {
         case 0 => s"$body contact user${r.nextInt(9999)}@mail${r.nextInt(99)}.example.com"
         case 1 => s"$body call ${200 + r.nextInt(700)}-555-${1000 + r.nextInt(9000)}"

@@ -11,8 +11,9 @@ import graft.streaming.CorpusIngest
   * with `compactLake` and `IncrementalAgg.compact` every
   * `compactEvery` batches — followed by a query: the running
   * aggregate's `result().collect()` and a `readLake` count. A share of
-  * each batch repeats documents offered earlier. */
-final class IncrementalIngest(val ctx: Ctx, batchDocs: Int, nBatches: Int, compactEvery: Int)
+  * each batch repeats documents offered earlier. A run generates one
+  * batch per op it will issue. */
+final class IncrementalIngest(val ctx: Ctx, batchDocs: Int, compactEvery: Int)
     extends Workload {
   private val repeatShare = 0.2
   private val batches = ctx.path("batches")
@@ -22,18 +23,20 @@ final class IncrementalIngest(val ctx: Ctx, batchDocs: Int, nBatches: Int, compa
   private val metrics = Seq(IncrementalAgg.Count("docs"), IncrementalAgg.Sum("n_chars", "chars"),
     IncrementalAgg.Min("n_chars", "min_chars"), IncrementalAgg.Max("n_chars", "max_chars"))
   private var batchBytes = Map.empty[Int, Long]
+  private var nBatches = 0
 
   def warmupOps: Int = compactEvery
   def cycleSeconds: Double = 2.5
 
   /** Doc `id` of batch `id / batchDocs`: a fresh long document, or with
     * probability `repeatShare` the text of an earlier fresh one. */
-  def generate(): Map[String, Any] = {
+  def generate(ops: Int): Map[String, Any] = {
     import spark.implicits._
+    nBatches = ops
     val docs = new Gen.Docs(ctx.seed, 60, 100, 0.0, 0.0)
     val (per, seed, share) = (batchDocs.toLong, ctx.seed, repeatShare)
     spark.range(per * nBatches).as[Long].map { id =>
-      val r = new scala.util.Random(seed * 31L + id)
+      val r = Gen.rng(seed, id ^ 0x2545f491L)
       val textId =
         if (id >= per && r.nextDouble() < share) (r.nextLong() & Long.MaxValue) % id else id
       val text = docs.truth(textId).text

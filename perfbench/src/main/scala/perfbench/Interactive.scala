@@ -2,44 +2,48 @@ package perfbench
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 import graft.Engine
 import graft.operators.TransformStep._
 
-/** `interactive`: one op is one analyst request, drawn from a seeded
-  * order of the `Engine` request kinds over small csv and parquet
-  * files — previews, schema inference, SQL, a previewed
-  * transform chain, a quality score, a small export, and an ingest: one [[IncrementalIngest]] append (with compaction)
-  * and query of a small document batch. Every cycle of requests holds each kind once, and a run
-  * measures whole cycles, so the mix is the same for every seed. */
+/** `interactive`: one op is one analyst request. The kinds are the
+  * six `Engine` calls, the facade of the reference's `DuckDBEngine`
+  * service, over small parquet, csv and json files, plus an ingest:
+  * one [[IncrementalIngest]] append and query of a small document
+  * batch, with compaction every fourth ingest. Every cycle of requests
+  * holds each kind once, in a seeded order, and a run measures whole
+  * cycles, so the mix is the same for every seed. The equal weights
+  * are an assumption: the reference records no request mix. */
 final class Interactive(val ctx: Ctx) extends Workload {
   private val li = ctx.path("lineitem.parquet")
   private val ord = ctx.path("orders.csv")
+  private val ordJson = ctx.path("orders.json")
   private val previewRows = 100
   private var files = Map.empty[String, (Long, Long)] // path -> (rows, bytes)
   private val ingest = new IncrementalIngest(ctx.copy(dir = ctx.path("ingest")),
-    batchDocs = 1000, nBatches = 5, compactEvery = 1)
+    batchDocs = 1000, compactEvery = 4)
 
   def warmupOps: Int = 2 * Interactive.kinds.length
   override def cycle: Int = Interactive.kinds.length
-  def cycleSeconds: Double = 5.0
+  def cycleSeconds: Double = 6.0
 
-  def generate(): Map[String, Any] = {
-    val (liRows, ordRows) = (80000L, 30000L)
+  def generate(ops: Int): Map[String, Any] = {
+    val (liRows, ordRows, jsonRows) = (80000L, 30000L, 20000L)
     Gen.lineitem(spark, liRows, ctx.seed, 0.0).write.parquet(li)
-    val orders = Gen.orders(spark, ordRows, ctx.seed)
-    orders.coalesce(1).write.option("header", "true").csv(ord)
-    files = Map(li -> liRows, ord -> ordRows)
+    Gen.orders(spark, ordRows, ctx.seed).coalesce(1).write.option("header", "true").csv(ord)
+    Gen.orders(spark, jsonRows, ctx.seed).coalesce(1).write.json(ordJson)
+    files = Map(li -> liRows, ord -> ordRows, ordJson -> jsonRows)
       .map { case (p, n) => p -> (n, Gen.sizeOf(p)) }
     Map("rows" -> files.values.map(_._1).sum, "bytes" -> files.values.map(_._2).sum,
       "files" -> files.map { case (p, (n, b)) =>
         new java.io.File(p).getName -> Map("rows" -> n, "bytes" -> b) },
-      "ingest" -> ingest.generate())
+      "ingest" -> ingest.generate((ops + cycle - 1) / cycle))
   }
 
   /** Request kind of op i: a seeded permutation of the kinds per cycle. */
   def kindOf(i: Int): String = {
     val k = Interactive.kinds.length
-    val perm = new scala.util.Random(ctx.seed * 7919L + i / k).shuffle(Interactive.kinds)
+    val perm = Gen.rng(ctx.seed, i / k).shuffle(Interactive.kinds)
     perm(i % k)
   }
 
@@ -66,6 +70,9 @@ final class Interactive(val ctx: Ctx) extends Workload {
         spark, ord, "csv", previewRows, Seq("o_orderkey"))))
       case "schema_parquet" => out(li, call("inferSchema")(Engine.inferSchema(spark, li, "parquet")))
       case "schema_csv" => out(ord, call("inferSchema")(Engine.inferSchema(spark, ord, "csv")))
+      case "preview_json" => out(ordJson, call("previewFile")(Engine.previewFile(
+        spark, ordJson, "json", previewRows, Seq("o_orderkey"))))
+      case "schema_json" => out(ordJson, call("inferSchema")(Engine.inferSchema(spark, ordJson, "json")))
       case "sql_parquet" => out(li, call("executeSql")(
         Engine.executeSql(spark, sqlParquet, Map("l" -> (li, "parquet"))).collect().toSeq))
       case "transforms" => out(li, call("applyTransforms")(
@@ -94,11 +101,22 @@ final class Interactive(val ctx: Ctx) extends Workload {
     def preview(df: DataFrame, order: Seq[String]) =
       (df.columns.toSeq, df.orderBy(order.map(col): _*).limit(previewRows).collect().toSeq, df.count())
     val written = Gen.lineitem(spark, 1, ctx.seed, 0.0).schema
+    // json inference: fields by name; whole numbers as bigint, other
+    // numbers as double, everything else (dates too) as string
+    val jsonSchema = Gen.orders(spark, 1, ctx.seed).schema.fields.toSeq.sortBy(_.name).map { f =>
+      f.name -> (f.dataType match {
+        case IntegerType | LongType => "BIGINT"
+        case _: DecimalType | DoubleType => "DOUBLE"
+        case _ => "STRING"
+      })
+    }
     Map(
       "preview_parquet" -> preview(spark.read.parquet(li), Seq("l_orderkey", "l_linenumber")),
       "preview_csv" -> preview(csv, Seq("o_orderkey")),
       "schema_parquet" -> written.fields.toSeq.map(f => (f.name, f.dataType.sql)),
       "schema_csv" -> Gen.orders(spark, 1, ctx.seed).columns.toSeq,
+      "preview_json" -> preview(spark.read.json(ordJson), Seq("o_orderkey")),
+      "schema_json" -> jsonSchema,
       "sql_parquet" -> spark.read.parquet(li).filter(col("l_discount") >= 0.05)
         .groupBy("l_shipmode", "l_returnflag")
         .agg(count(lit(1)).as("n"), sum("l_quantity").as("qty"))
@@ -125,7 +143,7 @@ final class Interactive(val ctx: Ctx) extends Workload {
       case (_, p: Engine.Preview) =>
         val (cols, rows, total) = want.asInstanceOf[(Seq[String], Seq[Row], Long)]
         p.columns == cols && Workload.rowsEqual(p.rows, rows) && p.totalCount == total
-      case ("schema_parquet", s: Seq[_]) =>
+      case ("schema_parquet" | "schema_json", s: Seq[_]) =>
         s.asInstanceOf[Seq[(String, String, Boolean)]].map(f => (f._1, f._2)) == want
       case ("schema_csv", s: Seq[_]) =>
         s.asInstanceOf[Seq[(String, String, Boolean)]].map(_._1) == want
@@ -143,6 +161,7 @@ final class Interactive(val ctx: Ctx) extends Workload {
 }
 
 object Interactive {
-  val kinds: Seq[String] = Seq("preview_parquet", "preview_csv", "schema_parquet",
-    "schema_csv", "sql_parquet", "transforms", "quality_csv", "export", "ingest")
+  val kinds: Seq[String] = Seq("preview_parquet", "preview_csv", "preview_json",
+    "schema_parquet", "schema_csv", "schema_json", "sql_parquet", "transforms", "quality_csv",
+    "export", "ingest")
 }

@@ -22,7 +22,7 @@ final class LlmCuration(val ctx: Ctx) extends Workload {
   def warmupOps: Int = 2
   def cycleSeconds: Double = 12.0
 
-  def generate(): Map[String, Any] = {
+  def generate(ops: Int): Map[String, Any] = {
     Gen.docsFrame(spark, nDocs, docs).write.parquet(in)
     Gen.docsFrame(spark, warmDocs, new Gen.Docs(ctx.seed + 1, 10, 100, exactShare, nearShare))
       .write.parquet(warmIn)

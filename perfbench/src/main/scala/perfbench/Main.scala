@@ -24,7 +24,9 @@ import perfbench.Workload.timed
   * JSON object with the run's details.
   *
   * Usage: Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *   --dir <scratch dir> [--threads <N>]
+  *   --dir <scratch dir>
+  *
+  * Spark runs local[N] with N = min(4, available processors).
   */
 object Main {
 
@@ -43,8 +45,7 @@ object Main {
     val w = need("workload")
     require(Workload.names.contains(w), s"unknown workload $w (${Workload.names.mkString(", ")})")
     Opts(w, need("seed").toLong, need("seconds").toDouble, need("trace") == "1", need("dir"),
-      m.get("threads").map(_.toInt)
-        .getOrElse(math.min(4, Runtime.getRuntime.availableProcessors)))
+      math.min(4, Runtime.getRuntime.availableProcessors))
   }
 
   private def cpuNs(): Long =
@@ -57,10 +58,17 @@ object Main {
     (st.map(_.getBytesWritten).sum, st.map(_.getBytesRead).sum)
   }
 
-  /** Peak resident set (VmHWM), MB. */
+  /** Peak resident set (VmHWM), MB, since the last [[resetPeakRss]]. */
   def peakRssMb(): Double =
     scala.io.Source.fromFile("/proc/self/status").getLines()
       .find(_.startsWith("VmHWM:")).map(_.split("\\s+")(1).toDouble / 1024).getOrElse(0.0)
+
+  /** Restart the VmHWM count from the current resident set, so a later
+    * peak covers only what ran after this call. */
+  def resetPeakRss(): Unit = {
+    val w = new java.io.FileWriter("/proc/self/clear_refs")
+    try w.write("5") finally w.close()
+  }
 
   private def gcMs(): Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).filter(_ > 0).sum
@@ -87,13 +95,16 @@ object Main {
     val tracer = new Tracer(if (o.trace) Some(sc) else None, () => fsBytes()._1)
     tracer.on = false
     val w = Workload(o.workload, Ctx(spark, tracer, s"$dir/main", o.seed))
-    val (genMs, inputs) = timed(w.generate())
+    // a fixed number of whole cycles of ops per loop
+    def opsFor(seconds: Double) = math.max(1L, math.round(seconds / w.cycleSeconds)).toInt * w.cycle
+    val plainOps = opsFor(if (o.trace) o.seconds / 2 else o.seconds)
+    val tracedOps = if (o.trace) opsFor(o.seconds / 2) else 0
+    val (genMs, inputs) = timed(w.generate(w.warmupOps + plainOps + tracedOps))
     val (warmupMs, _) = timed((0 until w.warmupOps).foreach(w.op))
     val setupS = (System.currentTimeMillis() - jvmStartMs - genMs) / 1000.0
 
-    // ---- closed loop: a fixed number of whole cycles of ops
-    def loop(from: Int, seconds: Double): Seq[OpRec] = {
-      val n = math.max(1L, math.round(seconds / w.cycleSeconds)).toInt * w.cycle
+    // ---- closed loop
+    def loop(from: Int, n: Int): Seq[OpRec] = {
       val recs = (from until from + n).map { i =>
         tracer.opId = i
         val (c0, w0, t0) = (cpuNs(), fsBytes()._1, System.nanoTime())
@@ -105,7 +116,8 @@ object Main {
       recs
     }
 
-    val plain = loop(w.warmupOps, if (o.trace) o.seconds / 2 else o.seconds)
+    resetPeakRss()
+    val plain = loop(w.warmupOps, plainOps)
     val plainRss = peakRssMb()
     val traced = if (!o.trace) None else Some {
       BusDrain.drain(sc)
@@ -113,7 +125,8 @@ object Main {
       sc.addSparkListener(listener)
       val (gc0, fs0, cnt0) = (gcMs(), fsBytes(), CountingLocalFileSystem.snapshot())
       tracer.on = true
-      val recs = loop(plain.last.index + 1, o.seconds / 2)
+      resetPeakRss()
+      val recs = loop(plain.last.index + 1, tracedOps)
       val rss = peakRssMb()
       val (gc1, fs1, cnt1) = (gcMs(), fsBytes(), CountingLocalFileSystem.snapshot())
       val kernels = Ctx(spark, tracer, s"$dir/kernels", o.seed)

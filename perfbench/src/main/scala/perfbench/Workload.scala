@@ -21,9 +21,10 @@ trait Workload {
   def ctx: Ctx
   final lazy val spark: SparkSession = ctx.spark
 
-  /** Write the seeded inputs; returns their description (rows, bytes,
-    * duplicate share) for the report. */
-  def generate(): Map[String, Any]
+  /** Write the seeded inputs for a run of `ops` ops, warm-up included;
+    * returns their description (rows, bytes, duplicate share) for the
+    * report. */
+  def generate(ops: Int): Map[String, Any]
 
   /** Ops 0 until warmupOps are the warm-up, run on the generated
     * inputs before the timed loop, which continues from op warmupOps. */
@@ -56,7 +57,7 @@ object Workload {
     case "etl_batch" => new EtlBatch(ctx)
     case "interactive" => new Interactive(ctx)
     case "llm_curation" => new LlmCuration(ctx)
-    case "incremental_ingest" => new IncrementalIngest(ctx, 1500, 48, 4)
+    case "incremental_ingest" => new IncrementalIngest(ctx, batchDocs = 1500, compactEvery = 4)
     case other => throw new IllegalArgumentException(s"unknown workload $other")
   }
 
