@@ -337,15 +337,8 @@ object Bench {
     // slow-phase window machine-detectable in BENCH.json itself
     // (canary_end >> canary_start, or both >> the ~0.1-0.2 s a
     // healthy box reads) without touching any measured entry.
-    def canarySec(): Double = {
-      val t0 = System.nanoTime()
-      (1 to 2).foreach { _ =>
-        try SparkEntry.queries("q1_agg")(spark, sfDir).count()
-        catch { case _: Throwable => () }
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val canaryStart = canarySec()
+    val canaryQuery = () => { SparkEntry.queries("q1_agg")(spark, sfDir).count(); () }
+    val canaryStart = canarySec(canaryQuery)
     val iter0 = System.nanoTime()
     def iterSec: Double = (System.nanoTime() - iter0) / 1e9
 
@@ -408,10 +401,9 @@ object Bench {
     val total = med.collect {
       case (k, v) if !benchOnly.contains(k) && !failed.contains(k) => v
     }.sum
-    val canaryEnd = canarySec()
+    val canaryEnd = canarySec(canaryQuery)
     val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val canaries =
-      f""""canary_start_sec":$canaryStart%.3f,"canary_end_sec":$canaryEnd%.3f"""
+    val canaries = canaryFields(canaryStart, canaryEnd)
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","n":$ran,"cpus":$coreBudget,"threads":$cpus,$canaries}"""
     Files.writeString(Paths.get("BENCH.json"), json + "\n")
@@ -422,5 +414,30 @@ object Bench {
     // the LAST stdout line is a compact summary that fits any tail.
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n":$ran,$canaries}""")
     spark.stop()
+  }
+
+  /** Times the box-weather canary: `run` twice. None when a run throws
+    * — a broken canary query fails in milliseconds, and timing that
+    * would read as a fast, healthy box. The failure goes to stderr.
+    */
+  private[graft] def canarySec(run: () => Unit): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      run(); run()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(
+        s"[bench] canary FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      None
+    }
+  }
+
+  /** The BENCH.json canary fields: each time in seconds, `null` for a
+    * failed canary, and `canary_failed` set when either one failed.
+    */
+  private[graft] def canaryFields(start: Option[Double], end: Option[Double]): String = {
+    def sec(c: Option[Double]): String = c.fold("null")(v => f"$v%.3f")
+    s""""canary_start_sec":${sec(start)},"canary_end_sec":${sec(end)},""" +
+      s""""canary_failed":${start.isEmpty || end.isEmpty}"""
   }
 }

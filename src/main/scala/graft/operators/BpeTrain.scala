@@ -70,7 +70,8 @@ object BpeTrain {
     require(maxWords >= 1, s"maxWords must be >= 1, got $maxWords")
     // ONE action: the guard rides on a limit instead of a separate
     // count(), so the corpus is scanned and shuffled exactly once
-    val rows = wordCounts(df, textCol, minCount).limit(maxWords + 1).collect()
+    val rows = wordCounts(df, textCol, minCount)
+      .limit(graft.Conf.probeLimit(maxWords)).collect()
     require(rows.length <= maxWords,
       s"BPE vocabulary exceeds maxWords=$maxWords distinct words: raise " +
         "minCount (Zipf: a count floor bounds the tail) or raise the cap")

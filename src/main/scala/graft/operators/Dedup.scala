@@ -140,26 +140,6 @@ object Dedup {
       .otherwise(array_distinct(full))
   }
 
-  /** Candidate pairs via MinHash LSH banding, reranked with EXACT
-    * Jaccard over the shingle sets. Output: (id_a, id_b, jaccard) with
-    * id_a < id_b and jaccard >= threshold.
-    *
-    * bands*rowsPerBand minhashes; a pair collides if any band matches
-    * exactly — P(collide) = 1-(1-j^r)^b, the classic S-curve.
-    */
-  /** `maxBucketSize` guards the candidate join against degenerate
-    * buckets: a bucket of B identical-signature docs yields B²/2 pairs
-    * — thousands of exact copies should be collapsed by exact dedup
-    * FIRST, not pairwise-enumerated here. Dropped buckets are whole
-    * duplicate clusters, not near-dup misses.
-    */
-  /** `stageDir`: when set, the hashed-shingle stage is written to
-    * parquet there and read back instead of living in executor
-    * storage memory — at 100 TB the stage IS the index and belongs on
-    * distributed storage (survives executor loss, frees the block
-    * manager, reusable across runs); `persist` remains the default
-    * for interactive sizes.
-    */
   /** One (band, bucket) struct per band over a minhash signature:
     * bucket key = hash of the band's signature slice (band index mixed
     * in so identical slices in different bands can't collide). Shared
@@ -175,6 +155,30 @@ object Dedup {
           .as("bucket"))
     }: _*)
 
+  /** Candidate pairs via MinHash LSH banding, reranked with EXACT
+    * Jaccard over the shingle sets. Output: (id_a, id_b, jaccard) with
+    * id_a < id_b and jaccard >= threshold.
+    *
+    * bands*rowsPerBand minhashes; a pair collides if any band matches
+    * exactly — P(collide) = 1-(1-j^r)^b, the classic S-curve.
+    *
+    * `maxBucketSize` guards the candidate join against degenerate
+    * buckets: a bucket of B identical-signature docs yields B²/2 pairs
+    * — thousands of exact copies should be collapsed by exact dedup
+    * FIRST, not pairwise-enumerated here. Dropped buckets are whole
+    * duplicate clusters, not near-dup misses.
+    *
+    * `stageDir`: when set, the hashed-shingle stage is written to
+    * parquet there and read back instead of living in executor
+    * storage memory — at 100 TB the stage IS the index and belongs on
+    * distributed storage (survives executor loss, frees the block
+    * manager, reusable across runs); `persist` remains the default
+    * for interactive sizes.
+    *
+    * One evaluation of the returned plan computes the signatures and
+    * writes the banded bucket shuffle once (twice on the large-corpus
+    * two-pass route, by design: count pass + list pass).
+    */
   def minHashNearDups(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
@@ -263,11 +267,17 @@ object Dedup {
         col("_sorted"))).as("p"))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
 
-    // Exact-Jaccard rerank, FUSED (r13): one union-keyed join against
-    // the shingle stage + one pair groupBy, replacing the previous
-    // `.distinct()` + two joins — two fewer AQE stages and the corpus
-    // stage is read/joined ONCE (measured 1.55 → 1.22 s median on the
-    // d_dedup_quality composition at sf0.1, identical result set).
+    // Exact-Jaccard rerank, FUSED (r13): every candidate is keyed
+    // under both of its ids and joined against the shingle stage once,
+    // then one pair groupBy reassembles (a, b) — one join and one
+    // aggregate instead of `.distinct()` + two joins.
+    // Both keys come out of ONE scan of `candidates` (an explode of a
+    // two-struct array), never a union of two projections of it: a
+    // union feeds the whole candidate subtree — signature, band
+    // explode, bucket exchange and collect_list — to the plan twice,
+    // and AQE does not reuse an exchange that sits under a cached-
+    // relation query stage, so each branch recomputed the signatures
+    // and wrote the same banded shuffle again.
     // CONTRACT (shared by every dedup operator but binding here): ids
     // must be UNIQUE — a duplicated id joins several shingle sets and
     // first() keeps an arbitrary one, so a true pair can score below
@@ -280,8 +290,10 @@ object Dedup {
     // distinct stage cost more than this duplication on every
     // measured composition.
     val keyed = candidates
-      .select(col("id_a").as("_id"), col("id_a"), col("id_b"))
-      .unionByName(candidates.select(col("id_b").as("_id"), col("id_a"), col("id_b")))
+      .select(explode(array(
+        struct(col("id_a").as("_id"), col("id_a"), col("id_b")),
+        struct(col("id_b").as("_id"), col("id_a"), col("id_b")))).as("k"))
+      .select("k._id", "k.id_a", "k.id_b")
     keyed.join(hashedShingles, "_id")
       .groupBy("id_a", "id_b")
       .agg(
@@ -385,6 +397,39 @@ object Dedup {
       .distinct()
   }
 
+  /** Small-graph probe shared by [[connectedComponents]] and the
+    * drop-duplicates fast paths: Some(pairs) when the pair list fits
+    * under `collectLimit`, None when it overflows (take the
+    * distributed path). `assumeCanonical` is for pair lists produced
+    * by this library's own generators (minhash/simhash/ngram/hamming
+    * all emit DISTINCT id_a < id_b rows): the probe then collects the
+    * raw rows map-only — no canonicalize+distinct shuffle — because
+    * raw row count already equals unique pair count. Union-find
+    * downstream tolerates duplicate or reversed rows either way; the
+    * flag only affects how the LIMIT bound is measured and what the
+    * probe costs.
+    */
+  private def probeLocalPairs(
+      pairs: DataFrame, aCol: String, bCol: String,
+      collectLimit: Int, assumeCanonical: Boolean)
+      : Option[Array[org.apache.spark.sql.Row]] = {
+    if (collectLimit <= 0) return None
+    // ONE job either way: collect at most limit+1 pairs; overflow ⇒
+    // the graph is genuinely large ⇒ distributed. In the canonicalized
+    // branch greatest/least skip NULLs, so a null-partner row
+    // (a, null) canonicalizes to the self-pair (a, a) — singleton
+    // membership survives the orientation dedup (the contract covers
+    // every id).
+    val probe =
+      if (assumeCanonical) pairs.select(col(aCol), col(bCol))
+      else pairs
+        .select(greatest(col(aCol), col(bCol)).as(aCol),
+          least(col(aCol), col(bCol)).as(bCol))
+        .distinct()
+    val head = probe.limit(graft.Conf.probeLimit(collectLimit)).collect()
+    if (head.length <= collectLimit) Some(head) else None
+  }
+
   /** Connected components over an undirected pair list — the step that
     * turns near-dup PAIRS into usable dedup decisions: docs a~b and
     * b~c belong to ONE cluster even when a≁c directly, and the cluster
@@ -426,41 +471,15 @@ object Dedup {
     * for an UNTUNED driver heap. Graphs over the bound take the
     * distributed path unchanged — at the cost of the probe's wasted
     * distinct: callers that KNOW the graph is huge pass 0 to skip the
-    * probe entirely.
+    * probe entirely. `Int.MaxValue` is a legal bound (always collect).
+    *
+    * The distributed path evaluates `pairs` exactly ONCE: the raw
+    * (u, v) projection is local-checkpointed up front, and both the
+    * canonical edge set and the returned id list are derived from that
+    * checkpoint, which is released with the last round's edges. A
+    * minhash pair list therefore computes its signatures and writes
+    * its banded bucket shuffle once per call, not once per read.
     */
-  /** Small-graph probe shared by [[connectedComponents]] and the
-    * drop-duplicates fast paths: Some(pairs) when the pair list fits
-    * under `collectLimit`, None when it overflows (take the
-    * distributed path). `assumeCanonical` is for pair lists produced
-    * by this library's own generators (minhash/simhash/ngram/hamming
-    * all emit DISTINCT id_a < id_b rows): the probe then collects the
-    * raw rows map-only — no canonicalize+distinct shuffle — because
-    * raw row count already equals unique pair count. Union-find
-    * downstream tolerates duplicate or reversed rows either way; the
-    * flag only affects how the LIMIT bound is measured and what the
-    * probe costs.
-    */
-  private def probeLocalPairs(
-      pairs: DataFrame, aCol: String, bCol: String,
-      collectLimit: Int, assumeCanonical: Boolean)
-      : Option[Array[org.apache.spark.sql.Row]] = {
-    if (collectLimit <= 0) return None
-    // ONE job either way: collect at most limit+1 pairs; overflow ⇒
-    // the graph is genuinely large ⇒ distributed. In the canonicalized
-    // branch greatest/least skip NULLs, so a null-partner row
-    // (a, null) canonicalizes to the self-pair (a, a) — singleton
-    // membership survives the orientation dedup (the contract covers
-    // every id).
-    val probe =
-      if (assumeCanonical) pairs.select(col(aCol), col(bCol))
-      else pairs
-        .select(greatest(col(aCol), col(bCol)).as(aCol),
-          least(col(aCol), col(bCol)).as(bCol))
-        .distinct()
-    val head = probe.limit(collectLimit + 1).collect()
-    if (head.length <= collectLimit) Some(head) else None
-  }
-
   def connectedComponents(
       pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
       maxIter: Int = 50, collectLimit: Int = 1 << 18,
@@ -489,8 +508,13 @@ object Dedup {
     // ids keep their own type — the algorithm only needs an ordering
     // (min/comparisons), so string/long/timestamp ids all work; a cast
     // would silently null non-numeric ids.
-    var edges = canon(pairs.select(col(aCol).as("u"), col(bCol).as("v")))
+    // `pairs` is usually a whole pair query (for minhash: signatures,
+    // band explode, bucket shuffle, rerank) that every read re-runs,
+    // so it is read once, here, and both the edges and `allIds` below
+    // derive from this checkpoint.
+    val raw = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .localCheckpoint()
+    var edges = canon(raw).localCheckpoint()
     var stable = false
     var iter = 0
     var prev: (Long, Long) = (-1L, 0L)
@@ -527,8 +551,7 @@ object Dedup {
     // that only appear in self-pairs or opposite a null partner, which
     // the edge canonicalization rightly drops from the graph. Those
     // are singleton components (component = self).
-    val allIds = pairs.select(col(aCol).as("id"))
-      .unionAll(pairs.select(col(bCol).as("id")))
+    val allIds = raw.select(explode(array(col("u"), col("v"))).as("id"))
       .filter(col("id").isNotNull).distinct()
     val out = allIds.join(starAssign, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
@@ -538,6 +561,7 @@ object Dedup {
       // the caller drops the reference (unpersist() to release early)
       .localCheckpoint()
     edges.unpersist()
+    raw.unpersist()
     out
   }
 

@@ -62,7 +62,7 @@ object UnigramLm {
     require(emIters >= 1, s"emIters must be >= 1, got $emIters")
     require(shrink > 0 && shrink < 1, s"shrink must be in (0,1), got $shrink")
     val rows = BpeTrain.wordCounts(df, textCol, minCount)
-      .limit(maxWords + 1).collect()
+      .limit(graft.Conf.probeLimit(maxWords)).collect()
     require(rows.length <= maxWords,
       s"unigram vocabulary exceeds maxWords=$maxWords distinct words: raise " +
         "minCount (Zipf: a count floor bounds the tail) or raise the cap")

@@ -437,8 +437,10 @@ object PipelineJson {
         val subject = config.path("subject").asText("Pipeline notification")
         val bodyText = config.path("body").asText("")
         val previewRows = config.path("preview_rows").asInt(10)
+        require(previewRows >= 0,
+          s"email_notify node '$id': preview_rows must be >= 0, got $previewRows")
         Sink.unit { df =>
-          val preview = df.limit(previewRows + 1).collect()
+          val preview = df.limit(graft.Conf.probeLimit(previewRows)).collect()
           val shown = preview.take(previewRows)
           val note =
             if (preview.length > previewRows) s"first $previewRows rows:"

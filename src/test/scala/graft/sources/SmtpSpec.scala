@@ -152,6 +152,43 @@ class SmtpSpec extends AnyFunSuite {
     assert(!got.exists(_.startsWith("4\t"))) // preview cap respected
   }
 
+  test("email_notify preview_rows at its bounds: Int.MaxValue sends every row, 0 sends none, negative is refused") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val df = (1 to 5).map(i => (i.toLong, s"name$i")).toDF("id", "name")
+    def preview(rows: Int): Seq[String] = {
+      val (port, lines) = stubServer()
+      val json =
+        s"""{"nodes": [
+           |  {"id": "src", "type": "stub"},
+           |  {"id": "mail", "type": "email_notify", "data": {"config": {
+           |    "host": "127.0.0.1", "port": $port, "to": ["ops@x.test"],
+           |    "preview_rows": $rows}}}
+           |], "edges": [{"source": "src", "target": "mail"}]}""".stripMargin
+      val (nodes, edges) = graft.plans.PipelineJson.parse(json)
+      val wired = nodes.map {
+        case n if n.id == "src" =>
+          n.copy(op = graft.plans.PipelineDag.Source(_ => df.orderBy("id")))
+        case n => n
+      }
+      val result = graft.plans.PipelineDag.execute(spark, wired, edges)
+      assert(result.outputs("mail").count() == 5)
+      lines()
+    }
+    val all = preview(Int.MaxValue)
+    assert(all.contains("5 rows:"), all)
+    assert((1 to 5).forall(i => all.exists(_.startsWith(s"$i\tname$i"))), all)
+    val none = preview(0)
+    assert(none.contains("first 0 rows:"), none)
+    assert(!none.exists(_.startsWith("1\t")), none)
+    val e = intercept[IllegalArgumentException] {
+      graft.plans.PipelineJson.parse(
+        """{"nodes": [{"id": "m", "type": "email_notify", "data": {"config": {
+          |  "to": ["ops@x.test"], "preview_rows": -1}}}], "edges": []}""".stripMargin)
+    }
+    assert(e.getMessage.contains("preview_rows"), e.getMessage)
+  }
+
   test("email_notify without recipients fails at parse time") {
     val json =
       """{"nodes": [{"id": "m", "type": "email_notify",
