@@ -1,23 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Cluster-dialable engine knobs, resolved from plain session conf
-  * (`spark.graft.*`).
+/** Cluster-dialable engine knobs (`spark.graft.*` session conf) and
+  * the two plan-shape decisions every scale-critical operator makes
+  * with them.
   *
-  * Every scale-critical operator in the engine stats-routes between a
-  * small-corpus shape and a bounded-memory large-corpus shape at a
-  * byte threshold (Catalyst plan stats vs the threshold). The shipped
-  * defaults are the measured crossovers for a 32-core / 128 GB
-  * single box — the r13/r14 profiling campaign — but the right
-  * crossover is a per-deployment statement: a 100-executor cluster
-  * spreads the partial-combinable exact legs far past any single-box
-  * line, while a small edge node wants the sketch/streamed legs
-  * sooner. Before r15 the thresholds were code constants (overridable
-  * only through method parameters), so a cluster operator could not
-  * re-dial them without a code change; now one `spark.conf.set` (or a
-  * `--conf spark.graft.…` at submit) moves a route for the whole
-  * session, and an explicit method parameter still wins over both.
+  * [[collectUpTo]] is the guarded collect: ONE collect job,
+  * `df.limit(cap + 1).collect()` (AQE still runs each exchange under it
+  * as its own map-stage job). `Right(rows)` means the input had at
+  * most `cap` rows and `rows` is all of it — small enough to serve as
+  * a driver-local relation or model. `Left(rows)` means the input is
+  * over the cap; `rows` holds its first `cap + 1` rows, and the caller
+  * takes its large-input shape, raises, or reads the prefix. The cap
+  * is clamped so `cap + 1` never wraps an Int limit negative, and a
+  * negative cap is rejected.
+  *
+  * [[underBytes]] is the stats route: Catalyst's size estimate of the
+  * input against a byte threshold resolved as explicit argument (when
+  * `>= 0`) > session conf key > shipped default, logged at INFO. The
+  * defaults are the measured crossovers for a 32-core / 128 GB single
+  * box; the right crossover is a per-deployment statement, so one
+  * `spark.conf.set` (or `--conf spark.graft.…` at submit) moves a route
+  * for the whole session without a code change.
   *
   * Values accept Spark's usual byte-suffix syntax (`64m`, `1g`,
   * plain bytes) for the byte keys and plain longs for the count keys.
@@ -59,16 +64,15 @@ object Conf {
   val ScrubHitsLimitKey = "spark.graft.scrubHitsBroadcastLimit"
 
   /** Max duplicated-span rows the span family collects straight to a
-    * driver-local relation (the guarded limit-probe fast path — one
-    * scheduled job, no executor cache) before falling back to the
-    * persisted probe side (count, not bytes). Default
+    * driver-local relation ([[collectUpTo]], no executor cache) before
+    * falling back to the persisted probe side (count, not bytes). Default
     * [[graft.operators.Dedup.DupSpanLocalLimit]].
     */
   val DupSpanLocalLimitKey = "spark.graft.dupSpanLocalLimit"
 
   /** Row cap for the n-gram top-k single-probe TakeOrdered
     * ([[graft.operators.NgramStats.topK]]): under it the kept set is
-    * collected in ONE job and broadcast locally; tie volumes past it
+    * collected by [[collectUpTo]] and broadcast locally; tie volumes past it
     * take the guarded persist shape. Keep it under
     * `spark.sql.execution.topKSortFallbackThreshold`. Default
     * [[graft.operators.NgramStats.KeptProbeLimit]].
@@ -77,35 +81,53 @@ object Conf {
 
   /** Row cap for the line-dedup frequent-line probe
     * ([[graft.operators.LineDedup.dropCommonLines]]): under it the
-    * boilerplate set is collected in ONE job and broadcast locally;
-    * past it the staged+broadcast fallback takes over. Default
+    * boilerplate set is collected by [[collectUpTo]] and broadcast
+    * locally; past it the staged+broadcast fallback takes over. Default
     * [[graft.operators.LineDedup.FrequentLocalLimit]].
     */
   val LineFrequentLocalLimitKey = "spark.graft.lineFrequentLocalLimit"
 
   /** Byte-valued knob: session conf wins when set (Spark byte-suffix
-    * syntax allowed), else `default`. Callers that take the knob as a
-    * method parameter pass `< 0` to mean "resolve from conf" so an
-    * explicit argument still overrides everything.
+    * syntax allowed), else `default`.
     */
-  def bytes(spark: SparkSession, key: String, default: Long): Long =
+  private[graft] def bytes(spark: SparkSession, key: String, default: Long): Long =
     spark.conf.getOption(key)
       .map(v => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v))
       .getOrElse(default)
 
-  /** Count-valued knob: session conf wins when set, else `default`. */
+  /** Count-valued knob (a row cap): session conf wins when set, else
+    * `default`.
+    */
   def count(spark: SparkSession, key: String, default: Long): Long =
     spark.conf.getOption(key).map(_.trim.toLong).getOrElse(default)
 
-  /** `cap + 1` as a safe `DataFrame.limit` Int for the guarded
-    * limit-probe pattern: a `Long.MaxValue` (or any ≥ Int.MaxValue)
-    * dial means "as much as an Int limit can express" instead of
-    * overflowing negative and throwing AnalysisException at plan time,
-    * and a negative cap is rejected loudly instead of silently
-    * flipping the route (r15 ADVICE).
+  /** Collect at most `cap` rows of `df` in one job: `Right` with the
+    * whole input when it has at most `cap` rows, else `Left` with its
+    * first `cap + 1`. A cap at or past `Int.MaxValue` means "as many as
+    * an Int limit can express".
     */
-  def probeLimit(cap: Long): Int = {
+  def collectUpTo(df: DataFrame, cap: Long): Either[Array[Row], Array[Row]] = {
     require(cap >= 0, s"probe cap must be >= 0, got $cap")
-    (math.min(cap, Int.MaxValue - 1L) + 1L).toInt
+    val clamped = math.min(cap, Int.MaxValue - 1L)
+    val rows = df.limit(clamped.toInt + 1).collect()
+    if (rows.length <= clamped) Right(rows) else Left(rows)
+  }
+
+  /** Catalyst's size estimate of `df`'s optimized plan, in bytes. */
+  def estimatedBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** True when `df`'s size estimate is at or under the threshold:
+    * `explicit` if `>= 0`, else the session's `key`, else `default`.
+    */
+  def underBytes(df: DataFrame, key: String, default: Long,
+      explicit: Long = -1L): Boolean = {
+    val threshold = if (explicit >= 0) explicit else bytes(df.sparkSession, key, default)
+    val estimate = estimatedBytes(df)
+    val under = estimate <= threshold
+    org.slf4j.LoggerFactory.getLogger(getClass).info(
+      s"$key: input ~$estimate B vs threshold $threshold B -> " +
+        (if (under) "under" else "over"))
+    under
   }
 }

@@ -68,13 +68,11 @@ object BpeTrain {
       minCount: Long = 1L, maxWords: Int = 1000000): Seq[(String, String)] = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(maxWords >= 1, s"maxWords must be >= 1, got $maxWords")
-    // ONE action: the guard rides on a limit instead of a separate
-    // count(), so the corpus is scanned and shuffled exactly once
-    val rows = wordCounts(df, textCol, minCount)
-      .limit(graft.Conf.probeLimit(maxWords)).collect()
-    require(rows.length <= maxWords,
-      s"BPE vocabulary exceeds maxWords=$maxWords distinct words: raise " +
-        "minCount (Zipf: a count floor bounds the tail) or raise the cap")
+    // ONE action: the corpus is scanned and shuffled exactly once
+    val rows = graft.Conf.collectUpTo(wordCounts(df, textCol, minCount), maxWords)
+      .getOrElse(throw new IllegalArgumentException(
+        s"BPE vocabulary exceeds maxWords=$maxWords distinct words: raise " +
+          "minCount (Zipf: a count floor bounds the tail) or raise the cap"))
     trainLocal(rows.map(r => r.getString(0) -> r.getLong(1)), numMerges)
   }
 

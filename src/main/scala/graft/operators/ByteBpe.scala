@@ -116,11 +116,10 @@ object ByteBpe {
       minCount: Long = 1L, maxWords: Int = 1000000): Seq[(String, String)] = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(maxWords >= 1, s"maxWords must be >= 1, got $maxWords")
-    val rows = pretokenCounts(df, textCol, minCount)
-      .limit(graft.Conf.probeLimit(maxWords)).collect()
-    require(rows.length <= maxWords,
-      s"byte-BPE vocabulary exceeds maxWords=$maxWords distinct pretokens: " +
-        "raise minCount (Zipf: a count floor bounds the tail) or raise the cap")
+    val rows = graft.Conf.collectUpTo(pretokenCounts(df, textCol, minCount), maxWords)
+      .getOrElse(throw new IllegalArgumentException(
+        s"byte-BPE vocabulary exceeds maxWords=$maxWords distinct pretokens: " +
+          "raise minCount (Zipf: a count floor bounds the tail) or raise the cap"))
     BpeTrain.trainLocalSeqs(
       rows.map(r => byteSymbols(r.getString(0))),
       rows.map(_.getLong(1)), numMerges)

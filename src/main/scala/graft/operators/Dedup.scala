@@ -114,6 +114,38 @@ object Dedup {
         (p, p.count()) // the eager materialization is the count
     }
 
+  /** Lifetime of an over-cap eager [[stage]] that a returned plan
+    * reads (the span scrub's hit table, line dedup's frequent set).
+    * Dir-staged tables (explicit dir or [[StageDirConf]], the 100 TB
+    * configuration) were never cached and pass through. Otherwise the
+    * persist would outlive the call — a leak across long sessions —
+    * so on a LOCAL master the cached stage is spilled to a temp
+    * parquet under [[graft.LocalFs]]' shared base (same JVM lifetime,
+    * but disk, not executor memory) and the cache released. On a
+    * multi-node cluster a driver-local temp path is not a shared
+    * filesystem — executors would write it onto their own disks and
+    * the driver-side read would see nothing — so the persist is kept
+    * with a warning naming [[StageDirConf]] (r15, ADVICE).
+    */
+  private[operators] def releaseStage(
+      staged: DataFrame, stageDir: Option[String], name: String): DataFrame = {
+    val spark = staged.sparkSession
+    if (stageDir.isDefined || spark.conf.get(StageDirConf, null) != null) staged
+    else if (spark.sparkContext.isLocal) {
+      val dir = new java.io.File(
+        graft.LocalFs.tempDir(s"graft_$name"), "stage").toString
+      staged.write.mode("overwrite").parquet(dir)
+      staged.unpersist(false)
+      spark.read.parquet(dir)
+    } else {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"$name: table exceeds its broadcast cap and no stage dir is " +
+          s"set; keeping it in executor storage. Set $StageDirConf to " +
+          "stage it on distributed storage.")
+      staged
+    }
+  }
+
   /** Distinct word n-gram shingles of lowercased text.
     *
     * Built by zipping n shifted copies of the token array and
@@ -238,12 +270,9 @@ object Dedup {
       .groupBy("band", "bucket")
       .agg(collect_list(col("_id")).as("_ids"))
       .filter(size(col("_ids")).between(2, maxBucketSize))
-    val inputBytes: BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // crossover re-dialable per deployment via session conf (r15)
-    val twoPassBytes = graft.Conf.bytes(df.sparkSession,
-      graft.Conf.TwoPassBucketBytesKey, TwoPassBucketBytes)
     val collisionBuckets =
-      if (inputBytes <= twoPassBytes) bucketLists(banded)
+      if (graft.Conf.underBytes(df, graft.Conf.TwoPassBucketBytesKey,
+          TwoPassBucketBytes)) bucketLists(banded)
       else {
         // plan-time broadcast under the same budget device as the
         // span family: hot buckets are collision volume, but a
@@ -414,9 +443,8 @@ object Dedup {
       collectLimit: Int, assumeCanonical: Boolean)
       : Option[Array[org.apache.spark.sql.Row]] = {
     if (collectLimit <= 0) return None
-    // ONE job either way: collect at most limit+1 pairs; overflow ⇒
-    // the graph is genuinely large ⇒ distributed. In the canonicalized
-    // branch greatest/least skip NULLs, so a null-partner row
+    // Overflow ⇒ the graph is genuinely large ⇒ distributed. In the
+    // canonicalized branch greatest/least skip NULLs, so a null-partner row
     // (a, null) canonicalizes to the self-pair (a, a) — singleton
     // membership survives the orientation dedup (the contract covers
     // every id).
@@ -426,8 +454,7 @@ object Dedup {
         .select(greatest(col(aCol), col(bCol)).as(aCol),
           least(col(aCol), col(bCol)).as(bCol))
         .distinct()
-    val head = probe.limit(graft.Conf.probeLimit(collectLimit)).collect()
-    if (head.length <= collectLimit) Some(head) else None
+    graft.Conf.collectUpTo(probe, collectLimit).toOption
   }
 
   /** Connected components over an undirected pair list — the step that
@@ -978,15 +1005,14 @@ object Dedup {
     // sort-merge join against the persisted aggregate — cost
     // proportional to duplication, never quadratic.
     val spark = df.sparkSession
-    val inputBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val dupPlan = dupSpanFirsts(grams, inputBytes)
+    val bigCorpus = bigPostingCorpus(df)
+    val dupPlan = dupSpanFirsts(grams, bigCorpus, graft.Conf.estimatedBytes(df))
     val staged = stageDir.isDefined ||
       spark.conf.get(StageDirConf, null) != null
-    probeDupSpansLocal(spark, dupPlan,
-      bigPostingCorpus(spark, inputBytes)) match {
+    probeDupSpansLocal(spark, dupPlan, bigCorpus) match {
       case Right(local) =>
         // Driver-local fast path (r15): the duplicated-span table came
-        // back whole from the guarded limit-probe, so NOTHING is
+        // back whole from the probe, so NOTHING is
         // cached — the probe joins a plan-time-broadcast local
         // relation and the flagged plan stays LAZY (its one execution
         // is the caller's action; the eager stage below existed only
@@ -1014,11 +1040,10 @@ object Dedup {
     }
   }
 
-  /** Guarded limit-probe for the span family's duplicated-span table:
-    * collect up to [[DupSpanLocalLimit]]+1 rows in the materializing
-    * job itself — at or under the cap the rows ARE the complete table
-    * and serve as a plan-time-broadcast local relation (`Right`; one
-    * scheduled job, no executor cache retained — the tiny cache the
+  /** [[graft.Conf.collectUpTo]] probe for the span family's
+    * duplicated-span table, capped at [[DupSpanLocalLimit]]: at or
+    * under the cap the rows serve as a plan-time-broadcast local
+    * relation (`Right`; no executor cache retained — the tiny cache the
     * probe wrote is dropped before returning); over it, `Left` with
     * the ALREADY-PERSISTED aggregate, so the caller's fallback count
     * completes the cache the probe partially filled instead of
@@ -1046,24 +1071,26 @@ object Dedup {
       if (persistForFallback)
         dupPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else dupPlan
-    val rows = p.limit(graft.Conf.probeLimit(cap)).collect()
-    if (rows.length <= cap) {
-      if (persistForFallback) p.unpersist(false)
-      Right(spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), dupPlan.schema))
-    } else Left(
-      if (persistForFallback) p
-      else dupPlan
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    graft.Conf.collectUpTo(p, cap) match {
+      case Right(rows) =>
+        if (persistForFallback) p.unpersist(false)
+        Right(spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), dupPlan.schema))
+      case Left(_) => Left(
+        if (persistForFallback) p
+        else dupPlan
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
   }
 
-  /** The [[probeDupSpansLocal]] persist gate: true past the
-    * posting-shuffle route threshold (resolved like [[dupSpanFirsts]]).
+  /** The span family's one posting-shuffle route decision: true when
+    * the input's size estimate is past [[PostingShuffleBytes]]
+    * (conf-dialable via [[graft.Conf.PostingShuffleBytesKey]]). It
+    * picks [[dupSpanFirsts]]' pre-shuffled shape and the persist gates
+    * of the probes that follow.
     */
-  private def bigPostingCorpus(
-      spark: org.apache.spark.sql.SparkSession, inputBytes: BigInt): Boolean =
-    inputBytes > graft.Conf.bytes(
-      spark, graft.Conf.PostingShuffleBytesKey, PostingShuffleBytes)
+  private def bigPostingCorpus(df: DataFrame): Boolean =
+    !graft.Conf.underBytes(df, graft.Conf.PostingShuffleBytesKey, PostingShuffleBytes)
 
   /** Row cap for [[probeDupSpansLocal]] — 2^18 duplicated spans, the
     * same driver-graph scale [[connectedComponents]]' local fast path
@@ -1093,17 +1120,13 @@ object Dedup {
     * anyway; only the map-side memory cliff disappears. min/max stay
     * fixed-width and combinable, so a real cluster spreads either
     * shape — this routes the SINGLE-BOX class back to ~linear.
+    * `preShuffle` is the caller's [[bigPostingCorpus]] decision;
+    * `inputBytes` (the input's size estimate) sizes the pre-shuffle.
     */
-  private[operators] def dupSpanFirsts(grams: DataFrame, inputBytes: BigInt,
-      shuffleBytes: Long = -1L): DataFrame = {
-    // shuffleBytes < 0 (the default) resolves through session conf
-    // (r15): spark.graft.postingShuffleBytes > [[PostingShuffleBytes]].
-    val route =
-      if (shuffleBytes >= 0) shuffleBytes
-      else graft.Conf.bytes(grams.sparkSession,
-        graft.Conf.PostingShuffleBytesKey, PostingShuffleBytes)
+  private[operators] def dupSpanFirsts(grams: DataFrame, preShuffle: Boolean,
+      inputBytes: BigInt): DataFrame = {
     val base =
-      if (inputBytes <= route) grams
+      if (!preShuffle) grams
       else grams.repartition(
         postingAggPartitions(grams.sparkSession, inputBytes), col("_g"))
     base.groupBy("_g")
@@ -1218,10 +1241,9 @@ object Dedup {
     // [[PostingShuffleBytes]] — the open-key-space map-side spill was
     // the r13 sweep's remaining span-family superlinear.
     val spark = df.sparkSession
-    val inputBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bigCorpus = bigPostingCorpus(spark, inputBytes)
-    val dupPlan = dupSpanFirsts(grams, inputBytes)
-    // Same guarded limit-probe as spanDuplicateIds (r15): under the
+    val bigCorpus = bigPostingCorpus(df)
+    val dupPlan = dupSpanFirsts(grams, bigCorpus, graft.Conf.estimatedBytes(df))
+    // Same guarded probe as spanDuplicateIds (r15): under the
     // cap the duplicated-span table serves as a cache-free local
     // broadcast relation; over it, the persisted shape as before.
     var dupCached: Option[DataFrame] = None
@@ -1241,11 +1263,10 @@ object Dedup {
       .agg(sort_array(collect_list(col("_pos"))).as("_starts"))
     val hitsCap = graft.Conf.count(
       spark, graft.Conf.ScrubHitsLimitKey, ScrubHitsBroadcastLimit)
-    // Guarded limit(cap+1) probe (r15): compute the hit table ONCE and
-    // collect it in the same action — cap+1 rows back means "over the
-    // cap" (fall through to the staged shapes below, which recompute);
-    // at or under it the rows ARE the complete table and serve as a
-    // LOCAL relation. The previous shape paid three scheduled jobs on
+    // Guarded probe (r15): compute the hit table ONCE and collect it
+    // in the same action — over the cap falls through to the staged
+    // shapes below, which recompute; at or under it the rows serve as
+    // a LOCAL relation. The previous shape paid three scheduled jobs on
     // the common under-cap path (eager persist+count, a second count,
     // then the collect the broadcast needed anyway) — this is one.
     // Dir-staged runs skip the probe: the stage is the 100 TB index
@@ -1265,11 +1286,9 @@ object Dedup {
           if (bigCorpus) hitsPlan
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           else hitsPlan
-        val rows = p.limit(graft.Conf.probeLimit(hitsCap)).collect()
-        if (rows.length <= hitsCap) {
-          if (bigCorpus) p.unpersist(false)
-          Some(rows)
-        } else None
+        val rows = graft.Conf.collectUpTo(p, hitsCap).toOption
+        if (rows.isDefined && bigCorpus) p.unpersist(false)
+        rows
       }
     lazy val hits = stage(hitsPlan, stageDir, eager = true)
     lazy val nHit = hits.count()
@@ -1279,13 +1298,7 @@ object Dedup {
     // Under the broadcast cap the hit rows are collected to the driver
     // (exactly what the broadcast exchange would do at execution
     // anyway) and served from a LOCAL relation, so nothing stays
-    // cached; past the cap on a LOCAL master the materialized stage is
-    // spilled to a temp parquet (same lifetime the cache had — the
-    // JVM's — but disk, not executor memory) and the cache releases
-    // too; past the cap on a REAL cluster without a stage dir the
-    // persist is kept — a driver-local temp path is not a shared
-    // filesystem there (r15, ADVICE). Dir-staged runs (the 100 TB
-    // configuration) were never cached and pass through.
+    // cached; past the cap [[releaseStage]] decides its lifetime.
     val hitSide =
       if (probed.isDefined) {
         broadcast(spark.createDataFrame(
@@ -1295,35 +1308,7 @@ object Dedup {
           java.util.Arrays.asList(hits.collect(): _*), hits.schema)
         hits.unpersist(false)
         broadcast(local)
-      } else if (stageDir.isDefined ||
-          spark.conf.get(StageDirConf, null) != null) {
-        hits // already parquet-backed, nothing cached
-      } else if (spark.sparkContext.isLocal) {
-        // Local master only (r15, ADVICE): a driver-local `file:` temp
-        // path is visible to every task here, so spilling the cached
-        // stage to temp parquet trades executor memory for disk
-        // safely. The dir lives under LocalFs' SHARED temp base — one
-        // JVM shutdown hook total, not one per call.
-        val dir = new java.io.File(
-          graft.LocalFs.tempDir("graft_scrub_hits"), "hits").toString
-        hits.write.mode("overwrite").parquet(dir)
-        hits.unpersist(false)
-        spark.read.parquet(dir)
-      } else {
-        // Multi-node cluster WITHOUT a stage dir: executors would
-        // write a driver-local temp path onto THEIR disks and the
-        // driver-side read would see nothing — a hard failure, or
-        // silently unscrubbed docs. Keep the (already-materialized)
-        // executor-storage persist instead: cluster-correct, costs
-        // only cache lifetime. The 100 TB configuration sets
-        // [[StageDirConf]] and never reaches this branch.
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"scrubSpanDuplicates: hit table ($nHit rows) exceeds the " +
-            s"broadcast cap and no stage dir is set; keeping it in " +
-            s"executor storage. Set ${StageDirConf} to stage large " +
-            s"scrubs on distributed storage.")
-        hits
-      }
+      } else releaseStage(hits, stageDir, "scrub_hits")
     // the hit side is materialized by now on every branch (probe
     // collect, eager stage, or the forced nHit count) — the posting
     // aggregate's cache (fallback path only) can go

@@ -38,7 +38,8 @@ object LineDedup {
   /** Row cap for the frequent-line driver collect (8 B a key → ≤ ~8 MB
     * at the cap), conf-dialable via
     * [[graft.Conf.LineFrequentLocalLimitKey]]; past it the broadcast
-    * builds from an eager executor-storage stage instead.
+    * builds from an eager stage instead ([[Dedup.releaseStage]] bounds
+    * its lifetime).
     */
   val FrequentLocalLimit: Long = 1L << 20
 
@@ -69,11 +70,10 @@ object LineDedup {
     // — and it was ALWAYS broadcast below, so collect it straight to a
     // local relation in the materializing job itself (r15): one
     // scheduled job instead of eager-persist + count + a broadcast
-    // build that re-read the cache, and nothing stays cached. The
-    // collect is GUARDED (r16, r15 ADVICE — the one r15 driver-collect
-    // with no row cap): past [[FrequentLocalLimit]] rows (pathological
-    // corpus: every line shared across minDocs docs) it falls back to
-    // the staged+broadcast r14 shape instead of collecting unbounded.
+    // build that re-read the cache, and nothing stays cached. Past
+    // [[FrequentLocalLimit]] rows (pathological corpus: every line
+    // shared across minDocs docs) it falls back to the staged+broadcast
+    // r14 shape instead of collecting unbounded.
     val frequentPlan = lines
       .groupBy("_key")
       .agg(count_distinct(col("_id")).as("_docs"))
@@ -81,17 +81,16 @@ object LineDedup {
       .select("_key")
     val cap = graft.Conf.count(docs.sparkSession,
       graft.Conf.LineFrequentLocalLimitKey, FrequentLocalLimit)
-    val probe = frequentPlan.limit(graft.Conf.probeLimit(cap)).collect()
-    val frequent =
-      if (probe.length <= cap)
+    val frequent = graft.Conf.collectUpTo(frequentPlan, cap) match {
+      case Right(rows) =>
         docs.sparkSession.createDataFrame(
-          java.util.Arrays.asList(probe: _*), frequentPlan.schema)
-      else
-        // eager persist + count while `lines` is still cached; the
-        // broadcast build at execution reads this cache (its lifetime
-        // is the returned plan's — the bounded-leak trade only the
-        // pathological route pays)
-        Dedup.stage(frequentPlan, None, eager = true)
+          java.util.Arrays.asList(rows: _*), frequentPlan.schema)
+      case Left(_) =>
+        // eager stage while `lines` is still cached; on a local master
+        // it is spilled to temp parquet so no cache outlives the call
+        Dedup.releaseStage(
+          Dedup.stage(frequentPlan, None, eager = true), None, "line_frequent")
+    }
     lines.unpersist()
 
     // tag (not anti-join) so kept/removed counts come from the SAME

@@ -82,8 +82,7 @@ object NgramStats {
     */
   def topK(df: DataFrame, textCol: String, n: Int, k: Int,
       gramCol: String = "gram", countCol: String = "n",
-      keptBroadcastLimit: Int = KeptBroadcastLimit,
-      tieGuardStatsBytes: Long = TieGuardStatsBytes): DataFrame = {
+      keptBroadcastLimit: Int = KeptBroadcastLimit): DataFrame = {
     require(n >= 1, s"ngram width must be >= 1, got $n")
     require(k >= 1, s"top-k must be >= 1, got $k")
     require(keptBroadcastLimit >= 0,
@@ -101,35 +100,30 @@ object NgramStats {
     val countsPlan = grams
       .groupBy(xxhash64(col("_g")).as("_h"))
       .agg(count(lit(1)).as("_c"))
-    // Single-probe fast path (r16) — see the docstring. The legacy
-    // `tieGuardStatsBytes` dial is kept as the forced-guarded escape
-    // hatch (< 0 skips the probe, the shape the route-parity spec
-    // exercises); its r15 stats-gate role is retired — the probe is
+    // Single-probe fast path (r16) — see the docstring. The probe is
     // strictly cheaper than both r15 shapes whenever it lands, and
     // bounded when it does not.
-    if (tieGuardStatsBytes >= 0) {
-      val probeCap = math.min(keptBroadcastLimit.toLong, graft.Conf.count(
-        df.sparkSession, graft.Conf.NgramKeptProbeLimitKey, KeptProbeLimit))
-      val top = countsPlan.orderBy(col("_c").desc)
-        .limit(graft.Conf.probeLimit(probeCap)).collect()
-      if (top.isEmpty) return empty
-      val exhausted = top.length <= probeCap
-      // the k-th largest count is known when the table was exhausted
-      // or at least k rows came back (probeCap < k can't happen on
-      // real dials — keptBroadcastLimit ≥ k — but stays correct)
-      if (exhausted || top.length >= k) {
-        val threshold = top(math.min(k, top.length) - 1).getLong(1)
-        if (exhausted || top.last.getLong(1) < threshold) {
-          // every excluded row counts ≤ the last collected row <
-          // threshold — the collected prefix holds the COMPLETE kept
-          // set (k rows plus boundary ties)
-          val spark = df.sparkSession
-          import spark.implicits._
-          val local = top.iterator.filter(_.getLong(1) >= threshold)
-            .map(_.getLong(0)).toSeq.toDF("_h")
-          return finish(
-            grams.join(broadcast(local), xxhash64(col("_g")) === col("_h")))
-        }
+    val probeCap = math.min(keptBroadcastLimit.toLong, graft.Conf.count(
+      df.sparkSession, graft.Conf.NgramKeptProbeLimitKey, KeptProbeLimit))
+    val probe = graft.Conf.collectUpTo(countsPlan.orderBy(col("_c").desc), probeCap)
+    val top = probe.merge
+    if (top.isEmpty) return empty
+    val exhausted = probe.isRight
+    // the k-th largest count is known when the table was exhausted
+    // or at least k rows came back (probeCap < k can't happen on
+    // real dials — keptBroadcastLimit ≥ k — but stays correct)
+    if (exhausted || top.length >= k) {
+      val threshold = top(math.min(k, top.length) - 1).getLong(1)
+      if (exhausted || top.last.getLong(1) < threshold) {
+        // every excluded row counts ≤ the last collected row <
+        // threshold — the collected prefix holds the COMPLETE kept
+        // set (k rows plus boundary ties)
+        val spark = df.sparkSession
+        import spark.implicits._
+        val local = top.iterator.filter(_.getLong(1) >= threshold)
+          .map(_.getLong(0)).toSeq.toDF("_h")
+        return finish(
+          grams.join(broadcast(local), xxhash64(col("_g")) === col("_h")))
       }
     }
     val counts = countsPlan
@@ -143,16 +137,16 @@ object NgramStats {
       if (topCounts.isNullAt(0)) return empty
       val threshold = topCounts.getLong(0)
       val kept = counts.filter(col("_c") >= threshold).select(col("_h"))
-      val keptProbe = kept.limit(keptBroadcastLimit + 1).collect()
       val spark = df.sparkSession
       import spark.implicits._
-      val filtered =
-        if (keptProbe.length <= keptBroadcastLimit) {
+      val filtered = graft.Conf.collectUpTo(kept, keptBroadcastLimit) match {
+        case Right(keptRows) =>
           // local relation → plan-time broadcast, no executor cache
           // retained by the returned plan
-          val local = keptProbe.map(_.getLong(0)).toSeq.toDF("_h")
+          val local = keptRows.map(_.getLong(0)).toSeq.toDF("_h")
           grams.join(broadcast(local), xxhash64(col("_g")) === col("_h"))
-        } else grams.join(kept, xxhash64(col("_g")) === col("_h"))
+        case Left(_) => grams.join(kept, xxhash64(col("_g")) === col("_h"))
+      }
       finish(filtered)
     } finally counts.unpersist(false)
   }
@@ -162,12 +156,6 @@ object NgramStats {
     * to a shuffled semi-join.
     */
   val KeptBroadcastLimit: Int = 1000000
-
-  /** Legacy dial (r15 stats gate, retired r16): any value ≥ 0 takes
-    * the single-probe fast path; < 0 forces the guarded persist shape
-    * (the route-parity escape hatch the spec exercises).
-    */
-  val TieGuardStatsBytes: Long = 8L << 20
 
   /** Default row cap for [[topK]]'s single-probe TakeOrdered (r16,
     * conf-dialable via [[graft.Conf.NgramKeptProbeLimitKey]]): must
@@ -289,15 +277,8 @@ object NgramStats {
       maxMapSize: Int = 65536,
       gramCol: String = "gram", countCol: String = "n",
       routeBytes: Long = -1L): DataFrame = {
-    val route =
-      if (routeBytes >= 0) routeBytes
-      else graft.Conf.bytes(df.sparkSession,
-        graft.Conf.SketchRouteBytesKey, SketchRouteBytes)
-    val inputBytes: BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"topKAuto: input ~$inputBytes B vs route $route B -> " +
-        s"${if (inputBytes <= route) "exact topK" else "topKSketch"}")
-    if (inputBytes <= route) topK(df, textCol, n, k, gramCol, countCol)
+    if (graft.Conf.underBytes(df, graft.Conf.SketchRouteBytesKey,
+        SketchRouteBytes, routeBytes)) topK(df, textCol, n, k, gramCol, countCol)
     else topKSketch(df, textCol, n, k, maxMapSize, gramCol, countCol)
   }
 

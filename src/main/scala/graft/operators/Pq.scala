@@ -426,12 +426,12 @@ object Pq {
     require(pool >= k, s"pq: pool=$pool must be ≥ k=$k")
     val model = loadModel(spark, indexPath)
     val codes = spark.read.parquet(s"$indexPath/codes")
-    val qRowsAll = queries
-      .select(col(qIdCol).as("_qid"), col(qVecCol).cast("array<float>").as("_qv"))
-      .limit(MaxJoinQueries + 1).collect()
-    require(qRowsAll.length <= MaxJoinQueries,
-      s"pq: query batch exceeds $MaxJoinQueries — for corpus-scale " +
-        "retrieval use the IVF/LSH bucket joins instead of a broadcast batch")
+    val qRowsAll = graft.Conf.collectUpTo(queries
+        .select(col(qIdCol).as("_qid"), col(qVecCol).cast("array<float>").as("_qv")),
+        MaxJoinQueries)
+      .getOrElse(throw new IllegalArgumentException(
+        s"pq: query batch exceeds $MaxJoinQueries — for corpus-scale " +
+          "retrieval use the IVF/LSH bucket joins instead of a broadcast batch"))
     require(qRowsAll.nonEmpty, "pq: empty query batch")
     // null-vector queries return no neighbors — the same outcome
     // cosineTopKJoin reaches (null cosine scores, skipped by the heap)

@@ -589,18 +589,12 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String, assigned: DataFrame,
       threshold: Double, maxCellSize: Int,
       walkRouteBytes: Long = -1L): DataFrame = {
-    // walkRouteBytes < 0 (the default) resolves through session conf
-    // (r15): explicit argument > spark.graft.cellWalkShuffleBytes >
-    // the box-calibrated [[CellWalkShuffleBytes]] constant.
-    val routeBytes =
-      if (walkRouteBytes >= 0) walkRouteBytes
-      else graft.Conf.bytes(df.sparkSession,
-        graft.Conf.CellWalkBytesKey, CellWalkShuffleBytes)
     val prepped = assigned
       .select(col(idCol).as("_id"), col(vecCol).as("_v"), col("_cell"))
       .withColumn("_nm", norm(col("_v")))
-    val inputBytes: BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // The cell walk is STATS-ROUTED (r14): below the threshold the
+    // The cell walk is STATS-ROUTED (r14; threshold = `walkRouteBytes`
+    // when >= 0, else spark.graft.cellWalkShuffleBytes, else
+    // [[CellWalkShuffleBytes]]): below the threshold the
     // collect_list + native SemanticDrops shape is cheapest (two
     // codegen'd stages, no external iteration). Above it the
     // corpus-wide collect_list becomes the cost driver — every vector
@@ -616,7 +610,8 @@ object Similarity {
     // spec-pinned route-equal). Memory per task: one cell, regardless
     // of corpus size.
     val drops =
-      if (inputBytes <= routeBytes)
+      if (graft.Conf.underBytes(df, graft.Conf.CellWalkBytesKey,
+          CellWalkShuffleBytes, walkRouteBytes))
         prepped
           .groupBy("_cell")
           .agg(collect_list(struct(col("_id"), col("_v"), col("_nm"))).as("_items"))

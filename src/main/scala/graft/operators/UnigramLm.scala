@@ -61,11 +61,10 @@ object UnigramLm {
     require(maxPieceLen >= 1, s"maxPieceLen must be >= 1, got $maxPieceLen")
     require(emIters >= 1, s"emIters must be >= 1, got $emIters")
     require(shrink > 0 && shrink < 1, s"shrink must be in (0,1), got $shrink")
-    val rows = BpeTrain.wordCounts(df, textCol, minCount)
-      .limit(graft.Conf.probeLimit(maxWords)).collect()
-    require(rows.length <= maxWords,
-      s"unigram vocabulary exceeds maxWords=$maxWords distinct words: raise " +
-        "minCount (Zipf: a count floor bounds the tail) or raise the cap")
+    val rows = graft.Conf.collectUpTo(BpeTrain.wordCounts(df, textCol, minCount), maxWords)
+      .getOrElse(throw new IllegalArgumentException(
+        s"unigram vocabulary exceeds maxWords=$maxWords distinct words: raise " +
+          "minCount (Zipf: a count floor bounds the tail) or raise the cap"))
     trainLocal(rows.map(r => r.getString(0) -> r.getLong(1)),
       vocabSize, maxPieceLen, emIters, shrink)
   }

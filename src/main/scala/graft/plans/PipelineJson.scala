@@ -440,11 +440,12 @@ object PipelineJson {
         require(previewRows >= 0,
           s"email_notify node '$id': preview_rows must be >= 0, got $previewRows")
         Sink.unit { df =>
-          val preview = df.limit(graft.Conf.probeLimit(previewRows)).collect()
-          val shown = preview.take(previewRows)
-          val note =
-            if (preview.length > previewRows) s"first $previewRows rows:"
-            else s"${preview.length} rows:"
+          val preview = graft.Conf.collectUpTo(df, previewRows)
+          val shown = preview.merge.take(previewRows)
+          val note = preview match {
+            case Left(_) => s"first $previewRows rows:"
+            case Right(rows) => s"${rows.length} rows:"
+          }
           // readable cells for non-scalar columns: raw String.valueOf
           // prints '[B@1a2b3c' for binary and 'WrappedArray(...)' for
           // arrays — exactly the columns a media/embedding pipeline
@@ -905,18 +906,17 @@ object PipelineJson {
     * request body — header row + RFC-4180-quoted cells, matching the
     * reference's "input file content as body" behavior.
     *
-    * The collect is capped at `maxRows` (one `limit(max+1)` job, so
+    * The collect is capped at `maxRows` ([[graft.Conf.collectUpTo]], so
     * the overflow check itself never pulls the full input): beyond the
     * cap the node raises instead of silently OOMing the driver.
     */
   private def toCsvString(
       df: org.apache.spark.sql.DataFrame, maxRows: Long, nodeId: String): String = {
-    val capped = df.limit(math.min(maxRows, Int.MaxValue - 1L).toInt + 1).collect()
-    if (capped.length > maxRows)
+    val capped = graft.Conf.collectUpTo(df, maxRows).getOrElse(
       throw new IllegalStateException(
         s"invoke_http node '$nodeId': input exceeds max_body_rows=$maxRows — " +
           "the request body is materialized on the driver; raise max_body_rows " +
-          "only for genuinely bounded inputs, or use webhook_send for bulk export")
+          "only for genuinely bounded inputs, or use webhook_send for bulk export"))
     def cell(v: Any): String = {
       val s = if (v == null) "" else v.toString
       if (s.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))

@@ -32,14 +32,26 @@ class ConfSpec extends AnyFunSuite {
     }
   }
 
-  test("probeLimit: cap+1 never overflows; negative caps are rejected loudly") {
-    // Long.MaxValue dials must mean "as much as an Int limit can
-    // express", not wrap negative into limit() (r15 ADVICE)
-    assert(Conf.probeLimit(0L) == 1)
-    assert(Conf.probeLimit(41L) == 42)
-    assert(Conf.probeLimit(Long.MaxValue) == Int.MaxValue)
-    assert(Conf.probeLimit(Int.MaxValue.toLong) == Int.MaxValue)
-    intercept[IllegalArgumentException](Conf.probeLimit(-1L))
+  test("collectUpTo: cap+1 never overflows; negative caps are rejected loudly") {
+    // Right = at most cap rows, all of them; Left = over the cap, its
+    // first cap + 1 rows
+    def probe(rows: Long, cap: Long) = Conf.collectUpTo(spark.range(rows).toDF(), cap)
+    def shape(e: Either[Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row]]) =
+      e.fold(l => ("Left", l.length), r => ("Right", r.length))
+    assert(shape(probe(0, 0)) == ("Right", 0))   // at
+    assert(shape(probe(5, 0)) == ("Left", 1))    // over
+    assert(shape(probe(40, 41)) == ("Right", 40)) // under
+    assert(shape(probe(41, 41)) == ("Right", 41)) // at
+    assert(shape(probe(50, 41)) == ("Left", 42))  // over
+    // Int.MaxValue and Long.MaxValue dials must mean "as much as an
+    // Int limit can express", not wrap negative into limit() (r15
+    // ADVICE); inputs at or over them cannot be collected, so only
+    // "under" is exercised
+    for (cap <- Seq(Int.MaxValue.toLong, Long.MaxValue)) {
+      assert(shape(probe(0, cap)) == ("Right", 0))
+      assert(shape(probe(3, cap)) == ("Right", 3))
+    }
+    intercept[IllegalArgumentException](probe(3, -1L))
     // route flips on negative caps raise at the probe, not silently
     val docs = Seq((1L, "a b c d e"), (2L, "a b c d e")).toDF("doc_id", "text")
     withConf(Conf.DupSpanLocalLimitKey, "-5") {
@@ -51,6 +63,51 @@ class ConfSpec extends AnyFunSuite {
     withConf(Conf.DupSpanLocalLimitKey, Long.MaxValue.toString) {
       assert(Dedup.spanDuplicateIds(docs, "doc_id", "text", spanTokens = 2)
         .collect().map(_.getLong(0)).toSeq == Seq(2L))
+    }
+  }
+
+  test("collectUpTo: one scheduled job over a shuffled aggregate, under or over the cap") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val agg = spark.range(1000).groupBy((col("id") % 7).as("k")).count()
+    val sc = spark.sparkContext
+    // AQE materializes the aggregate's exchange as its own map-stage
+    // job (final stage carries a shuffle dependency); the probe itself
+    // must add exactly one result job — no executeTake ramp
+    var mapJobs, resultJobs = 0
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (org.apache.spark.ListenerBusDrain.isMapStageJob(j)) mapJobs += 1
+        else resultJobs += 1
+    }
+    for ((cap, under) <- Seq(100L -> true, 3L -> false)) {
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      mapJobs = 0; resultJobs = 0
+      sc.addSparkListener(listener)
+      try {
+        val out = Conf.collectUpTo(agg, cap)
+        org.apache.spark.ListenerBusDrain.drain(sc)
+        assert(out.isRight == under, s"cap=$cap")
+        assert(resultJobs == 1, s"cap=$cap: $resultJobs result jobs")
+        assert(mapJobs == 1, s"cap=$cap: $mapJobs map-stage jobs")
+      } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("underBytes: an explicit threshold beats conf, conf beats the default") {
+    val df = spark.range(100).toDF()
+    val est = Conf.estimatedBytes(df)
+    assert(est > 0)
+    val key = Conf.CellWalkBytesKey
+    // default only; the comparison is inclusive
+    assert(Conf.underBytes(df, key, est.toLong))
+    assert(!Conf.underBytes(df, key, est.toLong - 1))
+    withConf(key, "0") {
+      assert(!Conf.underBytes(df, key, default = Long.MaxValue)) // conf > default
+      assert(Conf.underBytes(df, key, 0L, explicit = est.toLong)) // explicit > conf
+    }
+    withConf(key, "1g") {
+      assert(Conf.underBytes(df, key, default = 0L))              // conf > default
+      assert(!Conf.underBytes(df, key, Long.MaxValue, explicit = 0L)) // explicit > conf
     }
   }
 

@@ -64,8 +64,13 @@ class LineDedupSpec extends AnyFunSuite {
     val docs = (1 to 6).map(i => (i.toLong, s"banner one\nbanner two\nbody $i"))
     val fast = run(docs, minDocs = 3)
     spark.conf.set(graft.Conf.LineFrequentLocalLimitKey, "0")
-    try assert(run(docs, minDocs = 3) == fast)
-    finally spark.conf.unset(graft.Conf.LineFrequentLocalLimitKey)
+    try {
+      // the over-cap stage must not stay cached past the call (local
+      // master: it is spilled to temp parquet)
+      val cached = spark.sparkContext.getPersistentRDDs.size
+      assert(run(docs, minDocs = 3) == fast)
+      assert(spark.sparkContext.getPersistentRDDs.size == cached)
+    } finally spark.conf.unset(graft.Conf.LineFrequentLocalLimitKey)
   }
 
   test("plan: frequent-line probe broadcasts; no second wide shuffle of lines") {

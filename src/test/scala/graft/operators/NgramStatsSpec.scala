@@ -86,16 +86,14 @@ class NgramStatsSpec extends AnyFunSuite {
   test("tie-volume guard: past the cap the recount degrades to a shuffled join") {
     // k-th count = 1 → the kept set is (nearly) every distinct gram;
     // with the cap forced to 0 the recount must take the non-broadcast
-    // fallback and still return the identical exact table. The tie
-    // gate is forced shut (tieGuardStatsBytes = -1) so the guarded
-    // persist + probe path is what's exercised — a tiny fixture would
-    // otherwise clear the r15 persist-economy gate and never probe.
+    // fallback and still return the identical exact table. The cap
+    // of 0 also bounds the single probe, so the guarded persist +
+    // probe path is what's exercised.
     val docs = Seq((1L, "a b c d e f g h"), (2L, "a b x")).toDF("doc_id", "text")
     val expected = NgramStats.topK(docs, "text", 2, 5)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(expected.head == (("a b", 2L)))
-    val fallback = NgramStats.topK(docs, "text", 2, 5, keptBroadcastLimit = 0,
-        tieGuardStatsBytes = -1L)
+    val fallback = NgramStats.topK(docs, "text", 2, 5, keptBroadcastLimit = 0)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(fallback == expected)
   }
@@ -109,10 +107,13 @@ class NgramStatsSpec extends AnyFunSuite {
     // r16 default: ONE TakeOrdered probe collects the kept set whole;
     // the returned recount plan joins a LOCAL relation and scans the
     // corpus exactly once (the probe was the other scan). The
-    // forced-guarded run must return the identical table.
+    // forced-guarded run (probe cap conf-forced to 0) must return the
+    // identical table.
     val fast = NgramStats.topK(docs, "text", 3, 25)
-    val guarded = NgramStats.topK(docs, "text", 3, 25,
-      tieGuardStatsBytes = -1L)
+    spark.conf.set(graft.Conf.NgramKeptProbeLimitKey, "0")
+    val guarded =
+      try NgramStats.topK(docs, "text", 3, 25)
+      finally spark.conf.unset(graft.Conf.NgramKeptProbeLimitKey)
     assert(rows(fast) == rows(guarded))
     // route observability: both routes serve the kept hashes from a
     // LocalTableScan broadcast; neither recomputes the count aggregate

@@ -53,6 +53,18 @@ class ProbeCapBoundsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("maxWords=1"), e.getMessage)
   }
 
+  test("NgramStats.topK: keptBroadcastLimit = Int.MaxValue and 0 on the guarded path equal the default") {
+    // probe conf forced to 0: the single probe overflows at once, so
+    // the kept set goes through the guarded collect capped at
+    // keptBroadcastLimit
+    val want = NgramStats.topK(text, "text", 2, 3).collect().toSeq
+    spark.conf.set(graft.Conf.NgramKeptProbeLimitKey, "0")
+    try for (limit <- Seq(Int.MaxValue, 0))
+      assert(NgramStats.topK(text, "text", 2, 3, keptBroadcastLimit = limit)
+        .collect().toSeq == want, s"keptBroadcastLimit=$limit")
+    finally spark.conf.unset(graft.Conf.NgramKeptProbeLimitKey)
+  }
+
   private lazy val chains = Seq((1L, 2L), (3L, 2L), (10L, 11L)).toDF("id_a", "id_b")
   private lazy val docs = Seq(1L, 2L, 3L, 10L, 11L, 12L).toDF("id")
 

@@ -62,9 +62,9 @@ class SpanScrubSpec extends AnyFunSuite {
         .shingleHashesCol(col("text"), 8)).as("_g"))
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("_g").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val direct = rows(Dedup.dupSpanFirsts(grams, BigInt(0))) // under threshold
-    val routed = rows(Dedup.dupSpanFirsts(grams, BigInt(1),
-      shuffleBytes = 0L)) // forced pre-shuffle route
+    val direct = rows(Dedup.dupSpanFirsts(grams, preShuffle = false, BigInt(0)))
+    val routed = rows(Dedup.dupSpanFirsts(grams, preShuffle = true,
+      BigInt(1))) // forced pre-shuffle route
     assert(direct == routed && direct.nonEmpty)
   }
 
