@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 /** Recall-target auto-tuning for the ANN family (r13 — RECALL.md
   * measures the curves; this picks the dial).
   *
-  * `tuneForRecall`-style entry points choose the CHEAPEST operating
-  * point (nprobe for IVF, pool for the quantized rerank family,
-  * (nprobe, pool) jointly for the composed indexes) whose measured
-  * recall@k on a deterministic holdout reaches the requested target.
+  * The tuners choose the CHEAPEST operating point (nprobe for raw IVF
+  * here; pool, and nprobe jointly when the index has cells, for
+  * [[AnnIndex.tune]]) whose measured recall@k on a deterministic
+  * holdout reaches the requested target. This object holds the shared
+  * core — holdout, ground truth, recall, the cheapest-first walk, the
+  * operating-point sidecar — plus the raw-IVF entries.
   *
   * Method: holdout queries are the md5(id)-ordered first `nQueries`
   * corpus vectors (the [[Similarity.sampleCentroids]] sampling device
@@ -99,7 +101,8 @@ object AnnTune {
     best
   }
 
-  private def doubling(max: Int): Seq[Int] = {
+  /** 1, 2, 4, … up to and including `max`: the dial walk's candidates. */
+  def doubling(max: Int): Seq[Int] = {
     val b = Seq.newBuilder[Int]
     var v = 1
     while (v < max) { b += v; v *= 2 }
@@ -118,79 +121,6 @@ object AnnTune {
       Similarity.ivfTopK(index, idCol, vecCol, v, k, s("nprobe"))
     }
   }
-
-  /** SQ8 (and any pure pool-rerank index via the same shape): choose
-    * the smallest rerank pool hitting `target`. The pool walk starts
-    * at k (a pool below k cannot even fill the result) and doubles to
-    * `maxPool`.
-    */
-  def tuneSq(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, target: Double,
-      k: Int = 10, nQueries: Int = 20, maxPool: Int = 8192): OperatingPoint = {
-    val qs = holdout(corpus, idCol, vecCol, nQueries)
-    val truth = groundTruth(corpus, idCol, vecCol, qs, k)
-    tune(doubling(maxPool).filter(_ >= k).map(p => Map("pool" -> p)),
-      qs, truth, idCol, k, target) { s => v =>
-      Sq.topK(spark, indexPath, corpus, idCol, vecCol, v, k, s("pool"))
-    }
-  }
-
-  /** PQ: same pool walk as [[tuneSq]] over the PQ index. */
-  def tunePq(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, target: Double,
-      k: Int = 10, nQueries: Int = 20, maxPool: Int = 8192): OperatingPoint = {
-    val qs = holdout(corpus, idCol, vecCol, nQueries)
-    val truth = groundTruth(corpus, idCol, vecCol, qs, k)
-    tune(doubling(maxPool).filter(_ >= k).map(p => Map("pool" -> p)),
-      qs, truth, idCol, k, target) { s => v =>
-      Pq.topK(spark, indexPath, corpus, idCol, vecCol, v, k, s("pool"))
-    }
-  }
-
-  /** IVFPQ: joint (nprobe, pool) walk ordered by the nprobe×pool cost
-    * proxy (rows probed × rows reranked — the two multiplicative
-    * levers), cheapest first; first point reaching `target` wins.
-    */
-  def tuneIvfPq(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, target: Double, nlist: Int,
-      k: Int = 10, nQueries: Int = 20,
-      pools: Seq[Int] = Seq(256, 1024, 4096)): OperatingPoint = {
-    val qs = holdout(corpus, idCol, vecCol, nQueries)
-    val truth = groundTruth(corpus, idCol, vecCol, qs, k)
-    val grid = for {
-      np <- doubling(nlist); p <- pools.sorted if p >= k
-    } yield Map("nprobe" -> np, "pool" -> p)
-    val ordered = grid.sortBy(s => (s("nprobe").toLong * s("pool"), s("nprobe")))
-    tune(ordered, qs, truth, idCol, k, target) { s => v =>
-      Pq.ivfPqTopK(spark, indexPath, corpus, idCol, vecCol, v, k,
-        s("nprobe"), s("pool"))
-    }
-  }
-
-  /** BQ (1-bit codes, r14): same pool walk as [[tuneSq]] — the coarse
-    * codes just need a generous pool, which is exactly what the walk
-    * discovers instead of a guessed constant.
-    */
-  def tuneBq(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, target: Double,
-      k: Int = 10, nQueries: Int = 20, maxPool: Int = 8192): OperatingPoint = {
-    val qs = holdout(corpus, idCol, vecCol, nQueries)
-    val truth = groundTruth(corpus, idCol, vecCol, qs, k)
-    tune(doubling(maxPool).filter(_ >= k).map(p => Map("pool" -> p)),
-      qs, truth, idCol, k, target) { s => v =>
-      Bq.topK(spark, indexPath, corpus, idCol, vecCol, v, k, s("pool"))
-    }
-  }
-
-  /** OPQ (r14): an OPQ index IS a PQ index with the rotation folded
-    * into the saved codes/codebooks ([[Pq.fitOpq]] + [[Pq.savePqIndex]]),
-    * so the probe-side dial walk is [[tunePq]] verbatim — named so
-    * call sites read as the family they tune.
-    */
-  def tuneOpq(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, target: Double,
-      k: Int = 10, nQueries: Int = 20, maxPool: Int = 8192): OperatingPoint =
-    tunePq(spark, indexPath, corpus, idCol, vecCol, target, k, nQueries, maxPool)
 
   // ---- batch k-NN JOIN tuning (r15) ----------------------------------
   // The retrieval shape a curation pipeline actually runs is the JOIN
@@ -281,142 +211,67 @@ object AnnTune {
     } finally { qs.unpersist(); () }
   }
 
-  /** PQ join: smallest rerank pool whose batch join hits `target` —
-    * serves PQ and OPQ indexes alike (an OPQ index IS a PQ index with
-    * the rotation folded in).
-    */
-  def tunePqJoin(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, target: Double,
-      k: Int = 10, nQueries: Int = 20, maxPool: Int = 8192): OperatingPoint = {
-    val qs = holdoutDf(corpus, idCol, vecCol, nQueries)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val truth = joinTruth(qs, corpus, idCol, vecCol, k)
-      tuneJoin(doubling(maxPool).filter(_ >= k).map(p => Map("pool" -> p)),
-        truth, target) { s =>
-        Pq.pqTopKJoin(spark, indexPath, qs, "_hq_id", "_hq_v",
-          corpus, idCol, vecCol, k, s("pool"))
-      }
-    } finally { qs.unpersist(); () }
-  }
-
   // ---- operating-point sidecar (r14) --------------------------------
 
   /** Sidecar file name, stored INSIDE the index directory so the point
     * travels with the index (copy/move/version the index, the tuned
     * dials come along).
     */
-  val PointSidecar = "_operating_point.json"
+  val PointSidecar = "_operating_point.txt"
 
   /** Join-granularity sidecar (r15): an index can carry BOTH a probe
     * point and a join point — the dial spaces are the same but the
     * tuned values legitimately differ (join recall averages a batch),
     * so they live in separate files and never clobber each other.
     */
-  val JoinPointSidecar = "_join_operating_point.json"
+  val JoinPointSidecar = "_join_operating_point.txt"
 
-  /** Persist `op` as `<indexPath>/<sidecar>` (Hadoop FS — works on any
-    * filesystem the index itself lives on). Overwrites: re-tuning an
-    * index replaces its point.
+  /** Persist `op` as the [[ModelSidecar]] `<indexPath>/<sidecar>` (a
+    * `dial.<name>` prop per dial plus `recall`). Overwrites: re-tuning
+    * an index replaces its point.
     */
   def savePoint(spark: SparkSession, indexPath: String,
-      op: OperatingPoint, sidecar: String = PointSidecar): Unit = {
-    val settings = op.setting.toSeq.sortBy(_._1)
-      .map { case (n, v) => s""""$n":$v""" }.mkString(",")
-    val json = s"""{"setting":{$settings},"recall":${op.recall}}"""
-    val path = new org.apache.hadoop.fs.Path(indexPath, sidecar)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-  }
+      op: OperatingPoint, sidecar: String = PointSidecar): Unit =
+    ModelSidecar.write(spark, indexPath, sidecar,
+      op.setting.map { case (n, v) => s"dial.$n" -> v.toString } +
+        ("recall" -> op.recall.toString), Nil)
 
   /** Load the sidecar written by [[savePoint]]; None when the index
     * has no tuned point yet.
     */
   def loadPoint(spark: SparkSession, indexPath: String,
-      sidecar: String = PointSidecar): Option[OperatingPoint] = {
-    val path = new org.apache.hadoop.fs.Path(indexPath, sidecar)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return None
-    val in = fs.open(path)
-    val json = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toString("UTF-8")
-    } finally in.close()
-    val dial = "\"(\\w+)\":(\\d+)[,}]".r
-    val setting = dial.findAllMatchIn(
-      json.substring(json.indexOf("{", 1), json.indexOf("}") + 1))
-      .map(m => m.group(1) -> m.group(2).toInt).toMap
-    val recall = "\"recall\":([0-9.Ee+-]+)".r.findFirstMatchIn(json)
-      .map(_.group(1).toDouble)
-    recall.map(r => OperatingPoint(setting, r))
-  }
+      sidecar: String = PointSidecar): Option[OperatingPoint] =
+    if (!ModelSidecar.exists(spark, indexPath, sidecar)) None
+    else {
+      val props = ModelSidecar.read(spark, indexPath, sidecar)._1
+      Some(OperatingPoint(props.collect { case (n, v) if n.startsWith("dial.") =>
+        n.stripPrefix("dial.") -> v.toInt }, props("recall").toDouble))
+    }
 
-  private def requirePoint(spark: SparkSession, indexPath: String,
-      dials: String*): Map[String, Int] =
-    requireSidecar(spark, indexPath, PointSidecar, dials: _*)
-
-  private def requireSidecar(spark: SparkSession, indexPath: String,
+  /** The saved point's dials; raises when the index has no point, or
+    * the point lacks one of `dials`.
+    */
+  private[operators] def requirePoint(spark: SparkSession, indexPath: String,
       sidecar: String, dials: String*): Map[String, Int] = {
     val op = loadPoint(spark, indexPath, sidecar)
       .getOrElse(throw new IllegalStateException(
         s"no tuned operating point at $indexPath/$sidecar — " +
-          "run the matching AnnTune.tune* and savePoint first"))
+          "run the matching tune and AnnTune.savePoint first"))
     dials.foreach(d => require(op.setting.contains(d),
       s"operating point at $indexPath lacks dial '$d' (has ${op.setting.keySet})" +
         " — it was tuned for a different index family"))
     op.setting
   }
 
-  /** Probe entry points that AUTO-LOAD the saved operating point — the
-    * steady-state call shape: tune once, save, and every later query
-    * runs at the tuned dial without the caller re-threading constants.
-    */
-  def sqTopKTuned(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, query: Array[Float], k: Int): DataFrame =
-    Sq.topK(spark, indexPath, corpus, idCol, vecCol, query, k,
-      requirePoint(spark, indexPath, "pool")("pool"))
-
-  /** [[Pq.topK]] at the saved point — serves PQ and OPQ indexes alike. */
-  def pqTopKTuned(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, query: Array[Float], k: Int): DataFrame =
-    Pq.topK(spark, indexPath, corpus, idCol, vecCol, query, k,
-      requirePoint(spark, indexPath, "pool")("pool"))
-
-  def bqTopKTuned(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, query: Array[Float], k: Int): DataFrame =
-    Bq.topK(spark, indexPath, corpus, idCol, vecCol, query, k,
-      requirePoint(spark, indexPath, "pool")("pool"))
-
-  def ivfPqTopKTuned(spark: SparkSession, indexPath: String, corpus: DataFrame,
-      idCol: String, vecCol: String, query: Array[Float], k: Int): DataFrame = {
-    val s = requirePoint(spark, indexPath, "nprobe", "pool")
-    Pq.ivfPqTopK(spark, indexPath, corpus, idCol, vecCol, query, k,
-      s("nprobe"), s("pool"))
-  }
-
-  /** Batch k-NN join entry points at the saved JOIN operating point
-    * (r15) — the tune-once/join-many steady state for the retrieval
-    * shape pipelines actually run. The IVF variant loads the persisted
-    * index from `indexPath` itself.
+  /** IVF batch k-NN join at the saved JOIN operating point (r15) — the
+    * tune-once/join-many steady state; loads the persisted index from
+    * `indexPath` itself.
     */
   def ivfTopKJoinTuned(spark: SparkSession, indexPath: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    val s = requireSidecar(spark, indexPath, JoinPointSidecar, "nprobe")
+    val s = requirePoint(spark, indexPath, JoinPointSidecar, "nprobe")
     Similarity.ivfTopKJoin(Similarity.loadIvfIndex(spark, indexPath),
       queries, qIdCol, qVecCol, idCol, vecCol, k, s("nprobe"))
-  }
-
-  /** [[Pq.pqTopKJoin]] at the saved join point — PQ and OPQ alike. */
-  def pqTopKJoinTuned(spark: SparkSession, indexPath: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      corpus: DataFrame, cIdCol: String, cVecCol: String, k: Int): DataFrame = {
-    val s = requireSidecar(spark, indexPath, JoinPointSidecar, "pool")
-    Pq.pqTopKJoin(spark, indexPath, queries, qIdCol, qVecCol,
-      corpus, cIdCol, cVecCol, k, s("pool"))
   }
 }

@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.functions.BqFunctions
+import org.apache.spark.sql.DataFrame
 
 /** Binary-quantization ANN (1 bit per dimension — sign-bit codes,
   * the SRP-LSH construction of Charikar STOC'02 used as a SCAN code
@@ -53,76 +51,5 @@ object Bq {
       while (i < dim) { sums(i) += v(i); i += 1 }
     }
     BqModel(sums.map(_ / sample.length), normalize)
-  }
-
-  /** Map-only: add the packed `codeBytes`-byte `codeCol`. */
-  def encode(df: DataFrame, vecCol: String, model: BqModel,
-      codeCol: String = "_code"): DataFrame =
-    df.withColumn(codeCol,
-      BqFunctions.bqEncode(col(vecCol), model.thresholds, model.normalize))
-
-  /** Persist the (id, `_code`) bit table plus the model sidecar. */
-  def saveBqIndex(df: DataFrame, idCol: String, vecCol: String,
-      model: BqModel, path: String): Unit = {
-    encode(df, vecCol, model)
-      .select(col(idCol), col("_code"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    saveModel(df.sparkSession, model, path)
-  }
-
-  /** Model sidecar: one driver-side text file (r15 — the tiny-parquet
-    * write/read cost a scheduled Spark job each way, on build and on
-    * every probe; see [[ModelSidecar]]). Legacy parquet stays loadable.
-    */
-  def saveModel(spark: SparkSession, model: BqModel, path: String): Unit =
-    ModelSidecar.write(spark, path, "_model.txt",
-      Map("family" -> "bq", "normalize" -> model.normalize.toString),
-      Seq("thresholds" -> Array(model.thresholds)))
-
-  def loadModel(spark: SparkSession, path: String): BqModel =
-    ModelSidecar.read(spark, path, "_model.txt") match {
-      case Some((props, mats)) =>
-        BqModel(mats("thresholds")(0), props("normalize").toBoolean)
-      case None =>
-        val modelPath = new org.apache.hadoop.fs.Path(s"$path/model")
-        val fs = modelPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(fs.exists(modelPath),
-          s"bq: no model sidecar under $path — not a saved BQ index")
-        val rows = spark.read.parquet(s"$path/model").orderBy("dim").collect()
-        require(rows.nonEmpty, s"bq: no model sidecar under $path — not a saved BQ index")
-        BqModel(rows.map(_.getAs[Double]("threshold")),
-          rows.head.getAs[Boolean]("normalize"))
-    }
-
-  /** Append a NEW batch under the saved thresholds (the index
-    * identity) — train-once/add-forever like the rest of the family.
-    */
-  def bqAppend(df: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val model = loadModel(df.sparkSession, path)
-    encode(df, vecCol, model)
-      .select(col(idCol), col("_code"))
-      .write.mode("append").parquet(s"$path/codes")
-  }
-
-  /** Query a saved index: Hamming-rank the bit codes, exact-rerank the
-    * `pool` best — [[Pq.poolRerankFromScores]]' tail, so the output
-    * contract matches the whole family (`cos_sim` rounded 4, id
-    * tiebreak). 1-bit codes are coarse: size `pool` generously
-    * relative to k (Hamming ties are broken by id, not by angle).
-    */
-  def topK(spark: SparkSession, indexPath: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      query: Array[Float], k: Int, pool: Int = 1024): DataFrame = {
-    val model = loadModel(spark, indexPath)
-    val qArr = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      query.map(_.toDouble))
-    val qCode = BqFunctions.encode(qArr, 0,
-      org.apache.spark.sql.types.DoubleType, model.thresholds, model.normalize)
-    val codes = spark.read.parquet(s"$indexPath/codes")
-    Pq.poolRerankFromScores(
-      codes.select(col(idCol),
-        BqFunctions.bqHamming(col("_code"), qCode).cast("double").as("_adc")),
-      corpus, idCol, vecCol, query, k, pool)
   }
 }

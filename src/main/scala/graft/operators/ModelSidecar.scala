@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Driver-side sidecar I/O for model-sized index metadata (PQ/OPQ
   * codebooks + rotation, SQ grids, BQ thresholds, IVF centroids, LSH
-  * hyperplanes).
+  * hyperplanes, tuned operating points).
   *
   * WHY (r15 optimization): these sidecars are kilobytes, but they were
   * written as `coalesce(1).write.parquet` and read back with
@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * data work, and shipping it through the DAG scheduler is pure
   * overhead. This helper writes one plain-text file through the Hadoop
   * FileSystem API (works on HDFS/S3A/local — the same FS the index
-  * data lives on, same pattern as AnnTune's `_operating_point.json`).
+  * data lives on).
   *
   * Format (versioned, line-based — trivially exact for doubles via
   * `java.lang.Double.toString`, whose shortest-roundtrip decimal
@@ -31,9 +31,6 @@ import org.apache.spark.sql.SparkSession
   * matrix <name> <numRows>
   * <d0> <d1> ... (one line per row)
   * }}}
-  *
-  * Readers fall back to the legacy parquet layout when the text file
-  * is absent, so indexes persisted by earlier rounds stay loadable.
   */
 object ModelSidecar {
   val Header = "graft-sidecar v1"
@@ -58,20 +55,24 @@ object ModelSidecar {
         sb.append('\n')
       }
     }
-    val path = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, path) = locate(spark, dir, name)
     val out = fs.create(path, true)
     try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** None when the sidecar file does not exist (callers then fall back
-    * to the legacy parquet layout). Malformed content raises.
+  def exists(spark: SparkSession, dir: String, name: String): Boolean = {
+    val (fs, path) = locate(spark, dir, name)
+    fs.exists(path)
+  }
+
+  /** (props, matrices). A missing file raises IllegalArgumentException
+    * naming it — `dir` is not a saved index of that kind; malformed
+    * content raises too.
     */
   def read(spark: SparkSession, dir: String, name: String)
-      : Option[(Map[String, String], Map[String, Array[Array[Double]]])] = {
-    val path = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return None
+      : (Map[String, String], Map[String, Array[Array[Double]]]) = {
+    val (fs, path) = locate(spark, dir, name)
+    require(fs.exists(path), s"no sidecar $path — not a saved index of this kind")
     val in = fs.open(path)
     val text = try {
       val buf = new java.io.ByteArrayOutputStream()
@@ -108,6 +109,11 @@ object ModelSidecar {
         throw new IllegalArgumentException(s"$path line $i: unexpected '$line'")
       }
     }
-    Some((props.result(), mats.result()))
+    (props.result(), mats.result())
+  }
+
+  private def locate(spark: SparkSession, dir: String, name: String) = {
+    val path = new org.apache.hadoop.fs.Path(dir, name)
+    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
   }
 }

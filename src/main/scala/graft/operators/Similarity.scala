@@ -36,9 +36,18 @@ object Similarity {
 
   /** Deterministic unit-free hyperplanes: planes(p)(j) ∈ [-0.5, 0.5). */
   def hyperplanes(numPlanes: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] = {
+    requirePlanes(numPlanes)
     val rnd = new scala.util.Random(seed)
     Array.fill(numPlanes, dim)(rnd.nextDouble() - 0.5)
   }
+
+  /** Bucket ids are Int sign patterns: past 30 planes `1 << numPlanes`
+    * overflows (31 probes nothing) or aliases bits (33 folds bit 32
+    * onto bit 0).
+    */
+  private def requirePlanes(numPlanes: Int): Unit =
+    require(1 <= numPlanes && numPlanes <= 30,
+      s"LSH numPlanes=$numPlanes outside 1..30 — bucket ids are Int sign patterns")
 
   /** Writer parallelism for a bucket/cell-partitioned index write: one
     * shuffle partition per partition DIRECTORY (capped at 4096 — more
@@ -147,6 +156,7 @@ object Similarity {
   final case class LshIndex(
       path: String,
       planes: Array[Array[Double]]) {
+    requirePlanes(planes.length)
     /** Bucket-id width — derived, so it can never disagree with the
       * planes that actually built the layout. */
     def numPlanes: Int = planes.length
@@ -171,10 +181,10 @@ object Similarity {
     LshIndex(path, planes)
   }
 
-  /** Persist the hyperplanes next to the data, under `_planes/` —
-    * underscore-prefixed paths without `=` are invisible to Spark's
-    * data-file discovery (like `_SUCCESS`), so probes reading the
-    * bucket-partitioned root never see the sidecar, while
+  /** Persist the hyperplanes next to the data as the driver-side
+    * `_planes.txt` [[ModelSidecar]] — underscore-prefixed files are
+    * invisible to Spark's data-file discovery (like `_SUCCESS`), so
+    * probes reading the bucket-partitioned root never see it, while
     * [[loadLshIndex]] reads it explicitly. The planes ARE the index
     * identity: an append that re-derived them from (seed, dim) alone
     * could silently diverge from the layout on disk.
@@ -182,34 +192,16 @@ object Similarity {
   private def savePlanes(
       spark: org.apache.spark.sql.SparkSession, path: String,
       planes: Array[Array[Double]]): Unit =
-    // one driver-side text file (r15 — the tiny-parquet sidecar cost a
-    // scheduled Spark job to write and another to load, per index and
-    // per cross-driver probe; see ModelSidecar). The underscore prefix
-    // keeps it invisible to data-file discovery, same as `_planes/`.
     ModelSidecar.write(spark, path, "_planes.txt", Map.empty,
       Seq("planes" -> planes))
 
-  /** Load a persisted LSH index (data + `_planes` sidecar) built by
+  /** Load a persisted LSH index (data + `_planes.txt` sidecar) built by
     * [[lshIndex]] — possibly by another driver: build once on the
-    * cluster, append/probe from anywhere. Reads the r15 text sidecar,
-    * falling back to the legacy `_planes/` parquet dir.
+    * cluster, append/probe from anywhere.
     */
   def loadLshIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): LshIndex =
-    ModelSidecar.read(spark, path, "_planes.txt") match {
-      case Some((_, mats)) => LshIndex(path, mats("planes"))
-      case None =>
-        val legacy = new org.apache.hadoop.fs.Path(s"$path/_planes")
-        val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(fs.exists(legacy),
-          s"no _planes sidecar under $path — not an lshIndex layout")
-        val planes = spark.read.parquet(s"$path/_planes").orderBy("plane")
-          .collect()
-          .map(_.getAs[scala.collection.Seq[Double]]("coeffs").toArray)
-        require(planes.nonEmpty,
-          s"no _planes sidecar under $path — not an lshIndex layout")
-        LshIndex(path, planes)
-    }
+    LshIndex(path, ModelSidecar.read(spark, path, "_planes.txt")._2("planes"))
 
   /** Append a NEW batch to a persisted LSH index without rebuilding:
     * assign buckets with the index's OWN persisted planes (identical
@@ -345,21 +337,25 @@ object Similarity {
     saveCentroids(index.assigned.sparkSession, path, index.centroids)
   }
 
-  /** Centroid sidecar: one driver-side text file (r15 — shared by the
-    * IVF, IVF×PQ and IVF×SQ index layouts; the tiny-parquet sidecar
-    * cost a scheduled Spark job per write and per probe load).
+  /** Centroid sidecar: one driver-side text file (r15 — shared by this
+    * layout and [[AnnIndex]]'s `Ivf` coarse stage; the tiny-parquet
+    * sidecar cost a scheduled Spark job per write and per probe load).
     */
+  private[operators] val CentroidsFile = "_centroids.txt"
+
   private[operators] def saveCentroids(
       spark: org.apache.spark.sql.SparkSession, path: String,
       centroids: Array[Array[Double]]): Unit =
-    ModelSidecar.write(spark, path, "_centroids.txt", Map.empty,
+    ModelSidecar.write(spark, path, CentroidsFile, Map.empty,
       Seq("centroids" -> centroids))
 
   /** Load a persisted IVF index; `assigned` reads the bucket-partitioned
     * layout, so probes prune files.
     */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
-    IvfIndex(spark.read.parquet(s"$path/assigned"), loadCentroids(spark, path))
+  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
+    val centroids = loadCentroids(spark, path)
+    IvfIndex(spark.read.parquet(s"$path/assigned"), centroids)
+  }
 
   /** Append a NEW batch to a persisted IVF index without re-training:
     * each vector goes to its nearest SAVED centroid — the assignment
@@ -385,20 +381,18 @@ object Similarity {
 
   private[graft] def loadCentroids(
       spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Double]] =
-    ModelSidecar.read(spark, path, "_centroids.txt") match {
-      case Some((_, mats)) => mats("centroids")
-      case None =>
-        val legacy = new org.apache.hadoop.fs.Path(s"$path/centroids")
-        val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(fs.exists(legacy),
-          s"no centroids sidecar under $path — not a saved IVF index")
-        val centroids = spark.read.parquet(s"$path/centroids")
-          .orderBy("cell").collect()
-          .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
-        require(centroids.nonEmpty,
-          s"no centroids sidecar under $path — not a saved IVF index")
-        centroids
-    }
+    ModelSidecar.read(spark, path, CentroidsFile)._2("centroids")
+
+  /** The `nprobe` cells whose centroids are nearest `query` (squared
+    * L2, driver-side): every IVF probe list.
+    */
+  private[operators] def nearestCells(centroids: Array[Array[Double]],
+      query: Array[Float], nprobe: Int): Array[Int] = {
+    val qd = query.map(_.toDouble)
+    def dist2(c: Array[Double]): Double =
+      c.indices.map(j => { val d = c(j) - qd(j); d * d }).sum
+    centroids.zipWithIndex.sortBy { case (c, _) => dist2(c) }.take(nprobe).map(_._2)
+  }
 
   /** Query an IVF index: rank cells by centroid distance, brute-force
     * only the nprobe nearest cells.
@@ -422,15 +416,11 @@ object Similarity {
       index: IvfIndex, idCol: String, vecCol: String,
       query: Array[Float], k: Int, nprobe: Int = 4,
       where: Option[Column] = None): DataFrame = {
-    val qd = query.map(_.toDouble)
-    def dist2(c: Array[Double]): Double =
-      c.indices.map(j => { val d = c(j) - qd(j); d * d }).sum
-    val cells = index.centroids.zipWithIndex
-      .sortBy { case (c, _) => dist2(c) }.take(nprobe).map(_._2)
-    val probed = index.assigned
-      .filter(col("_cell").isin(cells.toSeq: _*))
+    val probed = index.assigned.filter(col("_cell")
+      .isin(nearestCells(index.centroids, query, nprobe).toSeq: _*))
     where.fold(probed)(probed.filter)
-      .select(col(idCol), round(cosineConst(col(vecCol), qd), 4).as("cos_sim"))
+      .select(col(idCol),
+        round(cosineConst(col(vecCol), query.map(_.toDouble)), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
       .limit(k)
   }

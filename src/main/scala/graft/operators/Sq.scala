@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.functions.SqFunctions
+import org.apache.spark.sql.DataFrame
 
 /** Scalar-quantization ANN (faiss's SQ8 shape): each dimension of a
   * vector quantizes independently to one byte on a uniform per-dim
@@ -16,12 +14,11 @@ import graft.functions.SqFunctions
   *
   * There is deliberately no new scan kernel: encoding to the nearest
   * point of a uniform grid IS product quantization with nsub=dim,
-  * subdim=1, k=256 and evenly spaced centroids, so [[topK]] reuses
-  * [[Pq.topKFromCodeTable]] — the same codegen'd table-lookup ADC
-  * scan, bounded candidate pool, and exact-cosine rerank, with a
-  * `dim`×256 table from [[adcTable]]. With `pool` ≥ corpus the rerank
-  * sees every row and the result EQUALS brute force — the
-  * oracle-checked configuration; pruned-pool fidelity is spec'd.
+  * subdim=1, k=256 and evenly spaced centroids, so [[AnnIndex]]'s
+  * `Sq8` codec scores through the PQ ADC kernels with a `dim`×256
+  * table from [[adcTable]]. With `pool` ≥ corpus the rerank sees every
+  * row and the result EQUALS brute force — the oracle-checked
+  * configuration; pruned-pool fidelity is spec'd.
   *
   * `metric="cosine"` (default) normalizes vectors before encoding
   * (grid bounds fit on the unit sphere, ADC's L2² is monotone in
@@ -70,124 +67,6 @@ object Sq {
     }
     SqModel(mins, Array.tabulate(dim)(i => (maxs(i) - mins(i)) / 255.0),
       normalize)
-  }
-
-  /** Map-only: add the `dim`-byte `codeCol` to every row. */
-  def encode(df: DataFrame, vecCol: String, model: SqModel,
-      codeCol: String = "_code"): DataFrame =
-    df.withColumn(codeCol,
-      SqFunctions.sqEncode(col(vecCol), model.mins, model.scales,
-        model.normalize))
-
-  /** Persist the code table — (id, `_code`) parquet, dim bytes/row —
-    * plus the model sidecar. Encode once on a cluster, query forever.
-    */
-  def saveSqIndex(df: DataFrame, idCol: String, vecCol: String,
-      model: SqModel, path: String): Unit = {
-    encode(df, vecCol, model)
-      .select(col(idCol), col("_code"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    saveModel(df.sparkSession, model, path)
-  }
-
-  /** Model sidecar: one driver-side text file (r15 — the tiny-parquet
-    * write/read cost a scheduled Spark job each way, on build and on
-    * every probe; see [[ModelSidecar]]). Legacy parquet stays loadable.
-    */
-  def saveModel(spark: SparkSession, model: SqModel, path: String): Unit =
-    ModelSidecar.write(spark, path, "_model.txt",
-      Map("family" -> "sq", "normalize" -> model.normalize.toString),
-      Seq("mins" -> Array(model.mins), "scales" -> Array(model.scales)))
-
-  def loadModel(spark: SparkSession, path: String): SqModel =
-    ModelSidecar.read(spark, path, "_model.txt") match {
-      case Some((props, mats)) =>
-        SqModel(mats("mins")(0), mats("scales")(0),
-          props("normalize").toBoolean)
-      case None =>
-        val modelPath = new org.apache.hadoop.fs.Path(s"$path/model")
-        val fs = modelPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(fs.exists(modelPath),
-          s"sq: no model sidecar under $path — not a saved SQ index")
-        val rows = spark.read.parquet(s"$path/model").orderBy("dim").collect()
-        require(rows.nonEmpty, s"sq: no model sidecar under $path — not a saved SQ index")
-        SqModel(rows.map(_.getAs[Double]("mn")),
-          rows.map(_.getAs[Double]("scale")),
-          rows.head.getAs[Boolean]("normalize"))
-    }
-
-  /** Append a NEW batch to a saved SQ index without re-fitting: encode
-    * against the SAVED grid (it is the index identity) and append to
-    * the code table — the same train-once/add-forever contract as
-    * [[Pq.pqAppend]]. New values beyond the fitted range clamp.
-    */
-  def sqAppend(df: DataFrame, idCol: String, vecCol: String,
-      path: String): Unit = {
-    val model = loadModel(df.sparkSession, path)
-    encode(df, vecCol, model)
-      .select(col(idCol), col("_code"))
-      .write.mode("append").parquet(s"$path/codes")
-  }
-
-  /** Query a saved index: the shared ADC-scan → pool → exact-rerank
-    * tail ([[Pq.topKFromCodeTable]]) over the byte-code table. Same
-    * output contract as [[Similarity.cosineTopK]]: `cos_sim` rounded
-    * to 4, id tiebreak.
-    */
-  def topK(spark: SparkSession, indexPath: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      query: Array[Float], k: Int, pool: Int = 256): DataFrame = {
-    val model = loadModel(spark, indexPath)
-    val codes = spark.read.parquet(s"$indexPath/codes")
-    Pq.topKFromCodeTable(codes, adcTable(query, model), model.dim, 256,
-      corpus, idCol, vecCol, query, k, pool)
-  }
-
-  /** IVF×SQ composed index (faiss's IVF-SQ shape, the same composition
-    * as [[Pq.saveIvfPqIndex]]): rows k-means-assign to `nlist` cells
-    * AND SQ8-encode, persisted hive-partitioned by `_cell` — a probe
-    * prunes to `nprobe` partition directories (which rows) and reads
-    * only `dim`-byte codes inside them (which bytes). The
-    * fidelity-leaning point of the composed family: 4× byte pruning
-    * instead of PQ's ~32×, but a near-faithful in-cell ranking, so
-    * small pools suffice.
-    */
-  def saveIvfSqIndex(df: DataFrame, idCol: String, vecCol: String,
-      model: SqModel, path: String, nlist: Int = 16, seed: Long = 42L,
-      maxIter: Int = 10, initMode: String = "k-means||"): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val idx = Similarity.ivfIndex(df, idCol, vecCol, nlist, seed, maxIter, initMode)
-    encode(idx.assigned, vecCol, model)
-      .select(col(idCol), col("_code"), col("_cell"))
-      .repartition(Similarity.indexWriters(idx.centroids.length), col("_cell"))
-      .write.mode("overwrite").partitionBy("_cell").parquet(s"$path/codes")
-    Similarity.saveCentroids(spark, path, idx.centroids)
-    saveModel(spark, model, path)
-  }
-
-  /** Query an IVF×SQ index: rank cells by centroid distance
-    * driver-side (exactly [[Similarity.ivfTopK]]'s rule), read only
-    * the `nprobe` nearest cells' code partitions, rank by the shared
-    * ADC scan, exact-rerank the pool. Exact at `nprobe = nlist` with
-    * `pool` ≥ corpus — the oracle configuration.
-    */
-  def ivfSqTopK(spark: SparkSession, indexPath: String,
-      corpus: DataFrame, idCol: String, vecCol: String,
-      query: Array[Float], k: Int, nprobe: Int = 4,
-      pool: Int = 256): DataFrame = {
-    val model = loadModel(spark, indexPath)
-    val centroids = Similarity.loadCentroids(spark, indexPath)
-    val qd = query.map(_.toDouble)
-    def dist2(c: Array[Double]): Double =
-      c.indices.map(j => { val d = c(j) - qd(j); d * d }).sum
-    val cells = centroids.zipWithIndex
-      .sortBy { case (c, _) => dist2(c) }.take(nprobe).map(_._2)
-    val codes = spark.read.parquet(s"$indexPath/codes")
-      .filter(col("_cell").isin(cells.toSeq: _*))
-      .select(col(idCol), col("_code"))
-    Pq.topKFromCodeTable(codes, adcTable(query, model), model.dim, 256,
-      corpus, idCol, vecCol, query, k, pool)
   }
 
   /** Flattened `dim`×256 lookup table: table[i·256+b] =

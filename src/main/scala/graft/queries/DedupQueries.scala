@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{AnnIndex, Dedup, Similarity}
 
 /** §2.5 near-dup + similarity queries.
   *
@@ -323,8 +323,8 @@ object DedupQueries {
         nsub = (8 to 1 by -1).find(query.length % _ == 0).get,
         k = 16, maxIter = 4)
       val path = java.nio.file.Files.createTempDirectory("graft_pq").toString
-      graft.operators.Pq.savePqIndex(vecs, "vec_id", "embedding", model, path)
-      graft.operators.Pq.topK(s, path, vecs, "vec_id", "embedding",
+      AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Pq(model))
+      AnnIndex.search(s, path, vecs, "vec_id", "embedding",
         query, k = 20, pool = 1 << 20)
     }),
 
@@ -342,8 +342,8 @@ object DedupQueries {
         nsub = (8 to 1 by -1).find(query.length % _ == 0).get,
         k = 16, maxIter = 4, opqIters = 3)
       val path = java.nio.file.Files.createTempDirectory("graft_opq").toString
-      graft.operators.Pq.savePqIndex(vecs, "vec_id", "embedding", model, path)
-      graft.operators.Pq.topK(s, path, vecs, "vec_id", "embedding",
+      AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Pq(model))
+      AnnIndex.search(s, path, vecs, "vec_id", "embedding",
         query, k = 20, pool = 1 << 20)
     }),
 
@@ -362,8 +362,8 @@ object DedupQueries {
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
       val model = graft.operators.Sq.fit(vecs, "vec_id", "embedding")
       val path = java.nio.file.Files.createTempDirectory("graft_sq").toString
-      graft.operators.Sq.saveSqIndex(vecs, "vec_id", "embedding", model, path)
-      graft.operators.Sq.topK(s, path, vecs, "vec_id", "embedding",
+      AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Sq8(model))
+      AnnIndex.search(s, path, vecs, "vec_id", "embedding",
         query, k = 20, pool = 1 << 20)
     }),
 
@@ -378,10 +378,10 @@ object DedupQueries {
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
       val model = graft.operators.Sq.fit(vecs, "vec_id", "embedding")
       val path = java.nio.file.Files.createTempDirectory("graft_ivfsq").toString
-      graft.operators.Sq.saveIvfSqIndex(vecs, "vec_id", "embedding", model,
-        path, nlist = 8, maxIter = 3, initMode = "random")
-      graft.operators.Sq.ivfSqTopK(s, path, vecs, "vec_id", "embedding",
-        query, k = 20, nprobe = 8, pool = 1 << 20)
+      AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Sq8(model),
+        AnnIndex.Ivf(nlist = 8, maxIter = 3, initMode = "random"))
+      AnnIndex.search(s, path, vecs, "vec_id", "embedding",
+        query, k = 20, pool = 1 << 20, nprobe = 8)
     }),
 
     // Binary quantization (1 bit/dim, 32× compression) at pool ≥
@@ -396,8 +396,8 @@ object DedupQueries {
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
       val model = graft.operators.Bq.fit(vecs, "vec_id", "embedding")
       val path = java.nio.file.Files.createTempDirectory("graft_bq").toString
-      graft.operators.Bq.saveBqIndex(vecs, "vec_id", "embedding", model, path)
-      graft.operators.Bq.topK(s, path, vecs, "vec_id", "embedding",
+      AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Bq(model))
+      AnnIndex.search(s, path, vecs, "vec_id", "embedding",
         query, k = 20, pool = 1 << 20)
     }),
 
@@ -413,8 +413,8 @@ object DedupQueries {
         nsub = (8 to 1 by -1).find(dim % _ == 0).get,
         k = 16, maxIter = 4)
       val path = java.nio.file.Files.createTempDirectory("graft_pqknn").toString
-      graft.operators.Pq.savePqIndex(vecs, "vec_id", "embedding", model, path)
-      graft.operators.Pq.pqTopKJoin(s, path,
+      AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Pq(model))
+      AnnIndex.searchJoin(s, path,
           vecs.filter(col("vec_id") < 5), "vec_id", "embedding",
           vecs, "vec_id", "embedding", k = 10, pool = 100000)
         .orderBy(col("q_id"), col("cos_sim").desc, col("n_id"))
@@ -433,10 +433,10 @@ object DedupQueries {
         nsub = (8 to 1 by -1).find(query.length % _ == 0).get,
         k = 16, maxIter = 4)
       val path = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-      graft.operators.Pq.saveIvfPqIndex(vecs, "vec_id", "embedding", model,
-        path, nlist = 8, maxIter = 3, initMode = "random")
-      graft.operators.Pq.ivfPqTopK(s, path, vecs, "vec_id", "embedding",
-        query, k = 20, nprobe = 8, pool = 1 << 20)
+      AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Pq(model),
+        AnnIndex.Ivf(nlist = 8, maxIter = 3, initMode = "random"))
+      AnnIndex.search(s, path, vecs, "vec_id", "embedding",
+        query, k = 20, pool = 1 << 20, nprobe = 8)
     }),
 
     // k-NN JOIN (batch retrieval): 5 query vectors × whole corpus,

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.Sessions
-import graft.operators.{Pq, Similarity}
+import graft.operators.{AnnIndex, AnnTune, Bq, Pq, Similarity, Sq}
 
 /** Dev tool: measured ANN recall-vs-cost curves, faiss-style — the
   * dial a user actually turns (`nprobe` for IVF, candidate `pool` for
@@ -79,67 +79,54 @@ object ProfileRecall {
     val pqModel = Pq.fit(emb, "vec_id", "embedding", nsub = 8, k = 16)
     val tPqBuild = {
       val t0 = System.nanoTime()
-      Pq.savePqIndex(emb, "vec_id", "embedding", pqModel, s"$dir/pq")
+      AnnIndex.build(emb, "vec_id", "embedding", s"$dir/pq", AnnIndex.Pq(pqModel))
       (System.nanoTime() - t0) / 1e9
     }
     val opqModel = Pq.fitOpq(emb, "vec_id", "embedding", nsub = 8, k = 16)
-    Pq.savePqIndex(emb, "vec_id", "embedding", opqModel, s"$dir/opq")
+    AnnIndex.build(emb, "vec_id", "embedding", s"$dir/opq", AnnIndex.Pq(opqModel))
     val pools = Seq(32, 64, 128, 256, 512, 1024)
-    pools.foreach { p =>
-      rows += sweep("pq", s"pool=$p",
-        q => Pq.topK(spark, s"$dir/pq", emb, "vec_id", "embedding", q, k, pool = p))
-    }
-    pools.foreach { p =>
-      rows += sweep("opq", s"pool=$p",
-        q => Pq.topK(spark, s"$dir/opq", emb, "vec_id", "embedding", q, k, pool = p))
-    }
+    def search(index: String, pool: Int, nprobe: Int = 4)(q: Array[Float]) =
+      AnnIndex.search(spark, s"$dir/$index", emb, "vec_id", "embedding", q, k,
+        pool = pool, nprobe = nprobe)
+    pools.foreach(p => rows += sweep("pq", s"pool=$p", search("pq", p)))
+    pools.foreach(p => rows += sweep("opq", s"pool=$p", search("opq", p)))
 
     // SQ8: one byte per DIM (4× compression, near-lossless) — the
     // fidelity end of the family; tiny pools should already saturate
-    val sqModel = graft.operators.Sq.fit(emb, "vec_id", "embedding")
+    val sq8 = AnnIndex.Sq8(Sq.fit(emb, "vec_id", "embedding"))
     val tSqBuild = {
       val t0 = System.nanoTime()
-      graft.operators.Sq.saveSqIndex(emb, "vec_id", "embedding", sqModel, s"$dir/sq")
+      AnnIndex.build(emb, "vec_id", "embedding", s"$dir/sq", sq8)
       (System.nanoTime() - t0) / 1e9
     }
-    Seq(10, 16, 32, 64, 128).foreach { p =>
-      rows += sweep("sq8", s"pool=$p",
-        q => graft.operators.Sq.topK(spark, s"$dir/sq", emb, "vec_id",
-          "embedding", q, k, pool = p))
-    }
+    Seq(10, 16, 32, 64, 128).foreach(p =>
+      rows += sweep("sq8", s"pool=$p", search("sq", p)))
 
     // BQ: 1 bit per dim (32× compression) — the coarse end; recall
     // rises with pool much more slowly than SQ8's
-    val bqModel = graft.operators.Bq.fit(emb, "vec_id", "embedding")
-    graft.operators.Bq.saveBqIndex(emb, "vec_id", "embedding", bqModel, s"$dir/bq")
-    Seq(32, 128, 512, 2048, 8192).foreach { p =>
-      rows += sweep("bq", s"pool=$p",
-        q => graft.operators.Bq.topK(spark, s"$dir/bq", emb, "vec_id",
-          "embedding", q, k, pool = p))
-    }
+    AnnIndex.build(emb, "vec_id", "embedding", s"$dir/bq",
+      AnnIndex.Bq(Bq.fit(emb, "vec_id", "embedding")))
+    Seq(32, 128, 512, 2048, 8192).foreach(p =>
+      rows += sweep("bq", s"pool=$p", search("bq", p)))
 
     // IVF×SQ: cell pruning × near-faithful byte ranking — nprobe is
     // the recall dial, pool stays small (SQ8's in-cell order is ~exact)
-    graft.operators.Sq.saveIvfSqIndex(emb, "vec_id", "embedding", sqModel,
-      s"$dir/ivfsq", nlist = 64)
+    AnnIndex.build(emb, "vec_id", "embedding", s"$dir/ivfsq", sq8,
+      AnnIndex.Ivf(nlist = 64))
     Seq(1, 2, 4, 8, 16, 32, 64).foreach { np =>
-      rows += sweep("ivfsq", s"nprobe=$np pool=32",
-        q => graft.operators.Sq.ivfSqTopK(spark, s"$dir/ivfsq", emb, "vec_id",
-          "embedding", q, k, nprobe = np, pool = 32))
+      rows += sweep("ivfsq", s"nprobe=$np pool=32", search("ivfsq", 32, np))
     }
 
     // IVFPQ: both dials at once
     val tIvfPqBuild = {
       val t0 = System.nanoTime()
-      Pq.saveIvfPqIndex(emb, "vec_id", "embedding", pqModel, s"$dir/ivfpq",
-        nlist = 64)
+      AnnIndex.build(emb, "vec_id", "embedding", s"$dir/ivfpq",
+        AnnIndex.Pq(pqModel), AnnIndex.Ivf(nlist = 64))
       (System.nanoTime() - t0) / 1e9
     }
     for ((np, p) <- Seq((1, 256), (2, 256), (4, 256), (8, 256), (16, 256),
         (4, 64), (4, 1024), (64, 1024)))
-      rows += sweep("ivfpq", s"nprobe=$np pool=$p",
-        q => Pq.ivfPqTopK(spark, s"$dir/ivfpq", emb, "vec_id", "embedding",
-          q, k, nprobe = np, pool = p))
+      rows += sweep("ivfpq", s"nprobe=$np pool=$p", search("ivfpq", p, np))
 
     val md = new StringBuilder
     md ++= "# RECALL — ANN recall@10 vs cost (generated by graft.tools.ProfileRecall)\n\n"
@@ -195,26 +182,25 @@ object ProfileRecall {
       md ++= f"| $bdir | $bn | sample | $tS%.1f | $tM%.1f |\n"
       graft.LocalFs.deleteRecursively(tmp.toFile)
     }
-    // Tuned operating points (r13): AnnTune.tune* walks the same dials
-    // cheapest-first on ITS OWN md5-ordered deterministic holdout and
-    // returns the first setting reaching the target — the dial a user
-    // should persist next to the index instead of reading the curves.
+    // Tuned operating points (r13): AnnTune.tuneIvf / AnnIndex.tune walk
+    // the same dials cheapest-first on ITS OWN md5-ordered deterministic
+    // holdout and return the first setting reaching the target — the
+    // dial a user should persist next to the index instead of reading
+    // the curves.
     md ++= "\n## Tuned operating points (AnnTune, recall@10 targets on a 20-query md5 holdout)\n\n"
     md ++= "| family | target | chosen | measured recall |\n"
     md ++= "|---|---|---|---|\n"
     for (target <- Seq(0.5, 0.8, 0.95)) {
-      val i = graft.operators.AnnTune.tuneIvf(ivf, emb, "vec_id", "embedding",
-        target, k, nQ)
+      def tune(index: String, pools: Seq[Int] = AnnTune.doubling(8192)) =
+        AnnIndex.tune(spark, s"$dir/$index", emb, "vec_id", "embedding",
+          target, k, nQ, pools)
+      val i = AnnTune.tuneIvf(ivf, emb, "vec_id", "embedding", target, k, nQ)
       md ++= f"| ivf | $target | nprobe=${i.setting("nprobe")} | ${i.recall}%.3f |\n"
-      val s = graft.operators.AnnTune.tuneSq(spark, s"$dir/sq", emb, "vec_id",
-        "embedding", target, k, nQ, maxPool = 8192)
+      val s = tune("sq")
       md ++= f"| sq8 | $target | pool=${s.setting("pool")} | ${s.recall}%.3f |\n"
-      val p = graft.operators.AnnTune.tunePq(spark, s"$dir/pq", emb, "vec_id",
-        "embedding", target, k, nQ, maxPool = 8192)
+      val p = tune("pq")
       md ++= f"| pq | $target | pool=${p.setting("pool")} | ${p.recall}%.3f |\n"
-      val ip = graft.operators.AnnTune.tuneIvfPq(spark, s"$dir/ivfpq", emb,
-        "vec_id", "embedding", target, nlist = 64, k, nQ,
-        pools = Seq(64, 256, 1024))
+      val ip = tune("ivfpq", pools = Seq(64, 256, 1024))
       md ++= f"| ivfpq | $target | nprobe=${ip.setting("nprobe")} pool=${ip.setting("pool")} | ${ip.recall}%.3f |\n"
     }
 

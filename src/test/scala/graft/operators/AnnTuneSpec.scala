@@ -53,14 +53,14 @@ class AnnTuneSpec extends AnyFunSuite {
     val df = clustered(nClusters = 8, per = 40)
     val model = Sq.fit(df, "id", "vec")
     val path = tmp("graft_tune_sq")
-    Sq.saveSqIndex(df, "id", "vec", model, path)
-    val got = AnnTune.tuneSq(spark, path, df, "id", "vec", target = 0.95,
-      k = 10, nQueries = 6, maxPool = 512)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Sq8(model))
+    val got = AnnIndex.tune(spark, path, df, "id", "vec", target = 0.95,
+      k = 10, nQueries = 6, pools = AnnTune.doubling(512))
     assert(got.recall >= 0.95, s"recall ${got.recall} below target at $got")
     assert(got.setting("pool") >= 10 && got.setting("pool") <= 512)
     // perfection is reachable at the exact end of the walk
-    val exact = AnnTune.tuneSq(spark, path, df, "id", "vec", target = 1.0,
-      k = 10, nQueries = 6, maxPool = 512)
+    val exact = AnnIndex.tune(spark, path, df, "id", "vec", target = 1.0,
+      k = 10, nQueries = 6, pools = AnnTune.doubling(512))
     assert(exact.recall == 1.0)
   }
 
@@ -68,9 +68,10 @@ class AnnTuneSpec extends AnyFunSuite {
     val df = clustered()
     val path = tmp("graft_tune_ivfpq")
     val model = Pq.fit(df, "id", "vec", nsub = 4)
-    Pq.saveIvfPqIndex(df, "id", "vec", model, path, nlist = 16)
-    val got = AnnTune.tuneIvfPq(spark, path, df, "id", "vec", target = 0.8,
-      nlist = 16, k = 10, nQueries = 6, pools = Seq(64, 256, 1024))
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Pq(model),
+      AnnIndex.Ivf(nlist = 16))
+    val got = AnnIndex.tune(spark, path, df, "id", "vec", target = 0.8,
+      k = 10, nQueries = 6, pools = Seq(64, 256, 1024))
     assert(got.recall >= 0.8, s"recall ${got.recall} below target at $got")
     assert(got.setting.keySet == Set("nprobe", "pool"))
   }
@@ -79,9 +80,9 @@ class AnnTuneSpec extends AnyFunSuite {
     val df = clustered(nClusters = 8, per = 40)
     val model = Bq.fit(df, "id", "vec")
     val path = tmp("graft_tune_bq")
-    Bq.saveBqIndex(df, "id", "vec", model, path)
-    val got = AnnTune.tuneBq(spark, path, df, "id", "vec", target = 0.9,
-      k = 10, nQueries = 6, maxPool = 512)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Bq(model))
+    val got = AnnIndex.tune(spark, path, df, "id", "vec", target = 0.9,
+      k = 10, nQueries = 6, pools = AnnTune.doubling(512))
     assert(got.recall >= 0.9, s"recall ${got.recall} below target at $got")
     assert(got.setting.keySet == Set("pool"))
     assert(got.setting("pool") >= 10 && got.setting("pool") <= 512)
@@ -92,9 +93,9 @@ class AnnTuneSpec extends AnyFunSuite {
     val model = Pq.fitOpq(df, "id", "vec", nsub = 4, k = 16,
       maxIter = 3, opqIters = 2)
     val path = tmp("graft_tune_opq")
-    Pq.savePqIndex(df, "id", "vec", model, path)
-    val got = AnnTune.tuneOpq(spark, path, df, "id", "vec", target = 0.85,
-      k = 10, nQueries = 6, maxPool = 512)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Pq(model))
+    val got = AnnIndex.tune(spark, path, df, "id", "vec", target = 0.85,
+      k = 10, nQueries = 6, pools = AnnTune.doubling(512))
     assert(got.recall >= 0.85, s"recall ${got.recall} below target at $got")
     assert(got.setting.keySet == Set("pool"))
   }
@@ -103,10 +104,10 @@ class AnnTuneSpec extends AnyFunSuite {
     val df = clustered(nClusters = 8, per = 40)
     val model = Sq.fit(df, "id", "vec")
     val path = tmp("graft_tune_sidecar")
-    Sq.saveSqIndex(df, "id", "vec", model, path)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Sq8(model))
     assert(AnnTune.loadPoint(spark, path).isEmpty) // untuned index
-    val tuned = AnnTune.tuneSq(spark, path, df, "id", "vec", target = 0.9,
-      k = 10, nQueries = 6, maxPool = 512)
+    val tuned = AnnIndex.tune(spark, path, df, "id", "vec", target = 0.9,
+      k = 10, nQueries = 6, pools = AnnTune.doubling(512))
     AnnTune.savePoint(spark, path, tuned)
     assert(AnnTune.loadPoint(spark, path).contains(tuned)) // exact roundtrip
     // the tuned probe runs at the saved dial: identical rows to the
@@ -114,23 +115,26 @@ class AnnTuneSpec extends AnyFunSuite {
     val q = AnnTune.holdout(df, "id", "vec", 1).head._2
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(_.toSeq).toSeq
-    assert(rows(AnnTune.sqTopKTuned(spark, path, df, "id", "vec", q, 10)) ==
-      rows(Sq.topK(spark, path, df, "id", "vec", q, 10, tuned.setting("pool"))))
+    assert(rows(AnnIndex.searchTuned(spark, path, df, "id", "vec", q, 10)) ==
+      rows(AnnIndex.search(spark, path, df, "id", "vec", q, 10, tuned.setting("pool"))))
     // re-tuning overwrites
-    val loose = AnnTune.tuneSq(spark, path, df, "id", "vec", target = 0.2,
-      k = 10, nQueries = 6, maxPool = 512)
+    val loose = AnnIndex.tune(spark, path, df, "id", "vec", target = 0.2,
+      k = 10, nQueries = 6, pools = AnnTune.doubling(512))
     AnnTune.savePoint(spark, path, loose)
     assert(AnnTune.loadPoint(spark, path).contains(loose))
     // a joint-dial probe against a pool-only point names the missing dial
+    val cells = tmp("graft_tune_cells")
+    AnnIndex.build(df, "id", "vec", cells, AnnIndex.Sq8(model), AnnIndex.Ivf(nlist = 4))
+    AnnTune.savePoint(spark, cells, loose)
     val e = intercept[IllegalArgumentException] {
-      AnnTune.ivfPqTopKTuned(spark, path, df, "id", "vec", q, 10)
+      AnnIndex.searchTuned(spark, cells, df, "id", "vec", q, 10)
     }
     assert(e.getMessage.contains("nprobe"))
     // an untuned index raises actionably
     val bare = tmp("graft_tune_bare")
-    Sq.saveSqIndex(df, "id", "vec", model, bare)
+    AnnIndex.build(df, "id", "vec", bare, AnnIndex.Sq8(model))
     intercept[IllegalStateException] {
-      AnnTune.sqTopKTuned(spark, bare, df, "id", "vec", q, 10)
+      AnnIndex.searchTuned(spark, bare, df, "id", "vec", q, 10)
     }
   }
 
@@ -138,13 +142,14 @@ class AnnTuneSpec extends AnyFunSuite {
     val df = clustered()
     val path = tmp("graft_tune_ivfpq_sc")
     val model = Pq.fit(df, "id", "vec", nsub = 4)
-    Pq.saveIvfPqIndex(df, "id", "vec", model, path, nlist = 16)
-    val got = AnnTune.tuneIvfPq(spark, path, df, "id", "vec", target = 0.8,
-      nlist = 16, k = 10, nQueries = 4, pools = Seq(64, 256))
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Pq(model),
+      AnnIndex.Ivf(nlist = 16))
+    val got = AnnIndex.tune(spark, path, df, "id", "vec", target = 0.8,
+      k = 10, nQueries = 4, pools = Seq(64, 256))
     AnnTune.savePoint(spark, path, got)
     assert(AnnTune.loadPoint(spark, path).contains(got))
     val q = AnnTune.holdout(df, "id", "vec", 1).head._2
-    assert(AnnTune.ivfPqTopKTuned(spark, path, df, "id", "vec", q, 10)
+    assert(AnnIndex.searchTuned(spark, path, df, "id", "vec", q, 10)
       .count() == 10)
   }
 
@@ -222,14 +227,14 @@ class AnnTuneSpec extends AnyFunSuite {
     val df = clustered(nClusters = 8, per = 40)
     val path = tmp("graft_tune_pqjoin")
     val model = Pq.fit(df, "id", "vec", nsub = 4)
-    Pq.savePqIndex(df, "id", "vec", model, path)
-    val got = AnnTune.tunePqJoin(spark, path, df, "id", "vec", target = 0.9,
-      k = 10, nQueries = 6, maxPool = 512)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Pq(model))
+    val got = AnnIndex.tuneJoin(spark, path, df, "id", "vec", target = 0.9,
+      k = 10, nQueries = 6, pools = AnnTune.doubling(512))
     assert(got.recall >= 0.9, s"join recall ${got.recall} below target at $got")
     AnnTune.savePoint(spark, path, got, AnnTune.JoinPointSidecar)
     val qs = AnnTune.holdoutDf(df, "id", "vec", 6)
     val truth = AnnTune.joinTruth(qs, df, "id", "vec", 10)
-    val viaTuned = AnnTune.pqTopKJoinTuned(spark, path,
+    val viaTuned = AnnIndex.searchJoinTuned(spark, path,
       qs, "_hq_id", "_hq_v", df, "id", "vec", 10)
     assert(AnnTune.measureJoinRecall(truth, viaTuned) >= 0.9)
   }

@@ -22,13 +22,16 @@ class BqSpec extends AnyFunSuite {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_bq").toString
 
+  private def encode(df: org.apache.spark.sql.DataFrame, model: Bq.BqModel) =
+    df.withColumn("_code", AnnIndex.Bq(model).encode($"vec"))
+
   test("full-pool BQ top-k ≡ brute-force cosine top-k (pool ≥ corpus)") {
     val df = corpus()
     val model = Bq.fit(df, "id", "vec")
     val path = tmp()
-    Bq.saveBqIndex(df, "id", "vec", model, path)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Bq(model))
     val query = randVecs(1, 99L).head._2.map(_.toFloat).toArray
-    val got = Bq.topK(spark, path, df, "id", "vec", query, k = 10, pool = 1000)
+    val got = AnnIndex.search(spark, path, df, "id", "vec", query, k = 10, pool = 1000)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -39,12 +42,12 @@ class BqSpec extends AnyFunSuite {
     val df = corpus(50)
     val model = Bq.fit(df, "id", "vec")
     assert(model.codeBytes == 2) // 16 dims → 2 bytes: 32× under float32
-    val codes = Bq.encode(df, "vec", model).select("_code").collect()
+    val codes = encode(df, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
     assert(codes.forall(_.length == 2))
     val scaled = df.select($"id",
       transform($"vec", x => x * lit(10.0f)).as("vec"))
-    val scaledCodes = Bq.encode(scaled, "vec", model).select("_code").collect()
+    val scaledCodes = encode(scaled, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
     assert(codes.zip(scaledCodes).forall { case (a, b) =>
       java.util.Arrays.equals(a, b) })
@@ -57,13 +60,13 @@ class BqSpec extends AnyFunSuite {
       .toDF("id", "vec").select($"id", $"vec".cast("array<float>")))
     val model = Bq.fit(withClone, "id", "vec")
     val path = tmp()
-    Bq.saveBqIndex(withClone, "id", "vec", model, path)
+    AnnIndex.build(withClone, "id", "vec", path, AnnIndex.Bq(model))
     // 1-bit codes are coarse: at dim=16 many rows tie at low Hamming,
     // so the pool must be sized generously relative to k — but the
     // clone's Hamming is exactly 0, and id-tiebreak keeps every
     // Hamming-0 row ahead of Hamming-1, so a pool ≥ the Hamming-0
     // count always retains it. 50/501 is a 10× pruning.
-    val got = Bq.topK(spark, path, withClone, "id", "vec", query, k = 5, pool = 50)
+    val got = AnnIndex.search(spark, path, withClone, "id", "vec", query, k = 5, pool = 50)
       .collect()
     assert(got.head.getLong(0) == 9999L && got.head.getDouble(1) == 1.0)
   }
@@ -72,11 +75,11 @@ class BqSpec extends AnyFunSuite {
     val df = corpus(500, seed = 21L)
     val model = Bq.fit(df, "id", "vec")
     val path = tmp()
-    Bq.saveBqIndex(df, "id", "vec", model, path)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Bq(model))
     val queries = randVecs(5, 77L)
     val recalls = queries.map { case (_, qSeq) =>
       val q = qSeq.map(_.toFloat).toArray
-      val got = Bq.topK(spark, path, df, "id", "vec", q, k = 10, pool = 100)
+      val got = AnnIndex.search(spark, path, df, "id", "vec", q, k = 10, pool = 100)
         .collect().map(_.getLong(0)).toSet
       val want = Similarity.cosineTopK(df, "id", "vec", q, 10)
         .collect().map(_.getLong(0)).toSet
@@ -92,13 +95,13 @@ class BqSpec extends AnyFunSuite {
     val df = corpus(200)
     val model = Bq.fit(df, "id", "vec")
     val path = tmp()
-    Bq.saveBqIndex(df, "id", "vec", model, path)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Bq(model))
     val query = randVecs(1, 55L).head._2.map(_.toFloat).toArray
     val batch = Seq((5555L, query.map(_.toDouble).toSeq))
       .toDF("id", "vec").select($"id", $"vec".cast("array<float>"))
-    Bq.bqAppend(batch, "id", "vec", path)
+    AnnIndex.append(batch, "id", "vec", path)
     val all = df.unionByName(batch)
-    val got = Bq.topK(spark, path, all, "id", "vec", query, k = 3, pool = 50)
+    val got = AnnIndex.search(spark, path, all, "id", "vec", query, k = 3, pool = 50)
       .collect()
     assert(got.head.getLong(0) == 5555L && got.head.getDouble(1) == 1.0)
   }
@@ -110,7 +113,7 @@ class BqSpec extends AnyFunSuite {
     def rootMessages(t: Throwable): List[String] =
       Option(t.getMessage).toList ++
         Option(t.getCause).toList.flatMap(rootMessages)
-    val e = intercept[Exception] { Bq.encode(short, "vec", model).collect() }
+    val e = intercept[Exception] { encode(short, model).collect() }
     assert(rootMessages(e).exists(_.contains("graft_bq_encode")))
     // a foreign-width code must raise at scan time, not score garbage
     assert(intercept[IllegalArgumentException] {
@@ -119,7 +122,7 @@ class BqSpec extends AnyFunSuite {
     val withNull = df.select($"id",
       when($"id" === 0L, lit(null).cast("array<float>"))
         .otherwise($"vec".cast("array<float>")).as("vec"))
-    val nullIds = Bq.encode(withNull, "vec", model)
+    val nullIds = encode(withNull, model)
       .filter($"_code".isNull).select("id").collect().map(_.getLong(0))
     assert(nullIds.toSeq == Seq(0L))
   }

@@ -22,11 +22,25 @@ class PqSpec extends AnyFunSuite {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_pq").toString
 
+  private def index(df: org.apache.spark.sql.DataFrame, model: Pq.PqModel,
+      coarse: AnnIndex.Coarse = AnnIndex.Flat): String = {
+    val path = tmp()
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Pq(model), coarse)
+    path
+  }
+
+  private def loadModel(path: String): Pq.PqModel =
+    AnnIndex.loadCodec(spark, path).asInstanceOf[AnnIndex.Pq].model
+
+  private def encode(df: org.apache.spark.sql.DataFrame, model: Pq.PqModel) =
+    df.withColumn("_code", AnnIndex.Pq(model).encode($"vec"))
+
   test("full-pool PQ top-k ≡ brute-force cosine top-k (pool ≥ corpus)") {
     val df = corpus()
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 4)
     val query = randVecs(1, 99L).head._2.map(_.toFloat).toArray
-    val got = Pq.topKOneShot(df, "id", "vec", model, query, k = 10, pool = 1000)
+    val got = AnnIndex.search(spark, index(df, model), df, "id", "vec", query,
+        k = 10, pool = 1000)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -36,15 +50,16 @@ class PqSpec extends AnyFunSuite {
   test("saved index roundtrip: topK over persisted codes ≡ one-shot") {
     val df = corpus()
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 4)
-    val path = tmp()
-    Pq.savePqIndex(df, "id", "vec", model, path)
+    val path = index(df, model)
     val query = randVecs(1, 99L).head._2.map(_.toFloat).toArray
-    val fromIndex = Pq.topK(spark, path, df, "id", "vec", query, k = 10, pool = 1000)
+    val fromIndex = AnnIndex.search(spark, path, df, "id", "vec", query,
+        k = 10, pool = 1000)
       .collect().toSeq
-    val oneShot = Pq.topKOneShot(df, "id", "vec", model, query, k = 10, pool = 1000)
+    // at pool ≥ corpus the one-shot encode-and-scan equals brute force
+    val oneShot = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().toSeq
     assert(fromIndex == oneShot)
-    val loaded = Pq.loadModel(spark, path)
+    val loaded = loadModel(path)
     assert(loaded.normalize == model.normalize &&
       loaded.nsub == model.nsub && loaded.subdim == model.subdim)
     assert(loaded.codebooks.map(_.toSeq.map(_.toSeq)).toSeq ==
@@ -60,7 +75,8 @@ class PqSpec extends AnyFunSuite {
     // pool of 25 out of 501 rows — a 20× pruning — must keep the clone:
     // its code equals the query's own encoding, so its ADC distance is
     // the query's self-quantization error, at the floor of the table
-    val got = Pq.topKOneShot(withClone, "id", "vec", model, query, k = 5, pool = 25)
+    val got = AnnIndex.search(spark, index(withClone, model), withClone, "id", "vec",
+        query, k = 5, pool = 25)
       .collect()
     assert(got.head.getLong(0) == 9999L && got.head.getDouble(1) == 1.0)
   }
@@ -68,13 +84,13 @@ class PqSpec extends AnyFunSuite {
   test("codes are nsub bytes; cosine metric makes scaled copies share a code") {
     val df = corpus(50)
     val model = Pq.fit(df, "id", "vec", nsub = 8, k = 8, maxIter = 3)
-    val codes = Pq.encode(df, "vec", model).select("_code").collect()
+    val codes = encode(df, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
     assert(codes.forall(_.length == 8))
     // scale invariance on the unit sphere: v and 10·v encode equal
     val scaled = df.select($"id",
       transform($"vec", x => x * lit(10.0f)).as("vec"))
-    val scaledCodes = Pq.encode(scaled, "vec", model).select("_code").collect()
+    val scaledCodes = encode(scaled, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
     assert(codes.zip(scaledCodes).forall { case (a, b) =>
       java.util.Arrays.equals(a, b) })
@@ -85,9 +101,9 @@ class PqSpec extends AnyFunSuite {
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 3, metric = "l2")
     assert(!model.normalize)
     // deterministic encode: two runs agree
-    val a = Pq.encode(df, "vec", model).select("_code").collect()
+    val a = encode(df, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
-    val b = Pq.encode(df, "vec", model).select("_code").collect()
+    val b = encode(df, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
     assert(a.zip(b).forall { case (x, y) => java.util.Arrays.equals(x, y) })
   }
@@ -97,14 +113,14 @@ class PqSpec extends AnyFunSuite {
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 2)
     val short = Seq((1L, Seq(1.0f, 2.0f))).toDF("id", "vec")
     val e = intercept[Exception] {
-      Pq.encode(short, "vec", model).collect()
+      encode(short, model).collect()
     }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("model expects")))
     // a code column from a wider model fails the ADC guard
     val wide = Pq.fit(corpus(20, 9L), "id", "vec", nsub = 8, k = 8, maxIter = 2)
-    val wideCodes = Pq.encode(df, "vec", wide).select($"id", $"_code")
+    val wideCodes = encode(df, wide).select($"id", $"_code")
     val e2 = intercept[Exception] {
       import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
       wideCodes.select(ncol(graft.functions.PqAdcExpr(
@@ -129,12 +145,11 @@ class PqSpec extends AnyFunSuite {
   test("IVF×PQ at full probe + full pool ≡ brute-force cosine top-k") {
     val df = corpus()
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 4)
-    val path = tmp()
-    Pq.saveIvfPqIndex(df, "id", "vec", model, path, nlist = 6, maxIter = 3,
-      initMode = "random")
+    val path = index(df, model,
+      AnnIndex.Ivf(nlist = 6, maxIter = 3, initMode = "random"))
     val query = randVecs(1, 99L).head._2.map(_.toFloat).toArray
-    val got = Pq.ivfPqTopK(spark, path, df, "id", "vec", query,
-        k = 10, nprobe = 6, pool = 1000)
+    val got = AnnIndex.search(spark, path, df, "id", "vec", query,
+        k = 10, pool = 1000, nprobe = 6)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -147,25 +162,23 @@ class PqSpec extends AnyFunSuite {
     val withClone = df.union(Seq((8888L, query.map(_.toDouble).toSeq))
       .toDF("id", "vec").select($"id", $"vec".cast("array<float>")))
     val model = Pq.fit(withClone, "id", "vec", nsub = 4, k = 16, maxIter = 4)
-    val path = tmp()
-    Pq.saveIvfPqIndex(withClone, "id", "vec", model, path, nlist = 8,
-      maxIter = 5, initMode = "random")
+    val path = index(withClone, model,
+      AnnIndex.Ivf(nlist = 8, maxIter = 5, initMode = "random"))
     // the clone assigns to its own nearest cell — which is also the
     // query's first probe (identical vector, same argmin)
-    val got = Pq.ivfPqTopK(spark, path, withClone, "id", "vec", query,
-      k = 3, nprobe = 1, pool = 20).collect()
+    val got = AnnIndex.search(spark, path, withClone, "id", "vec", query,
+      k = 3, pool = 20, nprobe = 1).collect()
     assert(got.head.getLong(0) == 8888L && got.head.getDouble(1) == 1.0)
   }
 
   test("IVF×PQ probe prunes code PARTITIONS and reads only id+code bytes") {
     val df = corpus()
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 2)
-    val path = tmp()
-    Pq.saveIvfPqIndex(df, "id", "vec", model, path, nlist = 6, maxIter = 3,
-      initMode = "random")
+    val path = index(df, model,
+      AnnIndex.Ivf(nlist = 6, maxIter = 3, initMode = "random"))
     val query = randVecs(1, 99L).head._2.map(_.toFloat).toArray
-    val p = Pq.ivfPqTopK(spark, path, df, "id", "vec", query,
-      k = 5, nprobe = 2, pool = 50).queryExecution.executedPlan.toString
+    val p = AnnIndex.search(spark, path, df, "id", "vec", query,
+      k = 5, pool = 50, nprobe = 2).queryExecution.executedPlan.toString
     val scanLine = p.linesIterator.find(_.contains("PartitionFilters"))
       .getOrElse(fail("no PartitionFilters in plan:\n" + p.take(3000)))
     assert(scanLine.contains("_cell"), scanLine)
@@ -180,14 +193,14 @@ class PqSpec extends AnyFunSuite {
   test("pqAppend: new batch encoded against SAVED codebooks, visible to topK") {
     val df = corpus(200)
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 3)
-    val path = tmp()
-    Pq.savePqIndex(df, "id", "vec", model, path)
+    val path = index(df, model)
     val query = randVecs(1, 55L).head._2.map(_.toFloat).toArray
     val late = Seq((7777L, query.map(_.toDouble).toSeq))
       .toDF("id", "vec").select($"id", $"vec".cast("array<float>"))
-    Pq.pqAppend(late, "id", "vec", path)
+    AnnIndex.append(late, "id", "vec", path)
     val all = df.union(late)
-    val got = Pq.topK(spark, path, all, "id", "vec", query, k = 3, pool = 1000)
+    val got = AnnIndex.search(spark, path, all, "id", "vec", query,
+        k = 3, pool = 1000)
       .collect()
     assert(got.head.getLong(0) == 7777L && got.head.getDouble(1) == 1.0)
     // appended codes came from the SAVED model: full-pool result equals
@@ -200,18 +213,17 @@ class PqSpec extends AnyFunSuite {
   test("ivfPqAppend: appended rows land in their nearest saved cell's partition") {
     val df = corpus(300)
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 3)
-    val path = tmp()
-    Pq.saveIvfPqIndex(df, "id", "vec", model, path, nlist = 6, maxIter = 3,
-      initMode = "random")
+    val path = index(df, model,
+      AnnIndex.Ivf(nlist = 6, maxIter = 3, initMode = "random"))
     val query = randVecs(1, 66L).head._2.map(_.toFloat).toArray
     val late = Seq((6666L, query.map(_.toDouble).toSeq))
       .toDF("id", "vec").select($"id", $"vec".cast("array<float>"))
-    Pq.ivfPqAppend(late, "id", "vec", path)
+    AnnIndex.append(late, "id", "vec", path)
     val all = df.union(late)
     // the appended clone of the query sits in the query's own first
     // probe cell — found at nprobe = 1
-    val got = Pq.ivfPqTopK(spark, path, all, "id", "vec", query,
-      k = 2, nprobe = 1, pool = 50).collect()
+    val got = AnnIndex.search(spark, path, all, "id", "vec", query,
+      k = 2, pool = 50, nprobe = 1).collect()
     assert(got.head.getLong(0) == 6666L && got.head.getDouble(1) == 1.0)
     // and the partition layout stayed hive-clean (cell dirs only)
     val dirs = new java.io.File(path, "codes").listFiles()
@@ -222,10 +234,9 @@ class PqSpec extends AnyFunSuite {
   test("PQ k-NN join at full pool ≡ exact cosineTopKJoin") {
     val df = corpus()
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 4)
-    val path = tmp()
-    Pq.savePqIndex(df, "id", "vec", model, path)
+    val path = index(df, model)
     val queries = df.filter($"id" < 5)
-    val got = Pq.pqTopKJoin(spark, path, queries, "id", "vec",
+    val got = AnnIndex.searchJoin(spark, path, queries, "id", "vec",
         df, "id", "vec", k = 10, pool = 1000)
       .orderBy($"q_id", $"cos_sim".desc, $"n_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -242,9 +253,8 @@ class PqSpec extends AnyFunSuite {
     val clones = queries.map { case (qid, v) => (qid + 1000L, v) }
     val all = df.union(queries.toDF("id", "vec")).union(clones.toDF("id", "vec"))
     val model = Pq.fit(all, "id", "vec", nsub = 4, k = 16, maxIter = 4)
-    val path = tmp()
-    Pq.savePqIndex(all, "id", "vec", model, path)
-    val got = Pq.pqTopKJoin(spark, path, queries.toDF("id", "vec"), "id", "vec",
+    val path = index(all, model)
+    val got = AnnIndex.searchJoin(spark, path, queries.toDF("id", "vec"), "id", "vec",
         all, "id", "vec", k = 2, pool = 30)
       .filter($"cos_sim" === 1.0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -258,12 +268,11 @@ class PqSpec extends AnyFunSuite {
   test("PQ k-NN join: an over-limit query batch raises toward the bucket joins") {
     val df = corpus(50)
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 2)
-    val path = tmp()
-    Pq.savePqIndex(df, "id", "vec", model, path)
-    val big = spark.range(Pq.MaxJoinQueries + 1)
+    val path = index(df, model)
+    val big = spark.range(AnnIndex.MaxJoinQueries + 1)
       .selectExpr("id", "array_repeat(cast(0.1 as float), 16) as vec")
     val e = intercept[IllegalArgumentException] {
-      Pq.pqTopKJoin(spark, path, big, "id", "vec", df, "id", "vec", k = 1)
+      AnnIndex.searchJoin(spark, path, big, "id", "vec", df, "id", "vec", k = 1)
     }
     assert(e.getMessage.contains("IVF/LSH bucket joins"))
   }
@@ -316,6 +325,7 @@ class PqSpec extends AnyFunSuite {
     // recall@10 with a 30-of-1000 candidate pool (33× pruning), over
     // 20 noisy-corpus-vector queries — the regime where quantization
     // quality IS the recall
+    val (pqPath, opqPath) = (index(df, pq), index(df, opq))
     val qrnd = new scala.util.Random(77L)
     val recalls = (0 until 20).map { qi =>
       val base = rows(qrnd.nextInt(rows.size))._2
@@ -323,10 +333,10 @@ class PqSpec extends AnyFunSuite {
         .map { case (v, j) => (v + 0.05 * qrnd.nextGaussian()).toFloat }.toArray
       val truth = Similarity.cosineTopK(df, "id", "vec", query, 10)
         .collect().map(_.getLong(0)).toSeq
-      def got(m: Pq.PqModel) =
-        Pq.topKOneShot(df, "id", "vec", m, query, k = 10, pool = 30)
+      def got(path: String) =
+        AnnIndex.search(spark, path, df, "id", "vec", query, k = 10, pool = 30)
           .collect().map(_.getLong(0)).toSeq
-      (recallAt(got(pq), truth), recallAt(got(opq), truth))
+      (recallAt(got(pqPath), truth), recallAt(got(opqPath), truth))
     }
     val pqR = recalls.map(_._1).sum / recalls.size
     val opqR = recalls.map(_._2).sum / recalls.size
@@ -340,16 +350,16 @@ class PqSpec extends AnyFunSuite {
     val df = structuredCorpus(400, 5L).toDF("id", "vec")
     val opq = Pq.fitOpq(df, "id", "vec", nsub = 4, k = 8, maxIter = 4,
       opqIters = 3)
-    val path = tmp()
-    Pq.savePqIndex(df, "id", "vec", opq, path)
-    val loaded = Pq.loadModel(spark, path)
+    val path = index(df, opq)
+    val loaded = loadModel(path)
     assert(loaded.rotation.isDefined)
     assert(loaded.rotation.get.map(_.toSeq).toSeq ==
       opq.rotation.get.map(_.toSeq).toSeq)
     val query = structuredCorpus(1, 91L).head._2.map(_.toFloat).toArray
     // pool ≥ corpus: exact rerank sees everything — OPQ, PQ and brute
     // force all agree (the s_opq_topk oracle configuration)
-    val got = Pq.topK(spark, path, df, "id", "vec", query, k = 10, pool = 1000)
+    val got = AnnIndex.search(spark, path, df, "id", "vec", query,
+        k = 10, pool = 1000)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -360,27 +370,25 @@ class PqSpec extends AnyFunSuite {
     val df = structuredCorpus(400, 13L).toDF("id", "vec")
     val opq = Pq.fitOpq(df, "id", "vec", nsub = 4, k = 8, maxIter = 4,
       opqIters = 3)
-    val path = tmp()
-    Pq.saveIvfPqIndex(df, "id", "vec", opq, path, nlist = 4, maxIter = 3,
-      initMode = "random")
+    val path = index(df, opq,
+      AnnIndex.Ivf(nlist = 4, maxIter = 3, initMode = "random"))
     val query = structuredCorpus(1, 17L).head._2.map(_.toFloat).toArray
-    val got = Pq.ivfPqTopK(spark, path, df, "id", "vec", query, k = 10,
-      nprobe = 4, pool = 1000)
+    val got = AnnIndex.search(spark, path, df, "id", "vec", query, k = 10,
+      pool = 1000, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want)
     // the rotation sidecar rides the composed index too
-    assert(Pq.loadModel(spark, path).rotation.isDefined)
+    assert(loadModel(path).rotation.isDefined)
   }
 
   test("candidate stage is a TakeOrdered over the codes scan, not a global sort") {
     val df = corpus()
     val model = Pq.fit(df, "id", "vec", nsub = 4, k = 8, maxIter = 2)
-    val path = tmp()
-    Pq.savePqIndex(df, "id", "vec", model, path)
+    val path = index(df, model)
     val query = randVecs(1, 99L).head._2.map(_.toFloat).toArray
-    val plan = Pq.topK(spark, path, df, "id", "vec", query, k = 5, pool = 50)
+    val plan = AnnIndex.search(spark, path, df, "id", "vec", query, k = 5, pool = 50)
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"))
     assert(plan.contains("BroadcastHashJoin"))

@@ -494,4 +494,38 @@ class SimilaritySpec extends AnyFunSuite {
         "longer matches the operator — regenerate the oracle or exclude " +
         "the pair")
   }
+
+  test("LSH plane counts outside 1..30 raise; 8 planes is unchanged") {
+    // bucket ids are Int sign patterns: at 31 planes the probe range
+    // `0 until (1 << 31)` is empty, at 33 bit 32 aliases bit 0
+    val dir = java.nio.file.Files.createTempDirectory("graft_lshplanes").toString
+    for (p <- Seq(0, 31, 33)) {
+      intercept[IllegalArgumentException] {
+        Similarity.lshTopK(vecs, "vec_id", "embedding", q, 3, numPlanes = p)
+      }
+      intercept[IllegalArgumentException] {
+        Similarity.lshIndex(vecs, "vec_id", "embedding", s"$dir/p$p", numPlanes = p)
+      }
+    }
+    // a loaded index is an LshIndex too: its planes are checked as well
+    intercept[IllegalArgumentException] {
+      Similarity.LshIndex(dir, Similarity.hyperplanes(30, 4) ++ Similarity.hyperplanes(1, 4))
+    }
+    // 8 planes, probing every bucket: exactly brute force, one-shot and
+    // persisted alike
+    val brute = Similarity.cosineTopK(vecs, "vec_id", "embedding", q, 5).collect().toSeq
+    assert(Similarity.lshTopK(vecs, "vec_id", "embedding", q, 5, numPlanes = 8,
+      probeHamming = 8).collect().toSeq == brute)
+    val idx = Similarity.lshIndex(vecs, "vec_id", "embedding", s"$dir/p8", numPlanes = 8)
+    assert(Similarity.lshTopK(spark, idx, "vec_id", "embedding", q, 5, 8)
+      .collect().toSeq == brute)
+  }
+
+  test("a directory without its sidecar raises naming it: LSH and IVF") {
+    val empty = java.nio.file.Files.createTempDirectory("graft_nosidecar").toString
+    val lsh = intercept[IllegalArgumentException](Similarity.loadLshIndex(spark, empty))
+    assert(lsh.getMessage.contains(empty), lsh.getMessage)
+    val ivf = intercept[IllegalArgumentException](Similarity.loadIvfIndex(spark, empty))
+    assert(ivf.getMessage.contains(empty), ivf.getMessage)
+  }
 }

@@ -22,13 +22,16 @@ class SqSpec extends AnyFunSuite {
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_sq").toString
 
+  private def encode(df: org.apache.spark.sql.DataFrame, model: Sq.SqModel) =
+    df.withColumn("_code", AnnIndex.Sq8(model).encode($"vec"))
+
   test("full-pool SQ8 top-k ≡ brute-force cosine top-k (pool ≥ corpus)") {
     val df = corpus()
     val model = Sq.fit(df, "id", "vec")
     val path = tmp()
-    Sq.saveSqIndex(df, "id", "vec", model, path)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Sq8(model))
     val query = randVecs(1, 99L).head._2.map(_.toFloat).toArray
-    val got = Sq.topK(spark, path, df, "id", "vec", query, k = 10, pool = 1000)
+    val got = AnnIndex.search(spark, path, df, "id", "vec", query, k = 10, pool = 1000)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -38,8 +41,8 @@ class SqSpec extends AnyFunSuite {
   test("SQ8 fidelity: dequantization error ≤ half a grid step per dim") {
     val df = corpus(200)
     val model = Sq.fit(df, "id", "vec")
-    val rows = Sq.encode(
-      df.select($"id", $"vec".as("orig"), $"vec"), "vec", model)
+    val rows = encode(
+      df.select($"id", $"vec".as("orig"), $"vec"), model)
       .select($"orig".cast("array<double>"), $"_code").collect()
     rows.foreach { r =>
       val v = r.getAs[scala.collection.Seq[Double]](0).toArray
@@ -63,9 +66,9 @@ class SqSpec extends AnyFunSuite {
     val df = corpus(500, seed = 21L)
     val model = Sq.fit(df, "id", "vec")
     val path = tmp()
-    Sq.saveSqIndex(df, "id", "vec", model, path)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Sq8(model))
     val query = randVecs(1, 77L).head._2.map(_.toFloat).toArray
-    val got = Sq.topK(spark, path, df, "id", "vec", query, k = 10, pool = 10)
+    val got = AnnIndex.search(spark, path, df, "id", "vec", query, k = 10, pool = 10)
       .collect().map(_.getLong(0)).toSet
     val want = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().map(_.getLong(0)).toSet
@@ -79,8 +82,8 @@ class SqSpec extends AnyFunSuite {
       .toDF("id", "vec").select($"id", $"vec".cast("array<float>")))
     val model = Sq.fit(withClone, "id", "vec")
     val path = tmp()
-    Sq.saveSqIndex(withClone, "id", "vec", model, path)
-    val got = Sq.topK(spark, path, withClone, "id", "vec", query, k = 5, pool = 10)
+    AnnIndex.build(withClone, "id", "vec", path, AnnIndex.Sq8(model))
+    val got = AnnIndex.search(spark, path, withClone, "id", "vec", query, k = 5, pool = 10)
       .collect()
     assert(got.head.getLong(0) == 9999L && got.head.getDouble(1) == 1.0)
   }
@@ -88,12 +91,12 @@ class SqSpec extends AnyFunSuite {
   test("codes are dim bytes; cosine metric makes scaled copies share a code") {
     val df = corpus(50)
     val model = Sq.fit(df, "id", "vec")
-    val codes = Sq.encode(df, "vec", model).select("_code").collect()
+    val codes = encode(df, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
     assert(codes.forall(_.length == dim))
     val scaled = df.select($"id",
       transform($"vec", x => x * lit(10.0f)).as("vec"))
-    val scaledCodes = Sq.encode(scaled, "vec", model).select("_code").collect()
+    val scaledCodes = encode(scaled, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
     assert(codes.zip(scaledCodes).forall { case (a, b) =>
       java.util.Arrays.equals(a, b) })
@@ -103,13 +106,13 @@ class SqSpec extends AnyFunSuite {
     val df = corpus(200)
     val model = Sq.fit(df, "id", "vec")
     val path = tmp()
-    Sq.saveSqIndex(df, "id", "vec", model, path)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Sq8(model))
     val query = randVecs(1, 55L).head._2.map(_.toFloat).toArray
     val batch = Seq((5555L, query.map(_.toDouble).toSeq))
       .toDF("id", "vec").select($"id", $"vec".cast("array<float>"))
-    Sq.sqAppend(batch, "id", "vec", path)
+    AnnIndex.append(batch, "id", "vec", path)
     val all = df.unionByName(batch)
-    val got = Sq.topK(spark, path, all, "id", "vec", query, k = 3, pool = 10)
+    val got = AnnIndex.search(spark, path, all, "id", "vec", query, k = 3, pool = 10)
       .collect()
     assert(got.head.getLong(0) == 5555L && got.head.getDouble(1) == 1.0)
   }
@@ -119,7 +122,7 @@ class SqSpec extends AnyFunSuite {
     val model = Sq.fit(df, "id", "vec")
     val short = Seq((1L, Seq(1.0f, 2.0f))).toDF("id", "vec")
     val e = intercept[Exception] {
-      Sq.encode(short, "vec", model).collect()
+      encode(short, model).collect()
     }
     def rootMessages(t: Throwable): List[String] =
       Option(t.getMessage).toList ++
@@ -128,7 +131,7 @@ class SqSpec extends AnyFunSuite {
     val withNull = df.select($"id",
       when($"id" === 0L, lit(null).cast("array<float>"))
         .otherwise($"vec".cast("array<float>")).as("vec"))
-    val codes = Sq.encode(withNull, "vec", model)
+    val codes = encode(withNull, model)
       .filter($"_code".isNull).select("id").collect().map(_.getLong(0))
     assert(codes.toSeq == Seq(0L))
   }
@@ -137,19 +140,19 @@ class SqSpec extends AnyFunSuite {
     val df = corpus(400)
     val model = Sq.fit(df, "id", "vec")
     val path = tmp()
-    Sq.saveIvfSqIndex(df, "id", "vec", model, path, nlist = 4, maxIter = 3,
-      initMode = "random")
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Sq8(model),
+      AnnIndex.Ivf(nlist = 4, maxIter = 3, initMode = "random"))
     val query = randVecs(1, 31L).head._2.map(_.toFloat).toArray
-    val got = Sq.ivfSqTopK(spark, path, df, "id", "vec", query,
-      k = 10, nprobe = 4, pool = 1000)
+    val got = AnnIndex.search(spark, path, df, "id", "vec", query,
+      k = 10, pool = 1000, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.cosineTopK(df, "id", "vec", query, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == want)
     // pruned probe: the scan must read only the probed cells'
     // partition directories, not the whole code table
-    val pruned = Sq.ivfSqTopK(spark, path, df, "id", "vec", query,
-      k = 10, nprobe = 1, pool = 50)
+    val pruned = AnnIndex.search(spark, path, df, "id", "vec", query,
+      k = 10, pool = 50, nprobe = 1)
     val scan = pruned.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") && scan.contains("_cell"),
       s"no partition pruning in:\n$scan")
@@ -162,10 +165,10 @@ class SqSpec extends AnyFunSuite {
       .toDF("id", "vec").select($"id", $"vec".cast("array<float>")))
     val model = Sq.fit(withClone, "id", "vec")
     val path = tmp()
-    Sq.saveIvfSqIndex(withClone, "id", "vec", model, path, nlist = 4,
-      maxIter = 3, initMode = "random")
-    val got = Sq.ivfSqTopK(spark, path, withClone, "id", "vec", query,
-      k = 5, nprobe = 1, pool = 20).collect()
+    AnnIndex.build(withClone, "id", "vec", path, AnnIndex.Sq8(model),
+      AnnIndex.Ivf(nlist = 4, maxIter = 3, initMode = "random"))
+    val got = AnnIndex.search(spark, path, withClone, "id", "vec", query,
+      k = 5, pool = 20, nprobe = 1).collect()
     assert(got.head.getLong(0) == 9999L && got.head.getDouble(1) == 1.0)
   }
 
@@ -175,7 +178,7 @@ class SqSpec extends AnyFunSuite {
     }.toDF("id", "vec").select($"id", $"vec".cast("array<float>").as("vec"))
     val model = Sq.fit(df, "id", "vec", metric = "l2")
     assert(model.scales.take(4).forall(_ == 0.0))
-    val codes = Sq.encode(df, "vec", model).select("_code").collect()
+    val codes = encode(df, model).select("_code").collect()
       .map(_.getAs[Array[Byte]](0))
     assert(codes.forall(c => c.take(4).forall(_ == 0.toByte)))
   }
