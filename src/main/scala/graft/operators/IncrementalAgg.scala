@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.streaming.Generations
 
 /** Incremental aggregation over an append-only lake: compute each
   * batch's PARTIAL aggregates once, store them as small parquet
@@ -28,14 +29,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *                         // the root is a TAIL AREA: appends always land
   *                         // here, live by presence unless the manifest's
   *                         // consumed list names them (online compaction)
-  *   _commits/<id>         // root-anchored commit ledger: one empty object
+  *   _graft_commits/<id>   // root-anchored commit ledger: one empty object
   *                         // per committed batch id — compactions never
   *                         // touch it, so replays stay recognized forever
-  *   _gen-00000.json       // after a compact(): manifest naming the live
-  *   gen-00000-3fa9c1d2/   // generation dir (uniquely suffixed) + the
-  *                         // consumed tail ids — highest COMPLETE manifest
-  *                         // wins; live = gen batches + unconsumed tail
+  *   _graft_gen-00000.manifest // after a compact(): manifest naming the
+  *   _gen-00000-3fa9c1/    // live generation dir (uniquely suffixed) + the
+  *                         // consumed tail dirs (`batch=<id>`) — highest
+  *                         // COMPLETE manifest wins; live = gen batches +
+  *                         // unconsumed tail
   * }}}
+  * The manifest format, generation claim, commit, retirement and
+  * ledger are the protocol [[graft.streaming.Generations]] shares with
+  * the corpus lake.
   * Underscore-prefixed entries are invisible to Spark's file index;
   * the `batch=` hive key records provenance for free. Only batch
   * directories bearing parquet's `_SUCCESS` marker are ever read or
@@ -126,9 +131,9 @@ object IncrementalAgg {
     // instead of a meta-only husk fit() refuses to touch (overwrite
     // mode makes the retry clean).
     writeSized(partials(df, groupCols, metrics),
-      batchDir(fs, statePath, batchId).toString, SaveMode.Overwrite)
+      batchDir(statePath, batchId).toString, SaveMode.Overwrite)
     writeMeta(fs, metaPath, buildMeta(df, groupCols, metrics))
-    recordCommit(fs, statePath, batchId)
+    ledger(fs, statePath).record(batchId)
   }
 
   /** Append one new batch: ONE aggregation over the batch, one write,
@@ -136,7 +141,7 @@ object IncrementalAgg {
     * partial schema disagrees with the fitted contract (a type drift
     * here would poison every later merge) or if `batchId` was already
     * COMMITTED (re-running a batch must not double-count) — committed
-    * means the id is in the root `_commits/` ledger or the live
+    * means the id is in the root `_graft_commits/` ledger or the live
     * directory bears parquet's `_SUCCESS` marker (see [[isCommitted]];
     * the ledger survives [[compact]], so a batch folded away by a
     * compaction still counts as committed — r10 advice: the old
@@ -150,23 +155,23 @@ object IncrementalAgg {
     checkBatchId(batchId)
     val spark = batch.sparkSession
     val (fs, meta) = readMeta(spark, statePath)
-    val dir = batchDir(fs, statePath, batchId)
+    val dir = batchDir(statePath, batchId)
     require(!isCommitted(fs, statePath, batchId),
       s"incrementalAgg: batch '$batchId' already committed under $statePath")
     if (fs.exists(dir)) fs.delete(dir, true) // torn write — safe to redo
     writeSized(checkedPartials(batch, meta), dir.toString, SaveMode.ErrorIfExists)
-    recordCommit(fs, statePath, batchId)
+    ledger(fs, statePath).record(batchId)
   }
 
   /** Idempotent, crash-safe append for at-least-once callers
     * (Structured Streaming's foreachBatch re-runs a batch id after
-    * recovery): a COMMITTED id — in the root `_commits/` ledger or a
+    * recovery): a COMMITTED id — in the root `_graft_commits/` ledger or a
     * live batch directory bearing parquet's `_SUCCESS` marker — makes
     * re-delivery return false untouched, while a marker-less directory
     * is a torn write from a crash mid-batch and is overwritten.
     * Exactly-once state from at-least-once delivery, the same marker
-    * discipline as CorpusIngest.ingestBatch — and, like CorpusIngest's
-    * root-anchored `_graft_commits`, the ledger outlives [[compact]],
+    * discipline as CorpusIngest.ingestBatch — and the same shared
+    * root-anchored ledger, which outlives [[compact]],
     * so a pre-compact batch id replayed after a compaction is still
     * recognized instead of double-counted (r10 advice).
     */
@@ -175,11 +180,11 @@ object IncrementalAgg {
     checkBatchId(batchId)
     val spark = batch.sparkSession
     val (fs, meta) = readMeta(spark, statePath)
-    val dir = batchDir(fs, statePath, batchId)
+    val dir = batchDir(statePath, batchId)
     if (isCommitted(fs, statePath, batchId)) return false
     fs.delete(dir, true)
     writeSized(checkedPartials(batch, meta), dir.toString, SaveMode.ErrorIfExists)
-    recordCommit(fs, statePath, batchId)
+    ledger(fs, statePath).record(batchId)
     true
   }
 
@@ -317,11 +322,11 @@ object IncrementalAgg {
     // a consumed tail dir may still physically exist (one-generation
     // reader grace) but its data is already folded into the live
     // generation — deleting the dir would NOT retract the contribution
-    if (layout(fs, statePath).consumed.exists(_._2 == batchId))
+    val dir = batchDir(statePath, batchId)
+    if (layout(fs, statePath).consumed.exists(_._2.getName == dir.getName))
       throw new IllegalArgumentException(
         s"incrementalAgg: batch '$batchId' was folded by a compaction — " +
           "individual retention only applies to batches appended after it")
-    val dir = batchDir(fs, statePath, batchId)
     require(fs.exists(dir),
       s"incrementalAgg: no batch '$batchId' under $statePath to drop")
     // a dropped id leaves the commit ledger too: the documented contract
@@ -331,7 +336,7 @@ object IncrementalAgg {
     // still-committed batch (isCommitted backfills the marker from the
     // directory's _SUCCESS) and the retry drops it cleanly — dir-first
     // would leave a ghost marker blocking every re-append of the id
-    fs.delete(commitMarker(statePath, batchId), false)
+    ledger(fs, statePath).forget(batchId)
     require(fs.delete(dir, true),
       s"incrementalAgg: failed to delete batch '$batchId' under $statePath")
   }
@@ -357,51 +362,27 @@ object IncrementalAgg {
   }
 
   /** Fold all live batch directories into one (bounding `result`'s
-    * read at O(groups) again after many appends — the state twin of
-    * CorpusIngest.compactLake). Merged partials are cast back to the
-    * fitted partial types, so a compacted state is indistinguishable
-    * from a freshly fitted one. Folded batch DATA can no longer be
-    * retracted individually — retention via [[dropBatch]] only
-    * applies to batches appended after the compact — but folded batch
-    * IDS are NOT forgotten: they stay in the root `_commits/` ledger
-    * (which compaction never touches), so an at-least-once caller
-    * replaying a pre-compact batch id after a compaction is still
-    * refused/skipped instead of double-counted (r10 advice; the same
-    * root-anchored-marker shape as CorpusIngest's `_graft_commits`).
+    * read at O(groups) again after many appends). Merged partials are
+    * cast back to the fitted partial types, so a compacted state is
+    * indistinguishable from a freshly fitted one. Folded batch DATA can
+    * no longer be retracted individually — retention via [[dropBatch]]
+    * only applies to batches appended after the compact — but folded
+    * batch IDS are NOT forgotten: they stay in the root ledger (which
+    * compaction never touches), so an at-least-once caller replaying a
+    * pre-compact batch id after a compaction is still refused/skipped
+    * instead of double-counted.
     *
-    * Install is a MANIFEST FLIP, not a rename (r9 verdict item 3):
-    * the fold lands in a fresh uniquely-suffixed `gen-NNNNN-xxxx/`
-    * directory under the root, and committing it is ONE new small
-    * object: the `_gen-NNNNN.json` manifest (a single atomic PUT on
-    * S3, an atomic create on HDFS). Readers resolve the live layout
-    * as the highest-numbered COMPLETE manifest, so a concurrent
-    * reader sees exactly one generation — whichever was current when
-    * it listed. The immediately-previous generation layout is
-    * RETAINED until the next compact (an in-flight reader may still
-    * be scanning it); layouts two generations old are retired here.
-    * A crash before the manifest write leaves an invisible
-    * uniquely-named gen directory as retirable debris; a crash after
-    * it leaves fully-committed state plus retirable debris — never a
-    * truncated aggregate, and no data byte is ever copied or renamed.
-    *
-    * WRITERS ARE ONLINE-SAFE (r11, mirroring CorpusIngest.compactLake):
-    * appends may land while a compact runs. Post-compact appends go to
-    * the STATE ROOT — a tail area whose liveness is PRESENCE minus the
-    * live manifest's consumed list — so the compactor pins the batch
-    * set it folds, records exactly those tail batch ids as consumed
-    * (generation-stamped), and a batch landing after the pin (even
-    * between pin and flip) stays live by presence on both sides of
-    * the flip. Consumed tail directories retire under a
-    * ONE-GENERATION reader grace and are carried forward in the next
-    * manifest until physically gone, so a crash between flip and
-    * retire can't double-count. Rival compactors conflict loudly: the
-    * manifest is created EXCLUSIVELY, exactly one wins the generation
-    * number, the loser raises and its uniquely-named data dir is
-    * swept as debris two flips later. Legacy v1 manifests (no
-    * consumed list; appends landed inside the generation dir) stay
-    * readable — their root `batch=` dirs are pre-generation leftovers
-    * that were already folded, never counted as tail, and retired at
-    * the upgrade compact.
+    * Install is a MANIFEST FLIP through [[graft.streaming.Generations]],
+    * the protocol the corpus lake's compaction uses:
+    * the fold lands in a fresh uniquely-suffixed `_gen-NNNNN-xxxxxx/`
+    * directory, and committing it is ONE new small manifest object.
+    * Readers see exactly one generation; the previous one is retained
+    * for in-flight readers until the next compact, and no data byte is
+    * ever copied or renamed. WRITERS ARE ONLINE-SAFE: appends land
+    * in the state ROOT, a tail whose liveness is presence minus the
+    * manifest's consumed `batch=<id>` dirs, so a batch landing after
+    * the pin stays live on both sides of the flip. Rival compactors
+    * conflict loudly on the exclusive manifest create.
     */
   def compact(spark: SparkSession, statePath: String,
       batchId: String = "compacted"): Unit =
@@ -415,6 +396,7 @@ object IncrementalAgg {
       batchId: String, afterPin: () => Unit): Unit = {
     checkBatchId(batchId)
     val (fs, meta) = readMeta(spark, statePath)
+    val root = new Path(statePath)
     val lay = layout(fs, statePath)
     // PIN the input set: exactly these directories fold into the new
     // generation, and exactly the tail ones are recorded consumed. A
@@ -423,61 +405,20 @@ object IncrementalAgg {
     val (genDirs, tailDirs) = liveBatchDirs(fs, statePath, lay)
     require(genDirs.nonEmpty || tailDirs.nonEmpty,
       s"incrementalAgg: no committed batches under $statePath")
-    // the claimed generation number is part of the PIN: it counts from
-    // the highest manifest FILE, complete or torn — a crash
-    // mid-manifest-create leaves a torn file whose number is BURNED
-    // (readers skip it; create-exclusive would refuse it forever), so
-    // the retry must take the next number, while a rival compactor
-    // claiming the same number still conflicts at the exclusive create
-    val highestFile = fs.listStatus(new Path(statePath)).toSeq
-      .flatMap(_.getPath.getName match {
-        case GenManifestRe(n) => Some(n.toInt)
-        case _ => None
-      }).maxOption
-    val nextGen =
-      math.max(lay.gen.getOrElse(-1), highestFile.getOrElse(-1)) + 1
+    val nextGen = Generations.claim(fs, root)
     afterPin()
+    // a folded tail id must stay in the ledger after its dir retires;
+    // this backfills ids a state written before the shared ledger kept
+    // elsewhere (a no-op existence probe for every other id)
+    tailDirs.foreach(d => isCommitted(fs, statePath, d.getName.stripPrefix("batch=")))
     val merged = merge(readBatchDirs(spark, statePath, lay, genDirs, tailDirs), meta)
-    // unique suffix: rival compactors racing to the same generation
-    // number must not overwrite each other's in-progress fold — the
-    // manifest names the winning directory, the loser's is debris
-    val dirName = f"gen-$nextGen%05d-" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    val dirName = Generations.dataDirName(nextGen)
     writeSized(merged,
-      new Path(new Path(statePath, dirName), "batch=" + batchId).toString,
+      new Path(new Path(root, dirName), "batch=" + batchId).toString,
       SaveMode.Overwrite)
-    def rootDir(id: String) = new Path(statePath, "batch=" + id)
-    // carry forward consumed entries whose directories still exist: a
-    // crash between a previous flip and its retire left them present,
-    // and dropping them from the manifest would revive them as live
-    val carried = lay.consumed.filter { case (_, id) => fs.exists(rootDir(id)) }
-    val consumed = carried ++
-      tailDirs.map(d => (nextGen, d.getName.stripPrefix("batch=")))
-    writeManifest(fs, statePath, nextGen, dirName, consumed) // THE commit point
-    recordCommit(fs, statePath, batchId)
-    // RETIRE, post-commit and best-effort (readers ignore anything
-    // unreferenced): consumed tail dirs whose grace window has passed
-    // (a reader may hold the previous manifest, which still counts a
-    // dir consumed AT the new generation as live), v1 leftovers, and
-    // generation layouts strictly older than the just-retired one.
-    carried.filter(_._1 < nextGen).foreach { case (_, id) =>
-      fs.delete(rootDir(id), true) }
-    if (lay.version == 1)
-      // v1 root batch= dirs are pre-generation leftovers, already
-      // folded by the v1 compact — no v1 reader resolves them
-      fs.listStatus(new Path(statePath))
-        .filter(_.getPath.getName.startsWith("batch="))
-        .foreach(st => fs.delete(st.getPath, true))
-    lay.gen.foreach { prev =>
-      fs.listStatus(new Path(statePath)).foreach { st =>
-        val stale = st.getPath.getName match {
-          case GenDataRe(g) => g.toInt < prev
-          case GenManifestRe(g) => g.toInt < prev
-          case _ => false
-        }
-        if (stale) fs.delete(st.getPath, true)
-      }
-    }
+    val next = Generations.commit(fs, root, lay, nextGen, dirName, Nil, tailDirs)
+    ledger(fs, statePath).record(batchId)
+    Generations.retire(fs, root, lay, next)
   }
 
   // ---- partial / merge / finalize ----------------------------------
@@ -589,12 +530,11 @@ object IncrementalAgg {
     readBatchDirs(spark, statePath, lay, genDirs, tailDirs)
   }
 
-  private def committedBatchDirs(fs: FileSystem, root: Path): Seq[Path] =
+  private def committedBatchDirs(fs: FileSystem, root: Path): Seq[FileStatus] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(_.getPath)
-      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
+      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
 
   /** Write partial rows bounded by SIZE, not a hard file count: the
     * old `coalesce(1)` made the final-aggregation stage itself a
@@ -658,85 +598,20 @@ object IncrementalAgg {
         "committer that writes success markers)")
   }
 
-  // ---- generation manifests ----------------------------------------
+  // ---- generation layout (graft.streaming.Generations) -------------
 
-  private val GenManifestRe = "_gen-(\\d{5,})\\.json".r
-  private val GenDataRe = "gen-(\\d{5,})(?:-[0-9a-f]+)?".r
-
-  /** The state's live layout. `gen` None before the first compaction
-    * (flat root, version 0). v1 manifests (pre-online-compaction JSON,
-    * no consumed list) imply "everything lives in the generation dir,
-    * appends included"; v2 manifests add the generation-stamped
-    * consumed-tail-id list that makes root-landing appends subtractive
-    * (live by presence unless consumed).
-    */
-  private final case class StateLayout(gen: Option[Int], version: Int,
-      dataDir: Path, consumed: Seq[(Int, String)])
-
-  /** Resolve the live layout: the highest-numbered COMPLETE manifest
-    * wins — a torn manifest (crash mid-create: unparseable, or a v2
-    * body missing its `"end":true` terminator) is skipped, never
-    * trusted, and its generation number is simply burned.
-    */
-  private def layout(fs: FileSystem, statePath: String): StateLayout = {
-    val root = new Path(statePath)
-    val gens =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.flatMap(st => st.getPath.getName match {
-        case GenManifestRe(n) => Some(n.toInt)
-        case _ => None
-      })
-    gens.sorted.reverse.iterator.flatMap(n => parseManifest(fs, statePath, n))
-      .nextOption().getOrElse(StateLayout(None, 0, root, Nil))
-  }
-
-  private def parseManifest(fs: FileSystem, statePath: String,
-      n: Int): Option[StateLayout] = {
-    val in = fs.open(new Path(statePath, f"_gen-$n%05d.json"))
-    val json = try {
-      scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    } finally in.close()
-    // machine-written fixed-shape JSON over a quote-free id charset
-    // (checkBatchId / syncFromLake sanitization) — regex-parse to stay
-    // dependency-free without a Spark job
-    val isV2 = json.contains("\"v\":2")
-    if (isV2 && !json.contains("\"end\":true")) None // torn v2
-    else """"dir":"([^"]+)"""".r.findFirstMatchIn(json).map { m =>
-      val consumed = """\{"g":(\d+),"id":"([^"]+)"\}""".r.findAllMatchIn(json)
-        .map(c => (c.group(1).toInt, c.group(2))).toSeq
-      StateLayout(Some(n), if (isV2) 2 else 1,
-        new Path(statePath, m.group(1)), consumed)
-    }
-  }
-
-  /** Where appends land: the generation dir under a legacy v1 layout
-    * (old semantics — racy with a concurrent compact, healed at the
-    * next compact's v2 upgrade), the state ROOT otherwise (the tail
-    * area whose presence-minus-consumed liveness makes appends safe
-    * against a concurrent compact).
-    */
-  private def appendRoot(fs: FileSystem, statePath: String): Path = {
-    val lay = layout(fs, statePath)
-    if (lay.version == 1) lay.dataDir else new Path(statePath)
-  }
+  private def layout(fs: FileSystem, statePath: String): Generations.Layout =
+    Generations.resolve(fs, new Path(statePath))
 
   /** The live batch directories: (generation dirs, tail dirs). Tail =
-    * committed root `batch=` dirs minus the manifest's consumed ids;
-    * under a v1 manifest the root dirs are pre-generation leftovers
-    * (already folded) and never count.
+    * committed root `batch=` dirs minus the manifest's consumed dirs.
     */
   private def liveBatchDirs(fs: FileSystem, statePath: String,
-      lay: StateLayout): (Seq[Path], Seq[Path]) = {
+      lay: Generations.Layout): (Seq[Path], Seq[Path]) = {
     val genDirs =
       if (lay.gen.isDefined) committedBatchDirs(fs, lay.dataDir) else Seq.empty
-    val tailDirs = lay.version match {
-      case 1 => Seq.empty
-      case _ =>
-        val dead = lay.consumed.map(_._2).toSet
-        committedBatchDirs(fs, new Path(statePath))
-          .filterNot(d => dead.contains(d.getName.stripPrefix("batch=")))
-    }
-    (genDirs, tailDirs)
+    val tailDirs = Generations.liveTail(lay, committedBatchDirs(fs, new Path(statePath)))
+    (genDirs.map(_.getPath), tailDirs.map(_.getPath))
   }
 
   /** Read partial rows from generation + tail dirs (each side under
@@ -744,7 +619,7 @@ object IncrementalAgg {
     * way).
     */
   private def readBatchDirs(spark: SparkSession, statePath: String,
-      lay: StateLayout, genDirs: Seq[Path], tailDirs: Seq[Path]): DataFrame = {
+      lay: Generations.Layout, genDirs: Seq[Path], tailDirs: Seq[Path]): DataFrame = {
     def read(base: Path, dirs: Seq[Path]) =
       spark.read.option("basePath", base.toString)
         .parquet(dirs.map(_.toString): _*).drop("batch")
@@ -754,40 +629,16 @@ object IncrementalAgg {
       .flatten.reduce(_ unionByName _)
   }
 
-  /** One small object: version, generation, the (uniquely-suffixed)
-    * data dir name, the generation-stamped consumed tail ids, and an
-    * `"end":true` terminator proving the write completed. Created
-    * EXCLUSIVELY — two compactors racing to one generation number
-    * means exactly one wins and the loser raises, so no committed
-    * byte is ever clobbered.
-    */
-  private def writeManifest(fs: FileSystem, statePath: String, gen: Int,
-      dirName: String, consumed: Seq[(Int, String)]): Unit = {
-    val at = new Path(statePath, f"_gen-$gen%05d.json")
-    val cs = consumed.map { case (g, id) => s"""{"g":$g,"id":"$id"}""" }
-      .mkString("[", ",", "]")
-    val out = fs.create(at, false) // exclusive: rival compactors conflict here
-    try out.write(
-      (s"""{"v":2,"generation":$gen,"dir":"$dirName",""" +
-        s""""consumed":$cs,"end":true}""").getBytes("UTF-8"))
-    finally out.close()
-  }
-
   private def p(i: Int) = s"_p$i"
   private val MetaFile = "_meta.json"
 
-  /** Root-anchored commit ledger (r10 advice): one empty object per
-    * committed batch id, under `_commits/` at the STATE ROOT — outside
-    * every generation directory, so [[compact]]'s fold-and-retire never
-    * touches it and a pre-compact id stays recognizable forever.
-    * Underscore-prefixed → invisible to Spark's file index. */
-  private val CommitDirName = "_commits"
-  private def commitMarker(statePath: String, batchId: String): Path =
-    new Path(new Path(statePath, CommitDirName), batchId)
-  private def recordCommit(fs: FileSystem, statePath: String,
-      batchId: String): Unit = {
-    fs.create(commitMarker(statePath, batchId), true).close()
-  }
+  /** The root-anchored commit ledger, shared with the
+    * corpus lake: outside every generation directory, so [[compact]]'s
+    * fold-and-retire never touches it and a pre-compact id stays
+    * recognizable forever.
+    */
+  private def ledger(fs: FileSystem, statePath: String): Generations.Ledger =
+    Generations.ledger(fs, new Path(statePath))
   /** COMMITTED = in the root ledger OR the live directory bears
     * `_SUCCESS`. The directory check covers two gaps the ledger alone
     * would miss — a crash between the data write and the ledger record,
@@ -796,14 +647,14 @@ object IncrementalAgg {
     */
   private def isCommitted(fs: FileSystem, statePath: String,
       batchId: String): Boolean =
-    if (fs.exists(commitMarker(statePath, batchId))) true
-    else if (fs.exists(
-        new Path(batchDir(fs, statePath, batchId), "_SUCCESS"))) {
-      recordCommit(fs, statePath, batchId); true
+    if (ledger(fs, statePath).contains(batchId)) true
+    else if (fs.exists(new Path(batchDir(statePath, batchId), "_SUCCESS"))) {
+      ledger(fs, statePath).record(batchId); true
     } else false
 
-  private def batchDir(fs: FileSystem, statePath: String, batchId: String): Path =
-    new Path(appendRoot(fs, statePath), "batch=" + batchId)
+  /** Where a batch lands: the state ROOT, the tail. */
+  private def batchDir(statePath: String, batchId: String): Path =
+    new Path(statePath, "batch=" + batchId)
   private def checkBatchId(id: String): Unit =
     require(id.nonEmpty && id.forall(ch => ch.isLetterOrDigit ||
         ch == '.' || ch == '_' || ch == '-' || ch == '~'),

@@ -147,7 +147,8 @@ object PipelineDag {
     * and moves the isolation into explicit, durable state instead:
     *
     *  - every completed Sink/Validation writes a marker under
-    *    `stateDir/_done/`; on re-run those actions are SKIPPED — a
+    *    `stateDir/_done/` (the shared [[graft.streaming.Generations]]
+    *    ledger); on re-run those actions are SKIPPED — a
     *    sink that already committed is never double-written (an
     *    external webhook/db/export must not fire twice);
     *  - node ids in `stageNodes` additionally persist their output to
@@ -179,14 +180,11 @@ object PipelineDag {
     // state dir or collide ("a/b" vs "a%2Fb")
     private def enc(id: String) =
       java.net.URLEncoder.encode(id, "UTF-8")
-    private def doneMark(id: String) = new Path(root, s"_done/${enc(id)}")
+    private val done = graft.streaming.Generations.runLedger(fs, root)
     def stagePath(id: String): String =
       new Path(root, s"_stage/${enc(id)}").toString
-    def isDone(id: String): Boolean = fs.exists(doneMark(id))
-    def markDone(id: String): Unit = {
-      fs.mkdirs(new Path(root, "_done"))
-      fs.create(doneMark(id), true).close()
-    }
+    def isDone(id: String): Boolean = done.contains(enc(id))
+    def markDone(id: String): Unit = done.record(enc(id))
     /** A stage is valid only when its parquet commit finished —
       * `_SUCCESS` guards against a half-written stage from a crashed
       * run being read back as truth.

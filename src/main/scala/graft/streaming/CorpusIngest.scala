@@ -52,161 +52,35 @@ object CorpusIngest {
   val FingerprintCol = "_fp"
 
   /** Directory (under the lake, underscore-prefixed so parquet readers
-    * ignore it) holding one empty marker file per committed batch id.
-    * Root-anchored: compaction never moves it.
+    * ignore it) holding one empty marker file per committed batch id:
+    * the shared root-anchored [[Generations.ledger]], which compaction
+    * never moves.
     */
-  val CommitDirName = "_graft_commits"
+  val CommitDirName = Generations.LedgerDir
 
   /** Root-anchored append area once the lake has a generation layout:
     * [[ingestBatch]] writes here, [[compactLake]] folds it in. Like the
     * lake ROOT itself (the pre-compaction flat layout), it is a TAIL
     * SOURCE: liveness there is SUBTRACTIVE — every file present is
-    * live unless the live manifest records it as consumed — so an
-    * append landing at ANY moment, including mid-compaction after the
-    * compactor listed its input set, is visible to the next resolve.
-    * That subtraction is what makes writers online-safe: a manifest
-    * written at time T can't enumerate files that land at T+1, but it
-    * CAN enumerate the files it rewrote, and everything else stays
-    * live by presence.
+    * live unless the live manifest records it as consumed
+    * ([[Generations.liveTail]]) — so an append landing at ANY moment,
+    * including mid-compaction after the compactor listed its input
+    * set, is visible to the next resolve.
     */
   val TailDirName = "_tail"
-
-  private val GenManifestRe = "_graft_gen-(\\d{5,})\\.manifest".r
-  private def genDirNum(name: String): Option[Int] =
-    if (!name.startsWith("_gen-")) None
-    else name.stripPrefix("_gen-").takeWhile(_.isDigit).toIntOption
-
-  /** The lake's LIVE layout: generation number (None before the first
-    * compaction — flat legacy layout), the generation directory
-    * compaction rewrote into, the files of older layouts the manifest
-    * retains by REFERENCE (big files left in place, unread and
-    * unmoved), and the tail-source files the manifest CONSUMED
-    * (rewrote into the generation dir), each stamped with the
-    * generation that consumed it so retirement can honor the
-    * one-generation reader grace window.
-    */
-  private final case class Layout(gen: Option[Int], dataDir: Path,
-      keep: Seq[Path], consumed: Seq[(Int, Path)])
-
-  private def currentLayout(fs: FileSystem, lakePath: Path): Layout = {
-    val gens =
-      if (!fs.exists(lakePath)) Seq.empty
-      else fs.listStatus(lakePath).toSeq.flatMap(st => st.getPath.getName match {
-        case GenManifestRe(n) => Some(n.toInt)
-        case _ => None
-      })
-    // highest COMPLETE manifest wins: a manifest whose terminator
-    // line is missing is a torn write (crash mid-create) and is
-    // skipped — silently trusting a truncated keep list would drop
-    // every retained big file and let the next compact's retirement
-    // sweep DELETE them (r10 review).
-    gens.sorted.reverse.iterator.map { n =>
-      val in = fs.open(manifestPath(lakePath, n))
-      val lines = try {
-        scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      } finally in.close()
-      if (!lines.lastOption.contains(ManifestEnd)) None
-      else parseManifest(fs, lakePath, n, lines.dropRight(1))
-    }.collectFirst { case Some(l) => l }
-      .getOrElse(Layout(None, lakePath, Nil, Nil))
-  }
-
-  /** v2 manifests are line-typed (`data=`/`keep=`/`consumed=` after a
-    * version header); v1 manifests (pre-online-compaction) are bare
-    * keep paths with the data dir implied by the generation number —
-    * still readable, so a lake compacted by the old code upgrades in
-    * place on its next compact.
-    */
-  private def parseManifest(fs: FileSystem, lakePath: Path, n: Int,
-      body: List[String]): Option[Layout] = {
-    // fully qualified so identity checks against listStatus paths
-    // (retirement protect set, tail subtraction) compare equal
-    def qual(rel: String) = fs.makeQualified(new Path(lakePath, rel))
-    if (body.headOption.contains(ManifestV2)) {
-      var dataDir: Option[Path] = None
-      val keep = Seq.newBuilder[Path]
-      val consumed = Seq.newBuilder[(Int, Path)]
-      body.tail.filter(_.nonEmpty).foreach {
-        case l if l.startsWith("data=") =>
-          dataDir = Some(new Path(lakePath, l.stripPrefix("data=")))
-        case l if l.startsWith("keep=") => keep += qual(l.stripPrefix("keep="))
-        case l if l.startsWith("consumed=") =>
-          val v = l.stripPrefix("consumed=")
-          val i = v.indexOf(':')
-          require(i > 0, s"corrupt consumed line in manifest $n: $l")
-          consumed += ((v.take(i).toInt, qual(v.drop(i + 1))))
-        case l => throw new IllegalStateException(
-          s"unknown line in lake manifest generation $n: $l")
-      }
-      Some(Layout(Some(n),
-        dataDir.getOrElse(throw new IllegalStateException(
-          s"lake manifest generation $n has no data= line")),
-        keep.result(), consumed.result()))
-    } else Some(Layout(Some(n), new Path(lakePath, f"_gen-$n%05d"),
-      body.filter(_.nonEmpty).map(qual), Nil))
-  }
-
-  /** Terminator line proving a manifest was fully written. */
-  private val ManifestEnd = "#graft-manifest-end"
-  private val ManifestV2 = "#graft-manifest v2"
-
-  private def manifestPath(lakePath: Path, gen: Int): Path =
-    new Path(lakePath, f"_graft_gen-$gen%05d.manifest")
-
-  /** One small object: the generation's data dir name, the
-    * LAKE-RELATIVE retained-file refs, the generation-stamped consumed
-    * tail files, and a terminator line. Installing it IS the layout
-    * commit. Created EXCLUSIVELY (no overwrite): two compactors racing
-    * to the same generation number means exactly one wins and the
-    * loser RAISES — its uniquely-named data dir is unreferenced debris
-    * a later sweep retires, and no committed byte is ever clobbered.
-    * Readers require the terminator, so a torn manifest (crash
-    * mid-create) is skipped, never trusted — the generation number is
-    * simply burned and the retry takes the next one. The filename
-    * carries the generation: "highest complete manifest wins" needs no
-    * read-modify-write of any shared file.
-    */
-  private def writeManifest(fs: FileSystem, lakePath: Path, gen: Int,
-      dataDirName: String, keep: Seq[Path],
-      consumed: Seq[(Int, Path)]): Unit = {
-    // LAKE-RELATIVE paths: an absolute URI would pin the lake to its
-    // current location — a copied/restored/re-mounted lake must stay
-    // self-contained (r10 review). Every recorded file lives under the
-    // lake root by construction.
-    val rootUri = fs.makeQualified(lakePath).toUri
-    def rel(p: Path): String = {
-      val r = rootUri.relativize(fs.makeQualified(p).toUri).toString
-      // a failed relativize returns the input unchanged (scheme and
-      // all) — that or any absolute result means the file is outside
-      // the lake root, which must never be recorded
-      require(r.nonEmpty && !r.contains(":") && !r.startsWith("/"),
-        s"compactLake: recorded file $p is not under the lake root $lakePath")
-      require(!r.contains("\n"),
-        s"compactLake: data-file path contains a newline: $p")
-      r
-    }
-    val lines = ManifestV2 +: (s"data=$dataDirName" +:
-      (keep.map(p => s"keep=${rel(p)}") ++
-        consumed.map { case (g, p) => s"consumed=$g:${rel(p)}" }))
-    // create-exclusive: overwrite=false throws if the manifest exists,
-    // which is the concurrent-compactor conflict surfacing loudly
-    val out = fs.create(manifestPath(lakePath, gen), false)
-    try out.write((lines :+ ManifestEnd).mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Read the lake's live layout. A never-compacted lake is a plain
     * parquet directory (`spark.read.parquet` works identically); once
     * [[compactLake]] has installed a generation, the data lives in a
-    * manifest-named `_gen-NNNNN/` directory plus referenced-in-place
-    * files, so the lake MUST be read through this resolver — exactly
-    * the contract table formats like Delta/Iceberg impose, and for the
-    * same reason: the manifest flip is what makes commits atomic on
-    * object stores.
+    * manifest-named `_gen-NNNNN-<suffix>/` directory plus
+    * referenced-in-place files ([[Generations]]), so the lake MUST be
+    * read through this resolver — exactly the contract table formats
+    * like Delta/Iceberg impose, and for the same reason: the manifest
+    * flip is what makes commits atomic on object stores.
     */
   def readLake(spark: SparkSession, lakeDir: String): DataFrame = {
     val (fs, lakePath) = fileSystem(spark, lakeDir)
-    val lay = currentLayout(fs, lakePath)
+    val lay = Generations.resolve(fs, lakePath)
     lay.gen match {
       case None => spark.read.parquet(lakeDir)
       case Some(_) =>
@@ -220,32 +94,27 @@ object CorpusIngest {
   private def visiblePath(p: Path): Boolean =
     !p.getName.startsWith("_") && !p.getName.startsWith(".")
 
-  /** All visible data files under `p`, recursively. */
-  private def listDataFiles(fs: FileSystem, p: Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(st => visiblePath(st.getPath)).flatMap { st =>
-      if (st.isFile) Seq(st) else listDataFiles(fs, st.getPath)
+  /** All visible data files under `p`, recursively and lazily: a
+    * subdirectory is listed only when the walk reaches it.
+    */
+  private def dataFiles(fs: FileSystem, p: Path)
+      : Iterator[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(p)) Iterator.empty
+    else fs.listStatus(p).iterator.filter(st => visiblePath(st.getPath)).flatMap { st =>
+      if (st.isFile) Iterator(st) else dataFiles(fs, st.getPath)
     }
 
-  /** The LIVE tail-source files of a generation layout: everything
-    * present under the lake root (visible — generation dirs, `_tail`
-    * and markers are underscore-hidden) plus everything under
-    * [[TailDirName]], MINUS the manifest's consumed entries (rewritten
-    * into the generation, possibly not yet retired) and its keep refs
-    * (v1 manifests recorded root big files as keeps — counting them as
-    * tail too would read them twice). Presence-minus-consumed is the
-    * invariant that makes concurrent appends safe: a file the
-    * compactor never saw can't be in the consumed list, so it stays
-    * live across the flip.
+  private def listDataFiles(fs: FileSystem, p: Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] = dataFiles(fs, p).toSeq
+
+  /** The LIVE tail-source files: those present under the lake root
+    * (visible — generation dirs, `_tail` and markers are
+    * underscore-hidden) and under [[TailDirName]], minus the manifest's
+    * consumed entries.
     */
-  private def liveTail(fs: FileSystem, lakePath: Path, lay: Layout)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val drop = (lay.consumed.map(_._2) ++ lay.keep).map(_.toUri).toSet
-    (listDataFiles(fs, lakePath) ++
-      listDataFiles(fs, new Path(lakePath, TailDirName)))
-      .filterNot(st => drop.contains(st.getPath.toUri))
-  }
+  private def liveTail(fs: FileSystem, lakePath: Path, lay: Generations.Layout)
+      : Seq[org.apache.hadoop.fs.FileStatus] = Generations.liveTail(lay,
+    listDataFiles(fs, lakePath) ++ listDataFiles(fs, new Path(lakePath, TailDirName)))
 
   /** The per-batch recipe: gate → within-batch dedup → lake dedup.
     * `lake` may be empty (first ingestion). If the lake carries
@@ -278,17 +147,10 @@ object CorpusIngest {
     * dir, dotfiles) don't count — a directory containing only those is
     * the "crashed during the very first append" case and must re-read
     * as empty so first-batch retries self-heal instead of wedging on
-    * schema inference.
+    * schema inference. Stops at the first data file.
     */
-  private def hasDataFiles(fs: FileSystem, path: Path): Boolean = {
-    def visible(p: Path): Boolean =
-      !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    def walk(p: Path): Boolean =
-      fs.listStatus(p).exists { st =>
-        visible(st.getPath) && (st.isFile || walk(st.getPath))
-      }
-    fs.exists(path) && walk(path)
-  }
+  private def hasDataFiles(fs: FileSystem, path: Path): Boolean =
+    dataFiles(fs, path).hasNext
 
   /** Commit-marker SCOPE for a stream incarnation. Batch ids restart
     * at 0 whenever a stream gets a fresh checkpoint, so a marker keyed
@@ -369,9 +231,9 @@ object CorpusIngest {
       s"ingestBatch: scope '$scope' — use letters, digits, '.', '_', '-'")
     val spark = batch.sparkSession
     val (fs, lakePath) = fileSystem(spark, lakeDir)
-    val marker = new Path(new Path(lakePath, CommitDirName), s"$scope-$batchId")
-    if (fs.exists(marker)) return // replayed batch, append already landed
-    val lay = currentLayout(fs, lakePath)
+    val ledger = Generations.ledger(fs, lakePath)
+    if (ledger.contains(s"$scope-$batchId")) return // replayed batch, append already landed
+    val lay = Generations.resolve(fs, lakePath)
     val hasData = lay.gen match {
       case None => hasDataFiles(fs, lakePath)
       case Some(_) => lay.keep.nonEmpty || hasDataFiles(fs, lay.dataDir) ||
@@ -412,8 +274,7 @@ object CorpusIngest {
           }
         fs.delete(stage, true)
     }
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
+    ledger.record(s"$scope-$batchId")
   }
 
   /** What [[compactLake]] did. `bytesMoved` counts files RETAINED IN
@@ -440,37 +301,17 @@ object CorpusIngest {
     * compaction, and the `_fp` fingerprint column rides along in the
     * rewrite (full-schema read).
     *
-    * Install is a MANIFEST FLIP, not a directory swap (r9 verdict
-    * item 3): the rewritten tail lands in a fresh `_gen-NNNNN/`
-    * directory under the lake, and committing it is ONE new small
-    * object — the `_graft_gen-NNNNN.manifest` file listing the
-    * retained big files. [[readLake]] resolves the highest-numbered
-    * manifest, so a concurrent reader sees exactly one generation
-    * (whichever was current when it listed), and on S3A-class stores
-    * — where rename is copy+delete — the commit is still a single
-    * atomic PUT and no data byte ever moves. The immediately-previous
-    * layout is retained until the NEXT compact (an in-flight reader
-    * may still be scanning it); layouts two generations old are
-    * retired here, minus any file the live manifest still references.
-    * A crash before the manifest write leaves an invisible,
-    * uniquely-named `_gen` directory as retirable debris; a crash
-    * after it leaves fully-committed state plus retirable debris —
-    * never a silently truncated lake.
-    *
-    * WRITERS ARE ONLINE-SAFE (r11): the ingest stream may keep
-    * appending while a compact runs. Appends land in tail sources
-    * (the root pre-first-compact, `_tail/` after) whose liveness is
-    * PRESENCE MINUS the manifest's consumed list — the compactor pins
-    * the file set it read at the start, records exactly those tail
-    * files as consumed, and anything landing later is live by
-    * presence on either side of the flip. Consumed files are retired
-    * with a one-generation grace (an in-flight reader of the previous
-    * manifest may still be scanning them), carried forward in the
-    * next manifest until physically deleted, so a crash between flip
-    * and retire never double-counts. Concurrent COMPACTORS conflict
-    * on the generation number: the manifest is created exclusively,
-    * exactly one wins, the loser raises and its uniquely-named data
-    * dir is swept as debris two flips later.
+    * Install is a MANIFEST FLIP through [[Generations]]: the rewritten
+    * tail lands in a fresh `_gen-NNNNN-<suffix>/` directory, and
+    * committing it is ONE new small object naming it, the retained big
+    * files and the consumed tail files. [[readLake]] sees exactly one
+    * generation; the previous one is retained for in-flight readers
+    * until the NEXT compact. WRITERS ARE ONLINE-SAFE: the ingest stream
+    * may keep appending while a compact runs — appends land in tail
+    * sources (the root pre-first-compact, `_tail/` after) whose
+    * liveness is presence minus consumed.
+    * Concurrent COMPACTORS conflict on the generation number: exactly
+    * one wins, the loser raises.
     */
   /** `clusterBy`: optional sort-on-write clustering. Non-empty ⇒ EVERY
     * file is read and rewritten range-partitioned + sorted on the
@@ -516,7 +357,7 @@ object CorpusIngest {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val effMin = if (minFileBytes >= 0) minFileBytes else targetBytes / 2
     val (fs, lakePath) = fileSystem(spark, lakeDir)
-    val lay = currentLayout(fs, lakePath)
+    val lay = Generations.resolve(fs, lakePath)
     // hive-partitioned layouts carry column VALUES in their directory
     // names — flattening their files into a generation directory would
     // silently erase those columns on read. CorpusIngest lakes are
@@ -552,28 +393,8 @@ object CorpusIngest {
       if (lay.gen.isDefined) listDataFiles(fs, lay.dataDir) else Seq.empty
     val files = genFiles ++ keepStatuses ++ tailStatuses
     if (files.isEmpty) return CompactStats(0, 0, 0L, 0L)
-    // TAIL-AREA membership (root + _tail, by presence, keep/consumed
-    // NOT subtracted): any pinned file living here that this compact
-    // rewrites must land in the consumed list — including a v1-legacy
-    // KEEP ref in a visible root directory, which would otherwise
-    // reappear as live-by-presence tail the moment it leaves the keep
-    // list (double-count). Hidden-area files (old generation dirs) are
-    // never tail sources; the generation sweep retires them instead.
-    val tailAreaUris = (listDataFiles(fs, lakePath) ++
-      listDataFiles(fs, new Path(lakePath, TailDirName)))
-      .map(_.getPath.toUri).toSet
-    // claim the generation number AT PIN TIME — it is the optimistic-
-    // concurrency token: one past the highest manifest PRESENT,
-    // complete or torn (a torn manifest burned its number — the create
-    // is exclusive, so it can never be replaced — and the retry takes
-    // the next one). A rival compactor flipping first makes THIS
-    // compact's exclusive manifest create fail loudly at commit.
-    val allManifestNums = fs.listStatus(lakePath).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case GenManifestRe(n) => Some(n.toInt)
-        case _ => None
-      })
-    val nextGen = (allManifestNums.map(_ + 1) :+ 0).max
+    val tailUris = tailStatuses.map(_.getPath.toUri).toSet
+    val nextGen = Generations.claim(fs, lakePath) // part of the pin
     afterPin()
     // clustering rewrites everything (a retained file keeps its old
     // value spread — min/max stats would stay useless); size-only
@@ -590,8 +411,7 @@ object CorpusIngest {
     //    lake whose files drifted (e.g. legacy pre-_fp next to stamped
     //    files) must union the columns, not silently drop whichever
     //    schema loses the footer race.
-    val genDirName =
-      f"_gen-$nextGen%05d-${java.util.UUID.randomUUID().toString.take(6)}"
+    val genDirName = Generations.dataDirName(nextGen)
     val genDir = new Path(lakePath, genDirName)
     val smallBytes = small.map(_.getLen).sum
     val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes).toInt
@@ -625,60 +445,19 @@ object CorpusIngest {
         .repartitionByRange(nOut, clusterBy.map(org.apache.spark.sql.functions.col): _*)
         .sortWithinPartitions(clusterBy.map(org.apache.spark.sql.functions.col): _*)
     laidOut.write.mode("overwrite").parquet(genDir.toString)
-    // 2. THE commit point: one new manifest object (created EXCLUSIVELY
-    //    — a racing compactor on the same generation number raises
-    //    here, its uniquely-named data dir left as sweepable debris).
-    //    keep = pinned big files living in old generation dirs or old
-    //    keep refs, retained in place. consumed = pinned TAIL files
-    //    this rewrite folded in (they must stop counting as
-    //    live-by-presence), stamped with this generation, plus the
-    //    previous manifest's still-present consumed entries carried
-    //    forward so a crash between a flip and its retire step can
-    //    never resurrect them into a double-count.
-    // keep refs only ever point into hidden generation dirs; files in
-    // tail AREAS are presence-ruled — big ones stay where they are
-    // (live by presence), rewritten ones are consumed
-    val bigKeep = big.filterNot(st => tailAreaUris.contains(st.getPath.toUri))
-    val newlyConsumed = small
-      .filter(st => tailAreaUris.contains(st.getPath.toUri))
-      .map(st => (nextGen, st.getPath))
-    val carried = lay.consumed.filter { case (_, p) => fs.exists(p) }
-    writeManifest(fs, lakePath, nextGen, genDirName,
-      bigKeep.map(_.getPath), newlyConsumed ++ carried)
-    // 3. retire what no in-flight reader within the one-generation
-    //    grace window can still hold. Best-effort — readers ignore
-    //    unreferenced files, and consumed entries stay in the manifest
-    //    until they physically disappear.
-    //    (a) consumed tail files from BEFORE this flip: their readers
-    //        held manifests at least two generations old
-    carried.foreach { case (_, p) => fs.delete(p, false) }
-    //    (b) generation dirs and manifests two generations old, MINUS
-    //        files the retired or live manifest still references
-    lay.gen.foreach { retired =>
-      val protect = (lay.keep ++ bigKeep.map(_.getPath)).map(_.toUri).toSet
-      // inside a stale generation dir everything unprotected goes,
-      // hidden write debris (_SUCCESS) included; the dir itself goes
-      // once (and only if) it empties out
-      def sweep(p: Path): Unit = {
-        fs.listStatus(p).foreach { st =>
-          if (st.isDirectory) sweep(st.getPath)
-          else if (!protect.contains(st.getPath.toUri))
-            fs.delete(st.getPath, false)
-        }
-        if (fs.listStatus(p).isEmpty) fs.delete(p, false)
-      }
-      fs.listStatus(lakePath).foreach { st =>
-        val n = st.getPath.getName
-        val staleGenDir = st.isDirectory &&
-          genDirNum(n).exists(_ < retired)
-        val staleManifest = n match {
-          case GenManifestRe(g) => g.toInt < retired
-          case _ => false
-        }
-        if (staleGenDir) sweep(st.getPath)
-        else if (staleManifest) fs.delete(st.getPath, false)
-      }
-    }
+    // 2. THE commit point (Generations.commit): keep = pinned big files
+    //    living in old generation dirs or old keep refs, retained in
+    //    place; consumed = pinned TAIL files this rewrite folded in
+    //    (they must stop counting as live-by-presence). Keep refs only
+    //    ever point into hidden generation dirs; files in the tail are
+    //    presence-ruled — big ones stay where they are (live by
+    //    presence), rewritten ones are consumed.
+    val bigKeep = big.filterNot(st => tailUris.contains(st.getPath.toUri))
+    val newlyConsumed = small.filter(st => tailUris.contains(st.getPath.toUri))
+    val next = Generations.commit(fs, lakePath, lay, nextGen, genDirName,
+      bigKeep.map(_.getPath), newlyConsumed.map(_.getPath))
+    // 3. retire what no in-flight reader can still hold (best-effort)
+    Generations.retire(fs, lakePath, lay, next)
     CompactStats(files.size, listDataFiles(fs, genDir).size + big.size,
       smallBytes, big.map(_.getLen).sum)
   }

@@ -73,7 +73,7 @@ class IncrementalAggSpec extends AnyFunSuite {
 
   private def genDirs(state: String): Seq[java.io.File] =
     new java.io.File(state).listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
+      .filter(f => f.isDirectory && f.getName.startsWith("_gen-"))
 
   test("compact folds batches into one without changing the result") {
     val state = tmp()
@@ -84,7 +84,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     compact(spark, state)
     // the live layout is the new generation, one folded batch
     assert(listBatches(spark, state) == Seq("compacted"))
-    val gen0 = genDirs(state).filter(_.getName.startsWith("gen-00000"))
+    val gen0 = genDirs(state).filter(_.getName.startsWith("_gen-00000"))
     assert(gen0.size == 1 &&
       new java.io.File(gen0.head, "batch=compacted").isDirectory)
     assertSame(result(spark, state), direct(corpus))
@@ -104,7 +104,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     append(state, corpus.filter($"n" > 4), "b1")
     def root = new java.io.File(state)
     def entries = root.listFiles().map(_.getName).toSet
-    def gen(n: String) = entries.count(_.startsWith(s"gen-$n"))
+    def gen(n: String) = entries.count(_.startsWith(s"_gen-$n"))
 
     // a reader resolves the LIVE layout (flat, pre-generation) ...
     val reader1 = result(spark, state)
@@ -113,7 +113,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     // readers — nothing a reader may hold was deleted, no data byte
     // was renamed — and subtraction keeps them out of new results
     assert(entries.contains("batch=b0") && entries.contains("batch=b1"))
-    assert(gen("00000") == 1 && entries.contains("_gen-00000.json"))
+    assert(gen("00000") == 1 && entries.contains("_graft_gen-00000.manifest"))
     assertSame(reader1, direct(corpus)) // collect AFTER the flip
     // new readers see the folded generation; consumed dirs subtracted
     assert(listBatches(spark, state) == Seq("compacted"))
@@ -135,7 +135,7 @@ class IncrementalAggSpec extends AnyFunSuite {
 
     // third compact retires gen-00000, its manifest, and b2's dir
     compact(spark, state)
-    assert(gen("00000") == 0 && !entries.contains("_gen-00000.json"))
+    assert(gen("00000") == 0 && !entries.contains("_graft_gen-00000.manifest"))
     assert(gen("00001") == 1 && gen("00002") == 1)
     assert(!entries.exists(_.startsWith("batch=")))
     assertSame(result(spark, state), direct(corpus.union(corpus)))
@@ -495,16 +495,16 @@ class IncrementalAggSpec extends AnyFunSuite {
     // dir, missing marker) is backfilled on the next probe, so the id
     // still survives the following compaction
     append(state, corpus, "b2")
-    assert(new java.io.File(state, "_commits/b2").delete())
+    assert(new java.io.File(state, "_graft_commits/b2").delete())
     assert(!appendCommitted(state, corpus, "b2")) // recognized via _SUCCESS
-    assert(new java.io.File(state, "_commits/b2").isFile) // backfilled
+    assert(new java.io.File(state, "_graft_commits/b2").isFile) // backfilled
     compact(spark, state)
     assert(!appendCommitted(state, corpus, "b2"))
     // dropBatch clears the ledger entry too: a post-compact batch can
     // be retracted and legitimately re-appended under its id
     append(state, corpus.filter($"n" <= 2), "b3")
     dropBatch(spark, state, "b3")
-    assert(!new java.io.File(state, "_commits/b3").exists)
+    assert(!new java.io.File(state, "_graft_commits/b3").exists)
     append(state, corpus.filter($"n" <= 2), "b3") // no raise
   }
 
@@ -560,11 +560,11 @@ class IncrementalAggSpec extends AnyFunSuite {
     assert(listBatches(spark, state) == Seq("compacted"))
     assertSame(result(spark, state), direct(corpus))
     // the loser's uniquely-named data dir is unreferenced debris...
-    assert(genDirs(state).count(_.getName.startsWith("gen-00000")) == 2)
+    assert(genDirs(state).count(_.getName.startsWith("_gen-00000")) == 2)
     append(state, corpus.withColumn("n", $"n" + 10), "b2")
     compact(spark, state) // → gen-00001
     compact(spark, state) // → gen-00002: retires every gen-00000*, debris included
-    assert(genDirs(state).count(_.getName.startsWith("gen-00000")) == 0)
+    assert(genDirs(state).count(_.getName.startsWith("_gen-00000")) == 0)
     assertSame(result(spark, state), direct(corpus.union(corpus)))
   }
 
@@ -582,39 +582,6 @@ class IncrementalAggSpec extends AnyFunSuite {
     assertSame(result(spark, state), direct(corpus))
   }
 
-  test("legacy v1 manifest: root leftovers never double-count, appends land " +
-      "in the generation dir, the next compact upgrades to v2 in place") {
-    val state = tmp()
-    fit(corpus, Seq("g"), metrics, state, "b0")
-    // hand-build the layout the PRE-r11 compact left behind: the fold
-    // of a single batch is the batch itself, installed as gen-00000
-    // with a v1 manifest (no consumed list) — and the root batch=b0
-    // leftover RETAINED for its one-generation grace
-    spark.read.parquet(s"$state/batch=b0").write
-      .parquet(s"$state/gen-00000/batch=compacted")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(state, "_gen-00000.json"),
-      """{"generation":0,"dir":"gen-00000"}""".getBytes("UTF-8"))
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(state, "_commits", "compacted"))
-    // v1 semantics: the root leftover is NOT tail — no double count
-    assert(listBatches(spark, state) == Seq("compacted"))
-    assertSame(result(spark, state), direct(corpus))
-    // v1 appends land inside the live generation (legacy behavior)
-    append(state, corpus.withColumn("n", $"n" + 100), "b1")
-    assert(new java.io.File(state, "gen-00000/batch=b1").isDirectory)
-    assertSame(result(spark, state), direct(corpus.union(corpus)))
-    // the upgrade compact folds the generation, retires the stale v1
-    // leftover, and installs a v2 manifest; appends now land at the root
-    compact(spark, state)
-    assert(!new java.io.File(state, "batch=b0").exists)
-    assertSame(result(spark, state), direct(corpus.union(corpus)))
-    append(state, corpus.withColumn("n", $"n" + 200), "b2")
-    assert(new java.io.File(state, "batch=b2").isDirectory)
-    assertSame(result(spark, state),
-      direct(corpus.union(corpus).union(corpus)))
-  }
-
   test("a torn v2 manifest is never trusted: readers fall back, the retry " +
       "burns the generation number instead of colliding forever") {
     val state = tmp()
@@ -623,8 +590,8 @@ class IncrementalAggSpec extends AnyFunSuite {
     append(state, corpus.filter($"n" > 4), "b1")
     // crash mid-manifest-create: v2 body without its end terminator
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(state, "_gen-00001.json"),
-      """{"v":2,"generation":1,"dir":"gen-00001-dead","consumed":["""
+      java.nio.file.Paths.get(state, "_graft_gen-00001.manifest"),
+      "#graft-manifest v2\ndata=_gen-00001-dead\nconsumed=1:batch=b1\n"
         .getBytes("UTF-8"))
     // readers resolve the highest COMPLETE manifest (gen 0) + live tail
     assert(listBatches(spark, state) == Seq("b1", "compacted"))
@@ -633,7 +600,7 @@ class IncrementalAggSpec extends AnyFunSuite {
     // refuse generation 1 forever — and the state stays correct
     compact(spark, state)
     val names = new java.io.File(state).listFiles().map(_.getName).toSet
-    assert(names.contains("_gen-00002.json"), names)
+    assert(names.contains("_graft_gen-00002.manifest"), names)
     assert(listBatches(spark, state) == Seq("compacted"))
     assertSame(result(spark, state), direct(corpus))
   }

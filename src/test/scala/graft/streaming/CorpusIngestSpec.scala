@@ -510,43 +510,6 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(ids == Seq(1L, 2L, 3L, 4L))
   }
 
-  test("a v1 (pre-online-compaction) manifest still resolves and upgrades in place") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_v1")
-    val lakeDir = dir.resolve("lake").toString
-    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
-    // build a v1-shaped lake BY HAND: data in _gen-00000/, a big file
-    // retained at the root, and a bare-keep-paths manifest (v1 format:
-    // no header, every line a keep ref, data dir implied by the name)
-    batch((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta theta"))
-      .withColumn(CorpusIngest.FingerprintCol,
-        TextFunctions.bagFingerprint(col("text")))
-      .coalesce(1).write.parquet(s"$lakeDir/_gen-00000")
-    batch((3L, "iota kappa lambda mu"))
-      .withColumn(CorpusIngest.FingerprintCol,
-        TextFunctions.bagFingerprint(col("text")))
-      .coalesce(1).write.parquet(s"$lakeDir/kept")
-    val keptFile = new java.io.File(s"$lakeDir/kept").listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).head
-    java.nio.file.Files.writeString(
-      java.nio.file.Path.of(lakeDir, "_graft_gen-00000.manifest"),
-      s"kept/${keptFile.getName}\n#graft-manifest-end\n")
-
-    def ids = CorpusIngest.readLake(spark, lakeDir)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(ids == Seq(1L, 2L, 3L))
-    // appends against the v1 layout land in _tail and stay visible —
-    // the keep-referenced file is NOT double-counted as tail
-    CorpusIngest.ingestBatch(batch((4L, "nu xi omicron pi")), 0L,
-      lakeDir, failReason = gate, scope = "v1")
-    assert(ids == Seq(1L, 2L, 3L, 4L))
-    // the next compact upgrades to a v2 manifest, nothing lost
-    CorpusIngest.compactLake(spark, lakeDir, targetBytes = 1L << 30)
-    assert(ids == Seq(1L, 2L, 3L, 4L))
-    val m1 = java.nio.file.Files.readString(
-      java.nio.file.Path.of(lakeDir, "_graft_gen-00001.manifest"))
-    assert(m1.startsWith("#graft-manifest v2"), m1)
-  }
-
   test("property: random append/compact/replay interleavings never lose or duplicate a doc") {
     // seeded random walks over the lake's whole operation alphabet,
     // including appends INSIDE the compaction window — the model is a
