@@ -93,25 +93,23 @@ object Bench {
       }
     val probeOnly = fixture("s_lsh_probe_only", "s_ivf_probe_only") {
       import org.apache.spark.sql.functions.col
-      import graft.operators.Similarity
+      import graft.operators.AnnIndex
       val vecs = Tables.load(spark, sfDir, "embeddings")
       val query = vecs.filter(col("vec_id") === 0)
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
-      val lshIdx = Similarity.lshIndex(vecs, "vec_id", "embedding",
-        benchTmp.resolve("lsh").toString, numPlanes = 5, dim = Some(query.length))
+      val lshPath = benchTmp.resolve("lsh").toString
+      AnnIndex.build(vecs, "vec_id", "embedding", lshPath, AnnIndex.Raw,
+        AnnIndex.Lsh(numPlanes = 5), dim = Some(query.length))
       val ivfPath = benchTmp.resolve("ivf").toString
-      Similarity.saveIvfIndex(
-        Similarity.ivfIndex(vecs, "vec_id", "embedding", nlist = 8,
-          maxIter = 3, initMode = "random"), ivfPath)
-      val ivfIdx = Similarity.loadIvfIndex(spark, ivfPath)
+      AnnIndex.build(vecs, "vec_id", "embedding", ivfPath, AnnIndex.Raw,
+        AnnIndex.Ivf(nlist = 8, maxIter = 3, initMode = "random"))
+      def probe(path: String, nprobe: Int): Entry = (s, _) =>
+        AnnIndex.search(s, path, vecs, "vec_id", "embedding", query, k = 10,
+          nprobe = nprobe)
       Map(
         // pruned multiprobe (1 bit flip): the realistic repeated-query path
-        "s_lsh_probe_only" -> ((s: SparkSession, _: String) =>
-          Similarity.lshTopK(s, lshIdx, "vec_id", "embedding", query, k = 10,
-            probeHamming = 1)),
-        "s_ivf_probe_only" -> ((_: SparkSession, _: String) =>
-          Similarity.ivfTopK(ivfIdx, "vec_id", "embedding", query, k = 10,
-            nprobe = 2)))
+        "s_lsh_probe_only" -> probe(lshPath, 1),
+        "s_ivf_probe_only" -> probe(ivfPath, 2))
     }
     // Same amortization story for DSIR: x_dsir_score/sample fit the
     // bucket model INSIDE the measured query, but production fits once
@@ -286,8 +284,10 @@ object Bench {
       // warm-up degrades to a subset if the box is so slow that even
       // one pass threatens the budget (a measured iteration still runs)
       if (elapsedSec < budgetSec * 0.4) {
+        // a failing query is recorded by its measured iteration; a fatal
+        // error (OOM, interrupt) stops the run instead of posing as a timing
         try allQueries(name)(spark, sfDir).count()
-        catch { case _: Throwable => () }
+        catch { case scala.util.control.NonFatal(_) => () }
         spark.catalog.clearCache()
       }
     }

@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 /** Recall-target auto-tuning for the ANN family (r13 — RECALL.md
   * measures the curves; this picks the dial).
   *
-  * The tuners choose the CHEAPEST operating point (nprobe for raw IVF
-  * here; pool, and nprobe jointly when the index has cells, for
-  * [[AnnIndex.tune]]) whose measured recall@k on a deterministic
-  * holdout reaches the requested target. This object holds the shared
-  * core — holdout, ground truth, recall, the cheapest-first walk, the
-  * operating-point sidecar — plus the raw-IVF entries.
+  * The tuners ([[AnnIndex.tune]], [[AnnIndex.tuneJoin]]) choose the
+  * CHEAPEST operating point (`nprobe` when the index has cells, `pool`
+  * when its codec is compressed, jointly when both) whose measured
+  * recall@k on a deterministic holdout reaches the requested target.
+  * This object holds the shared core — holdout, ground truth, recall,
+  * the cheapest-first walk, the operating-point sidecar.
   *
   * Method: holdout queries are the md5(id)-ordered first `nQueries`
   * corpus vectors (the [[Similarity.sampleCentroids]] sampling device
@@ -42,22 +42,14 @@ object AnnTune {
     */
   final case class OperatingPoint(setting: Map[String, Int], recall: Double)
 
-  /** Deterministic holdout queries: md5(id)-ordered first n (id,
-    * vector) pairs. Ids compare as strings so long/int/string id
-    * columns all work.
+  /** Deterministic holdout queries: the md5(id)-ordered first n (id,
+    * vector) pairs of [[holdoutDf]], collected. Ids compare as strings
+    * so long/int/string id columns all work.
     */
   def holdout(df: DataFrame, idCol: String, vecCol: String,
-      n: Int): Array[(String, Array[Float])] = {
-    require(n >= 1, s"nQueries must be >= 1, got $n")
-    df.select(col(idCol).cast("string").as("_id"),
-        col(vecCol).cast("array<float>").as("_v"),
-        md5(col(idCol).cast("string")).as("_h"))
-      .filter(col("_v").isNotNull)
-      .orderBy("_h").limit(n)
-      .collect()
-      .map(r => r.getString(0) ->
-        r.getAs[scala.collection.Seq[Float]]("_v").toArray)
-  }
+      n: Int): Array[(String, Array[Float])] =
+    holdoutDf(df, idCol, vecCol, n).collect()
+      .map(r => r.getString(0) -> r.getAs[scala.collection.Seq[Float]](1).toArray)
 
   /** Brute-force ground truth per holdout query. */
   def groundTruth(df: DataFrame, idCol: String, vecCol: String,
@@ -79,22 +71,21 @@ object AnnTune {
     per.sum / per.length
   }
 
-  /** Generic cheapest-first walk: first setting reaching `target`
-    * wins; if none does, the best-recall setting (ties: cheapest,
-    * i.e. earliest) is returned.
+  /** The cheapest-first walk, at probe or join granularity alike
+    * (`recall` measures one setting — [[measureRecall]] over the
+    * holdout probes, or [[measureJoinRecall]] of one batch join):
+    * first setting reaching `target` wins; if none does, the
+    * best-recall setting (ties: cheapest, i.e. earliest) is returned.
     */
-  def tune(settings: Seq[Map[String, Int]],
-      queries: Array[(String, Array[Float])],
-      truth: Map[String, Set[String]], idCol: String, k: Int,
-      target: Double)(
-      run: Map[String, Int] => Array[Float] => DataFrame): OperatingPoint = {
+  def tune(settings: Seq[Map[String, Int]], target: Double)(
+      recall: Map[String, Int] => Double): OperatingPoint = {
     require(target > 0 && target <= 1, s"target recall must be in (0,1], got $target")
     require(settings.nonEmpty, "no candidate settings")
     var best: OperatingPoint = null
     val it = settings.iterator
     while (it.hasNext) {
       val s = it.next()
-      val r = measureRecall(queries, truth, idCol, k)(run(s))
+      val r = recall(s)
       if (best == null || r > best.recall) best = OperatingPoint(s, r)
       if (r >= target) return OperatingPoint(s, r)
     }
@@ -110,24 +101,13 @@ object AnnTune {
     b.result()
   }
 
-  /** IVF: choose the smallest nprobe hitting `target` recall@k. */
-  def tuneIvf(index: Similarity.IvfIndex, df: DataFrame,
-      idCol: String, vecCol: String, target: Double,
-      k: Int = 10, nQueries: Int = 20): OperatingPoint = {
-    val qs = holdout(df, idCol, vecCol, nQueries)
-    val truth = groundTruth(df, idCol, vecCol, qs, k)
-    tune(doubling(index.centroids.length).map(np => Map("nprobe" -> np)),
-      qs, truth, idCol, k, target) { s => v =>
-      Similarity.ivfTopK(index, idCol, vecCol, v, k, s("nprobe"))
-    }
-  }
-
   // ---- batch k-NN JOIN tuning (r15) ----------------------------------
   // The retrieval shape a curation pipeline actually runs is the JOIN
   // (queries table × index), not the single-vector probe — so the
-  // tuner measures the join path itself: ONE batch join per candidate
-  // setting against the brute-force JOIN ground truth, instead of
-  // nQueries driver probes per setting.
+  // join tuner measures the join path itself: ONE batch join per
+  // candidate setting against the brute-force JOIN ground truth,
+  // instead of nQueries driver probes per setting, through the same
+  // [[tune]] walk.
 
   /** Holdout queries as a TABLE (the same deterministic md5(id)
     * device as [[holdout]]): columns (_hq_id string, _hq_v
@@ -170,45 +150,6 @@ object AnnTune {
     truth.map { case (q, t) =>
       (got.getOrElse(q, Set.empty[String]) intersect t).size.toDouble / t.size
     }.sum / truth.size
-  }
-
-  /** Cheapest-first walk at join granularity: one batch join per
-    * setting; first setting reaching `target` wins, else best recall
-    * (ties: cheapest).
-    */
-  def tuneJoin(settings: Seq[Map[String, Int]],
-      truth: Map[String, Set[String]], target: Double)(
-      run: Map[String, Int] => DataFrame): OperatingPoint = {
-    require(target > 0 && target <= 1, s"target recall must be in (0,1], got $target")
-    require(settings.nonEmpty, "no candidate settings")
-    var best: OperatingPoint = null
-    val it = settings.iterator
-    while (it.hasNext) {
-      val s = it.next()
-      val r = measureJoinRecall(truth, run(s))
-      if (best == null || r > best.recall) best = OperatingPoint(s, r)
-      if (r >= target) return OperatingPoint(s, r)
-    }
-    best
-  }
-
-  /** IVF join: smallest nprobe whose BATCH JOIN hits `target` mean
-    * recall@k on the holdout (at nprobe = nlist the join is exactly
-    * brute force, so any target <= 1 is reachable).
-    */
-  def tuneIvfJoin(index: Similarity.IvfIndex, df: DataFrame,
-      idCol: String, vecCol: String, target: Double,
-      k: Int = 10, nQueries: Int = 20): OperatingPoint = {
-    val qs = holdoutDf(df, idCol, vecCol, nQueries)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val truth = joinTruth(qs, df, idCol, vecCol, k)
-      tuneJoin(doubling(index.centroids.length).map(np => Map("nprobe" -> np)),
-        truth, target) { s =>
-        Similarity.ivfTopKJoin(index, qs, "_hq_id", "_hq_v",
-          idCol, vecCol, k, s("nprobe"))
-      }
-    } finally { qs.unpersist(); () }
   }
 
   // ---- operating-point sidecar (r14) --------------------------------
@@ -261,17 +202,5 @@ object AnnTune {
       s"operating point at $indexPath lacks dial '$d' (has ${op.setting.keySet})" +
         " — it was tuned for a different index family"))
     op.setting
-  }
-
-  /** IVF batch k-NN join at the saved JOIN operating point (r15) — the
-    * tune-once/join-many steady state; loads the persisted index from
-    * `indexPath` itself.
-    */
-  def ivfTopKJoinTuned(spark: SparkSession, indexPath: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val s = requirePoint(spark, indexPath, JoinPointSidecar, "nprobe")
-    Similarity.ivfTopKJoin(Similarity.loadIvfIndex(spark, indexPath),
-      queries, qIdCol, qVecCol, idCol, vecCol, k, s("nprobe"))
   }
 }

@@ -11,9 +11,9 @@ import org.apache.spark.sql.DataFrame
   * family ([[Sq]] 4×, [[Pq]] ~32× with table metrics) — and the scan
   * metric is the cheapest possible: Hamming via XOR + popcount.
   *
-  * The family relationship, precisely: [[Similarity.lshIndex]] uses
-  * sign bits of RANDOM projections as a bucket KEY (prune which rows
-  * are read); Bq uses sign bits of the RAW dims as a scan CODE (read
+  * The family relationship, precisely: the [[AnnIndex.Lsh]] coarse
+  * stage uses sign bits of RANDOM projections as a bucket KEY (prune
+  * which rows are read); Bq uses sign bits of the RAW dims as a scan CODE (read
   * every row, 1 bit each, rank by Hamming, exact-rerank a bounded
   * pool). Bq trades LSH's row pruning for rank-awareness: every row
   * gets a comparable score, so recall degrades smoothly with pool

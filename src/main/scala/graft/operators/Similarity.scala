@@ -6,16 +6,19 @@ import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Two paths:
+  * Two one-shot paths:
   *  - [[cosineTopK]]: brute-force scan — the correctness baseline and
   *    the right plan when the query batch is tiny (one distributed
   *    pass, per-partition top-k then k-merge, no shuffle of the data).
-  *  - [[lshTopK]] / [[hyperplaneBuckets]]: random-hyperplane LSH — the
-  *    100 TB path. Vectors land in 2^p sign-pattern buckets;
-  *    candidates come from the query's bucket plus all buckets within
-  *    `probeHamming` bit flips (multiprobe), then exact cosine rerank.
-  *    The scan prunes to candidate buckets instead of reading the
-  *    whole corpus.
+  *  - [[lshTopK]]: random-hyperplane LSH over a raw DataFrame. Vectors
+  *    fall in 2^p sign-pattern buckets; candidates come from the
+  *    query's bucket plus all buckets within `probeHamming` bit flips
+  *    (multiprobe), then exact cosine rerank.
+  *
+  * Persisted indexes — the LSH buckets and IVF cells a repeated query
+  * prunes to, with raw or compressed rows — are [[AnnIndex]]; this
+  * object keeps the geometry they are built from ([[hyperplanes]],
+  * [[bucketExpr]], [[ivfFit]]) and the embedding dedup operators.
   *
   * Hyperplanes are generated from a fixed seed — deterministic across
   * runs, drivers, and executors.
@@ -27,7 +30,7 @@ object Similarity {
     * and an empty frame threw NoSuchElementException (r9 advice). An
     * all-null / empty input raises with the actual problem named.
     */
-  private def probeDim(df: DataFrame, vecCol: String): Int = {
+  private[operators] def probeDim(df: DataFrame, vecCol: String): Int = {
     val r = df.agg(first(size(col(vecCol)), ignoreNulls = true)).head()
     require(!r.isNullAt(0),
       s"no non-null '$vecCol' vector to infer the embedding dimension from")
@@ -45,20 +48,9 @@ object Similarity {
     * overflows (31 probes nothing) or aliases bits (33 folds bit 32
     * onto bit 0).
     */
-  private def requirePlanes(numPlanes: Int): Unit =
+  private[operators] def requirePlanes(numPlanes: Int): Unit =
     require(1 <= numPlanes && numPlanes <= 30,
       s"LSH numPlanes=$numPlanes outside 1..30 — bucket ids are Int sign patterns")
-
-  /** Writer parallelism for a bucket/cell-partitioned index write: one
-    * shuffle partition per partition DIRECTORY (capped at 4096 — more
-    * dirs than that is a layout problem, not a parallelism one). A
-    * keyless `repartition(col)` lets AQE coalesce the tiny pre-write
-    * exchange into ONE task, serializing the whole multi-directory
-    * write (measured r16: 0.72 → 0.48 s on the 32-bucket LSH build);
-    * pinning the count keeps one writer per directory at every scale.
-    */
-  private[operators] def indexWriters(nDirs: Int): Int =
-    math.max(1, math.min(nDirs, 1 << 12))
 
   /** Sign-pattern bucket id of a vector column for the given planes. */
   def bucketExpr(vec: Column, planes: Array[Array[Double]]): Column =
@@ -72,6 +64,21 @@ object Similarity {
       val d = v.indices.map(j => v(j) * plane(j)).sum
       if (d >= 0) 1 << i else 0
     }.reduce(_ | _)
+
+  /** Every bucket id within Hamming distance `radius` of `center` over
+    * `numPlanes` bits, ascending: the LSH multiprobe list. Enumerates
+    * the ≤ radius-bit flip masks directly — sum of C(p, i) for i ≤ r
+    * ids, 31 at p = 30, r = 1 — instead of testing all 2^p ids.
+    */
+  def hammingBall(center: Int, numPlanes: Int, radius: Int): Array[Int] = {
+    val out = Array.newBuilder[Int]
+    def flips(from: Int, left: Int, mask: Int): Unit = {
+      out += center ^ mask
+      if (left > 0) (from until numPlanes).foreach(b => flips(b + 1, left - 1, mask | (1 << b)))
+    }
+    flips(0, math.min(radius, numPlanes), 0)
+    out.result().sorted
+  }
 
   /** Brute-force cosine top-k against one query vector.
     * `cos_sim` is rounded to 4 places with an id tiebreak so the
@@ -100,8 +107,8 @@ object Similarity {
     * the `row_number() OVER (PARTITION BY query)` plan's full scored
     * corpus (nQ corpus-sized sorts on nQ tasks). For corpus×corpus
     * self-joins where the "batch" IS the corpus, broadcast no longer
-    * applies — bucket through [[lshIndex]]/[[ivfIndex]] probes
-    * instead.
+    * applies — bucket through an [[AnnIndex]] `Raw` join's per-query
+    * cell probes instead.
     */
   def cosineTopKJoin(
       queries: DataFrame, qIdCol: String, qVecCol: String,
@@ -127,156 +134,30 @@ object Similarity {
     *
     * ONE-SHOT shape: the bucket expression runs over every row, so
     * this still reads the whole corpus per query. For repeated queries
-    * at scale, build an [[lshIndex]] once — its probes prune parquet
-    * PARTITIONS instead of rescanning (mirroring [[IvfIndex]]).
+    * at scale, build an [[AnnIndex]] with the `Lsh` coarse stage once —
+    * its probes prune parquet PARTITIONS instead of rescanning.
     */
   def lshTopK(
       df: DataFrame, idCol: String, vecCol: String,
       query: Array[Float], k: Int,
       numPlanes: Int = 8, probeHamming: Int = 1, seed: Long = 42L): DataFrame = {
-    val dim = query.length
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val qBucket = bucketOf(query, planes)
-    val probes = (0 until (1 << numPlanes))
-      .filter(b => Integer.bitCount(b ^ qBucket) <= probeHamming)
+    require(probeHamming >= 0,
+      s"lshTopK: probeHamming=$probeHamming must be ≥ 0 — it is the probe's Hamming radius")
+    val planes = hyperplanes(numPlanes, query.length, seed)
+    val probes = hammingBall(bucketOf(query, planes), numPlanes, probeHamming)
     val q = query.map(_.toDouble)
     df.withColumn("_bucket", bucketExpr(col(vecCol), planes))
-      .filter(col("_bucket").isin(probes: _*))
+      .filter(col("_bucket").isin(probes.toSeq: _*))
       .select(col(idCol), round(cosineConst(col(vecCol), q), 4).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
       .limit(k)
   }
 
-  /** A PERSISTED hyperplane-LSH index: the corpus written to parquet
-    * hive-partitioned by `_bucket`, so a probe's `_bucket IN (...)`
-    * filter becomes a PARTITION filter — the scan reads only the
-    * candidate buckets' files, never the corpus. This is the LSH twin
-    * of [[IvfIndex.assigned]]: build once, query many times.
-    */
-  final case class LshIndex(
-      path: String,
-      planes: Array[Array[Double]]) {
-    requirePlanes(planes.length)
-    /** Bucket-id width — derived, so it can never disagree with the
-      * planes that actually built the layout. */
-    def numPlanes: Int = planes.length
-  }
-
-  /** Build the index: assign buckets (one codegen'd map-only pass —
-    * the single full read the corpus ever pays), cluster rows by
-    * bucket, and write partitioned by `_bucket`. The pre-write
-    * `repartition` lines each parquet partition directory up with one
-    * writer task instead of `numPartitions` small files per bucket.
-    */
-  def lshIndex(
-      df: DataFrame, idCol: String, vecCol: String, path: String,
-      numPlanes: Int = 8, seed: Long = 42L, dim: Option[Int] = None): LshIndex = {
-    val d = dim.getOrElse(probeDim(df, vecCol))
-    val planes = hyperplanes(numPlanes, d, seed)
-    df.select(col(idCol), col(vecCol),
-        bucketExpr(col(vecCol), planes).as("_bucket"))
-      .repartition(indexWriters(1 << numPlanes), col("_bucket"))
-      .write.mode("overwrite").partitionBy("_bucket").parquet(path)
-    savePlanes(df.sparkSession, path, planes)
-    LshIndex(path, planes)
-  }
-
-  /** Persist the hyperplanes next to the data as the driver-side
-    * `_planes.txt` [[ModelSidecar]] — underscore-prefixed files are
-    * invisible to Spark's data-file discovery (like `_SUCCESS`), so
-    * probes reading the bucket-partitioned root never see it, while
-    * [[loadLshIndex]] reads it explicitly. The planes ARE the index
-    * identity: an append that re-derived them from (seed, dim) alone
-    * could silently diverge from the layout on disk.
-    */
-  private def savePlanes(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      planes: Array[Array[Double]]): Unit =
-    ModelSidecar.write(spark, path, "_planes.txt", Map.empty,
-      Seq("planes" -> planes))
-
-  /** Load a persisted LSH index (data + `_planes.txt` sidecar) built by
-    * [[lshIndex]] — possibly by another driver: build once on the
-    * cluster, append/probe from anywhere.
-    */
-  def loadLshIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): LshIndex =
-    LshIndex(path, ModelSidecar.read(spark, path, "_planes.txt")._2("planes"))
-
-  /** Append a NEW batch to a persisted LSH index without rebuilding:
-    * assign buckets with the index's OWN persisted planes (identical
-    * layout law — old and new vectors are indistinguishable to a
-    * probe) and append into the bucket partition directories. A
-    * growing corpus pays one map-only assignment pass per batch, not
-    * a corpus-wide rewrite; partition pruning on probes is unchanged.
-    */
-  def lshAppend(
-      df: DataFrame, idCol: String, vecCol: String, index: LshIndex): Unit = {
-    val saved = df.sparkSession.read.parquet(index.path).schema
-    val batch = conformToLayout(df, saved, "_bucket", vecCol,
-      index.planes.head.length, "LSH")
-    batch.withColumn("_bucket", bucketExpr(col(vecCol), index.planes))
-      .repartition(indexWriters(1 << index.numPlanes), col("_bucket"))
-      .write.mode("append").partitionBy("_bucket").parquet(index.path)
-  }
-
-  /** Layout law for index appends: an appended file must carry EXACTLY
-    * the columns the saved layout carries — the index readers are
-    * plain `spark.read.parquet` (no mergeSchema), which resolves the
-    * schema from ONE file footer, so a batch missing or renaming a
-    * build-time column would make that column silently vanish for
-    * every row whenever an appended footer wins. Missing columns raise
-    * up front; extras are projected away; a one-row dimension check
-    * against the saved geometry (planes/centroids) catches the
-    * wrong-embedding-column case before it poisons the layout.
-    */
-  private def conformToLayout(
-      df: DataFrame, saved: org.apache.spark.sql.types.StructType,
-      partCol: String, vecCol: String, dim: Int, what: String): DataFrame = {
-    val expect = saved.fieldNames.filterNot(_ == partCol)
-    val missing = expect.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"$what append batch is missing saved-layout column(s) " +
-        s"${missing.mkString(", ")} — the persisted index carries " +
-        s"(${expect.mkString(", ")}), and mixed-schema files silently drop " +
-        "columns on read")
-    df.select(size(col(vecCol))).take(1).foreach { r =>
-      if (!r.isNullAt(0)) require(r.getInt(0) == dim,
-        s"$what append batch vector dimension ${r.getInt(0)} != index dimension $dim")
-    }
-    df.select(expect.map(col).toIndexedSeq: _*)
-  }
-
-  /** Query a persisted LSH index: the bucket filter prunes partitions
-    * at planning time (PlanSpec pins this), exact-cosine rerank on the
-    * candidate slice only.
-    */
-  def lshTopK(
-      spark: org.apache.spark.sql.SparkSession, index: LshIndex,
-      idCol: String, vecCol: String,
-      query: Array[Float], k: Int, probeHamming: Int): DataFrame = {
-    val qBucket = bucketOf(query, index.planes)
-    val probes = (0 until (1 << index.numPlanes))
-      .filter(b => Integer.bitCount(b ^ qBucket) <= probeHamming)
-    val q = query.map(_.toDouble)
-    spark.read.parquet(index.path)
-      .filter(col("_bucket").isin(probes: _*))
-      .select(col(idCol), round(cosineConst(col(vecCol), q), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** IVF (inverted-file) ANN — the other classic scale path next to
-    * LSH: k-means centroids partition the corpus into `nlist` cells;
-    * a query scans only the `nprobe` nearest cells. Returns the
-    * assigned DataFrame + centroids for reuse across queries (at scale
-    * you persist the assignment — it's the index).
-    */
-  final case class IvfIndex(
-      assigned: DataFrame, // original columns + _cell
-      centroids: Array[Array[Double]])
-
-  /** NOTE on `seed`/`initMode` scope: the default sample-fit route is
+  /** The IVF centroid fit: k-means centroids partition the corpus into
+    * `nlist` cells. Returns the input with its `_cell` column and the
+    * centroids; [[AnnIndex]]'s `Ivf` coarse stage persists both.
+    *
+    * NOTE on `seed`/`initMode` scope: the default sample-fit route is
     * FULLY deterministic — sample selection is md5(id)-ordered and
     * init is the first k sample vectors — so `seed` and `initMode`
     * deliberately have NO effect there (varying the seed returns the
@@ -285,10 +166,10 @@ object Similarity {
     * [[ExprAssignMaxKDim]]. Top-k correctness never depends on the
     * fit either way; only cell recall does (RECALL.md).
     */
-  def ivfIndex(
+  private[graft] def ivfFit(
       df: DataFrame, idCol: String, vecCol: String,
-      nlist: Int = 16, seed: Long = 42L, maxIter: Int = 20,
-      initMode: String = "k-means||"): IvfIndex = {
+      nlist: Int, seed: Long, maxIter: Int,
+      initMode: String): (DataFrame, Array[Array[Double]]) = {
     // Route (r12, the semanticDedup route applied here): centroid fit
     // on a bounded deterministic SAMPLE driver-side + one map-only
     // codegen'd argmax assignment pass — nobody Lloyd-iterates the
@@ -307,9 +188,8 @@ object Similarity {
     }
     if (nlist <= ExprAssignMaxCells && sampleFitFits) {
       val centroids = sampleCentroids(df, idCol, vecCol, nlist, maxIter)
-      val assigned = df.withColumn("_cell",
-        graft.functions.CentroidFunctions.nearestCell(col(vecCol), centroids))
-      IvfIndex(assigned, centroids)
+      (df.withColumn("_cell",
+        graft.functions.CentroidFunctions.nearestCell(col(vecCol), centroids)), centroids)
     } else {
       import org.apache.spark.ml.feature.{VectorAssembler => _}
       val toMl = org.apache.spark.ml.functions.array_to_vector(col(vecCol).cast("array<double>"))
@@ -320,153 +200,8 @@ object Similarity {
         .setK(nlist).setSeed(seed).setMaxIter(maxIter).setInitMode(initMode)
         .setFeaturesCol("_features").setPredictionCol("_cell")
       val model = km.fit(features)
-      val assigned = model.transform(features).drop("_features")
-      IvfIndex(assigned, model.clusterCenters.map(_.toArray))
+      (model.transform(features).drop("_features"), model.clusterCenters.map(_.toArray))
     }
-  }
-
-  /** Persist an IVF index: the assignment parquet hive-partitioned by
-    * `_cell` (so [[ivfTopK]]'s `_cell IN (...)` probe prunes partition
-    * directories at planning time, like [[LshIndex]]), centroids in a
-    * sidecar parquet. Build once on a cluster, query from anywhere.
-    */
-  def saveIvfIndex(index: IvfIndex, path: String): Unit = {
-    index.assigned
-      .repartition(indexWriters(index.centroids.length), col("_cell"))
-      .write.mode("overwrite").partitionBy("_cell").parquet(s"$path/assigned")
-    saveCentroids(index.assigned.sparkSession, path, index.centroids)
-  }
-
-  /** Centroid sidecar: one driver-side text file (r15 — shared by this
-    * layout and [[AnnIndex]]'s `Ivf` coarse stage; the tiny-parquet
-    * sidecar cost a scheduled Spark job per write and per probe load).
-    */
-  private[operators] val CentroidsFile = "_centroids.txt"
-
-  private[operators] def saveCentroids(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      centroids: Array[Array[Double]]): Unit =
-    ModelSidecar.write(spark, path, CentroidsFile, Map.empty,
-      Seq("centroids" -> centroids))
-
-  /** Load a persisted IVF index; `assigned` reads the bucket-partitioned
-    * layout, so probes prune files.
-    */
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    val centroids = loadCentroids(spark, path)
-    IvfIndex(spark.read.parquet(s"$path/assigned"), centroids)
-  }
-
-  /** Append a NEW batch to a persisted IVF index without re-training:
-    * each vector goes to its nearest SAVED centroid — the assignment
-    * is `argmin ‖v−c‖²`, computed as `argmax (v·c − ‖c‖²/2)` (the
-    * `‖v‖²` term is constant per row), exactly KMeans' rule with the
-    * same first-index tie-break — and lands in that cell's partition
-    * directory. One map-only pass per batch; centroids stay fixed
-    * (the faiss IVF shape: train once, add forever), so probes prune
-    * identically over old and new vectors.
-    */
-  def ivfAppend(
-      df: DataFrame, idCol: String, vecCol: String, path: String): Unit = {
-    val centroids = loadCentroids(df.sparkSession, path)
-    val saved = df.sparkSession.read.parquet(s"$path/assigned").schema
-    val batch = conformToLayout(df, saved, "_cell", vecCol,
-      centroids.head.length, "IVF")
-    batch
-      .withColumn("_cell",
-        graft.functions.CentroidFunctions.nearestCell(col(vecCol), centroids))
-      .repartition(indexWriters(centroids.length), col("_cell"))
-      .write.mode("append").partitionBy("_cell").parquet(s"$path/assigned")
-  }
-
-  private[graft] def loadCentroids(
-      spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Double]] =
-    ModelSidecar.read(spark, path, CentroidsFile)._2("centroids")
-
-  /** The `nprobe` cells whose centroids are nearest `query` (squared
-    * L2, driver-side): every IVF probe list.
-    */
-  private[operators] def nearestCells(centroids: Array[Array[Double]],
-      query: Array[Float], nprobe: Int): Array[Int] = {
-    val qd = query.map(_.toDouble)
-    def dist2(c: Array[Double]): Double =
-      c.indices.map(j => { val d = c(j) - qd(j); d * d }).sum
-    centroids.zipWithIndex.sortBy { case (c, _) => dist2(c) }.take(nprobe).map(_._2)
-  }
-
-  /** Query an IVF index: rank cells by centroid distance, brute-force
-    * only the nprobe nearest cells.
-    *
-    * `where`: optional metadata predicate — FILTERED ANN (the
-    * vector-DB "pre-filter" shape: "top-k among docs where lang='en'",
-    * not "top-k, then drop non-matches", so a matching doc outside the
-    * unfiltered top-k is still returned). The index persists every
-    * original column alongside `_cell`, so the predicate evaluates
-    * INSIDE the probe scan: on the persisted layout it rides the same
-    * parquet scan the cell probe already prunes (PartitionFilters pick
-    * the cell directories, PushedFilters skip row groups by the
-    * predicate's min/max stats) — no join back to a metadata table, no
-    * post-hoc filtering of a truncated result. Recall caveat shared
-    * with every IVF search: below `nprobe = nlist` a match outside the
-    * probed cells is missed; a highly selective predicate thins
-    * candidates per cell, so filtered queries typically want a higher
-    * nprobe.
-    */
-  def ivfTopK(
-      index: IvfIndex, idCol: String, vecCol: String,
-      query: Array[Float], k: Int, nprobe: Int = 4,
-      where: Option[Column] = None): DataFrame = {
-    val probed = index.assigned.filter(col("_cell")
-      .isin(nearestCells(index.centroids, query, nprobe).toSeq: _*))
-    where.fold(probed)(probed.filter)
-      .select(col(idCol),
-        round(cosineConst(col(vecCol), query.map(_.toDouble)), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** IVF-bucketed k-NN JOIN — [[cosineTopKJoin]]'s scale path for big
-    * corpora: each query probes only its `nprobe` nearest cells
-    * instead of scanning everything. Same recall trade as [[ivfTopK]]
-    * (exact at `nprobe = nlist`, approximate below). Two broadcast
-    * joins + two bounded-heap aggregates, corpus never shuffles:
-    * queries × centroids (tiny, broadcast) → per-query nearest cells
-    * via [[graft.functions.TopKPairs]] → (query, cell) probe list
-    * broadcasts into the assignment scan (partition-pruned when the
-    * index is the persisted hive-partitioned layout) → per-query
-    * top-k, again heap-combined map-side.
-    */
-  def ivfTopKJoin(
-      index: IvfIndex, queries: DataFrame, qIdCol: String, qVecCol: String,
-      idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val np = math.min(nprobe, index.centroids.length)
-    val centDf = index.centroids.zipWithIndex
-      .map { case (c, i) => (i.toLong, c) }.toSeq.toDF("_cellc", "_cv")
-    // nearest cells per query by squared L2: |q|²+|c|²−2q·c (the |q|²
-    // term is constant per query — kept so the score is a true
-    // distance, which costs nothing at nlist scale)
-    val qCells = queries.select(col(qIdCol).as("_qid"), col(qVecCol).as("_qv"))
-      .crossJoin(broadcast(centDf))
-      .select(col("_qid"), col("_qv"), col("_cellc"),
-        (dot(col("_qv"), col("_qv")) + dot(col("_cv"), col("_cv"))
-          - lit(2.0) * dot(col("_qv"), col("_cv"))).as("_d2"))
-      .groupBy("_qid")
-      .agg(first(col("_qv")).as("_qv"),
-        graft.functions.TopKPairs.topKPairs(col("_d2"), col("_cellc"), np).as("_nc"))
-      .select(col("_qid"), col("_qv"),
-        explode(col("_nc")).as("_p"))
-      .select(col("_qid"), col("_qv"), col("_p.id").as("_probe"))
-    index.assigned
-      .join(broadcast(qCells), col("_cell").cast("long") === col("_probe"))
-      .select(col("_qid"), col(idCol).cast("long").as("_cid"),
-        round(cosine(col(vecCol), col("_qv")), 4).as("_cos"))
-      .groupBy("_qid")
-      .agg(graft.functions.TopKPairs
-        .topKPairs(col("_cos"), col("_cid"), k, bestIsLargest = true).as("_top"))
-      .select(col("_qid").as("q_id"), explode(col("_top")).as("_p"))
-      .select(col("q_id"), col("_p.id").as("n_id"), col("_p.score").as("cos_sim"))
   }
 
   /** Auto-size the hyperplane count so bucket occupancy stays CONSTANT
@@ -528,7 +263,7 @@ object Similarity {
     // recall dial, never correctness), then assign the full corpus in
     // one map-only pass via the codegen'd argmax(v·c − ‖c‖²/2)
     // expression (KMeans' own rule, first-index tie-break — the
-    // ivfAppend formula). A distributed Spark ML fit would pay ~10
+    // AnnIndex Ivf append formula). A distributed Spark ML fit would pay ~10
     // driver-coordinated jobs per call for the same bucketing.
     // Past ExprAssignMaxCells (an EXPLICIT nlist beyond the cellsFor
     // ceiling), fall back to the distributed ML fit.
@@ -551,7 +286,7 @@ object Similarity {
         sampleCentroids(df, idCol, vecCol, k, maxIter), threshold, maxCellSize)
     else
       dropWithinCells(df, idCol, vecCol,
-        ivfIndex(df, idCol, vecCol, k, seed, maxIter, initMode).assigned,
+        ivfFit(df, idCol, vecCol, k, seed, maxIter, initMode)._1,
         threshold, maxCellSize)
   }
 
@@ -813,7 +548,7 @@ object Similarity {
     * init = first k sample vectors (the sample order is md5-shuffled),
     * argmin ‖v−c‖² with first-index tie-break (computed as
     * argmin (‖c‖²/2 − v·c) — the ‖v‖² term is constant per row, the
-    * same identity [[ivfAppend]] uses, and it cuts the inner loop to a
+    * same identity the IVF cell assignment uses, and it cuts the inner loop to a
     * pure dot product).
     *
     * The assignment pass — O(sample × k × dim), the dominant cost of

@@ -86,7 +86,9 @@ object PipelineDag {
       observed: Map[String, Map[String, Any]] = Map.empty)
 
   /** Retry with linear backoff — reference policy (engine.py:84-96):
-    * attempt 1..max, sleep delay*attempt between failures.
+    * attempt 1..max, sleep delay*attempt between failures. Only
+    * `NonFatal` failures retry (the reference catches `Exception`): an
+    * interrupt or a fatal VM error propagates on the first attempt.
     */
   def withRetries[A](maxRetries: Int = 3, delayMs: Long = 100)(body: => A): A = {
     // plain while loop — a `return` inside a foreach lambda would throw
@@ -96,7 +98,7 @@ object PipelineDag {
     while (attempt <= maxRetries) {
       try return body
       catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           last = e
           if (attempt < maxRetries) Thread.sleep(delayMs * attempt)
       }

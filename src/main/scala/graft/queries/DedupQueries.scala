@@ -16,21 +16,32 @@ import graft.operators.{AnnIndex, Dedup, Similarity}
   */
 object DedupQueries {
 
+  /** A Raw × Ivf(8) index of `vecs` at `entry`'s [[annIndexDir]]: at
+    * full probe the cell layout can't change a result, so a couple of
+    * k-means iterations are plenty. */
+  private def rawIvfIndex(vecs: DataFrame, entry: String): String = {
+    val path = annIndexDir(entry)
+    AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Raw,
+      AnnIndex.Ivf(nlist = 8, maxIter = 3, initMode = "random"))
+    path
+  }
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
   private val CloneShift = 1000000L
 
-  // Per-process tmp lakes (d_incremental_fp) are bounded WITHIN a
-  // process by the fixed overwrite path, but every fresh JVM (each
-  // paired-bench round spawns one) would otherwise leave its own
-  // corpus-sized dir behind forever. Two-part cleanup: a shutdown hook
-  // removes this process's lakes on exit, and first use sweeps
-  // siblings whose pid is no longer alive (debris from kill -9'd
-  // runs). Both only ever touch dirs matching our own naming pattern.
+  // Per-process tmp lakes (d_incremental_fp) and ANN index dirs
+  // (annIndexDir) are bounded WITHIN a process by the fixed overwrite
+  // path, but every fresh JVM (each paired-bench round spawns one)
+  // would otherwise leave its own corpus-sized dir behind forever.
+  // Two-part cleanup: a shutdown hook removes this process's dirs on
+  // exit, and first use sweeps siblings whose pid is no longer alive
+  // (debris from kill -9'd runs). Both only ever touch dirs matching
+  // our own naming pattern.
   private val tmpLakeRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val TmpLakePattern = "graft_incr_fp_lake_p(\\d+)_.*".r
+  private val TmpLakePattern = "graft_(?:incr_fp_lake|ann)_p(\\d+)_.*".r
 
   private def registerTmpLake(path: String): String = {
     import graft.LocalFs.deleteRecursively
@@ -51,6 +62,13 @@ object DedupQueries {
     }
     path
   }
+
+  /** This process's index dir for the ANN entry `entry`: one fixed path
+    * per entry (a build overwrites the index there), so repeated calls
+    * keep one index each, removed at exit by [[registerTmpLake]]. */
+  private def annIndexDir(entry: String): String =
+    registerTmpLake(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_ann_p${ProcessHandle.current.pid}_$entry").toString)
 
   /** Spread a narrow scan across cores WITHOUT paying a redundant
     * full shuffle when the tuned scan already splits (openCostInBytes
@@ -322,7 +340,7 @@ object DedupQueries {
       val model = graft.operators.Pq.fit(vecs, "vec_id", "embedding",
         nsub = (8 to 1 by -1).find(query.length % _ == 0).get,
         k = 16, maxIter = 4)
-      val path = java.nio.file.Files.createTempDirectory("graft_pq").toString
+      val path = annIndexDir("s_pq_topk")
       AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Pq(model))
       AnnIndex.search(s, path, vecs, "vec_id", "embedding",
         query, k = 20, pool = 1 << 20)
@@ -341,7 +359,7 @@ object DedupQueries {
       val model = graft.operators.Pq.fitOpq(vecs, "vec_id", "embedding",
         nsub = (8 to 1 by -1).find(query.length % _ == 0).get,
         k = 16, maxIter = 4, opqIters = 3)
-      val path = java.nio.file.Files.createTempDirectory("graft_opq").toString
+      val path = annIndexDir("s_opq_topk")
       AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Pq(model))
       AnnIndex.search(s, path, vecs, "vec_id", "embedding",
         query, k = 20, pool = 1 << 20)
@@ -361,7 +379,7 @@ object DedupQueries {
       val query = vecs.filter(col("vec_id") === 3)
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
       val model = graft.operators.Sq.fit(vecs, "vec_id", "embedding")
-      val path = java.nio.file.Files.createTempDirectory("graft_sq").toString
+      val path = annIndexDir("s_sq_topk")
       AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Sq8(model))
       AnnIndex.search(s, path, vecs, "vec_id", "embedding",
         query, k = 20, pool = 1 << 20)
@@ -377,7 +395,7 @@ object DedupQueries {
       val query = vecs.filter(col("vec_id") === 5)
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
       val model = graft.operators.Sq.fit(vecs, "vec_id", "embedding")
-      val path = java.nio.file.Files.createTempDirectory("graft_ivfsq").toString
+      val path = annIndexDir("s_ivfsq_topk")
       AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Sq8(model),
         AnnIndex.Ivf(nlist = 8, maxIter = 3, initMode = "random"))
       AnnIndex.search(s, path, vecs, "vec_id", "embedding",
@@ -395,7 +413,7 @@ object DedupQueries {
       val query = vecs.filter(col("vec_id") === 4)
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
       val model = graft.operators.Bq.fit(vecs, "vec_id", "embedding")
-      val path = java.nio.file.Files.createTempDirectory("graft_bq").toString
+      val path = annIndexDir("s_bq_topk")
       AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Bq(model))
       AnnIndex.search(s, path, vecs, "vec_id", "embedding",
         query, k = 20, pool = 1 << 20)
@@ -412,7 +430,7 @@ object DedupQueries {
       val model = graft.operators.Pq.fit(vecs, "vec_id", "embedding",
         nsub = (8 to 1 by -1).find(dim % _ == 0).get,
         k = 16, maxIter = 4)
-      val path = java.nio.file.Files.createTempDirectory("graft_pqknn").toString
+      val path = annIndexDir("s_pq_knn")
       AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Pq(model))
       AnnIndex.searchJoin(s, path,
           vecs.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -432,7 +450,7 @@ object DedupQueries {
       val model = graft.operators.Pq.fit(vecs, "vec_id", "embedding",
         nsub = (8 to 1 by -1).find(query.length % _ == 0).get,
         k = 16, maxIter = 4)
-      val path = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
+      val path = annIndexDir("s_ivfpq_topk")
       AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Pq(model),
         AnnIndex.Ivf(nlist = 8, maxIter = 3, initMode = "random"))
       AnnIndex.search(s, path, vecs, "vec_id", "embedding",
@@ -458,16 +476,13 @@ object DedupQueries {
       val vecs = t(s, dir, "embeddings")
       val query = vecs.filter(col("vec_id") === 0)
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
-      // at full probe the cell layout can't change the result, so a
-      // couple of KMeans iterations are plenty for the index build
-      val idx = Similarity.ivfIndex(vecs, "vec_id", "embedding", nlist = 8,
-        maxIter = 3, initMode = "random")
-      Similarity.ivfTopK(idx, "vec_id", "embedding", query, k = 10, nprobe = 8)
+      AnnIndex.search(s, rawIvfIndex(vecs, "s_ivf_topk"), vecs, "vec_id", "embedding", query,
+        k = 10, nprobe = 8)
     }),
 
     // Filtered ANN (vector-DB "pre-filter" semantics): top-k among
     // rows passing a metadata predicate, evaluated INSIDE the probe
-    // scan (the index persists payload columns next to _cell). Full
+    // scan (a Raw index persists payload columns next to _cell). Full
     // probe ⇒ ≡ brute force over the filtered subset ⇒ the cosine
     // oracle with a WHERE clause; partition/row-group pruning and
     // pre-filter-vs-post-filter semantics are spec'd in SimilaritySpec.
@@ -475,10 +490,8 @@ object DedupQueries {
       val vecs = t(s, dir, "embeddings")
       val query = vecs.filter(col("vec_id") === 0)
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
-      val idx = Similarity.ivfIndex(vecs, "vec_id", "embedding", nlist = 8,
-        maxIter = 3, initMode = "random")
-      Similarity.ivfTopK(idx, "vec_id", "embedding", query, k = 10,
-        nprobe = 8, where = Some(col("label") === 1))
+      AnnIndex.search(s, rawIvfIndex(vecs, "s_ivf_filtered"), vecs, "vec_id", "embedding", query,
+        k = 10, nprobe = 8, where = Some(col("label") === 1))
     }),
 
     // Salted skew join ≡ plain join (spec'd under a planted hot key);
@@ -522,12 +535,11 @@ object DedupQueries {
       val vecs = t(s, dir, "embeddings")
       val query = vecs.filter(col("vec_id") === 0)
         .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
-      val path = java.nio.file.Files.createTempDirectory("graft_lsh")
-        .resolve("idx").toString
-      val idx = Similarity.lshIndex(vecs, "vec_id", "embedding", path,
-        numPlanes = 5, dim = Some(query.length))
-      Similarity.lshTopK(s, idx, "vec_id", "embedding", query, k = 10,
-        probeHamming = 5)
+      val path = annIndexDir("s_lsh_indexed")
+      AnnIndex.build(vecs, "vec_id", "embedding", path, AnnIndex.Raw,
+        AnnIndex.Lsh(numPlanes = 5), dim = Some(query.length))
+      AnnIndex.search(s, path, vecs, "vec_id", "embedding", query, k = 10,
+        nprobe = 5)
     }),
 
     // Span-overlap dedup (Lee et al. 2021): docs sharing ANY 8-word

@@ -233,26 +233,25 @@ class PlanSpec extends AnyFunSuite {
       .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
     val path = java.nio.file.Files.createTempDirectory("graft_lshplan")
       .resolve("idx").toString
-    val idx = operators.Similarity.lshIndex(vecs, "vec_id", "embedding", path,
-      numPlanes = 8)
-    val probe = operators.Similarity.lshTopK(spark, idx, "vec_id", "embedding",
-      query, k = 5, probeHamming = 1)
+    operators.AnnIndex.build(vecs, "vec_id", "embedding", path,
+      operators.AnnIndex.Raw, operators.AnnIndex.Lsh(numPlanes = 8))
+    val probe = operators.AnnIndex.search(spark, path, vecs, "vec_id", "embedding",
+      query, k = 5, nprobe = 1)
     val p = probe.queryExecution.executedPlan.toString
     // the bucket filter must land in PartitionFilters (planning-time
     // file pruning), NOT as a data filter over a full scan
     val scanLine = p.linesIterator.find(_.contains("PartitionFilters"))
       .getOrElse(fail("no PartitionFilters in plan:\n" + p.take(3000)))
-    assert(scanLine.contains("_bucket"), scanLine)
+    assert(scanLine.contains("_cell"), scanLine)
     // and the probe set (9 of 256 buckets at hamming<=1) prunes to a
     // strict subset of the partition directories on disk
-    val dirsOnDisk = new java.io.File(path).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("_bucket="))
-    val qBucket = operators.Similarity.bucketOf(query, idx.planes)
-    val probes = (0 until 256)
-      .filter(b => Integer.bitCount(b ^ qBucket) <= 1).toSet
-    val probedDirs = new java.io.File(path).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("_bucket=") &&
-        probes.contains(f.getName.stripPrefix("_bucket=").toInt))
+    val dirs = new java.io.File(s"$path/codes").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("_cell="))
+    val planes = operators.Similarity.hyperplanes(8, query.length)
+    val probes = operators.Similarity.hammingBall(
+      operators.Similarity.bucketOf(query, planes), 8, 1).toSet
+    val dirsOnDisk = dirs.length
+    val probedDirs = dirs.count(f => probes.contains(f.getName.stripPrefix("_cell=").toInt))
     assert(probedDirs < dirsOnDisk,
       s"probe covers all $dirsOnDisk partitions — nothing would be pruned")
     probe.collect() // the pruned plan actually runs

@@ -88,28 +88,29 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("ivfTopKJoin at full probe equals the brute-force k-NN join; pruned stays in-cell") {
-    import graft.operators.Similarity
+    import graft.operators.{AnnIndex, Similarity}
     val rnd = new scala.util.Random(5)
     val vecs = (0L until 400L).map(i =>
       (i, Array.fill(16)(rnd.nextFloat() * 2 - 1))).toDF("vec_id", "embedding")
     val queries = vecs.filter($"vec_id" < 3)
-    val idx = Similarity.ivfIndex(vecs, "vec_id", "embedding",
-      nlist = 4, maxIter = 3, initMode = "random")
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivfjoin").toString
+    AnnIndex.build(vecs, "vec_id", "embedding", idx, AnnIndex.Raw,
+      AnnIndex.Ivf(nlist = 4, maxIter = 3, initMode = "random"))
+    def join(nprobe: Int) = AnnIndex.searchJoin(spark, idx,
+      queries, "vec_id", "embedding", vecs, "vec_id", "embedding", k = 6, nprobe = nprobe)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
     // full probe ≡ brute force (cell layout only decides what's PRUNED)
-    val full = Similarity.ivfTopKJoin(idx, queries, "vec_id", "embedding",
-      "vec_id", "embedding", k = 6, nprobe = 4)
+    val full = join(4)
     val brute = Similarity.cosineTopKJoin(queries, "vec_id", "embedding",
       vecs, "vec_id", "embedding", k = 6)
     assert(rows(full) == rows(brute))
 
     // pruned: every neighbor comes from the query's probed cells
-    val cellOf = idx.assigned.select($"vec_id", $"_cell")
+    val cellOf = spark.read.parquet(s"$idx/codes").select($"vec_id", $"_cell")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val pruned = Similarity.ivfTopKJoin(idx, queries, "vec_id", "embedding",
-      "vec_id", "embedding", k = 6, nprobe = 1)
+    val pruned = join(1)
     pruned.collect().groupBy(_.getLong(0)).foreach { case (qid, ns) =>
       val probedCells = ns.map(n => cellOf(n.getLong(1))).toSet
       assert(probedCells.size == 1, s"query $qid strayed outside its probed cell")

@@ -27,12 +27,21 @@ class AnnTuneSpec extends AnyFunSuite {
   private def tmp(pfx: String): String =
     java.nio.file.Files.createTempDirectory(pfx).toString
 
+  /** A Raw × Ivf(16) index of `df`: the raw-IVF layout. */
+  private def rawIvf(df: org.apache.spark.sql.DataFrame, pfx: String): String = {
+    val path = tmp(pfx)
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Raw,
+      AnnIndex.Ivf(nlist = 16, maxIter = 20))
+    path
+  }
+
   test("tuneIvf reaches the target with the smallest sufficient nprobe") {
     val df = clustered()
-    val idx = Similarity.ivfIndex(df, "id", "vec", nlist = 16)
-    val got = AnnTune.tuneIvf(idx, df, "id", "vec", target = 0.9,
+    val idx = rawIvf(df, "graft_tune_ivf")
+    val got = AnnIndex.tune(spark, idx, df, "id", "vec", target = 0.9,
       k = 10, nQueries = 8)
     assert(got.recall >= 0.9, s"recall ${got.recall} below target at $got")
+    assert(got.setting.keySet == Set("nprobe")) // a Raw codec has no pool dial
     val np = got.setting("nprobe")
     assert(np <= 16)
     // minimality: the previous doubling step misses the target
@@ -40,13 +49,37 @@ class AnnTuneSpec extends AnyFunSuite {
       val qs = AnnTune.holdout(df, "id", "vec", 8)
       val truth = AnnTune.groundTruth(df, "id", "vec", qs, 10)
       val prev = AnnTune.measureRecall(qs, truth, "id", 10)(v =>
-        Similarity.ivfTopK(idx, "id", "vec", v, 10, np / 2))
+        AnnIndex.search(spark, idx, df, "id", "vec", v, 10, nprobe = np / 2))
       assert(prev < 0.9, s"nprobe ${np / 2} already reaches target ($prev)")
     }
     // a loose target picks a dial no more expensive than a tight one
-    val loose = AnnTune.tuneIvf(idx, df, "id", "vec", target = 0.2,
+    val loose = AnnIndex.tune(spark, idx, df, "id", "vec", target = 0.2,
       k = 10, nQueries = 8)
     assert(loose.setting("nprobe") <= np)
+  }
+
+  test("tune on a Raw × Lsh index walks every Hamming radius from 0") {
+    val df = clustered()
+    val idx = tmp("graft_tune_lsh")
+    AnnIndex.build(df, "id", "vec", idx, AnnIndex.Raw, AnnIndex.Lsh(numPlanes = 6))
+    // radius 0 (the query's own bucket) is the cheapest probe: the
+    // self-match alone gives recall ≥ 1/k there, so a loose target stops
+    val loose = AnnIndex.tune(spark, idx, df, "id", "vec", target = 0.05,
+      k = 10, nQueries = 8)
+    assert(loose.setting == Map("nprobe" -> 0), loose)
+    val got = AnnIndex.tune(spark, idx, df, "id", "vec", target = 0.95,
+      k = 10, nQueries = 8)
+    assert(got.recall >= 0.95, s"recall ${got.recall} below target at $got")
+    val r = got.setting("nprobe")
+    assert(r >= 0 && r <= 6)
+    // minimality: the next smaller radius misses the target
+    if (r > 0) {
+      val qs = AnnTune.holdout(df, "id", "vec", 8)
+      val truth = AnnTune.groundTruth(df, "id", "vec", qs, 10)
+      val prev = AnnTune.measureRecall(qs, truth, "id", 10)(v =>
+        AnnIndex.search(spark, idx, df, "id", "vec", v, 10, nprobe = r - 1))
+      assert(prev < 0.95, s"radius ${r - 1} already reaches target ($prev)")
+    }
   }
 
   test("tuneSq reaches the target; max pool is exact so any target is reachable") {
@@ -164,8 +197,8 @@ class AnnTuneSpec extends AnyFunSuite {
 
   test("tuneIvfJoin hits the target against the brute-force JOIN ground truth") {
     val df = clustered()
-    val idx = Similarity.ivfIndex(df, "id", "vec", nlist = 16)
-    val got = AnnTune.tuneIvfJoin(idx, df, "id", "vec", target = 0.9,
+    val idx = rawIvf(df, "graft_tune_ivfjoin")
+    val got = AnnIndex.tuneJoin(spark, idx, df, "id", "vec", target = 0.9,
       k = 10, nQueries = 8)
     assert(got.recall >= 0.9, s"join recall ${got.recall} below target at $got")
     val np = got.setting("nprobe")
@@ -175,27 +208,25 @@ class AnnTuneSpec extends AnyFunSuite {
     if (np > 1) {
       val qs = AnnTune.holdoutDf(df, "id", "vec", 8)
       val truth = AnnTune.joinTruth(qs, df, "id", "vec", 10)
-      val prev = AnnTune.measureJoinRecall(truth,
-        Similarity.ivfTopKJoin(idx, qs, "_hq_id", "_hq_v", "id", "vec", 10, np / 2))
+      val prev = AnnTune.measureJoinRecall(truth, AnnIndex.searchJoin(spark, idx,
+        qs, "_hq_id", "_hq_v", df, "id", "vec", 10, nprobe = np / 2))
       assert(prev < 0.9, s"nprobe ${np / 2} already reaches target ($prev)")
     }
     // full probe ⇒ the join IS brute force ⇒ recall exactly 1
     val qs = AnnTune.holdoutDf(df, "id", "vec", 4)
     val truth = AnnTune.joinTruth(qs, df, "id", "vec", 10)
-    assert(AnnTune.measureJoinRecall(truth,
-      Similarity.ivfTopKJoin(idx, qs, "_hq_id", "_hq_v", "id", "vec", 10, 16)) == 1.0)
+    assert(AnnTune.measureJoinRecall(truth, AnnIndex.searchJoin(spark, idx,
+      qs, "_hq_id", "_hq_v", df, "id", "vec", 10, nprobe = 16)) == 1.0)
   }
 
   test("join operating point: separate sidecar, tuned join entry points, dial checks") {
     val df = clustered()
-    val path = tmp("graft_tune_join")
-    val idx = Similarity.ivfIndex(df, "id", "vec", nlist = 16)
-    Similarity.saveIvfIndex(idx, path)
+    val path = rawIvf(df, "graft_tune_join")
     // probe point and join point coexist without clobbering
-    val probePoint = AnnTune.tuneIvf(idx, df, "id", "vec", target = 0.5,
+    val probePoint = AnnIndex.tune(spark, path, df, "id", "vec", target = 0.5,
       k = 10, nQueries = 4)
     AnnTune.savePoint(spark, path, probePoint)
-    val joinPoint = AnnTune.tuneIvfJoin(idx, df, "id", "vec", target = 0.9,
+    val joinPoint = AnnIndex.tuneJoin(spark, path, df, "id", "vec", target = 0.9,
       k = 10, nQueries = 8)
     AnnTune.savePoint(spark, path, joinPoint, AnnTune.JoinPointSidecar)
     assert(AnnTune.loadPoint(spark, path).contains(probePoint))
@@ -206,20 +237,19 @@ class AnnTuneSpec extends AnyFunSuite {
     val qs = AnnTune.holdoutDf(df, "id", "vec", 8)
     def rows(d: org.apache.spark.sql.DataFrame) = d
       .orderBy("q_id", "n_id").collect().map(_.toSeq).toSeq
-    val viaTuned = AnnTune.ivfTopKJoinTuned(spark, path,
-      qs, "_hq_id", "_hq_v", "id", "vec", 10)
-    assert(rows(viaTuned) == rows(Similarity.ivfTopKJoin(
-      Similarity.loadIvfIndex(spark, path), qs, "_hq_id", "_hq_v",
-      "id", "vec", 10, joinPoint.setting("nprobe"))))
+    val viaTuned = AnnIndex.searchJoinTuned(spark, path,
+      qs, "_hq_id", "_hq_v", df, "id", "vec", 10)
+    assert(rows(viaTuned) == rows(AnnIndex.searchJoin(spark, path,
+      qs, "_hq_id", "_hq_v", df, "id", "vec", 10,
+      nprobe = joinPoint.setting("nprobe"))))
     val truth = AnnTune.joinTruth(qs, df, "id", "vec", 10)
     assert(AnnTune.measureJoinRecall(truth, viaTuned) >= 0.9)
     // a join-tuned probe against an index with only a PROBE point
     // raises actionably (missing join sidecar)
-    val bare = tmp("graft_tune_join_bare")
-    Similarity.saveIvfIndex(idx, bare)
+    val bare = rawIvf(df, "graft_tune_join_bare")
     AnnTune.savePoint(spark, bare, probePoint)
     intercept[IllegalStateException] {
-      AnnTune.ivfTopKJoinTuned(spark, bare, qs, "_hq_id", "_hq_v", "id", "vec", 10)
+      AnnIndex.searchJoinTuned(spark, bare, qs, "_hq_id", "_hq_v", df, "id", "vec", 10)
     }
   }
 

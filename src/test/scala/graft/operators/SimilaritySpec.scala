@@ -18,6 +18,30 @@ class SimilaritySpec extends AnyFunSuite {
 
   private val q = Array(1.0f, 0.0f, 0.0f, 0.0f)
 
+  private def tmp(pfx: String): String =
+    java.nio.file.Files.createTempDirectory(pfx).resolve("idx").toString
+
+  /** A Raw index (every build column kept) at a fresh path. */
+  private def raw(df: org.apache.spark.sql.DataFrame, coarse: AnnIndex.Coarse,
+      pfx: String): String = {
+    val path = tmp(pfx)
+    AnnIndex.build(df, "vec_id", "embedding", path, AnnIndex.Raw, coarse)
+    path
+  }
+  private def ivf(nlist: Int) = AnnIndex.Ivf(nlist = nlist, maxIter = 20)
+
+  private def search(path: String, df: org.apache.spark.sql.DataFrame,
+      query: Array[Float], k: Int, nprobe: Int,
+      where: Option[org.apache.spark.sql.Column] = None) =
+    AnnIndex.search(spark, path, df, "vec_id", "embedding", query, k,
+      nprobe = nprobe, where = where)
+
+  private def partitionScan(df: org.apache.spark.sql.DataFrame): String = {
+    val plan = df.queryExecution.executedPlan.toString
+    plan.linesIterator.find(_.contains("PartitionFilters"))
+      .getOrElse(fail("no PartitionFilters:\n" + plan.take(3000)))
+  }
+
   test("cosineTopK ranks by cosine with id tiebreak") {
     val top = Similarity.cosineTopK(vecs, "vec_id", "embedding", q, 3)
       .select("vec_id").as[Long].collect.toSeq
@@ -179,10 +203,10 @@ class SimilaritySpec extends AnyFunSuite {
       if (i % 2 == 0) (i.toLong, Array(1.0f + i * 0.001f, 0.0f, 0.0f, 0.0f))
       else (i.toLong, Array(0.0f, 1.0f + i * 0.001f, 0.0f, 0.0f))
     }.toDF("vec_id", "embedding")
-    val idx = Similarity.ivfIndex(many, "vec_id", "embedding", nlist = 2)
-    assert(idx.centroids.length == 2)
-    val top = Similarity.ivfTopK(idx, "vec_id", "embedding",
-      Array(1.0f, 0.0f, 0.0f, 0.0f), k = 3, nprobe = 1)
+    val path = raw(many, ivf(2), "graft_ivf")
+    assert(new java.io.File(s"$path/codes").listFiles()
+      .count(_.getName.startsWith("_cell=")) == 2)
+    val top = search(path, many, Array(1.0f, 0.0f, 0.0f, 0.0f), k = 3, nprobe = 1)
       .select("vec_id").as[Long].collect()
     assert(top.length == 3)
     assert(top.forall(_ % 2 == 0)) // only the e1 cluster
@@ -194,14 +218,12 @@ class SimilaritySpec extends AnyFunSuite {
       val s = Array.tabulate(4)(d => if (((i % 16) >> d & 1) == 1) 1.0f else -1.0f)
       (i.toLong, Array(s(0) * (1 + i * 0.01f), s(1), s(2), s(3)))
     }.toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft_lshidx")
-      .resolve("idx").toString
-    val idx = Similarity.lshIndex(many, "vec_id", "embedding", path, numPlanes = 4)
+    val path = raw(many, AnnIndex.Lsh(numPlanes = 4), "graft_lshidx")
 
     // same planes (same seed) ⇒ the indexed probe and the on-scan
     // probe must return IDENTICAL rows at every probeHamming
     for (ph <- Seq(0, 1, 4)) {
-      val indexed = Similarity.lshTopK(spark, idx, "vec_id", "embedding", q, 5, ph)
+      val indexed = search(path, many, q, 5, nprobe = ph)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val onScan = Similarity.lshTopK(many, "vec_id", "embedding", q, 5,
         numPlanes = 4, probeHamming = ph)
@@ -209,13 +231,13 @@ class SimilaritySpec extends AnyFunSuite {
       assert(indexed == onScan, s"probeHamming=$ph")
     }
 
-    // the layout is hive-partitioned by _bucket: one bucket's rows
-    // never share a file with another's, so a bucket filter prunes at
-    // the FILE level (the pruning itself is pinned in PlanSpec)
+    // the layout is hive-partitioned by _cell (the bucket): one
+    // bucket's rows never share a file with another's, so a bucket
+    // filter prunes at the FILE level (the pruning is pinned in PlanSpec)
     import org.apache.spark.sql.functions.{col, input_file_name}
-    val filesPerBucket = spark.read.parquet(path)
+    val filesPerBucket = spark.read.parquet(s"$path/codes")
       .groupBy(input_file_name().as("f"))
-      .agg(org.apache.spark.sql.functions.countDistinct(col("_bucket")).as("nb"))
+      .agg(org.apache.spark.sql.functions.countDistinct(col("_cell")).as("nb"))
       .collect()
     assert(filesPerBucket.nonEmpty && filesPerBucket.forall(_.getLong(1) == 1L))
   }
@@ -225,18 +247,13 @@ class SimilaritySpec extends AnyFunSuite {
       if (i % 2 == 0) (i.toLong, Array(1.0f + i * 0.001f, 0.0f, 0.0f, 0.0f))
       else (i.toLong, Array(0.0f, 1.0f + i * 0.001f, 0.0f, 0.0f))
     }.toDF("vec_id", "embedding")
-    val built = Similarity.ivfIndex(many, "vec_id", "embedding", nlist = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfidx")
-      .resolve("idx").toString
-    Similarity.saveIvfIndex(built, path)
-    val loaded = Similarity.loadIvfIndex(spark, path)
-    assert(loaded.centroids.map(_.toSeq).toSeq == built.centroids.map(_.toSeq).toSeq)
-    val probe = Similarity.ivfTopK(loaded, "vec_id", "embedding",
-      Array(1.0f, 0.0f, 0.0f, 0.0f), k = 3, nprobe = 1)
+    val path = raw(many, ivf(2), "graft_ivfidx")
+    val fit = Similarity.ivfFit(many, "vec_id", "embedding", 2, 42L, 20, "k-means||")._2
+    val loaded = ModelSidecar.read(spark, path, "_centroids.txt")._2("centroids")
+    assert(loaded.map(_.toSeq).toSeq == fit.map(_.toSeq).toSeq)
+    val probe = search(path, many, Array(1.0f, 0.0f, 0.0f, 0.0f), k = 3, nprobe = 1)
     // pruning: the cell filter lands in PartitionFilters of the scan
-    val plan = probe.queryExecution.executedPlan.toString
-    val scanLine = plan.linesIterator.find(_.contains("PartitionFilters"))
-      .getOrElse(fail("no PartitionFilters:\n" + plan.take(3000)))
+    val scanLine = partitionScan(probe)
     assert(scanLine.contains("_cell"), scanLine)
     val top = probe.select("vec_id").as[Long].collect()
     assert(top.length == 3 && top.forall(_ % 2 == 0)) // only the e1 cluster
@@ -252,11 +269,10 @@ class SimilaritySpec extends AnyFunSuite {
         else Array(0.0f, 1.0f + i * 0.001f, 0.0f, 0.0f)
       (i.toLong, v, if (i % 10 == 0) 1 else 0)
     }.toDF("vec_id", "embedding", "label")
-    val built = Similarity.ivfIndex(many, "vec_id", "embedding", nlist = 2)
+    val path = raw(many, ivf(2), "graft_ivf_filtered")
     val qv = Array(1.0f, 0.0f, 0.0f, 0.0f)
     // full probe: filtered result ≡ brute force over the filtered subset
-    val got = Similarity.ivfTopK(built, "vec_id", "embedding", qv,
-      k = 4, nprobe = 2, where = Some(col("label") === 1))
+    val got = search(path, many, qv, k = 4, nprobe = 2, where = Some(col("label") === 1))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = Similarity.cosineTopK(many.filter(col("label") === 1),
       "vec_id", "embedding", qv, 4)
@@ -265,20 +281,14 @@ class SimilaritySpec extends AnyFunSuite {
     // pre-filter, not post-filter: the unfiltered top-4 holds NO
     // label-1 ids (the query cluster's nearest are all label 0 except
     // far-off multiples of 10), yet the filtered search returns 4
-    val unfiltered = Similarity.ivfTopK(built, "vec_id", "embedding", qv,
-      k = 4, nprobe = 2).select("vec_id").as[Long].collect().toSet
+    val unfiltered = search(path, many, qv, k = 4, nprobe = 2)
+      .select("vec_id").as[Long].collect().toSet
     assert(got.size == 4 && got.map(_._1).count(unfiltered.contains) < 4)
-    // persisted layout: the predicate reaches the parquet scan as a
-    // pushed filter, alongside the cell partition pruning
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_filtered")
-      .resolve("idx").toString
-    Similarity.saveIvfIndex(built, path)
-    val probe = Similarity.ivfTopK(Similarity.loadIvfIndex(spark, path),
-      "vec_id", "embedding", qv, k = 4, nprobe = 1,
-      where = Some(col("label") === 1))
+    // the predicate reaches the parquet scan as a pushed filter,
+    // alongside the cell partition pruning
+    val probe = search(path, many, qv, k = 4, nprobe = 1, where = Some(col("label") === 1))
     val plan = probe.queryExecution.executedPlan.toString
-    val scanLine = plan.linesIterator.find(_.contains("PartitionFilters"))
-      .getOrElse(fail("no PartitionFilters:\n" + plan.take(3000)))
+    val scanLine = partitionScan(probe)
     assert(scanLine.contains("_cell"), scanLine)
     assert(plan.linesIterator.exists(l =>
       l.contains("PushedFilters") && l.contains("label")), plan.take(3000))
@@ -290,27 +300,22 @@ class SimilaritySpec extends AnyFunSuite {
       val s = Array.tabulate(4)(d => if (((i % 16) >> d & 1) == 1) 1.0f else -1.0f)
       (i.toLong, Array(s(0) * (1 + i * 0.01f), s(1), s(2), s(3)))
     }
-    val path = java.nio.file.Files.createTempDirectory("graft_lshapp")
-      .resolve("idx").toString
-    Similarity.lshIndex(old.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      path, numPlanes = 4)
+    val path = raw(old.toDF("vec_id", "embedding"), AnnIndex.Lsh(numPlanes = 4),
+      "graft_lshapp")
 
-    // append from a RELOADED index — the cross-driver path: planes come
-    // from the _planes sidecar, not from the builder's memory
-    val reloaded = Similarity.loadLshIndex(spark, path)
+    // append by path — the cross-driver path: planes come from the
+    // _planes sidecar, not from the builder's memory
     val batch = (100 until 132).map { i =>
       val s = Array.tabulate(4)(d => if (((i % 16) >> d & 1) == 1) 1.0f else -1.0f)
       (i.toLong, Array(s(0) * (1 + i * 0.01f), s(1), s(2), s(3)))
     }
-    Similarity.lshAppend(batch.toDF("vec_id", "embedding"), "vec_id",
-      "embedding", reloaded)
+    AnnIndex.append(batch.toDF("vec_id", "embedding"), "vec_id", "embedding", path)
 
     // full probe over the appended index ≡ brute force over the union
     val union = (old ++ batch).toDF("vec_id", "embedding")
     val brute = Similarity.cosineTopK(union, "vec_id", "embedding", q, 64)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val indexed = Similarity.lshTopK(spark, reloaded, "vec_id", "embedding",
-      q, 64, probeHamming = 4)
+    val indexed = search(path, union, q, 64, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(indexed == brute)
     // and the probe sees vectors from BOTH generations
@@ -319,12 +324,9 @@ class SimilaritySpec extends AnyFunSuite {
 
     // partition pruning unchanged after the append: the 1-flip probe's
     // bucket filter still lands in PartitionFilters
-    val probe = Similarity.lshTopK(spark, reloaded, "vec_id", "embedding",
-      q, 5, probeHamming = 1)
-    val plan = probe.queryExecution.executedPlan.toString
-    val scanLine = plan.linesIterator.find(_.contains("PartitionFilters"))
-      .getOrElse(fail("no PartitionFilters:\n" + plan.take(3000)))
-    assert(scanLine.contains("_bucket"), scanLine)
+    val probe = search(path, union, q, 5, nprobe = 1)
+    val scanLine = partitionScan(probe)
+    assert(scanLine.contains("_cell"), scanLine)
     probe.collect()
   }
 
@@ -334,47 +336,50 @@ class SimilaritySpec extends AnyFunSuite {
       if (i % 2 == 0) (i.toLong, Array(1.0f + i * 0.001f, 0.0f, 0.0f, 0.0f))
       else (i.toLong, Array(0.0f, 1.0f + i * 0.001f, 0.0f, 0.0f))
     }
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfapp")
-      .resolve("idx").toString
-    Similarity.saveIvfIndex(
-      Similarity.ivfIndex(old.toDF("vec_id", "embedding"), "vec_id",
-        "embedding", nlist = 2), path)
+    val path = raw(old.toDF("vec_id", "embedding"), ivf(2), "graft_ivfapp")
 
     // new batch: two vectors clearly inside each cluster
     val batch = Seq(
       (100L, Array(1.05f, 0.01f, 0.0f, 0.0f)),
       (101L, Array(0.01f, 1.05f, 0.0f, 0.0f)))
-    Similarity.ivfAppend(batch.toDF("vec_id", "embedding"), "vec_id",
-      "embedding", path)
+    AnnIndex.append(batch.toDF("vec_id", "embedding"), "vec_id", "embedding", path)
 
-    val loaded = Similarity.loadIvfIndex(spark, path)
-    assert(loaded.assigned.count() == 42)
+    val codes = spark.read.parquet(s"$path/codes")
+    val centroids = ModelSidecar.read(spark, path, "_centroids.txt")._2("centroids")
+    assert(codes.count() == 42)
     // each appended vector sits in the cell of its locally-nearest
     // saved centroid — KMeans' own assignment rule
-    val cells = loaded.assigned.filter(col("vec_id") >= 100L)
+    val cells = codes.filter(col("vec_id") >= 100L)
       .select("vec_id", "_cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     def nearest(v: Array[Float]): Int =
-      loaded.centroids.zipWithIndex.minBy { case (c, _) =>
+      centroids.zipWithIndex.minBy { case (c, _) =>
         c.indices.map(j => { val d = c(j) - v(j); d * d }).sum }._2
     assert(cells(100L) == nearest(batch(0)._2))
     assert(cells(101L) == nearest(batch(1)._2))
 
     // an nprobe=1 query near the e1 cluster finds old AND appended
     // (k=25 > the 20 old cluster members, so the appended one fits)
-    val top = Similarity.ivfTopK(loaded, "vec_id", "embedding",
-      Array(1.0f, 0.0f, 0.0f, 0.0f), k = 25, nprobe = 1)
+    val all = (old ++ batch).toDF("vec_id", "embedding")
+    val top = search(path, all, Array(1.0f, 0.0f, 0.0f, 0.0f), k = 25, nprobe = 1)
       .select("vec_id").as[Long].collect().toSet
     assert(top.contains(100L), top.toString)
     assert(top.exists(_ < 100L), top.toString)
     assert(!top.contains(101L)) // other cluster pruned
     // pruning pin survives the append
-    val plan = Similarity.ivfTopK(loaded, "vec_id", "embedding",
-      Array(1.0f, 0.0f, 0.0f, 0.0f), k = 5, nprobe = 1)
-      .queryExecution.executedPlan.toString
-    val scanLine = plan.linesIterator.find(_.contains("PartitionFilters"))
-      .getOrElse(fail("no PartitionFilters:\n" + plan.take(3000)))
+    val scanLine = partitionScan(
+      search(path, all, Array(1.0f, 0.0f, 0.0f, 0.0f), k = 5, nprobe = 1))
     assert(scanLine.contains("_cell"), scanLine)
+  }
+
+  test("hammingBall enumerates exactly the ≤ r-flip neighbours the all-ids filter kept") {
+    for (p <- 1 to 10; r <- 0 to p; center <- Seq(0, (1 << p) - 1, 0x2a5 & ((1 << p) - 1))) {
+      val old = (0 until (1 << p)).filter(b => Integer.bitCount(b ^ center) <= r)
+      assert(Similarity.hammingBall(center, p, r).toSeq == old, s"p=$p r=$r center=$center")
+    }
+    // 30 planes, one flip: the bucket itself + 30 neighbours, never 2^30 tests
+    val ball = Similarity.hammingBall(12345, 30, 1)
+    assert(ball.length == 31 && ball.forall(b => Integer.bitCount(b ^ 12345) <= 1))
   }
 
   test("bucketExpr and bucketOf agree (query routing = data bucketing)") {
@@ -399,22 +404,17 @@ class SimilaritySpec extends AnyFunSuite {
       if (i % 2 == 0) (i.toLong, Array(1.0f + i * 0.001f, 0.0f, 0.0f, 0.0f), i % 5)
       else (i.toLong, Array(0.0f, 1.0f + i * 0.001f, 0.0f, 0.0f), i % 5)
     }
-    val path = java.nio.file.Files.createTempDirectory("graft_appval")
-      .resolve("idx").toString
-    Similarity.saveIvfIndex(
-      Similarity.ivfIndex(old.toDF("vec_id", "embedding", "label"),
-        "vec_id", "embedding", nlist = 2), path)
+    val path = raw(old.toDF("vec_id", "embedding", "label"), ivf(2), "graft_appval")
 
     val noLabel = Seq((100L, Array(1.05f, 0.0f, 0.0f, 0.0f)))
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfAppend(noLabel.toDF("vec_id", "embedding"),
-        "vec_id", "embedding", path)
+      AnnIndex.append(noLabel.toDF("vec_id", "embedding"), "vec_id", "embedding", path)
     }
     assert(e.getMessage.contains("label"), e.getMessage)
 
     val wrongDim = Seq((100L, Array(1.05f, 0.0f, 0.0f), 1))
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.ivfAppend(wrongDim.toDF("vec_id", "embedding", "label"),
+      AnnIndex.append(wrongDim.toDF("vec_id", "embedding", "label"),
         "vec_id", "embedding", path)
     }
     assert(e2.getMessage.contains("dimension"), e2.getMessage)
@@ -422,29 +422,24 @@ class SimilaritySpec extends AnyFunSuite {
     // extra columns are projected away, and the good append lands with
     // the saved layout intact (label survives for old AND new rows)
     val withExtra = Seq((100L, Array(1.05f, 0.0f, 0.0f, 0.0f), 3, "junk"))
-    Similarity.ivfAppend(
-      withExtra.toDF("vec_id", "embedding", "label", "extra"),
+    AnnIndex.append(withExtra.toDF("vec_id", "embedding", "label", "extra"),
       "vec_id", "embedding", path)
-    val loaded = Similarity.loadIvfIndex(spark, path)
-    assert(!loaded.assigned.columns.contains("extra"))
-    assert(loaded.assigned.filter(col("vec_id") === 100L)
-      .select("label").head.getInt(0) == 3)
-    assert(loaded.assigned.filter(col("label").isNull).count() == 0)
+    val codes = spark.read.parquet(s"$path/codes")
+    assert(!codes.columns.contains("extra"))
+    assert(codes.filter(col("vec_id") === 100L).select("label").head.getInt(0) == 3)
+    assert(codes.filter(col("label").isNull).count() == 0)
 
-    // LSH: same law (its layout is always (id, vec)); wrong dim raises
-    val lpath = java.nio.file.Files.createTempDirectory("graft_appval")
-      .resolve("lsh").toString
-    val lidx = Similarity.lshIndex(
-      old.map(r => (r._1, r._2)).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", lpath, numPlanes = 4)
+    // LSH: same law; wrong dim raises
+    val lpath = raw(old.map(r => (r._1, r._2)).toDF("vec_id", "embedding"),
+      AnnIndex.Lsh(numPlanes = 4), "graft_appval")
     val e3 = intercept[IllegalArgumentException] {
-      Similarity.lshAppend(noLabel.toDF("id", "emb"), "id", "emb", lidx)
+      AnnIndex.append(noLabel.toDF("id", "emb"), "id", "emb", lpath)
     }
     assert(e3.getMessage.contains("vec_id"), e3.getMessage)
     val e4 = intercept[IllegalArgumentException] {
-      Similarity.lshAppend(
+      AnnIndex.append(
         Seq((100L, Array(1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", lidx)
+        "vec_id", "embedding", lpath)
     }
     assert(e4.getMessage.contains("dimension"), e4.getMessage)
   }
@@ -498,34 +493,34 @@ class SimilaritySpec extends AnyFunSuite {
   test("LSH plane counts outside 1..30 raise; 8 planes is unchanged") {
     // bucket ids are Int sign patterns: at 31 planes the probe range
     // `0 until (1 << 31)` is empty, at 33 bit 32 aliases bit 0
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshplanes").toString
     for (p <- Seq(0, 31, 33)) {
       intercept[IllegalArgumentException] {
         Similarity.lshTopK(vecs, "vec_id", "embedding", q, 3, numPlanes = p)
       }
-      intercept[IllegalArgumentException] {
-        Similarity.lshIndex(vecs, "vec_id", "embedding", s"$dir/p$p", numPlanes = p)
-      }
+      intercept[IllegalArgumentException](AnnIndex.Lsh(numPlanes = p))
     }
-    // a loaded index is an LshIndex too: its planes are checked as well
-    intercept[IllegalArgumentException] {
-      Similarity.LshIndex(dir, Similarity.hyperplanes(30, 4) ++ Similarity.hyperplanes(1, 4))
-    }
+    // a loaded index's planes are checked as well
+    val bad = raw(vecs, AnnIndex.Lsh(numPlanes = 4), "graft_lshplanes")
+    ModelSidecar.write(spark, bad, "_planes.txt", Map.empty,
+      Seq("planes" -> (Similarity.hyperplanes(30, 4) ++ Similarity.hyperplanes(1, 4))))
+    intercept[IllegalArgumentException](search(bad, vecs, q, 3, nprobe = 1))
     // 8 planes, probing every bucket: exactly brute force, one-shot and
     // persisted alike
     val brute = Similarity.cosineTopK(vecs, "vec_id", "embedding", q, 5).collect().toSeq
     assert(Similarity.lshTopK(vecs, "vec_id", "embedding", q, 5, numPlanes = 8,
       probeHamming = 8).collect().toSeq == brute)
-    val idx = Similarity.lshIndex(vecs, "vec_id", "embedding", s"$dir/p8", numPlanes = 8)
-    assert(Similarity.lshTopK(spark, idx, "vec_id", "embedding", q, 5, 8)
-      .collect().toSeq == brute)
+    val idx = raw(vecs, AnnIndex.Lsh(numPlanes = 8), "graft_lshplanes")
+    assert(search(idx, vecs, q, 5, nprobe = 8).collect().toSeq == brute)
   }
 
   test("a directory without its sidecar raises naming it: LSH and IVF") {
+    // an LSH or IVF index is an AnnIndex: probing or appending to a
+    // directory without its sidecars raises naming the directory
     val empty = java.nio.file.Files.createTempDirectory("graft_nosidecar").toString
-    val lsh = intercept[IllegalArgumentException](Similarity.loadLshIndex(spark, empty))
-    assert(lsh.getMessage.contains(empty), lsh.getMessage)
-    val ivf = intercept[IllegalArgumentException](Similarity.loadIvfIndex(spark, empty))
-    assert(ivf.getMessage.contains(empty), ivf.getMessage)
+    val probe = intercept[IllegalArgumentException](search(empty, vecs, q, 3, nprobe = 1))
+    assert(probe.getMessage.contains(empty), probe.getMessage)
+    val app = intercept[IllegalArgumentException](
+      AnnIndex.append(vecs, "vec_id", "embedding", empty))
+    assert(app.getMessage.contains(empty), app.getMessage)
   }
 }

@@ -189,4 +189,20 @@ class PipelineDagSpec extends AnyFunSuite {
     }
     assert(n == 3 && e.getMessage.contains("3 attempts"))
   }
+
+  test("withRetries: an interrupt propagates on the first attempt, unretried") {
+    var n = 0
+    intercept[InterruptedException] {
+      withRetries(maxRetries = 3, delayMs = 1) { n += 1; throw new InterruptedException("stop") }
+    }
+    assert(n == 1)
+  }
+
+  test("withRetries: a fatal VM error propagates on the first attempt, unretried") {
+    var n = 0
+    intercept[StackOverflowError] {
+      withRetries(maxRetries = 3, delayMs = 1) { n += 1; throw new StackOverflowError("fatal") }
+    }
+    assert(n == 1)
+  }
 }
