@@ -59,7 +59,9 @@ object LuhnCards {
 
   /** Distinct Luhn-valid candidates of `s`, (len desc, lex asc). */
   def validCandidates(s: UTF8String): ArrayData = {
-    if (s == null) return new GenericArrayData(Array.empty[Any])
+    // the pattern needs `\d` ([0-9]): a text without an ASCII digit
+    // byte has no candidate, and is not decoded
+    if (s == null || !hasAsciiDigit(s)) return new GenericArrayData(Array.empty[Any])
     val m = Cand.matcher(s.toString)
     val seen = new java.util.LinkedHashSet[String]()
     while (m.find()) {
@@ -77,6 +79,16 @@ object LuhnCards {
       }
     })
     new GenericArrayData(arr.map(c => UTF8String.fromString(c): Any))
+  }
+
+  private def hasAsciiDigit(s: UTF8String): Boolean = {
+    var i = 0
+    while (i < s.numBytes) {
+      val b = s.getByte(i)
+      if (b >= '0' && b <= '9') return true
+      i += 1
+    }
+    false
   }
 
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}

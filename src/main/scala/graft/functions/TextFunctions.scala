@@ -28,26 +28,13 @@ object TextFunctions {
     */
   val cjkPattern = "[\\x{4e00}-\\x{9fff}]"
 
-  private def hits(text: Column, markers: Seq[String]): Column =
-    markers.map(m => when(text.contains(m), 1).otherwise(0)).reduce(_ + _)
-
   /** N-gram/stopword-heuristic language ID. Deterministic: CJK → zh,
-    * else argmax of marker hits in priority order, all-zero → "und".
+    * else the first language in priority order with the most markers
+    * present, no marker (or null) → "und". Native one-pass kernel
+    * ([[CurationKernels.langId]]): one scan of the lowercased text
+    * matches all markers at once, with the padding spaces implied.
     */
-  def langId(text: Column): Column = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
-    val scores = langMarkers.map { case (lang, ms) => lang -> hits(padded, ms) }
-    val anyHit = scores.map(_._2).reduce(_ + _) > 0
-    val best = scores.zipWithIndex.foldRight(lit("und"): Column) {
-      case (((lang, score), i), fallback) =>
-        val beatsLater = scores.drop(i + 1)
-          .map { case (_, s2) => score >= s2 }
-          .foldLeft(lit(true): Column)(_ && _)
-        when(score > 0 && beatsLater, lit(lang)).otherwise(fallback)
-    }
-    when(TextMetrics.hasHanCol(text), lit("zh"))
-      .otherwise(when(anyHit, best).otherwise(lit("und")))
-  }
+  def langId(text: Column): Column = CurationKernels.langIdCol(text)
 
   /** DuckDB twin of [[langId]] for a column expression `c`. */
   def langIdSql(c: String): String = {
@@ -144,29 +131,23 @@ object TextFunctions {
   /** Gopher-style quality verdict (Rae et al. 2021, A1.1): null when
     * the doc passes every rule, else the FIRST failed rule's name —
     * pipelines log why docs die. Shared by the `x_gopher_filter`
-    * oracle query and [[graft.streaming.CorpusIngest]]'s gate.
+    * oracle query and [[graft.streaming.CorpusIngest]]'s gate. Rules in
+    * order: tokens ([[wsTokenCount]]) under `minTokens` → "too_short",
+    * over `maxTokens` → "too_long", `length(text)` / tokens outside
+    * [minMeanWlen, maxMeanWlen] → "word_length", 1 − distinct/parts of
+    * `split(lower(trim(text)), "\s+")` over `maxDupWordRatio` →
+    * "repetitive". NULL text is "too_short": a no-text document must
+    * not pass CorpusIngest's gate. Native kernel
+    * ([[CurationKernels.gopherFailReason]]): one tokenisation serves
+    * every rule.
     */
   def gopherFailReason(
       text: Column,
       minTokens: Long = 50, maxTokens: Long = 100000,
       minMeanWlen: Double = 3.0, maxMeanWlen: Double = 10.0,
-      maxDupWordRatio: Double = 0.6): Column = {
-    val toks = wsTokenCount(text).cast("long")
-    val arr = split(lower(trim(text)), "\\s+")
-    val dupRatio = lit(1.0) -
-      size(array_distinct(arr)).cast("double") /
-        greatest(size(arr), lit(1)).cast("double")
-    val meanWlen = length(text).cast("double") /
-      greatest(toks, lit(1L)).cast("double")
-    // NULL text must REJECT: every arithmetic rule evaluates to null
-    // on null input, the CASE would fall through to null (= pass), and
-    // a no-text document would sail through CorpusIngest's gate
-    when(text.isNull, "too_short")
-      .when(toks < minTokens, "too_short")
-      .when(toks > maxTokens, "too_long")
-      .when(meanWlen < minMeanWlen || meanWlen > maxMeanWlen, "word_length")
-      .when(dupRatio > maxDupWordRatio, "repetitive")
-  }
+      maxDupWordRatio: Double = 0.6): Column =
+    CurationKernels.gopherFailReasonCol(
+      text, minTokens, maxTokens, minMeanWlen, maxMeanWlen, maxDupWordRatio)
 
   /** URL parsing for domain-level corpus filtering (the blocklist
     * filter every crawl pipeline runs before content filters).
@@ -218,25 +199,22 @@ object TextFunctions {
       "\\b(AKIA[0-9A-Z]{16}|(sk|pk)-[A-Za-z0-9]{16,64}|ghp_[A-Za-z0-9]{36})\\b",
       "<APIKEY>"))
 
-  /** Credit-card redaction phase — runs BEFORE the pattern chain (so
-    * the SSN/phone patterns never eat card fragments) and redacts
-    * ONLY Luhn-valid candidates ([[LuhnCards]]): the mod-10 check is
-    * what keeps 13-19 digit order ids out of the redaction. Both
-    * engines run the IDENTICAL two-phase formula — extract valid
-    * candidates, join them (length desc, lex asc) into a `\b(...)\b`
-    * alternation, one global regexp_replace with that dynamic
-    * pattern — so the oracle agreement is by construction, not by
-    * coincidence of two different mechanisms.
+  /** Necessary conditions of [[piiPatterns]] entries, by kind: every
+    * match of the kind's pattern contains an ASCII digit or one of the
+    * literals. [[piiRedact]] skips a phase whose gate fails on the
+    * buffer as it stands before that phase; a kind with no gate always
+    * runs.
     */
-  def cardRedact(text: Column): Column = {
-    val cands = LuhnCards.validCandidatesCol(text)
-    val pat = concat(lit("\\b("), array_join(cands, "|"), lit(")\\b"))
-    when(size(cands) === 0, text)
-      .otherwise(regexp_replace(text, pat, lit("<CARD>")))
-  }
+  val piiGates: Map[String, PiiGate] = Map(
+    "email" -> PiiGate.AnyLiteral("@"),
+    "ssn" -> PiiGate.AsciiDigit,
+    "phone" -> PiiGate.AsciiDigit,
+    "ipv4" -> PiiGate.AsciiDigit,
+    "iban" -> PiiGate.AsciiDigit,
+    "apikey" -> PiiGate.AnyLiteral("AKIA", "sk-", "pk-", "ghp_"))
 
-  /** Luhn-valid card match count on the RAW text (audit twin of
-    * [[cardRedact]] — counts every `\b`-bounded occurrence of a valid
+  /** Luhn-valid card match count on the RAW text (audit twin of the
+    * card phase — counts every `\b`-bounded occurrence of a valid
     * candidate, the exact set of spans the redactor replaces).
     */
   def cardCount(text: Column): Column = {
@@ -284,8 +262,12 @@ object TextFunctions {
   }
 
   /** Card phase first, then the chained global regexp_replace over
-    * [[piiPatterns]] — pure codegen Column expression, one pass per
-    * pattern.
+    * [[piiPatterns]], in order — the value of `piiPatterns.foldLeft(
+    * cardPhase(text))(regexp_replace)`, computed by the native kernel
+    * [[CurationKernels.piiRedact]]: the text is decoded once, every
+    * phase runs over one buffer with precompiled patterns, and the
+    * result is encoded once. A phase whose [[piiGates]] condition fails
+    * on the buffer before it is skipped (the card phase needs a digit).
     *
     * SINGLE-APPLICATION semantics (r14): the chain is deterministic
     * and monotone (replacement tokens carry no digits or '@', so
@@ -300,10 +282,7 @@ object TextFunctions {
     * number of passes closes them; pipelines redact once, and the
     * property spec pins this contract.
     */
-  def piiRedact(text: Column): Column =
-    piiPatterns.foldLeft(cardRedact(text)) { case (c, (_, pat, repl)) =>
-      regexp_replace(c, pat, repl)
-    }
+  def piiRedact(text: Column): Column = CurationKernels.piiRedactCol(text)
 
   def piiRedactSql(c: String): String =
     piiPatterns.foldLeft(s"(${cardRedactSql(c)})") { case (s, (_, pat, repl)) =>

@@ -215,7 +215,20 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4,
       threshold: Double = 0.7, maxBucketSize: Int = 1000,
-      stageDir: Option[String] = None): DataFrame = {
+      stageDir: Option[String] = None): DataFrame =
+    minHashNearDupsStaged(df, idCol, textCol, shingleN, bands, rowsPerBand,
+      threshold, maxBucketSize, stageDir)._1
+
+  /** [[minHashNearDups]] and the stages its pair plan reads (the
+    * hashed-shingle stage, and the hot-bucket stage on the two-pass
+    * route), for a caller that releases them once it no longer reads
+    * the pairs — see [[dropNearDuplicates]]' `release`.
+    */
+  private[graft] def minHashNearDupsStaged(
+      df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, bands: Int, rowsPerBand: Int,
+      threshold: Double, maxBucketSize: Int,
+      stageDir: Option[String]): (DataFrame, Seq[DataFrame]) = {
     val numHashes = bands * rowsPerBand
     // Staged once and reused by signature build + both rerank sides —
     // the standard "materialize the signatures" step; without it the
@@ -270,9 +283,9 @@ object Dedup {
       .groupBy("band", "bucket")
       .agg(collect_list(col("_id")).as("_ids"))
       .filter(size(col("_ids")).between(2, maxBucketSize))
-    val collisionBuckets =
+    val (collisionBuckets, stages) =
       if (graft.Conf.underBytes(df, graft.Conf.TwoPassBucketBytesKey,
-          TwoPassBucketBytes)) bucketLists(banded)
+          TwoPassBucketBytes)) (bucketLists(banded), Seq(hashedShingles))
       else {
         // plan-time broadcast under the same budget device as the
         // span family: hot buckets are collision volume, but a
@@ -286,7 +299,8 @@ object Dedup {
         val hotSide =
           if (nHot <= SpanBroadcastLimit) broadcast(hotBuckets)
           else hotBuckets
-        bucketLists(banded.join(hotSide, Seq("band", "bucket")))
+        (bucketLists(banded.join(hotSide, Seq("band", "bucket"))),
+          Seq(hashedShingles, hotBuckets))
       }
     val candidates = collisionBuckets
       .withColumn("_sorted", array_sort(col("_ids")))
@@ -323,7 +337,7 @@ object Dedup {
         struct(col("id_a").as("_id"), col("id_a"), col("id_b")),
         struct(col("id_b").as("_id"), col("id_a"), col("id_b")))).as("k"))
       .select("k._id", "k.id_a", "k.id_b")
-    keyed.join(hashedShingles, "_id")
+    val pairs = keyed.join(hashedShingles, "_id")
       .groupBy("id_a", "id_b")
       .agg(
         first(when(col("_id") === col("id_a"), col("_hsh")), ignoreNulls = true)
@@ -335,6 +349,7 @@ object Dedup {
           size(array_union(col("_sha"), col("_shb"))).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+    (pairs, stages)
   }
 
   /** 64-bit SimHash over whitespace tokens: bit i of the signature is
@@ -708,13 +723,20 @@ object Dedup {
     * `assumeCanonical` (pair lists from this library's generators,
     * which all emit distinct id_a < id_b) makes the probe collect
     * map-only; see [[connectedComponents]].
+    *
+    * `release`: cached stages that `pairs` reads. Once the pairs are on
+    * the driver, the returned plan reads only `df`, so they are
+    * unpersisted there; the distributed route keeps them, since its
+    * plan reads `pairs`.
     */
   def dropNearDuplicates(
       df: DataFrame, idCol: String, pairs: DataFrame,
       aCol: String = "id_a", bCol: String = "id_b",
-      collectLimit: Int = 1 << 18, assumeCanonical: Boolean = false): DataFrame =
+      collectLimit: Int = 1 << 18, assumeCanonical: Boolean = false,
+      release: Seq[DataFrame] = Nil): DataFrame =
     probeLocalPairs(pairs, aCol, bCol, collectLimit, assumeCanonical) match {
       case Some(head) =>
+        release.foreach(_.unpersist(blocking = false))
         val idType = pairs.schema(aCol).dataType
         val comp = unionFindMap(head, idOrdering(idType))
         val losers = comp.iterator.collect { case (id, c) if id != c => id }.toSeq

@@ -85,7 +85,9 @@ object Connectors {
         if (contentType.contains("json")) "json"
         else if (contentType.contains("csv")) "csv"
         else "json"
-      val dir = spoolDir.getOrElse(Files.createTempDirectory("graft_http"))
+      // the spool outlives this call (Spark reads it lazily): the
+      // shared JVM-lifetime temp base deletes it at exit
+      val dir = spoolDir.getOrElse(graft.LocalFs.tempDir("graft_http").toPath)
       val spool = dir.resolve(s"payload.$fmt")
       Files.write(spool, resp.body())
       Readers.read(spark, spool.toString, fmt)

@@ -10,7 +10,7 @@ class EngineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val csvPath = {
-    val dir = Files.createTempDirectory("graft_engine")
+    val dir = graft.TestDirs.create("graft_engine")
     val p = dir.resolve("t.csv").toString
     Writers.write(Seq(
       (1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0), (4, null, 40.0)
@@ -31,7 +31,7 @@ class EngineSpec extends AnyFunSuite {
     assert(p1.totalCount == 4L)
     // multi-file input: one file counted, scaled by total bytes —
     // uniform rows, so the estimate lands on the exact count
-    val dir = Files.createTempDirectory("graft_engine_multi")
+    val dir = graft.TestDirs.create("graft_engine_multi")
     val p = dir.resolve("m.csv").toString
     Writers.write((1 to 400).map(i => (1000 + i, "xx")).toDF("id", "s")
       .repartition(4), p, "csv")
@@ -52,7 +52,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("applyTransforms + exportToFile round-trip") {
-    val dir = Files.createTempDirectory("graft_engine_out")
+    val dir = graft.TestDirs.create("graft_engine_out")
     val out = dir.resolve("out").toString
     Engine.exportToFile(spark, csvPath, "csv",
       Seq(FilterRows("v >= 20"), AddDerivedColumn("half", "v / 2")),

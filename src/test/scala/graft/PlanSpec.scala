@@ -231,7 +231,7 @@ class PlanSpec extends AnyFunSuite {
     val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
     val query = vecs.filter(col("vec_id") === 0)
       .head().getAs[scala.collection.Seq[Float]]("embedding").toArray
-    val path = java.nio.file.Files.createTempDirectory("graft_lshplan")
+    val path = graft.TestDirs.create("graft_lshplan")
       .resolve("idx").toString
     operators.AnnIndex.build(vecs, "vec_id", "embedding", path,
       operators.AnnIndex.Raw, operators.AnnIndex.Lsh(numPlanes = 8))

@@ -113,7 +113,7 @@ class RetryIdempotenceSpec extends AnyFunSuite {
   test("CorpusIngest.ingestBatch: task failures inside the append job " +
       "leave the lake exactly-once (job-commit discipline)") {
     import graft.streaming.CorpusIngest
-    val dir = java.nio.file.Files.createTempDirectory("graft_retry_lake")
+    val dir = graft.TestDirs.create("graft_retry_lake")
     val lakeDir = dir.resolve("lake").toString
     val gate = (c: org.apache.spark.sql.Column) =>
       graft.functions.TextFunctions.gopherFailReason(
@@ -133,8 +133,8 @@ class RetryIdempotenceSpec extends AnyFunSuite {
       "corrupt or double-count the running aggregate") {
     import graft.operators.IncrementalAgg
     import graft.operators.IncrementalAgg._
-    val state = java.nio.file.Files
-      .createTempDirectory("graft_retry_incr").toString
+    val state = graft.TestDirs
+      .create("graft_retry_incr").toString
     val data = spark.range(0, 1000).select(
       (col("id") % 5).cast("string").as("g"), col("id").as("n"))
       .repartition(4)

@@ -59,8 +59,8 @@ class FreqFunctionsSpec extends AnyFunSuite {
     val rows = data.zipWithIndex.map { case (v, i) =>
       (i.toLong, if (i % 2 == 0) "web" else "books", v) }
     val df = rows.toDF("id", "source", "domain")
-    val state = java.nio.file.Files
-      .createTempDirectory("graft_freq_incr").toString
+    val state = graft.TestDirs
+      .create("graft_freq_incr").toString
     val ms = Seq(Count("rows"), FrequentItems("domain", 2, "top_domains"))
     fit(df.filter($"id" % 3 === 0), Seq("source"), ms, state, "b0")
     append(state, df.filter($"id" % 3 === 1), "b1")

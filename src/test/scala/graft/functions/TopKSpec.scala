@@ -93,7 +93,7 @@ class TopKSpec extends AnyFunSuite {
     val vecs = (0L until 400L).map(i =>
       (i, Array.fill(16)(rnd.nextFloat() * 2 - 1))).toDF("vec_id", "embedding")
     val queries = vecs.filter($"vec_id" < 3)
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivfjoin").toString
+    val idx = graft.TestDirs.create("graft_ivfjoin").toString
     AnnIndex.build(vecs, "vec_id", "embedding", idx, AnnIndex.Raw,
       AnnIndex.Ivf(nlist = 4, maxIter = 3, initMode = "random"))
     def join(nprobe: Int) = AnnIndex.searchJoin(spark, idx,

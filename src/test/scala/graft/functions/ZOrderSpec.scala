@@ -43,7 +43,7 @@ class ZOrderSpec extends AnyFunSuite {
     def bitrev9(i: Int): Int =
       (0 until 9).map(b => ((i >> b) & 1) << (8 - b)).sum
     def mkLake(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+      val dir = graft.TestDirs.create("graft_zorder").toString
       val lake = s"$dir/lake"
       // two INDEPENDENT uniform dimensions: doc_id ascending, n_chars
       // the bit-reversal permutation (uncorrelated with doc_id)
@@ -102,7 +102,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("compactLake zorder: an all-null cluster column raises naming it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_null").toString
+    val dir = graft.TestDirs.create("graft_zorder_null").toString
     val lake = s"$dir/lake"
     val docs = (0 until 64).map(i => (i.toLong, s"doc $i"))
       .toDF("doc_id", "text")

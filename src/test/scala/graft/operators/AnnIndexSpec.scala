@@ -25,7 +25,7 @@ class AnnIndexSpec extends AnyFunSuite {
     randVecs(n, seed).toDF("id", "vec")
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_ann").toString
+    graft.TestDirs.create("graft_ann").toString
 
   private val query = randVecs(1, 99L).head._2.map(_.toFloat).toArray
 

@@ -25,7 +25,7 @@ class AnnTuneSpec extends AnyFunSuite {
   }
 
   private def tmp(pfx: String): String =
-    java.nio.file.Files.createTempDirectory(pfx).toString
+    graft.TestDirs.create(pfx).toString
 
   /** A Raw × Ivf(16) index of `df`: the raw-IVF layout. */
   private def rawIvf(df: org.apache.spark.sql.DataFrame, pfx: String): String = {

@@ -20,7 +20,7 @@ class BqSpec extends AnyFunSuite {
     randVecs(n, seed).toDF("id", "vec")
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_bq").toString
+    graft.TestDirs.create("graft_bq").toString
 
   private def encode(df: org.apache.spark.sql.DataFrame, model: Bq.BqModel) =
     df.withColumn("_code", AnnIndex.Bq(model).encode($"vec"))

@@ -76,7 +76,7 @@ class DedupSpec extends AnyFunSuite {
   test("session stageDir default engages: stages write parquet, same result") {
     val plain = Dedup.ngramJaccardPairs(corpus, "id", "text", threshold = 0.3)
       .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
-    val base = java.nio.file.Files.createTempDirectory("graft_stagedef")
+    val base = graft.TestDirs.create("graft_stagedef")
     spark.conf.set(Dedup.StageDirConf, base.toString)
     try {
       val staged = Dedup.ngramJaccardPairs(corpus, "id", "text", threshold = 0.3)
@@ -327,7 +327,7 @@ class DedupSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val plain = Dedup.spanDuplicateIds(docs, "doc_id", "text", spanTokens = 4)
       .as[Long].collect().sorted.toSeq
-    val base = java.nio.file.Files.createTempDirectory("graft_spanstage")
+    val base = graft.TestDirs.create("graft_spanstage")
     spark.conf.set(Dedup.StageDirConf, base.toString)
     try {
       val staged = Dedup.spanDuplicateIds(docs, "doc_id", "text", spanTokens = 4)

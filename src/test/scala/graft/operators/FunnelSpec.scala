@@ -161,7 +161,7 @@ class FunnelSpec extends AnyFunSuite {
   }
 
   test("one-scan plans exactly one source scan; chained plans one per stage") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel_plan")
+    val dir = graft.TestDirs.create("graft_funnel_plan")
     events.write.parquet(dir.resolve("events").toString)
     val src = spark.read.parquet(dir.resolve("events").toString)
     def scans(df: org.apache.spark.sql.DataFrame): Int =

@@ -12,7 +12,7 @@ class IncrementalAggSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_incr_spec").toString
+    graft.TestDirs.create("graft_incr_spec").toString
 
   private def corpus: DataFrame = Seq(
     ("a", 1L, "2.50", "x"), ("a", 2L, "1.25", "m"), ("b", 3L, "9.00", "z"),

@@ -67,7 +67,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   test("foreachBatch streaming dedup: each microbatch dedups against the growing corpus") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr_stream")
+    val dir = graft.TestDirs.create("graft_incr_stream")
     val corpusDir = dir.resolve("corpus").toString
     corpus.write.parquet(corpusDir)
 

@@ -284,7 +284,7 @@ class LangIdSpec extends AnyFunSuite {
   }
 
   test("save/load roundtrip; lang_id_train + lang_id pipeline nodes wire the classifier") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_langid")
+    val dir = graft.TestDirs.create("graft_langid")
     val modelPath = dir.resolve("model").toString
     // roundtrip preserves the model exactly
     LangId.save(spark, model, modelPath)

@@ -20,7 +20,7 @@ class PqSpec extends AnyFunSuite {
     randVecs(n, seed).toDF("id", "vec")
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_pq").toString
+    graft.TestDirs.create("graft_pq").toString
 
   private def index(df: org.apache.spark.sql.DataFrame, model: Pq.PqModel,
       coarse: AnnIndex.Coarse = AnnIndex.Flat): String = {

@@ -161,7 +161,7 @@ class QualityClassifierSpec extends AnyFunSuite {
   }
 
   test("quality_train/quality_label/quality_filter pipeline nodes wire the classifier") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_qc_nodes")
+    val dir = graft.TestDirs.create("graft_qc_nodes")
     val trainPq = dir.resolve("train").toString
     graft.sources.Writers.write(
       corpus().select($"id", $"truth", $"text"), trainPq, "parquet")
@@ -217,7 +217,7 @@ class QualityClassifierSpec extends AnyFunSuite {
     val df = corpus()
     val model = QualityClassifier.selfTrain(df, "text",
       loQuantile = 0.3, hiQuantile = 0.7, buckets = 2048)
-    val path = java.nio.file.Files.createTempDirectory("graft_qc").toString
+    val path = graft.TestDirs.create("graft_qc").toString
     LangId.save(spark, model, path)
     val loaded = LangId.load(spark, path)
     val a = df.select(QualityClassifier.qualityLabel($"text", model)).collect()

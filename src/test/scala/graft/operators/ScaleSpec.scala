@@ -87,7 +87,7 @@ class ScaleSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "aa bb cc dd ee ff"), (2L, "aa bb cc dd ee ff"),
       (3L, "zz yy xx ww vv uu")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stage").resolve("sig").toString
+    val dir = graft.TestDirs.create("graft_stage").resolve("sig").toString
     val staged = Dedup.minHashNearDups(docs, "doc_id", "text",
         threshold = 1.0, stageDir = Some(dir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -144,7 +144,7 @@ class ScaleSpec extends AnyFunSuite {
     val docs = (1 to 300).map(i =>
       (i.toLong, if (i % 10 == 0) "de" else "en", (i % 29 + 1).toLong))
       .toDF("doc_id", "lang", "n_tokens")
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards")
+    val dir = graft.TestDirs.create("graft_shards")
       .resolve("out").toString
     Writers.writeTokenShards(docs, dir, "lang", "doc_id", "n_tokens",
       budget = 128, bucketWidth = 32)

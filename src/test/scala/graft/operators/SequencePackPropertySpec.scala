@@ -120,7 +120,7 @@ class SequencePackPropertySpec extends AnyFunSuite {
         else "the cat sat on the mat")
     }.toDF("doc_id", "lang", "text")
     val merges = BpeTrain.train(docs, "text", numMerges = 30)
-    val out = java.nio.file.Files.createTempDirectory("graft_shards_bpe").toString
+    val out = graft.TestDirs.create("graft_shards_bpe").toString
     graft.sources.Writers.writeTokenShardsBpe(docs, out,
       "lang", "doc_id", "text", merges, budget = 60L, bucketWidth = 7L)
     val back = spark.read.parquet(out)

@@ -19,7 +19,7 @@ class SimilaritySpec extends AnyFunSuite {
   private val q = Array(1.0f, 0.0f, 0.0f, 0.0f)
 
   private def tmp(pfx: String): String =
-    java.nio.file.Files.createTempDirectory(pfx).resolve("idx").toString
+    graft.TestDirs.create(pfx).resolve("idx").toString
 
   /** A Raw index (every build column kept) at a fresh path. */
   private def raw(df: org.apache.spark.sql.DataFrame, coarse: AnnIndex.Coarse,
@@ -516,7 +516,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("a directory without its sidecar raises naming it: LSH and IVF") {
     // an LSH or IVF index is an AnnIndex: probing or appending to a
     // directory without its sidecars raises naming the directory
-    val empty = java.nio.file.Files.createTempDirectory("graft_nosidecar").toString
+    val empty = graft.TestDirs.create("graft_nosidecar").toString
     val probe = intercept[IllegalArgumentException](search(empty, vecs, q, 3, nprobe = 1))
     assert(probe.getMessage.contains(empty), probe.getMessage)
     val app = intercept[IllegalArgumentException](

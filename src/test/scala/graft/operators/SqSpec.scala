@@ -20,7 +20,7 @@ class SqSpec extends AnyFunSuite {
     randVecs(n, seed).toDF("id", "vec")
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_sq").toString
+    graft.TestDirs.create("graft_sq").toString
 
   private def encode(df: org.apache.spark.sql.DataFrame, model: Sq.SqModel) =
     df.withColumn("_code", AnnIndex.Sq8(model).encode($"vec"))

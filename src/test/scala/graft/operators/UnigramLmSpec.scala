@@ -92,7 +92,7 @@ class UnigramLmSpec extends AnyFunSuite {
 
   test("save/load roundtrip preserves encode behavior exactly") {
     val m = model()
-    val path = java.nio.file.Files.createTempDirectory("graft_uni").toString + "/m"
+    val path = graft.TestDirs.create("graft_uni").toString + "/m"
     UnigramLm.save(spark, m, path)
     val loaded = UnigramLm.load(spark, path)
     val words = docs.flatMap(_.split(" ")).distinct

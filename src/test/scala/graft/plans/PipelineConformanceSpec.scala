@@ -1,6 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.Writers
@@ -26,7 +25,7 @@ class PipelineConformanceSpec extends AnyFunSuite {
       path, "csv")
 
   test("a pipeline_service.export_json document runs node-for-node unchanged") {
-    val dir = Files.createTempDirectory("graft_conform")
+    val dir = graft.TestDirs.create("graft_conform")
     val inA = dir.resolve("batch_a.csv").toString
     val inB = dir.resolve("batch_b.csv").toString
     val out = dir.resolve("out").toString

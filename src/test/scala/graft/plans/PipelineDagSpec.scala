@@ -71,7 +71,7 @@ class PipelineDagSpec extends AnyFunSuite {
   }
 
   test("executeResumable: committed sink never re-fires, pending sink completes") {
-    val state = java.nio.file.Files.createTempDirectory("graft_dag_state").toString
+    val state = graft.TestDirs.create("graft_dag_state").toString
     val okWrites = new java.util.concurrent.atomic.AtomicInteger(0)
     val badWrites = new java.util.concurrent.atomic.AtomicInteger(0)
     var failing = true
@@ -103,7 +103,7 @@ class PipelineDagSpec extends AnyFunSuite {
   }
 
   test("executeResumable: a staged node cuts upstream recompute and re-fires") {
-    val state = java.nio.file.Files.createTempDirectory("graft_dag_state").toString
+    val state = graft.TestDirs.create("graft_dag_state").toString
     val sourceReads = new java.util.concurrent.atomic.AtomicInteger(0)
     var failing = true
     def nodes = Seq(
@@ -134,7 +134,7 @@ class PipelineDagSpec extends AnyFunSuite {
   }
 
   test("executeResumable: an unstaged HttpCall re-runs on resume; a staged one does not") {
-    val state = java.nio.file.Files.createTempDirectory("graft_dag_state").toString
+    val state = graft.TestDirs.create("graft_dag_state").toString
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     var failing = true
     def nodes(stage: Boolean) = Seq(
@@ -160,7 +160,7 @@ class PipelineDagSpec extends AnyFunSuite {
     assert(calls.get == 2, "unstaged HttpCall must re-run on resume")
 
     // staged variant in a fresh state dir: second run reads the stage
-    val state2 = java.nio.file.Files.createTempDirectory("graft_dag_state").toString
+    val state2 = graft.TestDirs.create("graft_dag_state").toString
     failing = true
     intercept[IllegalStateException] {
       executeResumable(spark, nodes(true), edges, state2, stageNodes = Set("http"))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.{col, explode}
 import graft.TestSpark
@@ -11,7 +10,7 @@ class PipelineJsonSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("a reference-format pipeline JSON parses and runs end-to-end") {
-    val dir = Files.createTempDirectory("graft_pj")
+    val dir = graft.TestDirs.create("graft_pj")
     val in = dir.resolve("in.csv").toString
     val out = dir.resolve("out").toString
     Writers.write(Seq(
@@ -53,7 +52,7 @@ class PipelineJsonSpec extends AnyFunSuite {
   }
 
   test("incremental_aggregate node folds the run's batch; re-runs never double-count") {
-    val dir = Files.createTempDirectory("graft_pj_incr")
+    val dir = graft.TestDirs.create("graft_pj_incr")
     val in = dir.resolve("in.csv").toString
     val state = dir.resolve("state").toString
     Writers.write(Seq(
@@ -138,7 +137,7 @@ class PipelineJsonSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val dir = Files.createTempDirectory("graft_wh_json")
+      val dir = graft.TestDirs.create("graft_wh_json")
       val in = dir.resolve("in.csv").toString
       Writers.write(Seq((1, "a"), (2, "b")).toDF("id", "s").coalesce(1), in, "csv")
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/hook"
@@ -177,7 +176,7 @@ class PipelineJsonSpec extends AnyFunSuite {
       "<methodResponse><params><param><value><int>77</int></value></param></params></methodResponse>")
     server.start()
     try {
-      val dir = Files.createTempDirectory("graft_odoo_json")
+      val dir = graft.TestDirs.create("graft_odoo_json")
       val in = dir.resolve("in.csv").toString
       Writers.write(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "s").coalesce(1), in, "csv")
       val url = s"http://127.0.0.1:${server.getAddress.getPort}"
@@ -224,7 +223,7 @@ class PipelineJsonSpec extends AnyFunSuite {
     server.start()
     try {
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/api"
-      val outDir = Files.createTempDirectory("graft_ci").resolve("out").toString
+      val outDir = graft.TestDirs.create("graft_ci").resolve("out").toString
       val res = PipelineJson.run(spark, s"""{
         "nodes": [
           {"id": "n1", "type": "connector_input", "data": {"config": {
@@ -260,7 +259,7 @@ class PipelineJsonSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val dir = Files.createTempDirectory("graft_ih")
+      val dir = graft.TestDirs.create("graft_ih")
       val in = dir.resolve("in.csv").toString
       val out = dir.resolve("out").toString
       Writers.write(Seq((1, "a"), (2, "b")).toDF("id", "s").coalesce(1), in, "csv")
@@ -327,7 +326,7 @@ class PipelineJsonSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val dir = Files.createTempDirectory("graft_cap")
+      val dir = graft.TestDirs.create("graft_cap")
       val in = dir.resolve("big.csv").toString
       Writers.write((1 to 50).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
         in, "csv")
@@ -365,7 +364,7 @@ class PipelineJsonSpec extends AnyFunSuite {
     // engine.py:196 reads config.get("type", "csv") — a reference-
     // authored pipeline must not fall into the file branch with an
     // empty path and a misleading error.
-    val dir = Files.createTempDirectory("graft_ct")
+    val dir = graft.TestDirs.create("graft_ct")
     val in = dir.resolve("in.csv").toString
     Writers.write(Seq((1, "a")).toDF("id", "s").coalesce(1), in, "csv")
     val res = PipelineJson.run(spark, s"""{
@@ -408,12 +407,12 @@ class PipelineJsonSpec extends AnyFunSuite {
   }
 
   test("sample node: uniform per-group, weighted, and stratified shapes from JSON") {
-    val dir = Files.createTempDirectory("graft_pj_sample")
+    val dir = graft.TestDirs.create("graft_pj_sample")
     val in = dir.resolve("docs").toString
     (0L until 300L).map(i => (i, s"g${i % 3}", (i % 7) + 1))
       .toDF("doc_id", "grp", "w").write.parquet(in)
     def run(config: String) = {
-      val out = Files.createTempDirectory("graft_pj_sample_out").resolve("o").toString
+      val out = graft.TestDirs.create("graft_pj_sample_out").resolve("o").toString
       PipelineJson.run(spark, s"""{
         "nodes": [
           {"id": "n1", "type": "file_input",
@@ -467,7 +466,7 @@ class PipelineJsonSpec extends AnyFunSuite {
   /** Run a one-source one-curation-node pipeline over `df`. */
   private def runNode(df: org.apache.spark.sql.DataFrame,
       nodeType: String, config: String): org.apache.spark.sql.DataFrame = {
-    val dir = Files.createTempDirectory("graft_pj_cur")
+    val dir = graft.TestDirs.create("graft_pj_cur")
     val in = dir.resolve("in.parquet").toString
     df.write.parquet(in)
     PipelineJson.run(spark, s"""{
@@ -515,6 +514,33 @@ class PipelineJsonSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(viaJson == direct)
     assert(viaJson == Set(1L, 3L))
+  }
+
+  test("minhash_dedup node releases its shingle stage once its pairs are on the driver") {
+    val dir = graft.TestDirs.create("graft_pj_mh")
+    val in = dir.resolve("in.parquet").toString
+    val out = dir.resolve("out").toString
+    Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again today"),
+      (2L, "the quick brown fox jumps over the lazy dog again and again today"),
+      (3L, "completely different text about maritime shipping schedules and cargo")
+    ).toDF("doc_id", "text").write.parquet(in)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val res = PipelineJson.run(spark, s"""{
+      "nodes": [
+        {"id": "src", "type": "file_input",
+         "data": {"config": {"path": "$in", "format": "parquet"}}},
+        {"id": "mh", "type": "minhash_dedup",
+         "data": {"config": {"id_column": "doc_id", "column": "text"}}},
+        {"id": "sink", "type": "file_output",
+         "data": {"config": {"path": "$out", "format": "parquet"}}}
+      ],
+      "edges": [{"source": "src", "target": "mh"}, {"source": "mh", "target": "sink"}]
+    }""")
+    assert(res.nodeLog.contains("sink" -> "sink ok"))
+    assert(sc.getPersistentRDDs.size == before)
+    assert(spark.read.parquet(out).select("doc_id").as[Long].collect().toSet == Set(1L, 3L))
   }
 
   test("span_dedup node: scrub (default) and drop modes match the operators") {
@@ -639,7 +665,7 @@ class PipelineJsonSpec extends AnyFunSuite {
       secondary: org.apache.spark.sql.DataFrame, nodeType: String,
       config: String, swapEdges: Boolean = false,
       secondaryId: String = "sec"): org.apache.spark.sql.DataFrame = {
-    val dir = Files.createTempDirectory("graft_pj_cur2")
+    val dir = graft.TestDirs.create("graft_pj_cur2")
     val inA = dir.resolve("a.parquet").toString
     val inB = dir.resolve("b.parquet").toString
     primary.write.parquet(inA)

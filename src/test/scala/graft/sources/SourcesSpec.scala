@@ -36,7 +36,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("csv/json/parquet/orc round-trip through Writers and Readers") {
     val df = Seq((1, "a"), (2, "b")).toDF("id", "s")
-    val dir = Files.createTempDirectory("graft_rt")
+    val dir = graft.TestDirs.create("graft_rt")
     for (fmt <- Seq("csv", "json", "parquet", "orc")) {
       val p = dir.resolve(fmt).toString
       Writers.write(df, p, fmt)
@@ -47,7 +47,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("pdf format reads files as (path, length, text) via binaryFile") {
-    val dir = Files.createTempDirectory("graft_pdf")
+    val dir = graft.TestDirs.create("graft_pdf")
     Files.write(dir.resolve("a.pdf"),
       graft.functions.PdfText.minimalPdf("alpha document"))
     Files.write(dir.resolve("b.pdf"),
@@ -70,7 +70,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("inferSchema and detectFormat") {
-    val dir = Files.createTempDirectory("graft_schema")
+    val dir = graft.TestDirs.create("graft_schema")
     val p = dir.resolve("t.csv").toString
     Writers.write(Seq((1, "a")).toDF("id", "s"), p, "csv")
     val fields = Readers.inferSchema(spark, p, "csv")
@@ -88,7 +88,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("xml reads real rows (reference silently misparses xml as csv)") {
-    val dir = Files.createTempDirectory("graft_xml")
+    val dir = graft.TestDirs.create("graft_xml")
     val p = dir.resolve("data.xml")
     Files.writeString(p,
       """<?xml version="1.0"?>
@@ -149,7 +149,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("FileConnector test() and read()") {
-    val dir = Files.createTempDirectory("graft_fc")
+    val dir = graft.TestDirs.create("graft_fc")
     val p = dir.resolve("c.csv").toString
     Writers.write(Seq((1, "a")).toDF("id", "s"), p, "csv")
     val c = Connectors.FileConnector(p, "csv")

@@ -149,7 +149,7 @@ class XlsReaderSpec extends AnyFunSuite {
   }
 
   private def writeFixture(stream: Array[Byte]): String = {
-    val p = Files.createTempDirectory("graft_xls").resolve("t.xls")
+    val p = graft.TestDirs.create("graft_xls").resolve("t.xls")
     Files.write(p, cfb(stream))
     p.toString
   }
@@ -271,7 +271,7 @@ class XlsReaderSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("BIFF"), e.getMessage)
 
-    val p = Files.createTempDirectory("graft_xls").resolve("fake.xls")
+    val p = graft.TestDirs.create("graft_xls").resolve("fake.xls")
     Files.write(p, "id,s\n1,a\n".getBytes)
     val e2 = intercept[IllegalArgumentException] { XlsReader.read(spark, p.toString) }
     assert(e2.getMessage.contains("compound"), e2.getMessage)

@@ -18,7 +18,7 @@ class XlsxReaderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("graft_xlsx")
+    val dir = graft.TestDirs.create("graft_xlsx")
     val path = dir.resolve("book.xlsx")
     val zos = new ZipOutputStream(Files.newOutputStream(path))
     def put(name: String, content: String): Unit = {
@@ -133,7 +133,7 @@ class XlsxReaderSpec extends AnyFunSuite {
   }
 
   test("data rows wider than the header keep their cells under colN names") {
-    val dir = Files.createTempDirectory("graft_xlsx3")
+    val dir = graft.TestDirs.create("graft_xlsx3")
     val path = dir.resolve("w.xlsx")
     val zos = new ZipOutputStream(Files.newOutputStream(path))
     zos.putNextEntry(new ZipEntry("xl/worksheets/sheet1.xml"))
@@ -158,7 +158,7 @@ class XlsxReaderSpec extends AnyFunSuite {
   }
 
   test("mixed numeric column degrades to double; mixed anything to string") {
-    val dir = Files.createTempDirectory("graft_xlsx2")
+    val dir = graft.TestDirs.create("graft_xlsx2")
     val path = dir.resolve("m.xlsx")
     val zos = new ZipOutputStream(Files.newOutputStream(path))
     def put(name: String, content: String): Unit = {

@@ -39,7 +39,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   test("an unreadable (corrupt) lake PROPAGATES instead of silently re-admitting dups") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_bad")
+    val dir = graft.TestDirs.create("graft_ingest_bad")
     val lakeDir = dir.resolve("lake")
     java.nio.file.Files.createDirectories(lakeDir)
     java.nio.file.Files.writeString(lakeDir.resolve("junk.parquet"), "not parquet")
@@ -64,7 +64,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("lake probe reads ONLY the materialized _fp column (schema-pruned)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_fp")
+    val dir = graft.TestDirs.create("graft_ingest_fp")
     val lakeDir = dir.resolve("lake").toString
     Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta theta"))
       .toDF("doc_id", "text")
@@ -89,7 +89,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("a legacy lake without _fp stays unstamped (no mixed schema) and still dedups") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_legacy")
+    val dir = graft.TestDirs.create("graft_ingest_legacy")
     val lakeDir = dir.resolve("lake").toString
     Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text").write.parquet(lakeDir)
 
@@ -106,7 +106,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("exactly-once: a replayed batch id is skipped and the lake does not grow") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_eo")
+    val dir = graft.TestDirs.create("graft_ingest_eo")
     val lakeDir = dir.resolve("lake").toString
     val batch = Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta eta theta"))
       .toDF("doc_id", "text")
@@ -133,7 +133,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   test("a fresh-checkpoint stream does not skip batches that reuse old batch ids") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_scope")
+    val dir = graft.TestDirs.create("graft_ingest_scope")
     val lakeDir = dir.resolve("lake").toString
 
     // incarnation 1, checkpoint A: its batch 0 ingests doc 1
@@ -159,7 +159,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("first-batch retry self-heals a lake dir holding only crash debris") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_heal")
+    val dir = graft.TestDirs.create("graft_ingest_heal")
     val lakeDir = dir.resolve("lake")
     // a crashed first append leaves the dir with only hidden entries
     java.nio.file.Files.createDirectories(lakeDir.resolve("_temporary"))
@@ -174,7 +174,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("compactLake merges microbatch small files, keeps rows, markers and dedup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact")
+    val dir = graft.TestDirs.create("graft_compact")
     val lakeDir = dir.resolve("lake").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     // three committed microbatches → three parquet file sets
@@ -212,7 +212,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("compactLake references already-big files in place and only rewrites the small tail") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_big")
+    val dir = graft.TestDirs.create("graft_compact_big")
     val lakeDir = dir.resolve("lake").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     // one BIG batch (file tens of KB) + two tiny ones
@@ -284,7 +284,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("compactLake clusterBy rewrites into disjoint key ranges parquet stats can prune") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_cluster")
+    val dir = graft.TestDirs.create("graft_compact_cluster")
     val lakeDir = dir.resolve("lake").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     // two batches with fully INTERLEAVED id ranges: before clustering,
@@ -336,7 +336,7 @@ class CorpusIngestSpec extends AnyFunSuite {
 
   test("compactLake installs by manifest flip: an interleaved reader survives, " +
       "ingestion continues into the live generation, stale layouts retire") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_manifest")
+    val dir = graft.TestDirs.create("graft_compact_manifest")
     val lakeDir = dir.resolve("lake").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     CorpusIngest.ingestBatch(batch((1L, "alpha beta gamma delta")), 0L,
@@ -404,7 +404,7 @@ class CorpusIngestSpec extends AnyFunSuite {
 
   test("online compaction: appends landing DURING a compact survive the flip, " +
       "exactly-once markers intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_online")
+    val dir = graft.TestDirs.create("graft_compact_online")
     val lakeDir = dir.resolve("lake").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     CorpusIngest.ingestBatch(batch((1L, "alpha beta gamma delta")), 0L,
@@ -444,7 +444,7 @@ class CorpusIngestSpec extends AnyFunSuite {
       "lost nor duplicated") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_stream")
+    val dir = graft.TestDirs.create("graft_compact_stream")
     val lakeDir = dir.resolve("lake").toString
 
     val input = MemoryStream[(Long, String)]
@@ -479,7 +479,7 @@ class CorpusIngestSpec extends AnyFunSuite {
 
   test("concurrent compactors: exactly one wins the generation, the loser " +
       "raises, no data is lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_race")
+    val dir = graft.TestDirs.create("graft_compact_race")
     val lakeDir = dir.resolve("lake").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     CorpusIngest.ingestBatch(batch((1L, "alpha beta gamma delta")), 0L,
@@ -516,7 +516,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     // plain Set[Long] of admitted doc ids
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed)
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_prop_$seed")
+      val dir = graft.TestDirs.create(s"graft_prop_$seed")
       val lakeDir = dir.resolve("lake").toString
       var nextId = 0L
       var admitted = Set.empty[Long]
@@ -559,7 +559,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("compactLake refuses hive-partitioned layouts instead of dropping partition columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_hive")
+    val dir = graft.TestDirs.create("graft_compact_hive")
     val lakeDir = dir.resolve("lake").toString
     Seq((1L, "a", "en"), (2L, "b", "de")).toDF("doc_id", "text", "lang")
       .write.partitionBy("lang").parquet(lakeDir)
@@ -572,7 +572,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   test("compactLake refuses partition-style directories NESTED below the lake root") {
     // lake/sub/lang=en/… — the root's children carry no '=', but
     // flattening would still erase the nested partition column
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_hive_nested")
+    val dir = graft.TestDirs.create("graft_compact_hive_nested")
     val lakeDir = dir.resolve("lake").toString
     Seq((1L, "a", "en"), (2L, "b", "de")).toDF("doc_id", "text", "lang")
       .write.partitionBy("lang").parquet(dir.resolve("lake/sub").toString)
@@ -585,7 +585,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   test("ingestStream: lake starts empty, grows, and later batches dedup against it") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest")
+    val dir = graft.TestDirs.create("graft_ingest")
     val lakeDir = dir.resolve("lake").toString
 
     val input = MemoryStream[(Long, String)]
@@ -610,7 +610,7 @@ class CorpusIngestSpec extends AnyFunSuite {
 
   test("multi-writer appends: isolated per-batch write areas, flat-root " +
       "interop preserved, staged-crash debris healed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_multi_writer")
+    val dir = graft.TestDirs.create("graft_multi_writer")
     val lakeDir = dir.resolve("lake").toString
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     def root = new java.io.File(lakeDir)

@@ -46,7 +46,7 @@ class EventsStreamSpec extends AnyFunSuite {
   test("file-source stream: read parquet dir, window, write parquet sink") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = graft.TestDirs.create("graft_stream")
     val srcDir = dir.resolve("src").toString
     val outDir = dir.resolve("out").toString
     val ckDir = dir.resolve("ck").toString

@@ -12,7 +12,7 @@ class GenerationsSpec extends AnyFunSuite {
   private val fs = FileSystem.getLocal(new Configuration())
 
   private def tmpRoot(): Path = fs.makeQualified(new Path(
-    java.nio.file.Files.createTempDirectory("graft_gen").toString))
+    graft.TestDirs.create("graft_gen").toString))
 
   private def touch(p: Path): Path = { fs.create(p, true).close(); fs.makeQualified(p) }
 

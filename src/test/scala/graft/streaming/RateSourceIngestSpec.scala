@@ -1,7 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.functions.TextFunctions
@@ -44,15 +44,25 @@ class RateSourceIngestSpec extends AnyFunSuite {
     try spark.read.parquet(lakeDir).select("doc_id").as[Long].collect().toSeq.sorted
     catch { case _: Exception => Seq.empty } // lake not created yet / torn listing
 
-  private def awaitLakeAtLeast(lakeDir: String, n: Int, timeoutMs: Long): Unit = {
+  /** Waits until the lake holds `n` doc_ids; fails at the deadline, or
+    * as soon as the stream stops, with what the lake and stream show. */
+  private def awaitLakeAtLeast(q: StreamingQuery, lakeDir: String, n: Int,
+      timeoutMs: Long): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    while (lakeIds(lakeDir).size < n && System.currentTimeMillis() < deadline)
+    var seen = lakeIds(lakeDir).size
+    while (seen < n) {
+      if (System.currentTimeMillis() >= deadline || !q.isActive)
+        fail(s"lake holds $seen doc_ids, wanted $n, after ${timeoutMs / 1000} s " +
+          s"(stream active: ${q.isActive}); exception: " +
+          q.exception.fold("none")(_.toString) + s"; lastProgress: ${q.lastProgress}")
       Thread.sleep(200)
+      seen = lakeIds(lakeDir).size
+    }
   }
 
   test("Kafka-shaped offset source: marker discipline holds across restart " +
       "and forced offset redelivery") {
-    val dir = Files.createTempDirectory("graft_rate_ingest")
+    val dir = graft.TestDirs.create("graft_rate_ingest")
     val lakeDir = dir.resolve("lake").toString
     val ckpt = dir.resolve("ckpt").toString
 
@@ -68,7 +78,7 @@ class RateSourceIngestSpec extends AnyFunSuite {
         .getOrElse(Array.empty)
         .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
     try {
-      awaitLakeAtLeast(lakeDir, 6, timeoutMs = 120000L)
+      awaitLakeAtLeast(q1, lakeDir, 6, timeoutMs = 120000L)
       val deadline = System.currentTimeMillis() + 120000L
       while (commitMarkers().length < 2 && System.currentTimeMillis() < deadline)
         Thread.sleep(100L)
@@ -85,7 +95,7 @@ class RateSourceIngestSpec extends AnyFunSuite {
     assert(commits.last.delete())
 
     val q2 = CorpusIngest.ingestStream(docs(6), lakeDir, ckpt, failReason = gate)
-    try awaitLakeAtLeast(lakeDir, afterPhase1.size + 3, timeoutMs = 120000L)
+    try awaitLakeAtLeast(q2, lakeDir, afterPhase1.size + 3, timeoutMs = 120000L)
     finally q2.stop()
     val finalIds = lakeIds(lakeDir)
 
