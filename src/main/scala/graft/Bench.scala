@@ -286,7 +286,7 @@ object Bench {
       if (elapsedSec < budgetSec * 0.4) {
         // a failing query is recorded by its measured iteration; a fatal
         // error (OOM, interrupt) stops the run instead of posing as a timing
-        try allQueries(name)(spark, sfDir).count()
+        try materialise(allQueries(name)(spark, sfDir))
         catch { case scala.util.control.NonFatal(_) => () }
         spark.catalog.clearCache()
       }
@@ -300,7 +300,7 @@ object Bench {
     // slow-phase window machine-detectable in BENCH.json itself
     // (canary_end >> canary_start, or both >> the ~0.1-0.2 s a
     // healthy box reads) without touching any measured entry.
-    val canaryQuery = () => { SparkEntry.queries("q1_agg")(spark, sfDir).count(); () }
+    val canaryQuery = () => materialise(SparkEntry.queries("q1_agg")(spark, sfDir))
     val canaryStart = canarySec(canaryQuery)
     val iter0 = System.nanoTime()
     def iterSec: Double = (System.nanoTime() - iter0) / 1e9
@@ -325,7 +325,7 @@ object Bench {
         // and the totals shrink instead of screaming — exactly how
         // round 7 under-reported four queries broken by a testdata
         // type change
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+        try materialise(fn(spark, sfDir)) catch { case scala.util.control.NonFatal(e) =>
           if (!failed.contains(name)) System.err.println(
             s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
           failed += name
@@ -378,6 +378,13 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n":$ran,$canaries}""")
     spark.stop()
   }
+
+  /** Run every column of `df` to the end: the `noop` sink writes
+    * nothing, but unlike `count()` it keeps every projected expression
+    * in the plan (column pruning under `count()` drops the kernels of a
+    * select-only entry, timing a bare scan). */
+  private[graft] def materialise(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   /** Times the box-weather canary: `run` twice. None when a run throws
     * — a broken canary query fails in milliseconds, and timing that

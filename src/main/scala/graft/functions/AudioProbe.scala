@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,31 +20,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * these fields, not PCM samples. Sample decode remains the marked
   * stub in [[graft.multimodal.Multimodal]].
   */
-case class AudioMeta(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_audio_meta requires BINARY, got ${child.dataType.sql}")
-  override def dataType: DataType = AudioMeta.outType
-  override def prettyName: String = "graft_audio_meta"
-  override def nullable: Boolean = true // parse failure → null struct
-
-  protected override def nullSafeEval(input: Any): Any =
-    AudioMeta.probe(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-         |  graft.functions.AudioMeta.probe($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioMeta =
-    copy(child = newChild)
-}
-
 object AudioMeta {
   val outType: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -169,20 +140,11 @@ object AudioMeta {
     if (v.isNaN || v.isInfinite) -1 else v
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_audio_meta"))) return
-    reg.registerFunction(
-      FunctionIdentifier("graft_audio_meta"),
-      new ExpressionInfo(classOf[AudioMeta].getName, "graft_audio_meta"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_audio_meta takes exactly 1 argument")
-        AudioMeta(children.head)
-      })
-  }
 
-  /** Column API: session-free via the sql-namespace bridge. */
-  def audioMeta(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      AudioMeta(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  /** `graft_audio_meta(binary)`; null for a null input or an unrecognised header. */
+  val Kernel: NativeKernel = NativeKernel("graft_audio_meta", "graft.functions.AudioMeta", "probe",
+    Seq(BinaryType), outType, returnNullable = true)
+
+  /** Column API: session-free. */
+  def audioMeta(c: Column): Column = Kernel.col(c)
 }

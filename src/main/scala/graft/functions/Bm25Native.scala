@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -133,10 +133,19 @@ object Bm25Native {
     ncol(Bm25ContribsExpr(ex(toks), ex(dfs), ex(n), ex(avgdl),
       terms.toIndexedSeq, k1, b))
 
-  def sumOrderedCol(arr: Column): Column = ncol(ArraySumOrderedExpr(ex(arr)))
+  private val Doubles = ArrayType(DoubleType, containsNull = false)
+  /** `graft_array_fsum(arr)` — ordered left-fold sum of array<double>. */
+  val SumOrdered: NativeKernel = NativeKernel("graft_array_fsum",
+    "graft.functions.Bm25Native", "sumOrdered", Seq(Doubles), DoubleType)
+  /** `graft_array_picksum(values, idx)` — sum of `values[idx[i]-1]` in
+    * idx order; idx is 1-based (array_position), 0/null adds 0.0. */
+  val PickSum: NativeKernel = NativeKernel("graft_array_picksum",
+    "graft.functions.Bm25Native", "pickSum",
+    Seq(Doubles, ArrayType(LongType, containsNull = false)), DoubleType)
 
-  def pickSumCol(values: Column, idx: Column): Column =
-    ncol(ArrayPickSumExpr(ex(values), ex(idx)))
+  def sumOrderedCol(arr: Column): Column = SumOrdered.col(arr)
+
+  def pickSumCol(values: Column, idx: Column): Column = PickSum.col(values, idx)
 }
 
 /** `graft_bm25_matchvec(tokens)` → array<double> of 0/1 aligned with
@@ -229,52 +238,4 @@ case class Bm25ContribsExpr(
       newFourth: Expression): Bm25ContribsExpr =
     copy(first = newFirst, second = newSecond, third = newThird,
       fourth = newFourth)
-}
-
-/** `graft_array_fsum(arr)` — ordered left-fold sum of array<double>. */
-case class ArraySumOrderedExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_array_fsum requires ARRAY<DOUBLE>, got ${other.sql}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_array_fsum"
-
-  protected override def nullSafeEval(input: Any): Any =
-    Bm25Native.sumOrdered(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Bm25Native.sumOrdered($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): ArraySumOrderedExpr =
-    copy(child = newChild)
-}
-
-/** `graft_array_picksum(values, idx)` — sum of `values[idx[i]-1]` in
-  * idx order; idx is 1-based (array_position), 0/null adds 0.0.
-  */
-case class ArrayPickSumExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_array_picksum requires (ARRAY<DOUBLE>, ARRAY<BIGINT>), got $other")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_array_picksum"
-
-  protected override def nullSafeEval(values: Any, idx: Any): Any =
-    Bm25Native.pickSum(values.asInstanceOf[ArrayData], idx.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, i) =>
-      s"${ev.value} = graft.functions.Bm25Native.pickSum($v, $i);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrayPickSumExpr =
-    copy(left = newLeft, right = newRight)
 }

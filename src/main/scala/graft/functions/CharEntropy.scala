@@ -3,10 +3,7 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd Shannon character entropy — replaces the
@@ -66,56 +63,9 @@ object CharEntropy {
     JBigDecimal.valueOf(sum, 10).setScale(6, RoundingMode.HALF_UP).doubleValue()
   }
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  /** `graft_char_entropy(text)` → double; null text → 0.0 (the replaced `when`). */
+  val Entropy: NativeKernel = NativeKernel("graft_char_entropy", "graft.functions.CharEntropy",
+    "entropy", Seq(StringType), DoubleType, propagateNull = false)
 
-  def charEntropyCol(text: Column): Column = ncol(CharEntropyExpr(ex(text)))
-
-  /** SQL name `graft_char_entropy(text)` (idempotent, the
-    * TextSignatures.register pattern).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_char_entropy"))) return
-    reg.registerFunction(
-      FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo(classOf[CharEntropyExpr].getName, "graft_char_entropy"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_char_entropy takes exactly 1 argument")
-        CharEntropyExpr(children.head)
-      })
-  }
-}
-
-/** `graft_char_entropy(text)` → double; see [[CharEntropy]]. */
-case class CharEntropyExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_char_entropy requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false // null text → 0.0, the replaced when()
-  override def prettyName: String = "graft_char_entropy"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    CharEntropy.entropy(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val c = child.genCode(ctx)
-    val fin = s"double ${ev.value} = graft.functions.CharEntropy.entropy(" +
-      s"${c.isNull} ? null : ${c.value});"
-    ev.copy(code =
-      code"""
-        ${c.code}
-        $fin""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropyExpr =
-    copy(child = newChild)
+  def charEntropyCol(text: Column): Column = Entropy.col(text)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -54,78 +52,23 @@ object ChunkDocs {
     new GenericArrayData(out)
   }
 
+  /** `graft_chunks(text, width, stride)` → array<struct<chunk_id,
+    * chunk, n_chunk_tokens>>; null text → empty array. */
+  val Chunks: NativeKernel = NativeKernel("graft_chunks", "graft.functions.ChunkDocs", "chunks",
+    Seq(StringType), ArrayType(StructType(Seq(
+      StructField("chunk_id", LongType, nullable = false),
+      StructField("chunk", StringType, nullable = false),
+      StructField("n_chunk_tokens", LongType, nullable = false))), containsNull = false),
+    propagateNull = false)
+
+  def chunksExpr(text: Expression, width: Int, stride: Int): Expression = {
+    require(width >= 1 && stride >= 1,
+      s"chunk width/stride must be >= 1, got ($width, $stride)")
+    Chunks.withConsts(width, stride)(text)
+  }
+
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
 
   def chunksCol(text: Column, width: Int, stride: Int): Column =
-    ncol(ChunksExpr(ex(text), width, stride))
-
-  /** SQL name `graft_chunks(text, width, stride)` (literal ints;
-    * idempotent, the TextSignatures.register pattern).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_chunks"))) return
-    reg.registerFunction(
-      FunctionIdentifier("graft_chunks"),
-      new ExpressionInfo(classOf[ChunksExpr].getName, "graft_chunks"),
-      { children: Seq[Expression] =>
-        require(children.size == 3 && children(1).foldable && children(2).foldable,
-          "graft_chunks(text, width, stride) takes a column and two literal ints")
-        def litInt(e: Expression, what: String): Int = {
-          val v = e.eval()
-          require(v != null, s"graft_chunks: $what must not be NULL")
-          v match {
-            case n: Number => n.intValue
-            case other => throw new IllegalArgumentException(
-              s"graft_chunks: $what must be an integer literal, got " +
-                s"'$other' (${e.dataType.sql}) — write graft_chunks(text, 32, 16), not quoted numbers")
-          }
-        }
-        ChunksExpr(children.head, litInt(children(1), "width"),
-          litInt(children(2), "stride"))
-      })
-  }
-}
-
-/** `graft_chunks(text)` with embedded (width, stride): see [[ChunkDocs]]. */
-case class ChunksExpr(child: Expression, width: Int, stride: Int)
-    extends UnaryExpression {
-  require(width >= 1 && stride >= 1,
-    s"chunk width/stride must be >= 1, got ($width, $stride)")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_chunks requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("chunk_id", LongType, nullable = false),
-    StructField("chunk", StringType, nullable = false),
-    StructField("n_chunk_tokens", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_chunks"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    ChunkDocs.chunks(v.asInstanceOf[UTF8String], width, stride)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val c = child.genCode(ctx)
-    val fin = s"org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = " +
-      s"graft.functions.ChunkDocs.chunks(" +
-      s"${c.isNull} ? null : ${c.value}, $width, $stride);"
-    ev.copy(code =
-      code"""
-        ${c.code}
-        $fin""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ChunksExpr =
-    copy(child = newChild)
+    ncol(chunksExpr(ex(text), width, stride))
 }

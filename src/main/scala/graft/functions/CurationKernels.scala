@@ -4,15 +4,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.CollationSupport
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationSupport}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
@@ -293,15 +287,33 @@ object CurationKernels {
     if (buf eq in) s else UTF8String.fromString(buf)
   }
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
-  def langIdCol(c: Column): Column = ncol(LangIdExpr(ex(c)))
+  // `lower`'s case-mapping choice, read like Spark's `Lower` reads it:
+  // on first use, during planning
+  private val UseICU = NativeCall.ConfFlag(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key)
+  private val CK = "graft.functions.CurationKernels"
+
+  /** [[TextFunctions.langId]]: never null (null text → "und"). */
+  val LangId: NativeKernel = NativeKernel("graft_lang_id", CK, "langId",
+    Seq(StringType), StringType, propagateNull = false)
+  /** [[TextFunctions.gopherFailReason]]: null = passes every rule. */
+  val GopherFailReason: NativeKernel = NativeKernel("graft_gopher_fail_reason", CK,
+    "gopherFailReason", Seq(StringType), StringType, propagateNull = false, returnNullable = true)
+  /** [[TextFunctions.piiRedact]]: null text → null. The card candidates
+    * are an argument ([[LuhnCards.ValidCandidates]] over the same text),
+    * so subexpression elimination computes them once for a row that also
+    * asks [[TextFunctions.cardCount]]. */
+  val PiiRedact: NativeKernel = NativeKernel("graft_pii_redact", CK, "piiRedact",
+    Seq(StringType, ArrayType(StringType, containsNull = false)), StringType)
+
+  def langIdCol(c: Column): Column = LangId.colWith(UseICU)(c)
   def gopherFailReasonCol(c: Column, minTokens: Long, maxTokens: Long,
       minMeanWlen: Double, maxMeanWlen: Double, maxDupWordRatio: Double): Column =
-    ncol(GopherFailReasonExpr(ex(c), minTokens, maxTokens, minMeanWlen, maxMeanWlen,
-      maxDupWordRatio))
+    GopherFailReason.colWith(UseICU, minTokens, maxTokens, minMeanWlen, maxMeanWlen,
+      maxDupWordRatio)(c)
   def piiRedactCol(c: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
     val text = ex(c)
-    ncol(PiiRedactExpr(text, LuhnCandidatesExpr(text)))
+    ncol(PiiRedact(text, LuhnCards.ValidCandidates(text)))
   }
 }
 
@@ -328,95 +340,4 @@ object PiiGate {
   final case class AnyLiteral(literals: String*) extends PiiGate {
     def admits(s: String): Boolean = literals.exists(s.contains)
   }
-}
-
-/** Base of the one-input kernels: codegen'd as one static
-  * [[CurationKernels]] call that takes null text and `useICU` (the
-  * [[TextMetricExpr]] pattern).
-  */
-sealed abstract class CurationKernelExpr extends UnaryExpression {
-  /** `lower`'s case-mapping choice, read like Spark's `Lower` does. */
-  protected lazy val useICU: Boolean = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
-  /** Static call target and trailing arguments after the input. */
-  protected def helper: String
-  protected def extraArgs: String
-  protected def kernel(s: UTF8String): UTF8String
-
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${child.dataType.sql}")
-  override def eval(input: InternalRow): Any =
-    kernel(child.eval(input).asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val call = s"graft.functions.CurationKernels.$helper(" +
-      s"${c.isNull} ? null : ${c.value}$extraArgs)"
-    val javaType = CodeGenerator.javaType(dataType)
-    if (nullable)
-      ev.copy(code = code"""
-        ${c.code}
-        $javaType ${ev.value} = $call;
-        boolean ${ev.isNull} = ${ev.value} == null;""")
-    else
-      ev.copy(code = code"""
-        ${c.code}
-        $javaType ${ev.value} = $call;""", isNull = FalseLiteral)
-  }
-}
-
-/** [[TextFunctions.langId]]: never null (null text → "und"). */
-case class LangIdExpr(child: Expression) extends CurationKernelExpr {
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_lang_id"
-  protected def helper: String = "langId"
-  protected def extraArgs: String = s", $useICU"
-  protected def kernel(s: UTF8String): UTF8String = CurationKernels.langId(s, useICU)
-  override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
-    copy(child = newChild)
-}
-
-/** [[TextFunctions.gopherFailReason]]: null = passes every rule. */
-case class GopherFailReasonExpr(
-    child: Expression, minTokens: Long, maxTokens: Long,
-    minMeanWlen: Double, maxMeanWlen: Double, maxDupWordRatio: Double)
-    extends CurationKernelExpr {
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_gopher_fail_reason"
-  protected def helper: String = "gopherFailReason"
-  private def dbl(d: Double): String =
-    s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(d)}L)"
-  protected def extraArgs: String =
-    s", $useICU, ${minTokens}L, ${maxTokens}L, ${dbl(minMeanWlen)}, ${dbl(maxMeanWlen)}, " +
-      dbl(maxDupWordRatio)
-  protected def kernel(s: UTF8String): UTF8String = CurationKernels.gopherFailReason(
-    s, useICU, minTokens, maxTokens, minMeanWlen, maxMeanWlen, maxDupWordRatio)
-  override protected def withNewChildInternal(newChild: Expression): GopherFailReasonExpr =
-    copy(child = newChild)
-}
-
-/** [[TextFunctions.piiRedact]]: null text → null. The card candidates
-  * are a child ([[LuhnCandidatesExpr]] over the same text), so subexpression
-  * elimination computes them once for a row that also asks
-  * [[TextFunctions.cardCount]].
-  */
-case class PiiRedactExpr(text: Expression, cards: Expression) extends BinaryExpression {
-  override def left: Expression = text
-  override def right: Expression = cards
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_pii_redact"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (text.dataType == StringType && cards.dataType == ArrayType(StringType, containsNull = false))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (STRING, ARRAY<STRING>), got (${text.dataType.sql}, ${cards.dataType.sql})")
-  protected override def nullSafeEval(t: Any, c: Any): Any =
-    CurationKernels.piiRedact(t.asInstanceOf[UTF8String], c.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, c) =>
-      s"${ev.value} = graft.functions.CurationKernels.piiRedact($t, $c);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PiiRedactExpr =
-    copy(text = newLeft, cards = newRight)
 }

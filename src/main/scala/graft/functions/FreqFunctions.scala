@@ -6,10 +6,9 @@ import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  - [[FreqItemsAgg]]: string column → serialized sketch (binary);
   *  - [[FreqMergeAgg]]: binary sketch column → merged sketch;
-  *  - [[FreqTopItemsExpr]]: sketch → array<struct<item, estimate,
+  *  - [[FreqFunctions.TopItems]]: sketch → array<struct<item, estimate,
   *    lower, upper>> of NO_FALSE_POSITIVES frequent items, ordered by
   *    estimate desc then item asc (a total order — the array is
   *    deterministic FOR A GIVEN sketch; sketch contents themselves
@@ -47,8 +46,10 @@ object FreqFunctions {
     ncol(FreqItemsAgg(ex(c), maxMapSize).toAggregateExpression())
   def freqMerge(c: Column, maxMapSize: Int = DefaultMapSize): Column =
     ncol(FreqMergeAgg(ex(c), maxMapSize).toAggregateExpression())
-  def freqTopItems(sketch: Column, limit: Int = Int.MaxValue): Column =
-    ncol(FreqTopItemsExpr(ex(sketch), limit))
+  def freqTopItems(sketch: Column, limit: Int = Int.MaxValue): Column = {
+    require(limit >= 1, s"graft_freq_top: limit=$limit must be ≥ 1")
+    TopItems.colWith(limit)(sketch)
+  }
 
   private[graft] def toBytes(s: ItemsSketch[String]): Array[Byte] =
     s.toByteArray(serde)
@@ -59,6 +60,32 @@ object FreqFunctions {
     if (m >= 8 && Integer.bitCount(m) == 1) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$name: maxMapSize must be a power of 2 ≥ 8, got $m")
+
+  val entryType: StructType = StructType(Seq(
+    StructField("item", StringType, nullable = false),
+    StructField("estimate", LongType, nullable = false),
+    StructField("lower", LongType, nullable = false),
+    StructField("upper", LongType, nullable = false)))
+
+  /** `graft_freq_top(sketch[, limit])` — the sketch's frequent items
+    * under the NO_FALSE_POSITIVES rule, as `array<struct<item string,
+    * estimate long, lower long, upper long>>` ordered (estimate desc,
+    * item asc), truncated to `limit`. A null sketch is the empty one. */
+  val TopItems: NativeKernel = NativeKernel("graft_freq_top", "graft.functions.FreqFunctions",
+    "topItems", Seq(BinaryType), ArrayType(entryType, containsNull = false),
+    propagateNull = false)
+
+  def topItems(bytes: Array[Byte], limit: Int): ArrayData =
+    if (bytes == null) new GenericArrayData(Array.empty[Any])
+    else {
+      val rows = fromBytes(bytes).getFrequentItems(ErrorType.NO_FALSE_POSITIVES)
+      val ordered = rows.sortBy(r => (-r.getEstimate, r.getItem)).take(limit)
+      new GenericArrayData(ordered.map { r =>
+        org.apache.spark.sql.catalyst.InternalRow(
+          UTF8String.fromString(r.getItem), r.getEstimate,
+          r.getLowerBound, r.getUpperBound)
+      })
+    }
 }
 
 abstract class FreqAggBase
@@ -145,55 +172,4 @@ case class FreqMergeAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): FreqMergeAgg =
     copy(child = newChildren.head)
-}
-
-/** `graft_freq_top(sketch[, limit])` — the sketch's frequent items
-  * under the NO_FALSE_POSITIVES rule, as
-  * `array<struct<item string, estimate long, lower long, upper
-  * long>>` ordered (estimate desc, item asc), truncated to `limit`.
-  */
-case class FreqTopItemsExpr(child: Expression, limit: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (limit < 1)
-      TypeCheckResult.TypeCheckFailure(s"graft_freq_top: limit=$limit must be ≥ 1")
-    else if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_freq_top requires BINARY (a serialized sketch), got ${child.dataType.sql}")
-
-  override def dataType: DataType = ArrayType(FreqTopItemsExpr.entryType,
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_freq_top"
-
-  protected override def nullSafeEval(input: Any): Any =
-    FreqTopItemsExpr.top(input.asInstanceOf[Array[Byte]], limit)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) " +
-        s"graft.functions.FreqTopItemsExpr.top($c, $limit);")
-
-  override protected def withNewChildInternal(newChild: Expression): FreqTopItemsExpr =
-    copy(child = newChild)
-}
-
-object FreqTopItemsExpr {
-  val entryType: StructType = StructType(Seq(
-    StructField("item", StringType, nullable = false),
-    StructField("estimate", LongType, nullable = false),
-    StructField("lower", LongType, nullable = false),
-    StructField("upper", LongType, nullable = false)))
-
-  def top(bytes: Array[Byte], limit: Int): GenericArrayData = {
-    val s = FreqFunctions.fromBytes(bytes)
-    val rows = s.getFrequentItems(ErrorType.NO_FALSE_POSITIVES)
-    val ordered = rows.sortBy(r => (-r.getEstimate, r.getItem)).take(limit)
-    new GenericArrayData(ordered.map { r =>
-      org.apache.spark.sql.catalyst.InternalRow(
-        UTF8String.fromString(r.getItem), r.getEstimate,
-        r.getLowerBound, r.getUpperBound)
-    })
-  }
 }

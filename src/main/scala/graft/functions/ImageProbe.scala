@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,32 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * full pixel decode. (Full decode/feature extraction remains the
   * clearly-marked stub in [[graft.multimodal.Multimodal]].)
   */
-case class ImageDims(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_image_dims requires BINARY, got ${child.dataType.sql}")
-  override def dataType: DataType = ImageDims.outType
-  override def prettyName: String = "graft_image_dims"
-  // parse failure → null struct even for non-null input
-  override def nullable: Boolean = true
-
-  protected override def nullSafeEval(input: Any): Any =
-    ImageDims.probe(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-         |  graft.functions.ImageDims.probe($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): ImageDims =
-    copy(child = newChild)
-}
-
 object ImageDims {
   val outType: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -118,20 +88,11 @@ object ImageDims {
     null
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_image_dims"))) return
-    reg.registerFunction(
-      FunctionIdentifier("graft_image_dims"),
-      new ExpressionInfo(classOf[ImageDims].getName, "graft_image_dims"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_image_dims takes exactly 1 argument")
-        ImageDims(children.head)
-      })
-  }
 
-  /** Column API: session-free via the sql-namespace bridge. */
-  def imageDims(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      ImageDims(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  /** `graft_image_dims(binary)`; null for a null input or an unrecognised header. */
+  val Kernel: NativeKernel = NativeKernel("graft_image_dims", "graft.functions.ImageDims", "probe",
+    Seq(BinaryType), outType, returnNullable = true)
+
+  /** Column API: session-free. */
+  def imageDims(c: Column): Column = Kernel.col(c)
 }

@@ -5,9 +5,8 @@ import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Mergeable quantile sketches (KLL — Karnin, Lang & Liberty, FOCS
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types._
   * hll_union_agg / hll_sketch_estimate family:
   *  - [[KllSketchAgg]]: double column → serialized sketch (binary);
   *  - [[KllMergeAgg]]: binary sketch column → merged sketch;
-  *  - [[KllQuantileExpr]]: (sketch, q literal) → estimated quantile.
+  *  - [[KllFunctions.Quantile]]: (sketch, q) → estimated quantile.
   *
   * Unlike HLL's register max-lattice, KLL compaction flips random
   * coins — two different batch splits can produce byte-different
@@ -48,12 +47,29 @@ object KllFunctions {
     ncol(KllSketchAgg(ex(c), k).toAggregateExpression())
   def kllMerge(c: Column, k: Int = 200): Column =
     ncol(KllMergeAgg(ex(c), k).toAggregateExpression())
-  def kllQuantile(sketch: Column, q: Double): Column =
-    ncol(KllQuantileExpr(ex(sketch), q))
+  def kllQuantile(sketch: Column, q: Double): Column = {
+    require(q >= 0.0 && q <= 1.0, s"graft_kll_quantile: q=$q outside [0, 1]")
+    Quantile.colWith(q)(sketch)
+  }
 
   private[graft] def toBytes(s: KllDoublesSketch): Array[Byte] = s.toByteArray
   private[graft] def fromBytes(b: Array[Byte]): KllDoublesSketch =
     KllDoublesSketch.heapify(Memory.wrap(b))
+
+  /** `graft_kll_quantile(sketch, q)` — the estimated q-quantile
+    * (INCLUSIVE rule, DataSketches' default) of a serialized sketch;
+    * null for an empty sketch (no updates ever — the "no non-null rows
+    * in any batch" group). */
+  val Quantile: NativeKernel = NativeKernel("graft_kll_quantile",
+    "graft.functions.KllFunctions", "quantile", Seq(BinaryType), DoubleType,
+    returnNullable = true)
+
+  /** The kernel (boxed: an empty sketch has no quantile). */
+  def quantile(bytes: Array[Byte], q: Double): java.lang.Double = {
+    val s = fromBytes(bytes)
+    if (s.isEmpty) null
+    else java.lang.Double.valueOf(s.getQuantile(q))
+  }
 }
 
 /** Shared plumbing of the two KLL aggregates: binary sketch output,
@@ -154,53 +170,4 @@ case class KllMergeAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KllMergeAgg =
     copy(child = newChildren.head)
-}
-
-/** `graft_kll_quantile(sketch, q)` — the estimated q-quantile
-  * (INCLUSIVE rule, DataSketches' default) of a serialized sketch;
-  * null for an empty sketch (no updates ever — the "no non-null rows
-  * in any batch" group).
-  */
-case class KllQuantileExpr(child: Expression, q: Double)
-    extends UnaryExpression {
-  // q validated in checkInputDataTypes, NOT a constructor require: the
-  // same executor-side Java-deserialization rule KllAggBase documents
-  // for k (a serialization constructor sees q=0.0 before field restore
-  // — harmlessly in-range here, but the inconsistency invited someone
-  // to copy THIS pattern for a field whose zero is out of range)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (q < 0.0 || q > 1.0 || q.isNaN) TypeCheckResult.TypeCheckFailure(
-      s"graft_kll_quantile: q=$q outside [0, 1]")
-    else if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_kll_quantile requires BINARY (a serialized sketch), got ${child.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_kll_quantile"
-
-  protected override def nullSafeEval(input: Any): Any =
-    KllQuantileExpr.quantile(input.asInstanceOf[Array[Byte]], q)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val out = ctx.freshName("kllQ")
-      s"""
-         |Object $out = graft.functions.KllQuantileExpr.quantile($c, $q);
-         |if ($out == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Double) $out).doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): KllQuantileExpr =
-    copy(child = newChild)
-}
-
-object KllQuantileExpr {
-  /** JVM kernel (boxed so codegen and interpreted paths share the
-    * empty-sketch null). */
-  def quantile(bytes: Array[Byte], q: Double): java.lang.Double = {
-    val s = KllFunctions.fromBytes(bytes)
-    if (s.isEmpty) null
-    else java.lang.Double.valueOf(s.getQuantile(q))
-  }
 }

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Luhn-valid credit-card candidate extraction — the codegen'd half of
@@ -91,39 +87,11 @@ object LuhnCards {
     false
   }
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  /** `(text)` → array<string> of the Luhn-valid card candidates; null
+    * text → empty array. */
+  val ValidCandidates: NativeKernel = NativeKernel("graft_luhn_cards",
+    "graft.functions.LuhnCards", "validCandidates", Seq(StringType),
+    ArrayType(StringType, containsNull = false), propagateNull = false)
 
-  def validCandidatesCol(text: Column): Column =
-    ncol(LuhnCandidatesExpr(ex(text)))
-}
-
-/** `(text)` → array<string> of Luhn-valid card candidates: [[LuhnCards]]. */
-case class LuhnCandidatesExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"luhn candidates require STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_luhn_cards"
-
-  override def eval(input: InternalRow): Any =
-    LuhnCards.validCandidates(child.eval(input).asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val c = child.genCode(ctx)
-    val fin = s"org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = " +
-      s"graft.functions.LuhnCards.validCandidates(" +
-      s"${c.isNull} ? null : ${c.value});"
-    ev.copy(code =
-      code"""
-        ${c.code}
-        $fin""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LuhnCandidatesExpr =
-    copy(child = newChild)
+  def validCandidatesCol(text: Column): Column = ValidCandidates.col(text)
 }

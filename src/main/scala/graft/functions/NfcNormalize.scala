@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_nfc(text)` — Unicode NFC normalization (canonical
@@ -14,33 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * and every hash-based operator in this library treats those as
   * different documents unless the text is normalized first. Spark has
   * no built-in; this wraps `java.text.Normalizer` (JDK, ICU-correct
-  * for NFC) as a codegen'd expression. DuckDB twin: `nfc_normalize`.
+  * for NFC) as a native kernel. DuckDB twin: `nfc_normalize`.
   *
   * Fast path: `Normalizer.isNormalized` is O(n) with no allocation
   * and true for virtually all real text (ASCII and precomposed
   * Latin-1 included) — the allocating normalize call only runs on the
   * rare decomposed row.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_nfc requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_nfc"
-
-  protected override def nullSafeEval(input: Any): Any =
-    NfcNormalize.nfc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NfcNormalize.nfc($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): NfcNormalize =
-    copy(child = newChild)
-}
-
 object NfcNormalize {
   import java.text.Normalizer
 
@@ -50,7 +27,8 @@ object NfcNormalize {
     else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
   }
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  val Nfc: NativeKernel = NativeKernel("graft_nfc", "graft.functions.NfcNormalize", "nfc",
+    Seq(StringType), StringType)
 
-  def nfcNormalize(c: Column): Column = ncol(NfcNormalize(ex(c)))
+  def nfcNormalize(c: Column): Column = Nfc.col(c)
 }

@@ -1,40 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/** `graft_pdf_text(binary)` — [[PdfText.extract]] as a native
-  * codegen'd expression (the repo's convention for scalar work:
-  * RollingHash, NfcNormalize, PqEncodeExpr), so the `pdf_extract`
-  * pipeline node stays inside whole-stage codegen instead of breaking
-  * the span with a scala-udf node. The per-row work is the same JDK
-  * byte parse either way (I/O-bound); what the expression buys is the
-  * unbroken codegen span around it and null handling for free.
-  */
-case class PdfExtractExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_pdf_text requires BINARY, got ${child.dataType.sql}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_pdf_text"
-
-  protected override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(PdfText.extract(input.asInstanceOf[Array[Byte]]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-         |  graft.functions.PdfText.extract($c));""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): PdfExtractExpr =
-    copy(child = newChild)
-}
 
 /** Minimal JDK-only PDF text extractor, backing the `pdf_extract`
   * pipeline node (the reference declares the node type but stubs it to
@@ -370,10 +338,18 @@ object PdfText {
     (sb.toString, math.min(n, i + 1))
   }
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  def extractText(bytes: Array[Byte]): UTF8String = UTF8String.fromString(extract(bytes))
+
+  /** `graft_pdf_text(binary)` — [[extract]] as a native kernel, so the
+    * `pdf_extract` pipeline node stays inside whole-stage codegen
+    * instead of breaking the span with a scala-udf node. The per-row
+    * work is the same JDK byte parse either way (I/O-bound); what the
+    * kernel buys is the unbroken codegen span around it. */
+  val Kernel: NativeKernel = NativeKernel("graft_pdf_text", "graft.functions.PdfText",
+    "extractText", Seq(BinaryType), StringType)
 
   /** Column form of [[extract]] over a BINARY column. */
-  def pdfText(c: Column): Column = ncol(PdfExtractExpr(ex(c)))
+  def pdfText(c: Column): Column = Kernel.col(c)
 
   /** `[…]` array operand: collects its STRING elements in order
     * (kerning numbers between them are ignored). Returns (strings,

@@ -1,64 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Polynomial (Rabin–Karp) rolling-hash fingerprint of a string's UTF-8
   * bytes: `h = Σ byteᵢ · P^(n-1-i) (mod 2⁶⁴)` with the FNV prime.
   *
-  * Implemented as a NATIVE Catalyst expression with `doGenCode` — the
-  * preference order for extending Spark when built-ins can't express
-  * the semantics (there is no byte-wise fold in `functions._`): a
-  * codegen'd expression stays inside the whole-stage-generated loop, no
-  * UDF serialization, no row boxing. The JVM's wrapping long arithmetic
-  * is exactly the mod-2⁶⁴ we want (never routed through ANSI checks).
+  * A NATIVE kernel ([[NativeCall]]) — the preference order for
+  * extending Spark when built-ins can't express the semantics (there is
+  * no byte-wise fold in `functions._`): a codegen'd call stays inside
+  * the whole-stage-generated loop, no UDF serialization, no row boxing.
+  * The JVM's wrapping long arithmetic is exactly the mod-2⁶⁴ we want
+  * (never routed through ANSI checks).
   *
   * Reference surface: the document-fingerprinting operator family
   * (SURVEY.md §2.5 #48) next to the md5-based [[TextFunctions.fingerprint]].
   */
-case class RollingHash(child: Expression)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_rolling_hash requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_rolling_hash"
-
-  protected override def nullSafeEval(input: Any): Any =
-    RollingHash.hash(input.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      s"""
-         |byte[] $bytes = $c.getBytes();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  $h = $h * ${RollingHash.Prime}L + ($bytes[$i] & 0xffL);
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
 object RollingHash {
   /** FNV-1a 64-bit prime. */
   val Prime: Long = 1099511628211L
 
-  /** Reference implementation (used by interpreted eval and the spec). */
   def hash(bytes: Array[Byte]): Long = {
     var h = 0L
     var i = 0
@@ -69,108 +31,13 @@ object RollingHash {
     h
   }
 
-  private val info = new ExpressionInfo(
-    classOf[RollingHash].getName, "graft_rolling_hash")
+  def hash(s: UTF8String): Long = hash(s.getBytes)
 
-  private val builder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1, "graft_rolling_hash takes exactly 1 argument")
-    RollingHash(children.head)
-  }
+  val Kernel: NativeKernel =
+    NativeKernel("graft_rolling_hash", "graft.functions.RollingHash", "hash", Seq(StringType), LongType)
 
-  /** Programmatic registration (tests, driver-owned sessions). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_rolling_hash"), info, builder)
-
-  /** Column API: `rollingHash($"text")`. */
-  def rollingHash(c: Column)(implicit spark: SparkSession): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("graft_rolling_hash", c)
-  }
-}
-
-/** Session-extension entry point: set
-  * `spark.sql.extensions=graft.functions.GraftExtensions` and every
-  * session (including Thrift/Connect ones) gets the function.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rules: auto range-join rewrite (BETWEEN join with no
-    // equi-key → bucketed hash join; see plans.RangeJoinRewrite)
-    ext.injectOptimizerRule(session => graft.plans.RangeJoinRewrite(session))
-    ext.injectFunction((
-      FunctionIdentifier("graft_rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "graft_rolling_hash"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_rolling_hash takes exactly 1 argument")
-        RollingHash(children.head) }))
-    // same arity/foldability guards as TextSignatures.register — a bad
-    // SQL call gets the clear message, not an IndexOutOfBounds/NPE
-    def litInt(children: Seq[Expression], fn: String): Int = {
-      require(children.size == 2 && children(1).foldable,
-        s"$fn(col, n) takes a column and a literal n")
-      val v = children(1).eval()
-      require(v != null, s"$fn: n must not be NULL")
-      v.asInstanceOf[Number].intValue
-    }
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      { children: Seq[Expression] =>
-        ShingleHashes(children.head, litInt(children, "graft_shingle_hashes")) }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
-      { children: Seq[Expression] =>
-        MinHashSignature(children.head, litInt(children, "graft_minhash_sig")) }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash64"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_simhash64 takes exactly 1 argument")
-        SimHash64Expr(children.head) }))
-    // text-metric expressions (TextMetrics)
-    def metric(name: String, cls: Class[_], b: Expression => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$name takes exactly 1 argument")
-          b(children.head) }))
-    metric("graft_collapse_ws", classOf[CollapseWs], CollapseWs.apply)
-    metric("graft_ws_token_count", classOf[WsTokenCount], WsTokenCount.apply)
-    metric("graft_bpe_token_count", classOf[BpeTokenCount], BpeTokenCount.apply)
-    metric("graft_punct_count", classOf[PunctCount], PunctCount.apply)
-    metric("graft_stopword_hits", classOf[StopwordHits], StopwordHits.apply)
-    metric("graft_has_han", classOf[HasHan], HasHan.apply)
-    metric("graft_nfc", classOf[NfcNormalize], NfcNormalize.apply)
-    ext.injectFunction((FunctionIdentifier("graft_image_dims"),
-      new ExpressionInfo(classOf[ImageDims].getName, "graft_image_dims"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_image_dims takes exactly 1 argument")
-        ImageDims(children.head) }))
-    ext.injectFunction((FunctionIdentifier("graft_audio_meta"),
-      new ExpressionInfo(classOf[AudioMeta].getName, "graft_audio_meta"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_audio_meta takes exactly 1 argument")
-        AudioMeta(children.head) }))
-    ext.injectFunction((FunctionIdentifier("graft_video_meta"),
-      new ExpressionInfo(classOf[VideoMeta].getName, "graft_video_meta"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_video_meta takes exactly 1 argument")
-        VideoMeta(children.head) }))
-    ext.injectFunction((FunctionIdentifier("graft_top_k_min"),
-      new ExpressionInfo(classOf[TopKMin].getName, "graft_top_k_min"),
-      { children: Seq[Expression] =>
-        TopKMin(children.head, litInt(children, "graft_top_k_min"))
-          .toAggregateExpression() }))
-    ext.injectFunction((FunctionIdentifier("graft_top_k_pairs"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "graft_top_k_pairs"),
-      { children: Seq[Expression] =>
-        require(children.size == 3 && children(2).foldable,
-          "graft_top_k_pairs(score, id, k) takes two columns and a literal k")
-        val kv = children(2).eval()
-        require(kv != null, "graft_top_k_pairs: k must not be NULL")
-        TopKPairs(children(0), children(1), kv.asInstanceOf[Number].intValue)
-          .toAggregateExpression() }))
-  }
+  /** Column API: `rollingHash($"text")`. The implicit session is unused
+    * (the Column resolves in any session); it stays for source
+    * compatibility. */
+  def rollingHash(c: Column)(implicit spark: SparkSession): Column = Kernel.col(c)
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -26,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Two expressions, both whole-stage-codegen'd (no CodegenFallback —
   * the ScanHof sweep stays clean):
   *
-  *  - [[PositionedShinglesExpr]] `(text, n)` → `array<long>`: hash of
-  *    EVERY n-token shingle, position-aligned (slot i = tokens
+  *  - [[SpanScrub.PositionedShingles]] `(text, n)` → `array<long>`: hash
+  *    of EVERY n-token shingle, position-aligned (slot i = tokens
   *    i..i+n-1, 0-based), multiplicity kept — the positional variant
   *    of [[TextSignatures.shingleHashes]] (which dedups and so loses
   *    positions). Token hash and chain are bit-identical to
@@ -162,46 +162,18 @@ object SpanScrub {
 
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
 
-  def positionedShinglesCol(text: Column, n: Int): Column =
-    ncol(PositionedShinglesExpr(ex(text), n))
+  /** `(text, n)` → position-aligned shingle hashes; null text → empty array. */
+  val PositionedShingles: NativeKernel = NativeKernel("graft_positioned_shingles",
+    "graft.functions.SpanScrub", "positionedShingleHashes", Seq(StringType),
+    ArrayType(LongType, containsNull = false), propagateNull = false)
+
+  def positionedShinglesCol(text: Column, n: Int): Column = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    PositionedShingles.colWith(n)(text)
+  }
 
   def scrubCol(text: Column, starts: Column, k: Int, minSpan: Int): Column =
     ncol(ScrubSpansExpr(ex(text), ex(starts), k, minSpan))
-}
-
-/** `(text, n)` → position-aligned shingle hashes: see [[SpanScrub]]. */
-case class PositionedShinglesExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"positioned shingles require STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_positioned_shingles"
-
-  override def eval(input: InternalRow): Any =
-    SpanScrub.positionedShingleHashes(
-      child.eval(input).asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val c = child.genCode(ctx)
-    val fin = s"org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = " +
-      s"graft.functions.SpanScrub.positionedShingleHashes(" +
-      s"${c.isNull} ? null : ${c.value}, $n);"
-    ev.copy(code =
-      code"""
-        ${c.code}
-        $fin""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PositionedShinglesExpr =
-    copy(child = newChild)
 }
 
 /** `(text, starts)` with embedded (k, minSpan) → struct(text, n_cut):

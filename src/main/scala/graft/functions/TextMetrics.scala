@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native single-pass replacements for the regex-engine-bound pieces of
@@ -148,106 +144,19 @@ object TextMetrics {
     false
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_has_han"))) return // idempotent
-    def one(name: String, cls: Class[_], b: Expression => Expression): Unit =
-      reg.registerFunction(FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
-        { children: Seq[Expression] =>
-          require(children.size == 1, s"$name takes exactly 1 argument")
-          b(children.head)
-        })
-    one("graft_collapse_ws", classOf[CollapseWs], CollapseWs.apply)
-    one("graft_ws_token_count", classOf[WsTokenCount], WsTokenCount.apply)
-    one("graft_bpe_token_count", classOf[BpeTokenCount], BpeTokenCount.apply)
-    one("graft_punct_count", classOf[PunctCount], PunctCount.apply)
-    one("graft_stopword_hits", classOf[StopwordHits], StopwordHits.apply)
-    one("graft_has_han", classOf[HasHan], HasHan.apply)
-  }
+  private def metric(name: String, method: String, dataType: DataType): NativeKernel =
+    NativeKernel(name, "graft.functions.TextMetrics", method, Seq(StringType), dataType)
+  val CollapseWs: NativeKernel = metric("graft_collapse_ws", "collapseWs", StringType)
+  val WsTokenCount: NativeKernel = metric("graft_ws_token_count", "wsTokenCount", IntegerType)
+  val BpeTokenCount: NativeKernel = metric("graft_bpe_token_count", "bpeTokenCount", IntegerType)
+  val PunctCount: NativeKernel = metric("graft_punct_count", "punctCount", IntegerType)
+  val StopwordHits: NativeKernel = metric("graft_stopword_hits", "stopwordHits", DoubleType)
+  val HasHan: NativeKernel = metric("graft_has_han", "hasHan", BooleanType)
 
-  // Session-free Column builders via the sql-namespace bridge: the
-  // resulting Columns resolve in ANY session, like built-in
-  // `functions._` (a registry-bound column would break on a DataFrame
-  // from a different session than the one that registered it).
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
-  def collapseWsCol(c: Column): Column = ncol(CollapseWs(ex(c)))
-  def wsTokenCountCol(c: Column): Column = ncol(WsTokenCount(ex(c)))
-  def bpeTokenCountCol(c: Column): Column = ncol(BpeTokenCount(ex(c)))
-  def punctCountCol(c: Column): Column = ncol(PunctCount(ex(c)))
-  def stopwordHitsCol(c: Column): Column = ncol(StopwordHits(ex(c)))
-  def hasHanCol(c: Column): Column = ncol(HasHan(ex(c)))
-}
-
-/** Base: string → T via a static [[TextMetrics]] helper, codegen'd as a
-  * direct call (same pattern as [[TextSignatures]]'s expressions).
-  */
-sealed abstract class TextMetricExpr extends UnaryExpression {
-  /** fully-qualified static call target, e.g. "...TextMetrics.punctCount" */
-  protected def helper: String
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${child.dataType.sql}")
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper($c);")
-}
-
-case class CollapseWs(child: Expression) extends TextMetricExpr {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_collapse_ws"
-  protected def helper: String = "graft.functions.TextMetrics.collapseWs"
-  protected override def nullSafeEval(input: Any): Any =
-    TextMetrics.collapseWs(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): CollapseWs =
-    copy(child = newChild)
-}
-
-case class WsTokenCount(child: Expression) extends TextMetricExpr {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_ws_token_count"
-  protected def helper: String = "graft.functions.TextMetrics.wsTokenCount"
-  protected override def nullSafeEval(input: Any): Any =
-    TextMetrics.wsTokenCount(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): WsTokenCount =
-    copy(child = newChild)
-}
-
-case class BpeTokenCount(child: Expression) extends TextMetricExpr {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_bpe_token_count"
-  protected def helper: String = "graft.functions.TextMetrics.bpeTokenCount"
-  protected override def nullSafeEval(input: Any): Any =
-    TextMetrics.bpeTokenCount(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): BpeTokenCount =
-    copy(child = newChild)
-}
-
-case class PunctCount(child: Expression) extends TextMetricExpr {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_punct_count"
-  protected def helper: String = "graft.functions.TextMetrics.punctCount"
-  protected override def nullSafeEval(input: Any): Any =
-    TextMetrics.punctCount(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): PunctCount =
-    copy(child = newChild)
-}
-
-case class StopwordHits(child: Expression) extends TextMetricExpr {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_stopword_hits"
-  protected def helper: String = "graft.functions.TextMetrics.stopwordHits"
-  protected override def nullSafeEval(input: Any): Any =
-    TextMetrics.stopwordHits(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): StopwordHits =
-    copy(child = newChild)
-}
-
-case class HasHan(child: Expression) extends TextMetricExpr {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_has_han"
-  protected def helper: String = "graft.functions.TextMetrics.hasHan"
-  protected override def nullSafeEval(input: Any): Any =
-    TextMetrics.hasHan(input.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): HasHan =
-    copy(child = newChild)
+  def collapseWsCol(c: Column): Column = CollapseWs.col(c)
+  def wsTokenCountCol(c: Column): Column = WsTokenCount.col(c)
+  def bpeTokenCountCol(c: Column): Column = BpeTokenCount.col(c)
+  def punctCountCol(c: Column): Column = PunctCount.col(c)
+  def stopwordHitsCol(c: Column): Column = StopwordHits.col(c)
+  def hasHanCol(c: Column): Column = HasHan.col(c)
 }

@@ -2,13 +2,10 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,10 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * is an interpreted expression-tree walk, and a 64-wide signature
   * means 64 interpreted folds PER ROW. Measured on the r2 bench these
   * dominated the dedup family (6-8 s/query at sf0.1 for ~5k docs).
-  * Each expression here is one tight JVM loop per row, inlined into
-  * whole-stage codegen via `doGenCode` (same extension mechanism as
-  * [[RollingHash]]) — the per-row work drops from thousands of
-  * interpreted evals to one method call.
+  * Each kernel here is one tight JVM loop per row, called from
+  * whole-stage codegen through [[NativeCall]] (like [[RollingHash]]) —
+  * the per-row work drops from thousands of interpreted evals to one
+  * method call.
   *
   * Semantics are pinned to the Column formulations they replace:
   *  - tokenization is `split(lower(trim(text)), "\\s+")` — Java regex,
@@ -33,10 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    text)), '\s+')` exactly;
   *  - token hash = Spark's `xxhash64(token)` (XXH64 over UTF-8 bytes,
   *    seed 42);
-  *  - [[MinHashSignature]]'s k-th hash = Spark's `xxhash64(k, h)` =
+  *  - [[MinHashSig]]'s k-th hash = Spark's `xxhash64(k, h)` =
   *    `XXH64.hashLong(h, XXH64.hashLong(k, 42))`, bit-identical to the
   *    HOF version it replaces;
-  *  - [[SimHash64Expr]] bit i = sign of Σ_tokens ±1 by bit i of the
+  *  - [[SimHash64]] bit i = sign of Σ_tokens ±1 by bit i of the
   *    token hash (multiplicity included), identical to the 64-fold
   *    `aggregate` formulation.
   */
@@ -164,152 +161,47 @@ object TextSignatures {
   }
 
   // ---------------------------------------------------------------- //
-  // Column API: registers the functions in the session registry and
-  // resolves through `call_function`, like [[RollingHash.rollingHash]].
+  // Declarations: the Column builders here and the SQL function table
+  // ([[GraftFunctions]]) both build through the checked builders.
   // ---------------------------------------------------------------- //
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_simhash64"))) return // idempotent
-    def litInt(children: Seq[Expression], fn: String): Int = {
-      require(children.size == 2 && children(1).foldable,
-        s"$fn(col, n) takes a column and a literal n")
-      val v = children(1).eval()
-      require(v != null, s"$fn: n must not be NULL")
-      v.asInstanceOf[Number].intValue
-    }
-    reg.registerFunction(
-      FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      { children: Seq[Expression] =>
-        ShingleHashes(children.head, litInt(children, "graft_shingle_hashes")) })
-    reg.registerFunction(
-      FunctionIdentifier("graft_shingle_strings"),
-      new ExpressionInfo(classOf[ShingleStringsExpr].getName, "graft_shingle_strings"),
-      { children: Seq[Expression] =>
-        ShingleStringsExpr(children.head, litInt(children, "graft_shingle_strings")) })
-    reg.registerFunction(
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash_sig"),
-      { children: Seq[Expression] =>
-        MinHashSignature(children.head, litInt(children, "graft_minhash_sig")) })
-    reg.registerFunction(
-      FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "graft_simhash64"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_simhash64 takes exactly 1 argument")
-        SimHash64Expr(children.head)
-      })
+  private val T = "graft.functions.TextSignatures"
+  private val Longs = ArrayType(LongType, containsNull = false)
+  val ShingleHashes: NativeKernel =
+    NativeKernel("graft_shingle_hashes", T, "shingleHashes", Seq(StringType), Longs)
+  val ShingleStrings: NativeKernel = NativeKernel("graft_shingle_strings", T, "shingleStrings",
+    Seq(StringType), ArrayType(StringType, containsNull = false))
+  val MinHashSig: NativeKernel =
+    NativeKernel("graft_minhash_sig", T, "minHashSig", Seq(Longs), Longs)
+  val SimHash64: NativeKernel = NativeKernel("graft_simhash64", T, "simHash64", Seq(StringType), LongType)
+
+  /** `graft_shingle_hashes(text, n)` → array<bigint>: distinct hashed
+    * word n-gram shingles. */
+  def shingleHashesExpr(text: Expression, n: Int): Expression = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    ShingleHashes.withConsts(n)(text)
   }
 
-  // Session-free Column builders (see TextMetrics for rationale); the
-  // SQL-name surface still resolves via register()/GraftExtensions.
+  /** `graft_shingle_strings(text, n)` → array<string>: ALL word n-grams
+    * as strings, multiplicity kept. */
+  def shingleStringsExpr(text: Expression, n: Int): Expression = {
+    require(n >= 1, s"shingle width must be >= 1, got $n")
+    ShingleStrings.withConsts(n)(text)
+  }
+
+  /** `graft_minhash_sig(hashes, k)` → array<bigint>: k MinHash minima. */
+  def minHashSigExpr(hashes: Expression, k: Int): Expression = {
+    require(k >= 1, s"signature width must be >= 1, got $k")
+    MinHashSig.withConsts(k)(hashes)
+  }
+
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
 
-  def shingleHashesCol(text: Column, n: Int): Column =
-    ncol(ShingleHashes(ex(text), n))
+  def shingleHashesCol(text: Column, n: Int): Column = ncol(shingleHashesExpr(ex(text), n))
 
-  def minHashSigCol(hashes: Column, k: Int): Column =
-    ncol(MinHashSignature(ex(hashes), k))
+  def minHashSigCol(hashes: Column, k: Int): Column = ncol(minHashSigExpr(ex(hashes), k))
 
-  def simHash64Col(text: Column): Column =
-    ncol(SimHash64Expr(ex(text)))
+  def simHash64Col(text: Column): Column = SimHash64.col(text)
 
-  def shingleStringsCol(text: Column, n: Int): Column =
-    ncol(ShingleStringsExpr(ex(text), n))
-}
-
-/** `graft_shingle_strings(text, n)` → array<string>: ALL word n-grams
-  * as strings, multiplicity kept (corpus-frequency variant of
-  * [[ShingleHashes]]).
-  */
-case class ShingleStringsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingle_strings requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingle_strings"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextSignatures.shingleStrings(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSignatures.shingleStrings($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleStringsExpr =
-    copy(child = newChild)
-}
-
-/** `graft_shingle_hashes(text, n)` → array<bigint>: distinct hashed
-  * word n-gram shingles, one tight loop per row (see [[TextSignatures]]).
-  */
-case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_shingle_hashes requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_shingle_hashes"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextSignatures.shingleHashes(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSignatures.shingleHashes($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-}
-
-/** `graft_minhash_sig(hashes, k)` → array<bigint>: k MinHash minima,
-  * bit-identical to the `xxhash64(k, h)` HOF formulation it replaces.
-  */
-case class MinHashSignature(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, s"signature width must be >= 1, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_minhash_sig requires ARRAY<BIGINT>, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_sig"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextSignatures.minHashSig(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSignatures.minHashSig($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-}
-
-/** `graft_simhash64(text)` → bigint: 64-bit SimHash signature. */
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_simhash64 requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextSignatures.simHash64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextSignatures.simHash64($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
+  def shingleStringsCol(text: Column, n: Int): Column = ncol(shingleStringsExpr(ex(text), n))
 }

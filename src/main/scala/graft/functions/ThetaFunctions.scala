@@ -5,9 +5,8 @@ import org.apache.datasketches.theta.{SetOperation, Sketch, Union}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Mergeable SET-OPERATION sketches (Theta — the KMV/theta family of
@@ -30,9 +29,9 @@ import org.apache.spark.sql.types._
   * Four pieces, mirroring the HLL/KLL/FreqItems families here:
   *  - [[ThetaSketchAgg]]: string column → serialized sketch (binary);
   *  - [[ThetaUnionAgg]]:  binary sketch column → merged sketch;
-  *  - [[ThetaIntersectExpr]] / [[ThetaAnotBExpr]]: (sketch, sketch) →
-  *    serialized intersection / difference sketch;
-  *  - [[ThetaEstimateExpr]]: sketch → estimated distinct count.
+  *  - [[ThetaFunctions.Intersect]] / [[ThetaFunctions.ANotB]]: (sketch,
+  *    sketch) → serialized intersection / difference sketch;
+  *  - [[ThetaFunctions.Estimate]]: sketch → estimated distinct count.
   *
   * Like HLL (and unlike KLL), the retained-hash set is a pure function
   * of the input VALUE set — no coin flips — so incremental per-batch
@@ -58,17 +57,30 @@ object ThetaFunctions {
     ncol(ThetaSketchAgg(ex(c), nominal).toAggregateExpression())
   def thetaUnion(c: Column, nominal: Int = DefaultNominal): Column =
     ncol(ThetaUnionAgg(ex(c), nominal).toAggregateExpression())
-  def thetaIntersect(a: Column, b: Column): Column =
-    ncol(ThetaIntersectExpr(ex(a), ex(b)))
+  def thetaIntersect(a: Column, b: Column): Column = Intersect.col(a, b)
   /** Scalar pairwise union — the (sketch, sketch) → sketch twin of the
     * [[ThetaUnionAgg]] aggregate, for plans that already hold both
     * sketches in one row. */
-  def thetaUnionScalar(a: Column, b: Column): Column =
-    ncol(ThetaUnionPairExpr(ex(a), ex(b)))
-  def thetaAnotB(a: Column, b: Column): Column =
-    ncol(ThetaAnotBExpr(ex(a), ex(b)))
-  def thetaEstimate(sketch: Column): Column =
-    ncol(ThetaEstimateExpr(ex(sketch)))
+  def thetaUnionScalar(a: Column, b: Column): Column = UnionPair.col(a, b)
+  def thetaAnotB(a: Column, b: Column): Column = ANotB.col(a, b)
+  def thetaEstimate(sketch: Column): Column = Estimate.col(sketch)
+
+  private def setOp(name: String, method: String): NativeKernel = NativeKernel(name,
+    "graft.functions.ThetaFunctions", method, Seq(BinaryType, BinaryType), BinaryType)
+  /** `graft_theta_intersect(a, b)` — serialized intersection sketch. */
+  val Intersect: NativeKernel = setOp("graft_theta_intersect", "intersect")
+  /** `graft_theta_union_pair(a, b)` — serialized union sketch of two
+    * sketches held in one row. */
+  val UnionPair: NativeKernel = setOp("graft_theta_union_pair", "unionPair")
+  /** `graft_theta_anotb(a, b)` — serialized difference sketch (values
+    * of A not in B). */
+  val ANotB: NativeKernel = setOp("graft_theta_anotb", "aNotB")
+  /** `graft_theta_estimate(sketch)` — the estimated distinct count;
+    * EXACT (the retained count) while the sketch never exceeded its
+    * nominal cap. A null sketch is the empty one: 0.0. */
+  val Estimate: NativeKernel = NativeKernel("graft_theta_estimate",
+    "graft.functions.ThetaFunctions", "estimate", Seq(BinaryType), DoubleType,
+    propagateNull = false)
 
   private[graft] def newUnion(nominal: Int): Union =
     SetOperation.builder().setNominalEntries(nominal).buildUnion()
@@ -114,7 +126,8 @@ object ThetaFunctions {
     op.getResult(true).toByteArray
   }
 
-  def estimate(sketch: Array[Byte]): Double = wrap(sketch).getEstimate
+  def estimate(sketch: Array[Byte]): Double =
+    if (sketch == null) 0.0 else wrap(sketch).getEstimate
 }
 
 /** Shared plumbing of the two theta aggregates. The buffer is a theta
@@ -214,86 +227,4 @@ case class ThetaUnionAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): ThetaUnionAgg =
     copy(child = newChildren.head)
-}
-
-/** Shared shape of the two binary set-operation scalars. */
-abstract class ThetaSetOpExpr extends BinaryExpression {
-  override def dataType: DataType = BinaryType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == BinaryType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (BINARY, BINARY) serialized sketches, got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
-  /** The static JVM kernel both eval paths call, e.g.
-    * `graft.functions.ThetaFunctions.intersect`. */
-  protected def kernel: String
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ThetaFunctions.$kernel($a, $b);")
-}
-
-/** `graft_theta_intersect(a, b)` — serialized intersection sketch. */
-case class ThetaIntersectExpr(left: Expression, right: Expression)
-    extends ThetaSetOpExpr {
-  override def prettyName: String = "graft_theta_intersect"
-  protected def kernel: String = "intersect"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    ThetaFunctions.intersect(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ThetaIntersectExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_theta_union_pair(a, b)` — serialized union sketch of two
-  * sketches held in one row.
-  */
-case class ThetaUnionPairExpr(left: Expression, right: Expression)
-    extends ThetaSetOpExpr {
-  override def prettyName: String = "graft_theta_union_pair"
-  protected def kernel: String = "unionPair"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    ThetaFunctions.unionPair(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ThetaUnionPairExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_theta_anotb(a, b)` — serialized difference sketch (values
-  * of A not in B).
-  */
-case class ThetaAnotBExpr(left: Expression, right: Expression)
-    extends ThetaSetOpExpr {
-  override def prettyName: String = "graft_theta_anotb"
-  protected def kernel: String = "aNotB"
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    ThetaFunctions.aNotB(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ThetaAnotBExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_theta_estimate(sketch)` — the estimated distinct count;
-  * EXACT (the retained count) while the sketch never exceeded its
-  * nominal cap.
-  */
-case class ThetaEstimateExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_theta_estimate requires BINARY (a serialized sketch), got ${child.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_theta_estimate"
-
-  protected override def nullSafeEval(input: Any): Any =
-    ThetaFunctions.estimate(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ThetaFunctions.estimate($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): ThetaEstimateExpr =
-    copy(child = newChild)
 }

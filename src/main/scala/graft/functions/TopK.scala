@@ -3,9 +3,8 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -118,22 +117,6 @@ object TopKMin {
     * shuffle form is the compact one (8 bytes/entry).
     */
   val MaxK: Int = 100000
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_top_k_min"))) return
-    reg.registerFunction(
-      FunctionIdentifier("graft_top_k_min"),
-      new ExpressionInfo(classOf[TopKMin].getName, "graft_top_k_min"),
-      { children: Seq[Expression] =>
-        require(children.size == 2 && children(1).foldable,
-          "graft_top_k_min(col, k) takes a column and a literal k")
-        val v = children(1).eval()
-        require(v != null, "graft_top_k_min: k must not be NULL")
-        TopKMin(children.head, v.asInstanceOf[Number].intValue)
-          .toAggregateExpression()
-      })
-  }
 
   /** Column API (aggregate): `df.groupBy(...).agg(topKMin($"id", 50))`. */
   def topKMin(c: Column, k: Int): Column =
@@ -273,22 +256,6 @@ object TopKPairs {
         if (c != 0) c else java.lang.Long.compare(a.id, b.id)
       }
     }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_top_k_pairs"))) return
-    reg.registerFunction(
-      FunctionIdentifier("graft_top_k_pairs"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "graft_top_k_pairs"),
-      { children: Seq[Expression] =>
-        require(children.size == 3 && children(2).foldable,
-          "graft_top_k_pairs(score, id, k) takes two columns and a literal k")
-        val v = children(2).eval()
-        require(v != null, "graft_top_k_pairs: k must not be NULL")
-        TopKPairs(children(0), children(1), v.asInstanceOf[Number].intValue)
-          .toAggregateExpression()
-      })
-  }
 
   /** Column API: `df.groupBy("q").agg(topKPairs($"score", $"id", 10))`. */
   def topKPairs(score: Column, id: Column, k: Int,

@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,31 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Unknown/garbage bytes → null struct. Frame decode remains the
   * marked stub in [[graft.multimodal.Multimodal]].
   */
-case class VideoMeta(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_video_meta requires BINARY, got ${child.dataType.sql}")
-  override def dataType: DataType = VideoMeta.outType
-  override def prettyName: String = "graft_video_meta"
-  override def nullable: Boolean = true
-
-  protected override def nullSafeEval(input: Any): Any =
-    VideoMeta.probe(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-         |  graft.functions.VideoMeta.probe($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): VideoMeta =
-    copy(child = newChild)
-}
-
 object VideoMeta {
   val outType: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
@@ -144,20 +115,11 @@ object VideoMeta {
       if (h == null) null else h.intValue())
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(FunctionIdentifier("graft_video_meta"))) return
-    reg.registerFunction(
-      FunctionIdentifier("graft_video_meta"),
-      new ExpressionInfo(classOf[VideoMeta].getName, "graft_video_meta"),
-      { children: Seq[Expression] =>
-        require(children.size == 1, "graft_video_meta takes exactly 1 argument")
-        VideoMeta(children.head)
-      })
-  }
 
-  /** Column API: session-free via the sql-namespace bridge. */
-  def videoMeta(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      VideoMeta(org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  /** `graft_video_meta(binary)`; null for a null input or an unrecognised header. */
+  val Kernel: NativeKernel = NativeKernel("graft_video_meta", "graft.functions.VideoMeta", "probe",
+    Seq(BinaryType), outType, returnNullable = true)
+
+  /** Column API: session-free. */
+  def videoMeta(c: Column): Column = Kernel.col(c)
 }

@@ -357,7 +357,7 @@ object Dedup {
     * multiplicity included.
     *
     * Computed ENTIRELY per row by the native codegen'd
-    * [[graft.functions.SimHash64Expr]] — zero shuffle, unlike the
+    * [[graft.functions.TextSignatures.SimHash64]] — zero shuffle, unlike the
     * textbook explode + groupBy formulation which shuffles every
     * token. At 100 TB that's the difference between a map-only stage
     * and re-shuffling the whole corpus. (The r2 formulation — 64

@@ -80,7 +80,7 @@ object LangId {
   }
 
   /** The fit's counting plan, exposed so specs can pin its shape: the
-    * gram stream is a codegen'd [[FeatureBucketsExpr]] explode — no
+    * gram stream is a codegen'd [[FeatureBuckets]] explode — no
     * typed lambda, no DeserializeToObject, the same native-expression
     * standard as the classify side.
     */
@@ -90,7 +90,7 @@ object LangId {
       col(textCol).cast("string").as("_text"))
     .filter(col("_lang").isNotNull && col("_text").isNotNull)
     .select(col("_lang"), explode(
-      ncol(FeatureBucketsExpr(ex(col("_text")), nMin, nMax, buckets)))
+      FeatureBuckets.colWith(nMin, nMax, buckets)(col("_text")))
       .as("_bucket"))
     .groupBy("_lang", "_bucket").agg(count(lit(1)).as("_n"))
 
@@ -111,7 +111,7 @@ object LangId {
         col(textCol).cast("string").as("_text"))
       .filter(col("_lang").isNotNull && col("_text").isNotNull)
       .select(col("_lang"), explode(concat(array(lit(-1)),
-        ncol(FeatureBucketsExpr(ex(col("_text")), nMin, nMax, buckets))))
+        FeatureBuckets.colWith(nMin, nMax, buckets)(col("_text"))))
         .as("_bucket"))
       .groupBy("_lang", "_bucket").agg(count(lit(1)).as("_n"))
       .collect()
@@ -349,8 +349,17 @@ object LangId {
       h.getAs[Int]("buckets"), h.getAs[Int]("n_min"), h.getAs[Int]("n_max"))
   }
 
-  /** [[featureBuckets]] in the ArrayData shape the codegen'd
-    * [[FeatureBucketsExpr]] returns. */
+  /** `graft_lang_grams(text, nMin, nMax, buckets)` — the fit path's
+    * hashed-n-gram stream as a native array kernel, exploded into the
+    * one bounded counting aggregate, so the fit scan stays inside
+    * whole-stage codegen instead of deserializing every row into a
+    * Scala tuple. */
+  val FeatureBuckets: graft.functions.NativeKernel = graft.functions.NativeKernel(
+    "graft_lang_grams", "graft.operators.LangId", "featureBucketsData", Seq(StringType),
+    org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.IntegerType, containsNull = false))
+
+  /** [[featureBuckets]] in the ArrayData shape [[FeatureBuckets]] returns. */
   def featureBucketsData(text: UTF8String, nMin: Int, nMax: Int,
       buckets: Int): org.apache.spark.sql.catalyst.util.ArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -390,34 +399,6 @@ case class LangClassifyExpr(child: Expression, model: LangId.Model,
   }
 
   override protected def withNewChildInternal(newChild: Expression): LangClassifyExpr =
-    copy(child = newChild)
-}
-
-/** `graft_lang_grams(text)` — the fit path's hashed-n-gram stream as a
-  * native array expression, exploded into the one bounded counting
-  * aggregate. Codegen'd so the fit scan stays inside whole-stage
-  * codegen instead of deserializing every row into a Scala tuple.
-  */
-case class FeatureBucketsExpr(child: Expression, nMin: Int, nMax: Int,
-    buckets: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_lang_grams requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def prettyName: String = "graft_lang_grams"
-
-  protected override def nullSafeEval(input: Any): Any =
-    LangId.featureBucketsData(input.asInstanceOf[UTF8String], nMin, nMax, buckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.operators.LangId.featureBucketsData($c, $nMin, $nMax, $buckets);")
-
-  override protected def withNewChildInternal(newChild: Expression): FeatureBucketsExpr =
     copy(child = newChild)
 }
 

@@ -505,7 +505,7 @@ object CoreQueries {
       val li = t(s, dir, "lineitem")
         .withColumn("l_quantity", col("l_quantity").cast("decimal(18,4)"))
         .withColumn("l_discount", col("l_discount").cast("decimal(18,4)"))
-      val state = java.nio.file.Files.createTempDirectory("graft_incr").toString
+      val state = graft.LocalFs.tempDir("graft_incr").toString
       val metrics = Seq(
         IncrementalAgg.Count("n_rows"),
         IncrementalAgg.Sum("l_quantity", "sum_qty"),

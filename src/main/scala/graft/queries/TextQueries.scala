@@ -29,7 +29,7 @@ object TextQueries {
     // export node: write through Writers, read back — the roundtrip
     // itself is what the oracle checks.
     "e_export" -> ((s, dir) => {
-      val out = java.nio.file.Files.createTempDirectory("graft_export")
+      val out = graft.LocalFs.tempDir("graft_export").toPath
         .resolve("li").toString
       graft.sources.Writers.write(
         t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity"),

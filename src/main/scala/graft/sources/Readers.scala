@@ -71,7 +71,7 @@ object Readers {
       case "pdf" =>
         // PDFs read as (path, length, text): Spark's binaryFile source
         // streams the bytes (splittable by FILE — the right unit for
-        // documents) and the native PdfExtractExpr (same expression the
+        // documents) and the native graft_pdf_text kernel (same expression the
         // DAG node uses, PipelineDag pdf_extract) extracts per row on
         // the executors — no Scala-udf serialization wall in the plan.
         // Callers wanting the raw bytes read format "binaryfile".

@@ -25,4 +25,27 @@ class BenchSpec extends AnyFunSuite {
     assert(j.get("canary_end_sec").isNull)
     assert(j.get("canary_failed").asBoolean())
   }
+
+  test("materialise runs what Bench times: x_pii_redact's executed plan keeps graft_pii_redact") {
+    import scala.jdk.CollectionConverters._
+    val spark = TestSpark.spark
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val sf = TestDirs.create("graft_bench_sf")
+      import spark.implicits._
+      Seq((1L, "mail me at a@b.org"), (2L, "no pii here")).toDF("doc_id", "text")
+        .write.parquet(sf.resolve("documents.parquet").toString)
+      Bench.materialise(SparkEntry.queries("x_pii_redact")(spark, sf.toString))
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      assert(plans.asScala.exists(_.contains("graft_pii_redact")), plans.asScala.mkString("\n---\n"))
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

@@ -104,7 +104,7 @@ class AudioProbeSpec extends AnyFunSuite {
   }
 
   test("SQL name resolves via the extension registration") {
-    AudioMeta.register(spark)
+    GraftFunctions.register(spark)
     val n = Seq(Tuple1(wav)).toDF("b").createOrReplaceTempView("graft_audio_t")
     val r = spark.sql(
       "SELECT graft_audio_meta(b).sample_rate AS sr FROM graft_audio_t")

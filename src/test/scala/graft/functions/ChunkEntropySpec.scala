@@ -45,8 +45,7 @@ class ChunkEntropySpec extends AnyFunSuite {
   }
 
   test("SQL names register and resolve") {
-    CharEntropy.register(spark)
-    ChunkDocs.register(spark)
+    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_char_entropy('abcd') AS e, " +
         "size(graft_chunks('a b c d e', 2, 2)) AS nc").head()

@@ -21,6 +21,7 @@ import graft.TestSpark
   * seeds.
   */
 class CurationKernelsSpec extends AnyFunSuite {
+  import CurationKernelsSpec.withCodegen
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -137,18 +138,6 @@ class CurationKernelsSpec extends AnyFunSuite {
       case c => c.toString
     }.mkString("\"", "", "\"")
 
-  private def withCodegen[T](on: Boolean)(f: => T): T = {
-    val conf = spark.conf
-    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val saved = keys.map(k => k -> conf.getOption(k))
-    conf.set(keys(0), on.toString)
-    conf.set(keys(1), if (on) "CODEGEN_ONLY" else "NO_CODEGEN")
-    try f finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   // -------------------------------------------------------------- specs
 
   test("langId ≡ the contains/when Column tree") {
@@ -180,5 +169,25 @@ class CurationKernelsSpec extends AnyFunSuite {
     val res = ScTest.check(ScTest.Parameters.default
       .withMinSuccessfulTests(2000).withInitialSeed(Seed(15)), prop)
     assert(res.passed, res.status.toString)
+  }
+}
+
+object CurationKernelsSpec {
+  /** Run `f` with whole-stage codegen and CODEGEN_ONLY expression
+    * evaluation (`on`), or with NO_CODEGEN (interpreted). With `on`, a
+    * stage whose generated code fails to compile throws instead of
+    * silently falling back to the interpreted path. */
+  def withCodegen[T](on: Boolean)(f: => T): T = {
+    val conf = TestSpark.spark.conf
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode",
+      "spark.sql.codegen.fallback")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    conf.set(keys(0), on.toString)
+    conf.set(keys(1), if (on) "CODEGEN_ONLY" else "NO_CODEGEN")
+    conf.set(keys(2), (!on).toString)
+    try f finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 }

@@ -106,7 +106,7 @@ class ImageProbeSpec extends AnyFunSuite {
   }
 
   test("SQL surface + null input") {
-    ImageDims.register(spark)
+    GraftFunctions.register(spark)
     Seq(Tuple1(png(9, 7))).toDF("m").createOrReplaceTempView("imgs")
     val d = spark.sql("SELECT graft_image_dims(m) FROM imgs").head.getStruct(0)
     assert(d.getString(0) == "png" && d.getInt(1) == 9 && d.getInt(2) == 7)

@@ -66,11 +66,11 @@ class KllFunctionsSpec extends AnyFunSuite {
     assertThrows[Exception] {
       df.agg(KllFunctions.kllAgg($"s")).collect() // string column
     }
-    // q validated at ANALYSIS, not Column construction: a constructor
-    // require would also fire inside executor-side Java
-    // deserialization (the KllAggBase failure mode for k), so the
-    // check lives in checkInputDataTypes like every other guard here
-    assertThrows[Exception] { // AnalysisException: q out of range
+    // q validated by the driver-side Column builder, never in an
+    // expression constructor: a constructor require would also fire
+    // inside executor-side Java deserialization (the KllAggBase
+    // failure mode for k)
+    assertThrows[Exception] { // IllegalArgumentException: q out of range
       Seq(Array[Byte]()).toDF("s")
         .select(KllFunctions.kllQuantile($"s", 1.5)).collect()
     }

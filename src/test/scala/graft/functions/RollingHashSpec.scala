@@ -9,7 +9,7 @@ class RollingHashSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("codegen'd expression matches the reference implementation") {
-    RollingHash.register(spark)
+    GraftFunctions.register(spark)
     val inputs = Seq("", "a", "hello world", "héllo wörld ✓", "x" * 10000)
     val df = inputs.toDF("t")
       .select($"t", call_function("graft_rolling_hash", $"t").as("h"))
@@ -20,7 +20,7 @@ class RollingHashSpec extends AnyFunSuite {
   }
 
   test("null in, null out; distinct strings, distinct hashes") {
-    RollingHash.register(spark)
+    GraftFunctions.register(spark)
     val df = Seq(Some("abc"), None, Some("abd")).toDF("t")
       .select(call_function("graft_rolling_hash", $"t").as("h"))
     val rows = df.collect()
@@ -30,7 +30,7 @@ class RollingHashSpec extends AnyFunSuite {
   }
 
   test("works via SQL after registration") {
-    RollingHash.register(spark)
+    GraftFunctions.register(spark)
     val h = spark.sql("SELECT graft_rolling_hash('spark') AS h").head.getLong(0)
     assert(h == RollingHash.hash("spark".getBytes("UTF-8")))
   }
@@ -39,13 +39,13 @@ class RollingHashSpec extends AnyFunSuite {
     val ext = new GraftExtensions
     // apply against the current session's extension point equivalent:
     // verify the builder produces a working expression
-    val e = RollingHash(org.apache.spark.sql.catalyst.expressions.Literal("abc"))
+    val e = RollingHash.Kernel(org.apache.spark.sql.catalyst.expressions.Literal("abc"))
     assert(e.eval(null) == RollingHash.hash("abc".getBytes("UTF-8")))
     // every graft_* function family is wired through the extension
     // (builders construct working expressions)
-    val sw = StopwordHits(org.apache.spark.sql.catalyst.expressions.Literal(" the cat "))
+    val sw = TextMetrics.StopwordHits(org.apache.spark.sql.catalyst.expressions.Literal(" the cat "))
     assert(sw.eval(null) == 1.0)
-    val sh = SimHash64Expr(org.apache.spark.sql.catalyst.expressions.Literal("a b"))
+    val sh = TextSignatures.SimHash64(org.apache.spark.sql.catalyst.expressions.Literal("a b"))
     assert(sh.eval(null).isInstanceOf[Long])
     assert(ext != null)
   }

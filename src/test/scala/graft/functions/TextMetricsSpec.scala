@@ -77,7 +77,7 @@ class TextMetricsSpec extends AnyFunSuite {
   }
 
   test("SQL registration surface") {
-    TextMetrics.register(spark)
+    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT graft_ws_token_count('a b'), graft_punct_count('a,b.'), " +
         "graft_has_han('汉'), graft_bpe_token_count('a!b'), " +

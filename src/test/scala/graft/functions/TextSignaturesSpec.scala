@@ -88,7 +88,7 @@ class TextSignaturesSpec extends AnyFunSuite {
   }
 
   test("expressions survive a codegen round trip (no fallback crash) and SQL surface") {
-    TextSignatures.register(spark)
+    GraftFunctions.register(spark)
     val n = spark.sql(
       "SELECT graft_simhash64('hello world again'), " +
         "graft_shingle_hashes('a b c d', 2), " +

@@ -118,7 +118,7 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("SQL surface via registration") {
-    TopKMin.register(spark)
+    GraftFunctions.register(spark)
     Seq((1, 4L), (1, 2L), (1, 9L)).toDF("g", "v").createOrReplaceTempView("tk")
     val got = spark.sql(
       "SELECT graft_top_k_min(v, 2) FROM tk GROUP BY g").head.getSeq[Long](0)

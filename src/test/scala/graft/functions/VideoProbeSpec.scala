@@ -91,7 +91,7 @@ class VideoProbeSpec extends AnyFunSuite {
   }
 
   test("SQL name resolves via registration") {
-    VideoMeta.register(spark)
+    GraftFunctions.register(spark)
     Seq(Tuple1(mp4)).toDF("b").createOrReplaceTempView("graft_video_t")
     val r = spark.sql(
       "SELECT graft_video_meta(b).duration_ms AS d FROM graft_video_t")

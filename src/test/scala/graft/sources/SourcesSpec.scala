@@ -61,7 +61,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(out.map(_.getAs[String]("text")).toSeq ==
       Seq("alpha document", "beta document"))
     assert(out.forall(_.getAs[Long]("length") > 0))
-    // plan pin: the extract is the native PdfExtractExpr, not a Scala
+    // plan pin: the extract is the native graft_pdf_text, not a Scala
     // udf (the DAG node and the file reader share one expression)
     val plan = Readers.read(spark, dir.toString, "pdf")
       .queryExecution.analyzed.toString
