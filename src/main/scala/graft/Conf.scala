@@ -50,13 +50,6 @@ object Conf {
     */
   val PostingShuffleBytesKey = "spark.graft.postingShuffleBytes"
 
-  /** Route threshold for the MinHash bucket aggregate
-    * ([[graft.operators.Dedup.minHashNearDups]]): one-pass
-    * collect_list at or below, count-filtered two-pass above. Default
-    * [[graft.operators.Dedup.TwoPassBucketBytes]].
-    */
-  val TwoPassBucketBytesKey = "spark.graft.twoPassBucketBytes"
-
   /** Max flagged-doc rows the span scrub broadcasts before routing the
     * remainder join through a staged/shuffled shape (count, not
     * bytes). Default [[graft.operators.Dedup.ScrubHitsBroadcastLimit]].

@@ -57,6 +57,8 @@ object GraftFunctions {
     fn("graft_shingle_hashes", "col", "n")(a => TextSignatures.shingleHashesExpr(a(0), a.int(1))),
     fn("graft_shingle_strings", "col", "n")(a => TextSignatures.shingleStringsExpr(a(0), a.int(1))),
     fn("graft_minhash_sig", "col", "n")(a => TextSignatures.minHashSigExpr(a(0), a.int(1))),
+    fn("graft_minhash_bands", "hashes", "bands", "rows_per_band")(a =>
+      TextSignatures.minHashBandsExpr(a(0), a.int(1), a.int(2))),
     fn("graft_chunks", "text", "width", "stride")(a =>
       ChunkDocs.chunksExpr(a(0), a.int(1), a.int(2))),
     unary(ImageDims.Kernel),

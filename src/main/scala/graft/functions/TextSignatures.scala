@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -31,8 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - token hash = Spark's `xxhash64(token)` (XXH64 over UTF-8 bytes,
   *    seed 42);
   *  - [[MinHashSig]]'s k-th hash = Spark's `xxhash64(k, h)` =
-  *    `XXH64.hashLong(h, XXH64.hashLong(k, 42))`, bit-identical to the
-  *    HOF version it replaces;
+  *    `XXH64.hashLong(h, XXH64.hashInt(k, 42))`, bit-identical to the
+  *    HOF version it replaces; [[MinHashBands]] hashes its band slices
+  *    the way `xxhash64(b, slice…)` does;
   *  - [[SimHash64]] bit i = sign of Σ_tokens ±1 by bit i of the
   *    token hash (multiplicity included), identical to the 64-fold
   *    `aggregate` formulation.
@@ -68,13 +69,17 @@ object TextSignatures {
 
   /** Distinct hashes of the n-token shingles; empty when the doc has
     * fewer than n tokens. The shingle hash chains the n token hashes
-    * (first-occurrence order preserved, like `array_distinct`).
+    * (first-occurrence order preserved, like `array_distinct`). The
+    * dedup set is open addressing over a primitive table (linear
+    * probing, load at most 1/2): no boxed Long per shingle.
     */
   def shingleHashes(s: UTF8String, n: Int): ArrayData = {
     val th = tokenHashes(s)
-    if (th.length < n) return new GenericArrayData(Array.emptyLongArray)
+    if (th.length < n) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val m = th.length - n + 1
-    val seen = new java.util.HashSet[java.lang.Long](m * 2)
+    val mask = Integer.highestOneBit(m) * 4 - 1
+    val slots = new Array[Long](mask + 1)
+    val used = new Array[Boolean](mask + 1)
     val buf = new Array[Long](m)
     var cnt = 0
     var i = 0
@@ -82,10 +87,12 @@ object TextSignatures {
       var h = th(i)
       var j = 1
       while (j < n) { h = XXH64.hashLong(th(i + j), h); j += 1 }
-      if (seen.add(h)) { buf(cnt) = h; cnt += 1 }
+      var p = (h ^ (h >>> 32)).toInt & mask
+      while (used(p) && slots(p) != h) p = (p + 1) & mask
+      if (!used(p)) { used(p) = true; slots(p) = h; buf(cnt) = h; cnt += 1 }
       i += 1
     }
-    new GenericArrayData(java.util.Arrays.copyOf(buf, cnt))
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(buf, cnt))
   }
 
   /** ALL n-token shingles as strings (space-joined lowercase tokens),
@@ -116,8 +123,33 @@ object TextSignatures {
     * array_min(transform(hs, h => xxhash64(s, h))))`. An empty input
     * yields Long.MaxValue entries (callers filter empty docs first).
     */
-  def minHashSig(hashes: ArrayData, k: Int): ArrayData = {
-    val n = hashes.numElements()
+  def minHashSig(hashes: ArrayData, k: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(signature(hashes, k))
+
+  /** The `bands` LSH bucket keys of a doc: key b is Spark's
+    * `xxhash64(b, sig[b·r], …, sig[b·r + r − 1])` over the
+    * (bands·r)-wide [[minHashSig]] `sig` — the band index (an INT,
+    * folded with hashInt) mixed in first, so equal slices in different
+    * bands get different keys.
+    */
+  def minHashBands(hashes: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
+    val sig = signature(hashes, bands * rowsPerBand)
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var h = XXH64.hashInt(b, XxSeed)
+      var r = b * rowsPerBand
+      val end = r + rowsPerBand
+      while (r < end) { h = XXH64.hashLong(sig(r), h); r += 1 }
+      out(b) = h
+      b += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** The signature loop shared by [[minHashSig]] and [[minHashBands]]. */
+  private def signature(hashes: ArrayData, k: Int): Array[Long] = {
+    val hs = hashes.toLongArray()
     val out = new Array[Long](k)
     var s = 0
     while (s < k) {
@@ -129,15 +161,15 @@ object TextSignatures {
       val seed = XXH64.hashInt(s, XxSeed)
       var mn = Long.MaxValue
       var i = 0
-      while (i < n) {
-        val v = XXH64.hashLong(hashes.getLong(i), seed)
+      while (i < hs.length) {
+        val v = XXH64.hashLong(hs(i), seed)
         if (v < mn) mn = v
         i += 1
       }
       out(s) = mn
       s += 1
     }
-    new GenericArrayData(out)
+    out
   }
 
   /** 64-bit SimHash over whitespace tokens (multiplicity included). */
@@ -173,6 +205,8 @@ object TextSignatures {
     Seq(StringType), ArrayType(StringType, containsNull = false))
   val MinHashSig: NativeKernel =
     NativeKernel("graft_minhash_sig", T, "minHashSig", Seq(Longs), Longs)
+  val MinHashBands: NativeKernel =
+    NativeKernel("graft_minhash_bands", T, "minHashBands", Seq(Longs), Longs)
   val SimHash64: NativeKernel = NativeKernel("graft_simhash64", T, "simHash64", Seq(StringType), LongType)
 
   /** `graft_shingle_hashes(text, n)` → array<bigint>: distinct hashed
@@ -195,11 +229,25 @@ object TextSignatures {
     MinHashSig.withConsts(k)(hashes)
   }
 
+  /** `graft_minhash_bands(hashes, bands, rows_per_band)` →
+    * array<bigint>: the `bands` LSH bucket keys of the
+    * (bands·rows_per_band)-wide MinHash signature. */
+  def minHashBandsExpr(hashes: Expression, bands: Int, rowsPerBand: Int): Expression = {
+    require(bands >= 1, s"bands must be >= 1, got $bands")
+    require(rowsPerBand >= 1, s"rowsPerBand must be >= 1, got $rowsPerBand")
+    require(bands.toLong * rowsPerBand <= Int.MaxValue,
+      s"bands × rowsPerBand = ${bands.toLong * rowsPerBand} is past Int.MaxValue")
+    MinHashBands.withConsts(bands, rowsPerBand)(hashes)
+  }
+
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
 
   def shingleHashesCol(text: Column, n: Int): Column = ncol(shingleHashesExpr(ex(text), n))
 
   def minHashSigCol(hashes: Column, k: Int): Column = ncol(minHashSigExpr(ex(hashes), k))
+
+  def minHashBandsCol(hashes: Column, bands: Int, rowsPerBand: Int): Column =
+    ncol(minHashBandsExpr(ex(hashes), bands, rowsPerBand))
 
   def simHash64Col(text: Column): Column = SimHash64.col(text)
 

@@ -1,15 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Near-duplicate detection for LLM-training-data pipelines.
   *
   * Four families, all pair-candidate generators that avoid O(n²):
   *  - exact: hash-aggregate on a normalized fingerprint (see
   *    TextQueries `d_exact_dedup`)
-  *  - MinHash + LSH banding: shingle → 64 minhashes → 16 bands →
-  *    bucket self-join → exact-Jaccard rerank
+  *  - MinHash + LSH banding: shingle → 64 minhashes → 16 band keys →
+  *    sorted bucket walk → exact-Jaccard rerank
   *  - SimHash: 64-bit signature, (maxHamming+1)-chunk pigeonhole
   *    buckets → hamming rerank
   *  - n-gram Jaccard: rarity-ordered prefix-filtered inverted index
@@ -18,9 +19,10 @@ import org.apache.spark.sql.functions._
   * [[connectedComponents]] (transitive clusters) and
   * [[dropNearDuplicates]] (keep one representative per cluster).
   *
-  * Everything is Column-expression based (codegen-friendly, no UDFs);
-  * the only shuffles are the bucket joins, keyed so identical docs
-  * co-locate. At 100 TB the bucket join replaces an impossible
+  * Everything is Column-expression based (codegen-friendly, no UDFs)
+  * except the MinHash bucket walk, one `mapPartitions` over sorted
+  * rows; the only shuffles are the bucket exchanges, keyed so
+  * identical docs co-locate. At 100 TB the bucket join replaces an impossible
   * all-pairs comparison; quadratic blowup from degenerate buckets
   * (mass-duplicated docs) is bounded by `maxBucketSize`, and the
   * n-gram path bounds its index by prefix filtering. The persisted
@@ -172,33 +174,25 @@ object Dedup {
       .otherwise(array_distinct(full))
   }
 
-  /** One (band, bucket) struct per band over a minhash signature:
-    * bucket key = hash of the band's signature slice (band index mixed
-    * in so identical slices in different bands can't collide). Shared
-    * by the self-join and cross-corpus LSH paths — ONE definition
-    * keeps their banding bit-identical, which the cross operator's
-    * recall argument depends on.
-    */
-  private[graft] def bandBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(Seq(lit(b)) ++ (0 until rowsPerBand)
-          .map(r => element_at(sig, b * rowsPerBand + r + 1)): _*)
-          .as("bucket"))
-    }: _*)
-
   /** Candidate pairs via MinHash LSH banding, reranked with EXACT
     * Jaccard over the shingle sets. Output: (id_a, id_b, jaccard) with
     * id_a < id_b and jaccard >= threshold.
     *
     * bands*rowsPerBand minhashes; a pair collides if any band matches
-    * exactly — P(collide) = 1-(1-j^r)^b, the classic S-curve.
+    * exactly — P(collide) = 1-(1-j^r)^b, the classic S-curve. One
+    * route at every corpus size: a native kernel gives each doc its
+    * `bands` bucket keys, and a sort-based walk over (band, bucket, id)
+    * rows pairs up each bucket's ids ([[bandCandidates]]), holding no
+    * per-bucket object for a singleton. Null ids take part in no
+    * bucket; a duplicated id pairs with itself (ids should be unique,
+    * see the rerank).
     *
-    * `maxBucketSize` guards the candidate join against degenerate
+    * `maxBucketSize` guards the candidate walk against degenerate
     * buckets: a bucket of B identical-signature docs yields B²/2 pairs
     * — thousands of exact copies should be collapsed by exact dedup
     * FIRST, not pairwise-enumerated here. Dropped buckets are whole
-    * duplicate clusters, not near-dup misses.
+    * duplicate clusters, not near-dup misses; a cap below 2 drops them
+    * all.
     *
     * `stageDir`: when set, the hashed-shingle stage is written to
     * parquet there and read back instead of living in executor
@@ -207,9 +201,10 @@ object Dedup {
     * manager, reusable across runs); `persist` remains the default
     * for interactive sizes.
     *
-    * One evaluation of the returned plan computes the signatures and
-    * writes the banded bucket shuffle once (twice on the large-corpus
-    * two-pass route, by design: count pass + list pass).
+    * `shingleN`, `bands` and `rowsPerBand` must be at least 1 and
+    * `bands × rowsPerBand` at most `Int.MaxValue`; anything else is
+    * rejected on the driver. One evaluation of the returned plan
+    * computes the signatures and writes the banded shuffle once.
     */
   def minHashNearDups(
       df: DataFrame, idCol: String, textCol: String,
@@ -219,17 +214,18 @@ object Dedup {
     minHashNearDupsStaged(df, idCol, textCol, shingleN, bands, rowsPerBand,
       threshold, maxBucketSize, stageDir)._1
 
-  /** [[minHashNearDups]] and the stages its pair plan reads (the
-    * hashed-shingle stage, and the hot-bucket stage on the two-pass
-    * route), for a caller that releases them once it no longer reads
-    * the pairs — see [[dropNearDuplicates]]' `release`.
+  /** [[minHashNearDups]] and the hashed-shingle stage its pair plan
+    * reads, for a caller that releases it once it no longer reads the
+    * pairs — see [[dropNearDuplicates]]' `release`.
     */
   private[graft] def minHashNearDupsStaged(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, bands: Int, rowsPerBand: Int,
       threshold: Double, maxBucketSize: Int,
-      stageDir: Option[String]): (DataFrame, Seq[DataFrame]) = {
-    val numHashes = bands * rowsPerBand
+      stageDir: Option[String]): (DataFrame, DataFrame) = {
+    require(shingleN >= 1, s"shingleN must be >= 1, got $shingleN")
+    // built first: checks bands and rowsPerBand before anything runs
+    val candidatesOf = bandCandidates(bands, rowsPerBand, maxBucketSize)
     // Staged once and reused by signature build + both rerank sides —
     // the standard "materialize the signatures" step; without it the
     // scan+shingling runs three times. Only the 64-bit shingle HASHES
@@ -247,68 +243,7 @@ object Dedup {
           .shingleHashesCol(col(textCol), shingleN).as("_hsh"))
       .filter(size(col("_hsh")) > 0)
     val hashedShingles = stage(hashedRaw, stageDir)
-    val sig = hashedShingles
-      .withColumn("_sig", graft.functions.TextSignatures
-        .minHashSigCol(col("_hsh"), numHashes))
-
-    // One row per band: bucket key = hash of the band's signature slice.
-    val banded = sig.select(col("_id"),
-      explode(bandBuckets(col("_sig"), bands, rowsPerBand)).as("bb"))
-      .select(col("_id"), col("bb.band"), col("bb.bucket"))
-
-    // Candidate pairs are generated BUCKET-LOCALLY. Route choice is
-    // STATS-BASED (r13, the same device cost-based planning uses):
-    //
-    //  - SMALL corpus (input under [[TwoPassBucketBytes]]): one
-    //    collect_list aggregate — two shuffles total, the cheapest
-    //    plan when every bucket fits agg memory (the pre-r13 shape;
-    //    at the bench SF the two-pass variant measured +0.5 s/query
-    //    of pure extra-stage cost).
-    //  - LARGE corpus: TWO passes — bands×n banded rows are
-    //    overwhelmingly SINGLETON buckets (no collision at t-scale
-    //    banding), and collect_list over all of them was the r13
-    //    sf100 sweep's superlinear term (40M tiny list buffers =
-    //    pure allocation/GC on the agg map; ×18-31 for ×10 data,
-    //    phase-probed at 246 of the composition's 250 s). Pass 1 is
-    //    a plain COUNT per bucket — fixed-width codegen'd aggregate,
-    //    map-side combinable, no object buffers — and only buckets
-    //    with 2..maxBucketSize members (the collision volume, tiny
-    //    on any non-degenerate corpus) survive into the plan-time-
-    //    broadcast semi-filtered pass 2, whose collect_list runs on
-    //    collision rows only. The sig/banding scan runs twice; that
-    //    is seconds where the one-pass list agg was minutes —
-    //    measured at the 5M-doc decade: d_dedup_apply ×18.4→×9.5,
-    //    d_minhash_exact ×30.3→×7.2 (~linear restored).
-    def bucketLists(src: DataFrame): DataFrame = src
-      .groupBy("band", "bucket")
-      .agg(collect_list(col("_id")).as("_ids"))
-      .filter(size(col("_ids")).between(2, maxBucketSize))
-    val (collisionBuckets, stages) =
-      if (graft.Conf.underBytes(df, graft.Conf.TwoPassBucketBytesKey,
-          TwoPassBucketBytes)) (bucketLists(banded), Seq(hashedShingles))
-      else {
-        // plan-time broadcast under the same budget device as the
-        // span family: hot buckets are collision volume, but a
-        // mass-duplicated corpus can inflate them past executor
-        // memory — past the cap the semi filter degrades to a
-        // shuffled join, cost proportional to duplication
-        val (hotBuckets, nHot) = stageCounted(banded.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n").between(2, maxBucketSize))
-          .select("band", "bucket"), stageDir)
-        val hotSide =
-          if (nHot <= SpanBroadcastLimit) broadcast(hotBuckets)
-          else hotBuckets
-        (bucketLists(banded.join(hotSide, Seq("band", "bucket"))),
-          Seq(hashedShingles, hotBuckets))
-      }
-    val candidates = collisionBuckets
-      .withColumn("_sorted", array_sort(col("_ids")))
-      // native pair walk (ArrayPairs — the nested-HOF formulation was
-      // an O(k²) interpreted tree-walk per bucket)
-      .select(explode(graft.functions.ArrayPairs.orderedPairsCol(
-        col("_sorted"))).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
+    val candidates = candidatesOf(hashedShingles)
 
     // Exact-Jaccard rerank, FUSED (r13): every candidate is keyed
     // under both of its ids and joined against the shingle stage once,
@@ -316,11 +251,11 @@ object Dedup {
     // aggregate instead of `.distinct()` + two joins.
     // Both keys come out of ONE scan of `candidates` (an explode of a
     // two-struct array), never a union of two projections of it: a
-    // union feeds the whole candidate subtree — signature, band
-    // explode, bucket exchange and collect_list — to the plan twice,
-    // and AQE does not reuse an exchange that sits under a cached-
-    // relation query stage, so each branch recomputed the signatures
-    // and wrote the same banded shuffle again.
+    // union feeds the whole candidate subtree — band keys, bucket
+    // exchange and walk — to the plan twice, and AQE does not reuse an
+    // exchange that sits under a cached-relation query stage, so each
+    // branch recomputed the signatures and wrote the same banded
+    // shuffle again.
     // CONTRACT (shared by every dedup operator but binding here): ids
     // must be UNIQUE — a duplicated id joins several shingle sets and
     // first() keeps an arbitrary one, so a true pair can score below
@@ -349,7 +284,61 @@ object Dedup {
           size(array_union(col("_sha"), col("_shb"))).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    (pairs, stages)
+    (pairs, hashedShingles)
+  }
+
+  /** The LSH candidate pairs (id_a, id_b) of (_id, _hsh) rows: rows
+    * hash-partitioned by (band, bucket) and sorted by (band, bucket,
+    * _id), then one [[bucketPairs]] walk per partition. The multiset
+    * equals the i < j pairs of each bucket's `array_sort`ed
+    * `collect_list(_id)` with 2..`maxBucketSize` members — the shape
+    * this replaced, whose 40M mostly-singleton list buffers were the
+    * r13 sweep's superlinear term. The kernel arguments are checked
+    * here, before any input is given.
+    */
+  private[graft] def bandCandidates(
+      bands: Int, rowsPerBand: Int, maxBucketSize: Int): DataFrame => DataFrame = {
+    val bandKeys = graft.functions.TextSignatures
+      .minHashBandsCol(col("_hsh"), bands, rowsPerBand)
+    hashed => {
+      val idType = hashed.schema("_id").dataType
+      val pairSchema = StructType(Seq("id_a", "id_b").map(StructField(_, idType)))
+      hashed
+        .filter(col("_id").isNotNull)
+        .select(col("_id"), posexplode(bandKeys).as(Seq("band", "bucket")))
+        .repartition(col("band"), col("bucket"))
+        .sortWithinPartitions("band", "bucket", "_id")
+        .mapPartitions(bucketPairs(_, maxBucketSize))(Encoders.row(pairSchema))
+    }
+  }
+
+  /** The i < j id pairs of every run of equal (band, bucket) with 2 to
+    * `maxBucketSize` members, over (_id, band, bucket) rows sorted by
+    * (band, bucket, _id). Pairs are emitted lazily; at most
+    * `maxBucketSize + 1` ids of a run are held (compared as Ints, so no
+    * cap wraps), and a run's ids are copied out only when it has pairs.
+    */
+  private def bucketPairs(sorted: Iterator[Row], maxBucketSize: Int): Iterator[Row] = {
+    val rows = sorted.buffered
+    val held = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val none = Array.empty[Any]
+    def nextRun(): Array[Any] = {
+      val first = rows.next()
+      val (band, bucket) = (first.getInt(1), first.getLong(2))
+      held.clear()
+      held += first.get(0)
+      while (rows.hasNext && rows.head.getInt(1) == band && rows.head.getLong(2) == bucket) {
+        val id = rows.next().get(0)
+        if (held.length <= maxBucketSize) held += id
+      }
+      if (held.length >= 2 && held.length <= maxBucketSize) held.toArray
+      else none
+    }
+    Iterator.continually(rows.hasNext).takeWhile(identity).flatMap { _ =>
+      val ids = nextRun()
+      Iterator.range(0, ids.length).flatMap(i =>
+        Iterator.range(i + 1, ids.length).map(j => Row(ids(i), ids(j))))
+    }
   }
 
   /** 64-bit SimHash over whitespace tokens: bit i of the signature is
@@ -456,7 +445,7 @@ object Dedup {
   private def probeLocalPairs(
       pairs: DataFrame, aCol: String, bCol: String,
       collectLimit: Int, assumeCanonical: Boolean)
-      : Option[Array[org.apache.spark.sql.Row]] = {
+      : Option[Array[Row]] = {
     if (collectLimit <= 0) return None
     // Overflow ⇒ the graph is genuinely large ⇒ distributed. In the
     // canonicalized branch greatest/least skip NULLs, so a null-partner row
@@ -639,7 +628,7 @@ object Dedup {
     * reversed, self-, and null-partner pairs.
     */
   private def unionFindMap(
-      pairs: Array[org.apache.spark.sql.Row],
+      pairs: Array[Row],
       ord: Ordering[Any]): scala.collection.mutable.HashMap[Any, Any] = {
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
@@ -680,14 +669,13 @@ object Dedup {
     */
   private def localComponents(
       spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[org.apache.spark.sql.Row],
+      pairs: Array[Row],
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType}
     val comp = unionFindMap(pairs, idOrdering(idType))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList[org.apache.spark.sql.Row](comp.size)
+    val rows: java.util.List[Row] =
+      new java.util.ArrayList[Row](comp.size)
     comp.foreach { case (id, c) =>
-      rows.add(org.apache.spark.sql.Row(id, c))
+      rows.add(Row(id, c))
     }
     spark.createDataFrame(rows, StructType(Seq(
       StructField("id", idType, nullable = false),
@@ -701,11 +689,10 @@ object Dedup {
   private def dropIdsLocal(
       df: DataFrame, idCol: String, losers: Iterable[Any],
       idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType}
     if (losers.isEmpty) return df
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList[org.apache.spark.sql.Row](losers.size)
-    losers.foreach(id => rows.add(org.apache.spark.sql.Row(id)))
+    val rows: java.util.List[Row] =
+      new java.util.ArrayList[Row](losers.size)
+    losers.foreach(id => rows.add(Row(id)))
     val loserDf = df.sparkSession.createDataFrame(rows,
       StructType(Seq(StructField("_loser", idType, nullable = false))))
     df.join(loserDf, col(idCol) === col("_loser"), "left_anti")
@@ -785,10 +772,9 @@ object Dedup {
           .select(col(idCol).cast(idType).as("_id"),
             coalesce(keepBy.cast("double"), lit(Double.NegativeInfinity)).as("_q"))
         val members = {
-          import org.apache.spark.sql.types.{StructField, StructType}
-          val rows: java.util.List[org.apache.spark.sql.Row] =
-            new java.util.ArrayList[org.apache.spark.sql.Row](comp.size)
-          comp.keysIterator.foreach(id => rows.add(org.apache.spark.sql.Row(id)))
+          val rows: java.util.List[Row] =
+            new java.util.ArrayList[Row](comp.size)
+          comp.keysIterator.foreach(id => rows.add(Row(id)))
           df.sparkSession.createDataFrame(rows,
             StructType(Seq(StructField("_mid", idType, nullable = false))))
         }
@@ -1173,8 +1159,7 @@ object Dedup {
     * span-family posting aggregate routes through the pre-shuffled
     * shape (see [[dupSpanFirsts]]). 256 MB of input text ≈ 1.5M docs ≈
     * 60M postings — the last decade where a scan task's partial map
-    * still fits comfortably; the same crossover family as
-    * [[TwoPassBucketBytes]].
+    * still fits comfortably.
     */
   val PostingShuffleBytes: Long = 256L << 20
 
@@ -1184,17 +1169,6 @@ object Dedup {
     * against the persisted aggregate).
     */
   val SpanBroadcastLimit: Long = 3000000L
-
-  /** Input-size threshold (Catalyst plan stats, bytes) above which
-    * [[minHashNearDups]] routes its bucket aggregate through the
-    * two-pass count-filter shape — below it the corpus's whole banded
-    * stream fits the aggregate comfortably and the one-pass
-    * collect_list is strictly cheaper (measured +0.5 s/query of
-    * extra-stage cost at sf0.1 for nothing). 256 MB of input text is
-    * ~1M docs ≈ 8M banded rows — well before the singleton-bucket
-    * allocation wall the two-pass exists for (measured at 40M).
-    */
-  val TwoPassBucketBytes: Long = 256L << 20
 
   /** [[spanDuplicateIds]] complement: the corpus with every
     * later-duplicate-span document dropped.
@@ -1293,7 +1267,7 @@ object Dedup {
     // then the collect the broadcast needed anyway) — this is one.
     // Dir-staged runs skip the probe: the stage is the 100 TB index
     // and belongs on distributed storage whatever its size.
-    val probed: Option[Array[org.apache.spark.sql.Row]] =
+    val probed: Option[Array[Row]] =
       if (stageDir.isDefined || spark.conf.get(StageDirConf, null) != null) None
       else {
         // persist-before-probe on the big-corpus route only (r16): an

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *  - [[topKSketch]] — bounded O(maxMapSize)/task Misra-Gries
   *    candidates + exact recount; the single-box 100 TB path.
   *  - [[topKAuto]] — the DEFAULT: stats-routes between them on
-  *    Catalyst plan size (the same device [[Dedup.TwoPassBucketBytes]]
+  *    Catalyst plan size (the same device [[Dedup.PostingShuffleBytes]]
   *    uses), exact below [[SketchRouteBytes]], sketch above.
   */
 object NgramStats {
@@ -259,7 +259,7 @@ object NgramStats {
 
   /** Stats-routed default (r14, the r13 verdict's item 2): EXACT
     * [[topK]] below `routeBytes` of input (Catalyst plan stats — the
-    * same cost-based device as [[Dedup.TwoPassBucketBytes]]),
+    * same cost-based device as [[Dedup.PostingShuffleBytes]]),
     * [[topKSketch]] above it. The exact path's open-vocabulary
     * aggregate is the right plan while the distinct-gram table fits
     * one box's aggregate memory; past that its single-box class is

@@ -534,11 +534,11 @@ object PipelineJson {
         val mhThreshold = config.path("threshold").asDouble(0.7)
         val maxBucket = config.path("max_bucket_size").asInt(1000)
         MapNode { (_, df) =>
-          val (pairs, stages) = graft.operators.Dedup.minHashNearDupsStaged(
+          val (pairs, stage) = graft.operators.Dedup.minHashNearDupsStaged(
             df, mhId, mhText, shingleN, bands, rowsPerBand,
             mhThreshold, maxBucket, stageDir = None)
           graft.operators.Dedup.dropNearDuplicates(
-            df, mhId, pairs, assumeCanonical = true, release = stages)
+            df, mhId, pairs, assumeCanonical = true, release = Seq(stage))
         }
       case "span_dedup" =>
         // ExactSubstr (Lee et al. 2021): mode "drop" removes every

@@ -3,7 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{Sessions, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev tool: profile named SparkEntry queries.
   *
@@ -16,8 +18,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *    the returned DataFrame runs.
   *  - `--jobs`: run each query twice the way Bench times it (round 1
   *    carries codegen/JIT; read round 2) and print wall seconds, the
-  *    scheduled jobs, and per job its seconds, stage count, stage names
-  *    (the triggering call sites) and job description.
+  *    scheduled jobs, and per job its seconds, stage count, the call
+  *    site of its SQL execution (an AQE-submitted job's own stage names
+  *    only name the AQE thread), its stage names and job description.
   *  - `--final`: run each query and write its FINAL adaptive plan to
   *    `<dir>/<name>_final.txt` — the only place exchange and stage
   *    reuse is visible (`explain` before execution shows
@@ -84,7 +87,7 @@ object Profile {
       js.foreach { j =>
         val sec = if (j.end == 0L) Double.NaN else (j.end - j.start) / 1e9
         println(f"   job ${j.id}%3d $sec%7.3f s stages=${j.stages}%2d " +
-          s"${j.stageNames.take(160)} ${j.desc.take(60)}")
+          s"[${j.callSite}] ${j.stageNames.take(160)} ${j.desc.take(60)}")
       }
     }
     finalDir.foreach { dir =>
@@ -104,12 +107,14 @@ object Profile {
     spark.stop()
   }
 
-  private final case class Job(id: Int, start: Long, stages: Int, stageNames: String,
-      desc: String, @volatile var end: Long = 0L)
+  private final case class Job(id: Int, start: Long, stages: Int, callSite: String,
+      stageNames: String, desc: String, @volatile var end: Long = 0L)
 
-  /** The jobs scheduled since the last `clear`, in start order. */
+  /** The jobs scheduled since the last `clear`, in start order, each
+    * named by the call site of its SQL execution ("-" outside one). */
   private final class JobLog extends SparkListener {
     private val started = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    private val executionSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def clear(): Unit = started.clear()
     def jobs: Seq[Job] = {
       import scala.jdk.CollectionConverters._
@@ -118,8 +123,16 @@ object Profile {
     override def onJobStart(s: SparkListenerJobStart): Unit = {
       val desc = Option(s.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-      started.add(Job(s.jobId, System.nanoTime(), s.stageInfos.size,
+      val site = Option(s.properties)
+        .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => Option(executionSites.get(id))).getOrElse("-")
+      started.add(Job(s.jobId, System.nanoTime(), s.stageInfos.size, site,
         s.stageInfos.map(_.name).distinct.mkString(" | "), desc))
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        executionSites.put(x.executionId.toString, x.description)
+      case _ => ()
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       started.forEach(j => if (j.id == e.jobId) j.end = System.nanoTime())

@@ -147,21 +147,6 @@ class ConfSpec extends AnyFunSuite {
     }
   }
 
-  test("twoPassBucketBytes=0 flips minHashNearDups to the two-pass bucket filter") {
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again today"),
-      (2L, "the quick brown fox jumps over the lazy dog again and again today"),
-      (3L, "completely different text about maritime shipping schedules and cargo")
-    ).toDF("doc_id", "text")
-    def pairs() = Dedup.minHashNearDups(docs, "doc_id", "text")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val onePass = pairs()
-    withConf(Conf.TwoPassBucketBytesKey, "0") {
-      assert(pairs() == onePass)
-      assert(onePass.contains((1L, 2L)))
-    }
-  }
-
   test("postingShuffleBytes=0 flips the span posting aggregate to the pre-shuffled route") {
     val boiler = "standard legal disclaimer header used on every single page verbatim"
     val docs = Seq(

@@ -30,6 +30,31 @@ class DedupSpec extends AnyFunSuite {
     assert(j == 1.0)
   }
 
+  test("minHashNearDups rejects shingleN, bands and rowsPerBand out of range on the driver, naming each") {
+    val stage = graft.TestDirs.create("graft_minhash_caps").resolve("stage")
+    def rejects(name: String)(shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4): Unit = {
+      val e = intercept[IllegalArgumentException](Dedup.minHashNearDups(corpus, "id", "text",
+        shingleN, bands, rowsPerBand, stageDir = Some(stage.toString)))
+      assert(e.getMessage.contains(name), e.getMessage)
+      assert(!java.nio.file.Files.exists(stage), "a stage was written before the check")
+    }
+    rejects("shingleN")(shingleN = 0)
+    rejects("bands")(bands = 0)
+    rejects("rowsPerBand")(rowsPerBand = 0)
+    rejects("bands")(bands = -1, rowsPerBand = -4) // the product alone would read 4
+    rejects("past Int.MaxValue")(bands = 1 << 16, rowsPerBand = 1 << 15)
+  }
+
+  test("maxBucketSize below 2 yields no pairs; Int.MaxValue does not overflow the walk") {
+    def pairs(cap: Int) = Dedup.minHashNearDups(corpus, "id", "text", threshold = 0.5,
+      maxBucketSize = cap).as[(Long, Long, Double)].collect().toSet
+    for (cap <- Seq(-1, 0, 1)) assert(pairs(cap).isEmpty, cap)
+    val all = pairs(1000)
+    assert(all.exists(p => p._1 == 1L && p._2 == 4L))
+    assert(pairs(Int.MaxValue) == all)
+    assert(pairs(2).subsetOf(all))
+  }
+
   test("simhash: identical text → identical signature; near → small hamming") {
     val sigs = Dedup.simHash(corpus, "id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -3,7 +3,7 @@ package graft.operators
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
@@ -43,9 +43,23 @@ class MinHashSinglePassSpec extends AnyFunSuite {
   private def pairsOf(df: DataFrame): DataFrame =
     Dedup.minHashNearDups(df, "doc_id", "text")
 
+  /** The struct formulation of the band keys that
+    * `graft_minhash_bands` fuses: one (band, bucket) struct per band,
+    * bucket = `xxhash64(band, signature slice)`. Kept as the reference
+    * the oracle below bands with.
+    */
+  private def bandBuckets(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        xxhash64(Seq(lit(b)) ++ (0 until rowsPerBand)
+          .map(r => element_at(sig, b * rowsPerBand + r + 1)): _*)
+          .as("bucket"))
+    }: _*)
+
   /** The pre-change formulation of [[Dedup.minHashNearDups]] (small-
-    * corpus route): rerank keyed by a UNION of two projections of the
-    * candidates. Kept as the result oracle for the single-scan keying.
+    * corpus route): collect_list buckets, rerank keyed by a UNION of
+    * two projections of the candidates. Kept as the result oracle for
+    * the single-scan keying and the bucket walk.
     */
   private def unionKeyedPairs(df: DataFrame): DataFrame = {
     val hashed = df
@@ -53,7 +67,7 @@ class MinHashSinglePassSpec extends AnyFunSuite {
         graft.functions.TextSignatures.shingleHashesCol(col("text"), 3).as("_hsh"))
       .filter(size(col("_hsh")) > 0)
     val banded = hashed
-      .select(col("_id"), explode(Dedup.bandBuckets(
+      .select(col("_id"), explode(bandBuckets(
         graft.functions.TextSignatures.minHashSigCol(col("_hsh"), 64), 16, 4)).as("bb"))
       .select(col("_id"), col("bb.band"), col("bb.bucket"))
     val candidates = banded.groupBy("band", "bucket")
@@ -119,13 +133,14 @@ class MinHashSinglePassSpec extends AnyFunSuite {
   private def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
     df.as[(Long, Long, Double)].collect().toSet
 
-  test("final adaptive plan of minHashNearDups computes graft_minhash_sig exactly once") {
+  test("final adaptive plan of minHashNearDups computes graft_minhash_bands exactly once") {
     val pairs = pairsOf(corpus)
     assert(pairs.collect().nonEmpty)
     val plan = pairs.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(plan.contains("== Final Plan =="), plan)
-    assert("graft_minhash_sig\\(".r.findAllIn(plan).size == 1, plan)
+    assert("graft_minhash_bands\\(".r.findAllIn(plan).size == 1, plan)
+    assert(!plan.contains("graft_minhash_sig("), plan)
   }
 
   test("banded bucket shuffle is written once per probe and once per distributed resolution") {
