@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 
 /** Cluster-dialable engine knobs (`spark.graft.*` session conf) and
   * the two plan-shape decisions every scale-critical operator makes
@@ -105,6 +107,10 @@ object Conf {
     val rows = df.limit(clamped.toInt + 1).collect()
     if (rows.length <= clamped) Right(rows) else Left(rows)
   }
+
+  /** `obs`'s row from a returned action; `None` if not posted in 2 s. */
+  def observed(obs: Observation): Option[Row] =
+    try Some(Await.result(obs.future, 2.seconds)) catch { case _: TimeoutException => None }
 
   /** Catalyst's size estimate of `df`'s optimized plan, in bytes. */
   def estimatedBytes(df: DataFrame): BigInt =

@@ -317,16 +317,10 @@ object PipelineDag {
             val rows = withRetries() {
               val obs = org.apache.spark.sql.Observation()
               detail = write(one.observe(obs, count(lit(1)).as("rows")))
-              // the metric posts via the (async) listener bus after the
-              // action returns — bounded wait, then give up quietly (a
-              // sink that never executed its input has no metric)
-              try {
-                val row = scala.concurrent.Await.result(obs.future,
-                  scala.concurrent.duration.Duration(2, "s"))
-                row.schema.fieldNames.zip(row.toSeq).toMap[String, Any]
-              } catch {
-                case _: java.util.concurrent.TimeoutException => Map.empty[String, Any]
-              }
+              // bounded wait, then give up quietly (a sink that never
+              // executed its input has no metric)
+              graft.Conf.observed(obs).fold(Map.empty[String, Any])(row =>
+                row.schema.fieldNames.zip(row.toSeq).toMap)
             }
             if (rows.nonEmpty) observed(node.id) = rows
             state.foreach(_.markDone(node.id))
