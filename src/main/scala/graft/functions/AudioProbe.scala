@@ -143,7 +143,7 @@ object AudioMeta {
 
   /** `graft_audio_meta(binary)`; null for a null input or an unrecognised header. */
   val Kernel: NativeKernel = NativeKernel("graft_audio_meta", "graft.functions.AudioMeta", "probe",
-    Seq(BinaryType), outType, returnNullable = true)
+    Seq(Seq(BinaryType)), outType, returnNullable = true)
 
   /** Column API: session-free. */
   def audioMeta(c: Column): Column = Kernel.col(c)

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{BooleanType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** `graft_bloom_might_contain(keyHash)` — membership probe of a
@@ -13,38 +10,21 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * This is the executor half of [[graft.operators.IncrementalDedup]]:
   * the filter is built once from the (small) batch side, then shipped
-  * to every corpus task inside the expression — the corpus scan
-  * probes it map-side and never shuffles. Spark uses the same shape
-  * internally for runtime row-group filtering; building it as a
-  * first-class expression makes the pattern available to any plan.
+  * to every corpus task inside the plan as a [[NativeCall.Model]] — the
+  * corpus scan probes it map-side and never shuffles. Spark uses the
+  * same shape internally for runtime row-group filtering; building it
+  * as a kernel makes the pattern available to any plan.
   * (`BloomFilterImpl` is `Serializable`, so the instance rides the
-  * codegen reference array to executors like any literal.)
+  * codegen reference array to executors like any model.)
   */
-case class BloomMightContain(child: Expression, bloom: BloomFilter)
-    extends UnaryExpression with Predicate {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bloom_might_contain requires BIGINT key hash, got ${child.dataType.sql}")
-
-  override def prettyName: String = "graft_bloom_might_contain"
-
-  protected override def nullSafeEval(input: Any): Any =
-    bloom.mightContainLong(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloom", bloom, classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.mightContainLong($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
-    copy(child = newChild)
-}
-
 object BloomMightContain {
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+
+  val Kernel: NativeKernel = NativeKernel("graft_bloom_might_contain",
+    "graft.functions.BloomMightContain", "probe", Seq(Seq(LongType)), BooleanType)
 
   def mightContain(keyHash: Column, bloom: BloomFilter): Column =
-    ncol(BloomMightContain(ex(keyHash), bloom))
+    Kernel.colWith(NativeCall.Model(bloom))(keyHash)
+
+  /** JVM kernel behind [[Kernel]]. */
+  def probe(keyHash: Long, bloom: BloomFilter): Boolean = bloom.mightContainLong(keyHash)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, QuaternaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -123,119 +120,48 @@ object Bm25Native {
     s
   }
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  private val BN = "graft.functions.Bm25Native"
+  private val Doubles = ArrayType(DoubleType, containsNull = false)
+  private val Tokens = Seq(ArrayType(StringType))
+
+  /** `graft_bm25_matchvec(tokens)` → array<double> of 0/1 aligned with
+    * the embedded terms; null/absent tokens give the zero vector (it
+    * feeds `array_to_vector`, which asserts non-null). */
+  val MatchVec: NativeKernel = NativeKernel("graft_bm25_matchvec", BN, "matchVec",
+    Seq(Tokens), Doubles, propagateNull = false)
+  /** `graft_bm25_contribs(tokens, dfs, n, avgdl)` with embedded
+    * (terms, k1, b): per-term contribution array for one doc. Null on
+    * any null input (a null-text doc's chain nulled out in the replaced
+    * formulation too; callers guard with `_tnull`). */
+  val Contribs: NativeKernel = NativeKernel("graft_bm25_contribs", BN, "contribs",
+    Seq(Tokens, Seq(ArrayType(DoubleType)), Seq(LongType), Seq(DoubleType)), Doubles)
 
   def matchVecCol(toks: Column, terms: Seq[String]): Column =
-    ncol(Bm25MatchVecExpr(ex(toks), terms.toIndexedSeq))
+    MatchVec.colWith(termIndex(terms), terms.length)(toks)
 
   def contribsCol(toks: Column, dfs: Column, n: Column, avgdl: Column,
       terms: Seq[String], k1: Double, b: Double): Column =
-    ncol(Bm25ContribsExpr(ex(toks), ex(dfs), ex(n), ex(avgdl),
-      terms.toIndexedSeq, k1, b))
+    Contribs.colWith(termIndex(terms), terms.length, k1, b)(toks, dfs, n, avgdl)
 
-  private val Doubles = ArrayType(DoubleType, containsNull = false)
+  /** The terms' position index as a model. Distinctness is the contract
+    * that keeps these kernels equivalent to the per-term array_contains
+    * chain they replaced: [[indexOf]] keeps only the FIRST slot of a
+    * repeated term, so a duplicate would silently score 0 where the
+    * chain scored it again. */
+  private def termIndex(terms: Seq[String]): NativeCall.Model = {
+    require(terms.distinct.size == terms.size, s"BM25 terms must be distinct, got $terms")
+    NativeCall.Model(indexOf(terms.map(UTF8String.fromString).toArray))
+  }
+
   /** `graft_array_fsum(arr)` — ordered left-fold sum of array<double>. */
   val SumOrdered: NativeKernel = NativeKernel("graft_array_fsum",
-    "graft.functions.Bm25Native", "sumOrdered", Seq(Doubles), DoubleType)
+    BN, "sumOrdered", Seq(Seq(Doubles)), DoubleType)
   /** `graft_array_picksum(values, idx)` — sum of `values[idx[i]-1]` in
     * idx order; idx is 1-based (array_position), 0/null adds 0.0. */
-  val PickSum: NativeKernel = NativeKernel("graft_array_picksum",
-    "graft.functions.Bm25Native", "pickSum",
-    Seq(Doubles, ArrayType(LongType, containsNull = false)), DoubleType)
+  val PickSum: NativeKernel = NativeKernel("graft_array_picksum", BN, "pickSum",
+    Seq(Seq(Doubles), Seq(ArrayType(LongType, containsNull = false))), DoubleType)
 
   def sumOrderedCol(arr: Column): Column = SumOrdered.col(arr)
 
   def pickSumCol(values: Column, idx: Column): Column = PickSum.col(values, idx)
-}
-
-/** `graft_bm25_matchvec(tokens)` → array<double> of 0/1 aligned with
-  * the embedded terms; null/absent tokens give the zero vector (it
-  * feeds `array_to_vector`, which asserts non-null).
-  */
-case class Bm25MatchVecExpr(child: Expression, terms: IndexedSeq[String])
-    extends UnaryExpression {
-  // Distinctness is the contract that keeps these kernels equivalent
-  // to the per-term array_contains chain they replaced: indexOf keeps
-  // only the FIRST slot of a repeated term (putIfAbsent), so a
-  // duplicate would silently score 0 where the chain scored it again.
-  require(terms.distinct.size == terms.size,
-    s"BM25 terms must be distinct, got $terms")
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_bm25_matchvec requires ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_bm25_matchvec"
-
-  @transient private lazy val idx = Bm25Native.indexOf(
-    terms.map(UTF8String.fromString).toArray)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    Bm25Native.matchVec(v.asInstanceOf[ArrayData], idx, terms.length)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val idxRef = ctx.addReferenceObj("bm25idx", idx, "java.util.HashMap")
-    val c = child.genCode(ctx)
-    val fin = s"org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = " +
-      s"graft.functions.Bm25Native.matchVec(" +
-      s"${c.isNull} ? null : ${c.value}, $idxRef, ${terms.length});"
-    ev.copy(code =
-      code"""
-        ${c.code}
-        $fin""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Bm25MatchVecExpr =
-    copy(child = newChild)
-}
-
-/** `graft_bm25_contribs(tokens, dfs, n, avgdl)` with embedded
-  * (terms, k1, b): per-term contribution array for one doc. Null on
-  * any null input (a null-text doc's chain nulled out in the replaced
-  * formulation too; callers guard with `_tnull`).
-  */
-case class Bm25ContribsExpr(
-    first: Expression, second: Expression, third: Expression,
-    fourth: Expression, terms: IndexedSeq[String], k1: Double, b: Double)
-    extends QuaternaryExpression {
-  // Same distinctness contract as Bm25MatchVecExpr (indexOf is
-  // first-slot-wins; duplicates would get a permanently-zero tf slot).
-  require(terms.distinct.size == terms.size,
-    s"BM25 terms must be distinct, got $terms")
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(DoubleType, _), LongType, DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_bm25_contribs requires (ARRAY<STRING>, ARRAY<DOUBLE>, BIGINT, DOUBLE), got $other")
-    }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_bm25_contribs"
-
-  @transient private lazy val idx = Bm25Native.indexOf(
-    terms.map(UTF8String.fromString).toArray)
-
-  protected override def nullSafeEval(toks: Any, dfs: Any, n: Any, avgdl: Any): Any =
-    Bm25Native.contribs(toks.asInstanceOf[ArrayData], dfs.asInstanceOf[ArrayData],
-      n.asInstanceOf[Long], avgdl.asInstanceOf[Double], idx, terms.length, k1, b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idxRef = ctx.addReferenceObj("bm25idx", idx, "java.util.HashMap")
-    nullSafeCodeGen(ctx, ev, (t, d, n, a) =>
-      s"""${ev.value} = graft.functions.Bm25Native.contribs(
-         |  $t, $d, $n, $a, $idxRef, ${terms.length}, $k1, $b);""".stripMargin)
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression,
-      newFourth: Expression): Bm25ContribsExpr =
-    copy(first = newFirst, second = newSecond, third = newThird,
-      fourth = newFourth)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType}
 
@@ -16,47 +13,53 @@ import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType}
   * default, but with a trivially cheap scan metric: Hamming distance
   * via XOR + popcount, no table lookups at all.
   *
-  * Codegen'd expressions for the usual reason: both run once per
+  * Codegen'd kernels for the usual reason: both run once per
   * corpus row around the scan, and a UDF there breaks whole-stage
   * codegen.
   */
 object BqFunctions {
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  import NativeCall.{ElementType, Model}
+
+  private val B = "graft.functions.BqFunctions"
+  /** `graft_bq_encode(vec)` → binary: packed sign-bit code. */
+  val Encode: NativeKernel = NativeKernel("graft_bq_encode", B, "encode",
+    Seq(NativeKernel.NumericArrays), BinaryType, returnNullable = true)
+  /** `graft_bq_hamming(code)` → int: Hamming distance to the query's
+    * code (lower = closer in angle). */
+  val Hamming: NativeKernel =
+    NativeKernel("graft_bq_hamming", B, "hamming", Seq(Seq(BinaryType)), IntegerType)
+  /** `graft_bq_hamming_batch(code, qIdx)` → int: [[Hamming]] against
+    * query `qIdx`'s code from a batch — the k-NN-join form. */
+  val HammingBatch: NativeKernel = NativeKernel("graft_bq_hamming_batch", B, "hammingBatch",
+    Seq(Seq(BinaryType), Seq(IntegerType)), IntegerType)
 
   /** Encode a numeric-array column to its packed sign-bit code. */
   def bqEncode(v: Column, thresholds: Array[Double], normalize: Boolean): Column =
-    ncol(BqEncodeExpr(ex(v), thresholds, normalize))
+    Encode.colWith(ElementType(0), Model(thresholds), normalize)(v)
 
   /** Hamming distance of a code column against one query's code. */
   def bqHamming(code: Column, queryCode: Array[Byte]): Column =
-    ncol(BqHammingExpr(ex(code), queryCode))
+    Hamming.colWith(Model(queryCode))(code)
 
-  /** JVM kernel behind [[BqEncodeExpr]]. Same contracts as the PQ/SQ
+  /** Hamming distance of a code column against the `qIdx`-th of a
+    * batch of query codes (k-NN join: one scan scores every query). */
+  def bqHammingBatch(code: Column, qIdx: Column, queryCodes: Array[Array[Byte]]): Column =
+    HammingBatch.colWith(Model(queryCodes))(code, qIdx)
+
+  /** JVM kernel behind [[Encode]]. Same contracts as the PQ/SQ
     * encoders: null element → boxed null, wrong width raises.
     */
-  def encode(arr: ArrayData, kind: Int, elem: DataType,
+  def encode(arr: ArrayData, elem: DataType,
       thresholds: Array[Double], normalize: Boolean): Array[Byte] = {
     val dim = thresholds.length
     val n = arr.numElements()
     if (n != dim) throw new IllegalArgumentException(
       s"graft_bq_encode: vector has $n elements, model expects $dim")
-    val v = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (arr.isNullAt(i)) return null
-      v(i) = PqFunctions.readDoubleAt(arr, i, kind, elem)
-      i += 1
-    }
-    if (normalize) {
-      var ss = 0.0
-      i = 0
-      while (i < dim) { ss += v(i) * v(i); i += 1 }
-      val nrm = math.sqrt(ss)
-      if (nrm > 0) { i = 0; while (i < dim) { v(i) /= nrm; i += 1 } }
-    }
+    val v = VectorFunctions.toDoubles(arr, elem, normalize)
+    if (v == null) return null
     val code = new Array[Byte]((dim + 7) / 8)
-    i = 0
+    var i = 0
     while (i < dim) {
       if (v(i) > thresholds(i)) code(i >> 3) = (code(i >> 3) | (1 << (i & 7))).toByte
       i += 1
@@ -64,7 +67,14 @@ object BqFunctions {
     code
   }
 
-  /** JVM kernel behind [[BqHammingExpr]]: Σ popcount(a XOR b). Raises
+  /** JVM kernel behind [[HammingBatch]]. */
+  def hammingBatch(code: Array[Byte], qIdx: Int, queries: Array[Array[Byte]]): Int = {
+    if (qIdx < 0 || qIdx >= queries.length) throw new IllegalArgumentException(
+      s"graft_bq_hamming_batch: query index $qIdx out of range (${queries.length} codes)")
+    hamming(code, queries(qIdx))
+  }
+
+  /** JVM kernel behind [[Hamming]]: Σ popcount(a XOR b). Raises
     * on a width mismatch — that is a code from a different model.
     */
   def hamming(code: Array[Byte], query: Array[Byte]): Int = {
@@ -79,66 +89,4 @@ object BqFunctions {
     }
     d
   }
-}
-
-/** `graft_bq_encode(vec)` → binary: packed sign-bit code. */
-case class BqEncodeExpr(child: Expression, thresholds: Array[Double],
-    normalize: Boolean) extends UnaryExpression {
-
-  private lazy val kind = VectorFunctions.elementKind(child.dataType)
-  private lazy val elem = VectorFunctions.elementTypeOf(child.dataType)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VectorFunctions.elementKind(child.dataType) >= 0)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bq_encode requires a numeric array, got ${child.dataType.sql}")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_bq_encode"
-
-  protected override def nullSafeEval(v: Any): Any =
-    BqFunctions.encode(v.asInstanceOf[ArrayData], kind, elem, thresholds,
-      normalize)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val r = ctx.freshName("bqCode")
-      val th = ctx.addReferenceObj("bqThresholds", thresholds, "double[]")
-      val el = ctx.addReferenceObj("bqElem", elem)
-      s"""
-         |byte[] $r = graft.functions.BqFunctions.encode(
-         |  $v, $kind, $el, $th, $normalize);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BqEncodeExpr =
-    copy(child = newChild)
-}
-
-/** `graft_bq_hamming(code)` → int: Hamming distance to the query's
-  * code (lower = closer in angle).
-  */
-case class BqHammingExpr(child: Expression, queryCode: Array[Byte])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_bq_hamming requires a binary code column, got ${child.dataType.sql}")
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_bq_hamming"
-
-  protected override def nullSafeEval(v: Any): Any =
-    BqFunctions.hamming(v.asInstanceOf[Array[Byte]], queryCode)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val q = ctx.addReferenceObj("bqQueryCode", queryCode, "byte[]")
-      s"${ev.value} = graft.functions.BqFunctions.hamming($v, $q);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BqHammingExpr =
-    copy(child = newChild)
 }

@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
-/** Nearest-centroid assignment as ONE native expression.
+/** Nearest-centroid assignment as ONE native kernel.
   *
   * The declarative form — `array_position(array(k dot-expressions),
   * array_max(...))` — materializes a k-element score ARRAY per row
@@ -15,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * a real corpus needs (SemDeDup at sf10: k ≈ 3000 cells) that is
   * thousands of Catalyst nodes per row, far past what whole-stage
   * codegen will fuse, and the assignment pass dwarfs every other
-  * stage of the query. This expression is the same computation as a
+  * stage of the query. This kernel is the same computation as a
   * single reference-object loop: argmax (v·c − ‖c‖²/2) with
   * first-index tie-break — BIT-IDENTICAL scores and tie behavior to
   * the array formulation it replaces (same left-to-right dot
@@ -27,36 +24,28 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   */
 object CentroidFunctions {
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  import NativeCall.{ElementType, Model}
+
+  /** `graft_nearest_cell(vec)` → int: nearest-centroid index. */
+  val NearestCell: NativeKernel = NativeKernel("graft_nearest_cell",
+    "graft.functions.CentroidFunctions", "nearest", Seq(NativeKernel.NumericArrays),
+    IntegerType, returnNullable = true)
 
   /** Index of the nearest centroid by L2 (int; null on null/mismatch). */
   def nearestCell(v: Column, centroids: Array[Array[Double]]): Column =
-    ncol(NearestCellExpr(ex(v), centroids))
+    NearestCell.colWith(ElementType(0), Model(centroids),
+      Model(centroids.map(c => c.map(x => x * x).sum / 2)))(v)
 
-  /** JVM kernel behind [[NearestCellExpr]]. `halves(c)` = ‖c‖²/2,
-    * precomputed once at plan build.
+  /** JVM kernel behind [[NearestCell]]. `halves(c)` = ‖c‖²/2,
+    * precomputed once when the Column is built.
     */
-  def nearest(arr: ArrayData, kind: Int, elem: DataType,
+  def nearest(arr: ArrayData, elem: DataType,
       centroids: Array[Array[Double]],
       halves: Array[Double]): java.lang.Integer = {
     val dim = centroids(0).length
     if (arr.numElements() != dim) return null
-    val v = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (arr.isNullAt(i)) return null
-      v(i) = kind match {
-        case 0 => arr.getDouble(i)
-        case 1 => arr.getFloat(i).toDouble
-        case 2 => arr.getLong(i).toDouble
-        case 3 => arr.getInt(i).toDouble
-        case 4 => arr.getShort(i).toDouble
-        case 5 => arr.getByte(i).toDouble
-        case _ => arr.get(i, elem)
-          .asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
-      }
-      i += 1
-    }
+    val v = VectorFunctions.toDoubles(arr, elem, normalize = false)
+    if (v == null) return null
     var best = 0
     var bestS = Double.NegativeInfinity
     var c = 0
@@ -71,47 +60,4 @@ object CentroidFunctions {
     }
     Integer.valueOf(best)
   }
-}
-
-/** `graft_nearest_cell(vec)` → int: nearest-centroid index (see
-  * [[CentroidFunctions]] for the rationale and pinned semantics).
-  */
-case class NearestCellExpr(child: Expression,
-    centroids: Array[Array[Double]]) extends UnaryExpression {
-
-  private lazy val kind = VectorFunctions.elementKind(child.dataType)
-  private lazy val elem = VectorFunctions.elementTypeOf(child.dataType)
-  private lazy val halves: Array[Double] =
-    centroids.map(c => c.map(x => x * x).sum / 2)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VectorFunctions.elementKind(child.dataType) >= 0)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_nearest_cell requires a numeric array, got ${child.dataType.sql}")
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_nearest_cell"
-
-  protected override def nullSafeEval(v: Any): Any = {
-    val r = CentroidFunctions.nearest(
-      v.asInstanceOf[ArrayData], kind, elem, centroids, halves)
-    if (r == null) null else r.intValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val r = ctx.freshName("cellRes")
-      val cents = ctx.addReferenceObj("cellCentroids", centroids)
-      val hs = ctx.addReferenceObj("cellHalves", halves)
-      val el = ctx.addReferenceObj("cellElem", elem)
-      s"""
-         |java.lang.Integer $r = graft.functions.CentroidFunctions.nearest(
-         |  $v, $kind, $el, $cents, $hs);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.intValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCellExpr =
-    copy(child = newChild)
 }

@@ -65,7 +65,7 @@ object CharEntropy {
 
   /** `graft_char_entropy(text)` → double; null text → 0.0 (the replaced `when`). */
   val Entropy: NativeKernel = NativeKernel("graft_char_entropy", "graft.functions.CharEntropy",
-    "entropy", Seq(StringType), DoubleType, propagateNull = false)
+    "entropy", Seq(Seq(StringType)), DoubleType, propagateNull = false)
 
   def charEntropyCol(text: Column): Column = Entropy.col(text)
 }

@@ -55,7 +55,7 @@ object ChunkDocs {
   /** `graft_chunks(text, width, stride)` → array<struct<chunk_id,
     * chunk, n_chunk_tokens>>; null text → empty array. */
   val Chunks: NativeKernel = NativeKernel("graft_chunks", "graft.functions.ChunkDocs", "chunks",
-    Seq(StringType), ArrayType(StructType(Seq(
+    Seq(Seq(StringType)), ArrayType(StructType(Seq(
       StructField("chunk_id", LongType, nullable = false),
       StructField("chunk", StringType, nullable = false),
       StructField("n_chunk_tokens", LongType, nullable = false))), containsNull = false),

@@ -294,16 +294,17 @@ object CurationKernels {
 
   /** [[TextFunctions.langId]]: never null (null text → "und"). */
   val LangId: NativeKernel = NativeKernel("graft_lang_id", CK, "langId",
-    Seq(StringType), StringType, propagateNull = false)
+    Seq(Seq(StringType)), StringType, propagateNull = false)
   /** [[TextFunctions.gopherFailReason]]: null = passes every rule. */
   val GopherFailReason: NativeKernel = NativeKernel("graft_gopher_fail_reason", CK,
-    "gopherFailReason", Seq(StringType), StringType, propagateNull = false, returnNullable = true)
+    "gopherFailReason", Seq(Seq(StringType)), StringType, propagateNull = false,
+    returnNullable = true)
   /** [[TextFunctions.piiRedact]]: null text → null. The card candidates
     * are an argument ([[LuhnCards.ValidCandidates]] over the same text),
     * so subexpression elimination computes them once for a row that also
     * asks [[TextFunctions.cardCount]]. */
   val PiiRedact: NativeKernel = NativeKernel("graft_pii_redact", CK, "piiRedact",
-    Seq(StringType, ArrayType(StringType, containsNull = false)), StringType)
+    Seq(Seq(StringType), Seq(ArrayType(StringType, containsNull = false))), StringType)
 
   def langIdCol(c: Column): Column = LangId.colWith(UseICU)(c)
   def gopherFailReasonCol(c: Column, minTokens: Long, maxTokens: Long,

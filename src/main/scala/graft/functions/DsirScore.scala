@@ -4,10 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DecimalType, Decimal, StringType}
+import org.apache.spark.sql.types.{DecimalType, Decimal, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd DSIR per-document scorer — replaces the
@@ -66,43 +63,20 @@ object DsirScore {
     sum
   }
 
-  /** The Decimal(28,10) the codegen template calls into. */
+  /** JVM kernel behind [[Sum]]: the sum as a Decimal(28,10). */
   def score(text: UTF8String, table: Array[Long]): Decimal =
     Decimal(scoreUnscaled(text, table), 28, 10)
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  /** `graft_dsir_sum(text)` with an embedded ratio table. */
+  val Sum: NativeKernel = NativeKernel("graft_dsir_sum", "graft.functions.DsirScore", "score",
+    Seq(Seq(StringType)), DecimalType(28, 10))
 
   /** Column builder: `text -> DECIMAL(28,10)` DSIR log-weight sum from
-    * a dense per-bucket table of unscaled scale-10 log-ratios.
+    * a dense per-bucket table of 4096 unscaled scale-10 log-ratios.
     */
-  def dsirSumCol(text: Column, unscaledRatios: Array[Long]): Column =
-    ncol(DsirScoreExpr(ex(text), unscaledRatios.toIndexedSeq))
-}
-
-/** `graft_dsir_sum(text)` with an embedded ratio table: see [[DsirScore]]. */
-case class DsirScoreExpr(child: Expression, ratios: IndexedSeq[Long])
-    extends UnaryExpression {
-  require(ratios.length == 4096,
-    s"dsir ratio table must have 4096 entries, got ${ratios.length}")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dsir_sum requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = DecimalType(28, 10)
-  override def prettyName: String = "graft_dsir_sum"
-
-  @transient private lazy val table: Array[Long] = ratios.toArray
-
-  protected override def nullSafeEval(input: Any): Any =
-    DsirScore.score(input.asInstanceOf[UTF8String], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("dsirRatios", table, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.DsirScore.score($c, $tableRef);")
+  def dsirSumCol(text: Column, unscaledRatios: Array[Long]): Column = {
+    require(unscaledRatios.length == 4096,
+      s"dsir ratio table must have 4096 entries, got ${unscaledRatios.length}")
+    Sum.colWith(NativeCall.Model(unscaledRatios))(text)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): DsirScoreExpr =
-    copy(child = newChild)
 }

@@ -72,7 +72,7 @@ object FreqFunctions {
     * estimate long, lower long, upper long>>` ordered (estimate desc,
     * item asc), truncated to `limit`. A null sketch is the empty one. */
   val TopItems: NativeKernel = NativeKernel("graft_freq_top", "graft.functions.FreqFunctions",
-    "topItems", Seq(BinaryType), ArrayType(entryType, containsNull = false),
+    "topItems", Seq(Seq(BinaryType)), ArrayType(entryType, containsNull = false),
     propagateNull = false)
 
   def topItems(bytes: Array[Byte], limit: Int): ArrayData =

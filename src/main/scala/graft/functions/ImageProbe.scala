@@ -91,7 +91,7 @@ object ImageDims {
 
   /** `graft_image_dims(binary)`; null for a null input or an unrecognised header. */
   val Kernel: NativeKernel = NativeKernel("graft_image_dims", "graft.functions.ImageDims", "probe",
-    Seq(BinaryType), outType, returnNullable = true)
+    Seq(Seq(BinaryType)), outType, returnNullable = true)
 
   /** Column API: session-free. */
   def imageDims(c: Column): Column = Kernel.col(c)

@@ -61,7 +61,7 @@ object KllFunctions {
     * null for an empty sketch (no updates ever — the "no non-null rows
     * in any batch" group). */
   val Quantile: NativeKernel = NativeKernel("graft_kll_quantile",
-    "graft.functions.KllFunctions", "quantile", Seq(BinaryType), DoubleType,
+    "graft.functions.KllFunctions", "quantile", Seq(Seq(BinaryType)), DoubleType,
     returnNullable = true)
 
   /** The kernel (boxed: an empty sketch has no quantile). */

@@ -90,7 +90,7 @@ object LuhnCards {
   /** `(text)` → array<string> of the Luhn-valid card candidates; null
     * text → empty array. */
   val ValidCandidates: NativeKernel = NativeKernel("graft_luhn_cards",
-    "graft.functions.LuhnCards", "validCandidates", Seq(StringType),
+    "graft.functions.LuhnCards", "validCandidates", Seq(Seq(StringType)),
     ArrayType(StringType, containsNull = false), propagateNull = false)
 
   def validCandidatesCol(text: Column): Column = ValidCandidates.col(text)

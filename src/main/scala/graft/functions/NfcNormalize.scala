@@ -28,7 +28,7 @@ object NfcNormalize {
   }
 
   val Nfc: NativeKernel = NativeKernel("graft_nfc", "graft.functions.NfcNormalize", "nfc",
-    Seq(StringType), StringType)
+    Seq(Seq(StringType)), StringType)
 
   def nfcNormalize(c: Column): Column = Nfc.col(c)
 }

@@ -346,7 +346,7 @@ object PdfText {
     * work is the same JDK byte parse either way (I/O-bound); what the
     * kernel buys is the unbroken codegen span around it. */
   val Kernel: NativeKernel = NativeKernel("graft_pdf_text", "graft.functions.PdfText",
-    "extractText", Seq(BinaryType), StringType)
+    "extractText", Seq(Seq(BinaryType)), StringType)
 
   /** Column form of [[extract]] over a BINARY column. */
   def pdfText(c: Column): Column = Kernel.col(c)

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType}
 
 /** Product-quantization kernels (Jégou et al., "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011): a vector splits into
@@ -15,16 +12,29 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   * distance computation) scores a code against a query with `nsub`
   * table lookups — no vector arithmetic at all on the scan.
   *
-  * Both stages are native codegen'd expressions for the same reason as
-  * [[DotProductExpr]]: they run once per corpus row, and a
+  * Both stages are native codegen'd kernels for the same reason as
+  * [[VectorFunctions.Dot]]: they run once per corpus row, and a
   * CodegenFallback or UDF there would break the whole-stage pipeline
-  * around the scan. The model rides into generated code as reference
-  * objects (`addReferenceObj`), so the hot loop is a plain JVM loop
-  * over primitive arrays.
+  * around the scan. The model rides into generated code as
+  * [[NativeCall.Model]] reference objects, so the hot loop is a plain
+  * JVM loop over primitive arrays.
   */
 object PqFunctions {
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  import NativeCall.{ElementType, Model}
+
+  private val P = "graft.functions.PqFunctions"
+  /** `graft_pq_encode(vec)` → binary: the vector's `nsub`-byte PQ code. */
+  val Encode: NativeKernel = NativeKernel("graft_pq_encode", P, "encode",
+    Seq(NativeKernel.NumericArrays), BinaryType, returnNullable = true)
+  /** `graft_pq_adc(code)` → double: table-lookup distance of a PQ code
+    * against one query's distance table (lower = closer). */
+  val Adc: NativeKernel =
+    NativeKernel("graft_pq_adc", P, "adc", Seq(Seq(BinaryType)), DoubleType)
+  /** `graft_pq_adc_batch(code, qIdx)` → double: [[Adc]] against query
+    * `qIdx`'s table from a batch — the k-NN-join form. */
+  val AdcBatch: NativeKernel = NativeKernel("graft_pq_adc_batch", P, "adcBatch",
+    Seq(Seq(BinaryType), Seq(IntegerType)), DoubleType)
 
   /** Encode a vector column to its `nsub`-byte PQ code. `rotation`
     * (null = none) is an OPQ rotation applied FUSED after the
@@ -34,13 +44,13 @@ object PqFunctions {
   def pqEncode(v: Column, codebooks: Array[Array[Array[Double]]],
       normalize: Boolean,
       rotation: Array[Array[Double]] = null): Column =
-    ncol(PqEncodeExpr(ex(v), codebooks, normalize, rotation))
+    Encode.colWith(ElementType(0), Model(codebooks), normalize, Model(rotation))(v)
 
   /** ADC score of a code column against a flattened `nsub`×`k` query
     * distance table (lower = closer).
     */
   def pqAdc(code: Column, table: Array[Double], nsub: Int, k: Int): Column =
-    ncol(PqAdcExpr(ex(code), table, nsub, k))
+    Adc.colWith(Model(table), nsub, k)(code)
 
   /** ADC score of a code column against the `qIdx`-th of a BATCH of
     * query distance tables (k-NN join: one scan of the code table
@@ -48,9 +58,9 @@ object PqFunctions {
     */
   def pqAdcBatch(code: Column, qIdx: Column, tables: Array[Array[Double]],
       nsub: Int, k: Int): Column =
-    ncol(PqAdcBatchExpr(ex(code), ex(qIdx), tables, nsub, k))
+    AdcBatch.colWith(Model(tables), nsub, k)(code, qIdx)
 
-  /** JVM kernel behind [[PqAdcBatchExpr]]. */
+  /** JVM kernel behind [[AdcBatch]]. */
   def adcBatch(code: Array[Byte], qIdx: Int, tables: Array[Array[Double]],
       nsub: Int, k: Int): Double = {
     if (qIdx < 0 || qIdx >= tables.length) throw new IllegalArgumentException(
@@ -58,14 +68,14 @@ object PqFunctions {
     adc(code, tables(qIdx), nsub, k)
   }
 
-  /** JVM kernel behind [[PqEncodeExpr]]: argmin ‖subvector − c‖² per
+  /** JVM kernel behind [[Encode]]: argmin ‖subvector − c‖² per
     * subspace, first-index tie-break (the same rule as
     * Similarity.localLloyd). Null element → boxed null; a wrong-width
     * vector RAISES — silently emitting a null code would let a
     * mis-dimensioned corpus dedup/search as "no neighbors" without
     * anyone noticing.
     */
-  def encode(arr: ArrayData, kind: Int, elem: DataType,
+  def encode(arr: ArrayData, elem: DataType,
       codebooks: Array[Array[Array[Double]]],
       normalize: Boolean,
       rotation: Array[Array[Double]]): Array[Byte] = {
@@ -76,20 +86,8 @@ object PqFunctions {
     if (n != dim) throw new IllegalArgumentException(
       s"graft_pq_encode: vector has $n elements, model expects $dim " +
         s"($nsub subspaces × $subdim)")
-    var v = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (arr.isNullAt(i)) return null
-      v(i) = readDoubleAt(arr, i, kind, elem)
-      i += 1
-    }
-    if (normalize) {
-      var ss = 0.0
-      i = 0
-      while (i < dim) { ss += v(i) * v(i); i += 1 }
-      val nrm = math.sqrt(ss)
-      if (nrm > 0) { i = 0; while (i < dim) { v(i) /= nrm; i += 1 } }
-    }
+    var v = VectorFunctions.toDoubles(arr, elem, normalize)
+    if (v == null) return null
     if (rotation != null) {
       // y = R v — OPQ's learned basis change (orthogonal, so the
       // normalize above is unaffected); codebooks were fit in y-space
@@ -127,7 +125,7 @@ object PqFunctions {
     code
   }
 
-  /** JVM kernel behind [[PqAdcExpr]]: Σₛ table[s·k + code[s]]. Raises
+  /** JVM kernel behind [[Adc]]: Σₛ table[s·k + code[s]]. Raises
     * on a code whose width or byte range disagrees with the table —
     * that is a code column from a DIFFERENT model, and scoring it
     * would be silent garbage.
@@ -149,121 +147,4 @@ object PqFunctions {
     }
     d
   }
-
-  // shared with SqFunctions.encode — the element-kind dispatch is the
-  // same for every numeric-array kernel in this package
-  private[functions] def readDoubleAt(a: ArrayData, i: Int, kind: Int,
-      elem: DataType): Double =
-    kind match {
-      case 0 => a.getDouble(i)
-      case 1 => a.getFloat(i).toDouble
-      case 2 => a.getLong(i).toDouble
-      case 3 => a.getInt(i).toDouble
-      case 4 => a.getShort(i).toDouble
-      case 5 => a.getByte(i).toDouble
-      case _ => a.get(i, elem)
-        .asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
-    }
-}
-
-/** `graft_pq_encode(vec)` → binary: the vector's `nsub`-byte PQ code
-  * (optionally through a fused OPQ rotation — `rotation` null = none).
-  */
-case class PqEncodeExpr(child: Expression,
-    codebooks: Array[Array[Array[Double]]], normalize: Boolean,
-    rotation: Array[Array[Double]] = null)
-    extends UnaryExpression {
-
-  private lazy val kind = VectorFunctions.elementKind(child.dataType)
-  private lazy val elem = VectorFunctions.elementTypeOf(child.dataType)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VectorFunctions.elementKind(child.dataType) >= 0)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_encode requires a numeric array, got ${child.dataType.sql}")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true // null element → null code
-  override def prettyName: String = "graft_pq_encode"
-
-  protected override def nullSafeEval(v: Any): Any =
-    PqFunctions.encode(v.asInstanceOf[ArrayData], kind, elem, codebooks,
-      normalize, rotation)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val r = ctx.freshName("pqCode")
-      val cb = ctx.addReferenceObj("pqCodebooks", codebooks)
-      val el = ctx.addReferenceObj("pqElem", elem)
-      val rot =
-        if (rotation == null) "(double[][]) null"
-        else ctx.addReferenceObj("pqRotation", rotation, "double[][]")
-      s"""
-         |byte[] $r = graft.functions.PqFunctions.encode(
-         |  $v, $kind, $el, $cb, $normalize, $rot);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
-    copy(child = newChild)
-}
-
-/** `graft_pq_adc_batch(code, qIdx)` → double: table-lookup distance of
-  * a PQ code against query `qIdx`'s table from a broadcast batch of
-  * tables — the k-NN-join form of [[PqAdcExpr]].
-  */
-case class PqAdcBatchExpr(left: Expression, right: Expression,
-    tables: Array[Array[Double]], nsub: Int, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType &&
-        right.dataType == org.apache.spark.sql.types.IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "graft_pq_adc_batch requires (binary code, int query index), got " +
-        s"${left.dataType.sql} and ${right.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_pq_adc_batch"
-
-  protected override def nullSafeEval(code: Any, qi: Any): Any =
-    PqFunctions.adcBatch(code.asInstanceOf[Array[Byte]],
-      qi.asInstanceOf[Int], tables, nsub, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (code, qi) => {
-      val t = ctx.addReferenceObj("pqTables", tables)
-      s"${ev.value} = graft.functions.PqFunctions.adcBatch($code, $qi, $t, $nsub, $k);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdcBatchExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_pq_adc(code)` → double: table-lookup distance of a PQ code
-  * against one query's distance table (lower = closer).
-  */
-case class PqAdcExpr(child: Expression, table: Array[Double], nsub: Int, k: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_adc requires a binary code column, got ${child.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_pq_adc"
-
-  protected override def nullSafeEval(v: Any): Any =
-    PqFunctions.adc(v.asInstanceOf[Array[Byte]], table, nsub, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val t = ctx.addReferenceObj("pqTable", table)
-      s"${ev.value} = graft.functions.PqFunctions.adc($v, $t, $nsub, $k);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PqAdcExpr =
-    copy(child = newChild)
 }

@@ -34,7 +34,8 @@ object RollingHash {
   def hash(s: UTF8String): Long = hash(s.getBytes)
 
   val Kernel: NativeKernel =
-    NativeKernel("graft_rolling_hash", "graft.functions.RollingHash", "hash", Seq(StringType), LongType)
+    NativeKernel("graft_rolling_hash", "graft.functions.RollingHash", "hash", Seq(Seq(StringType)),
+      LongType)
 
   /** Column API: `rollingHash($"text")`. The implicit session is unused
     * (the Column resolves in any session); it stays for source

@@ -2,9 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -23,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (its data plane is backend/services/duckdb_engine.py); this is
   * part of the beyond-reference LLM-pipeline mandate.
   *
-  * Two expressions, both whole-stage-codegen'd (no CodegenFallback —
+  * Two kernels, both whole-stage-codegen'd (no CodegenFallback —
   * the ScanHof sweep stays clean):
   *
   *  - [[SpanScrub.PositionedShingles]] `(text, n)` → `array<long>`: hash
@@ -38,7 +36,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    lowercases per token: positions must align with the tokens the
   *    scrub re-emits, and the re-emitted text preserves case.
   *
-  *  - [[ScrubSpansExpr]] `(text, starts, k, minSpan)` →
+  *  - [[SpanScrub.ScrubSpans]] `(text, starts, k, minSpan)` →
   *    `struct<text, n_cut>`: merge the sorted flagged window starts
   *    into maximal ranges (windows are k tokens wide; a window
   *    starting at or before the current range's end extends it), drop
@@ -142,29 +140,27 @@ object SpanScrub {
       case other => other.asInstanceOf[Number].intValue
     }
     case _ => throw new IllegalStateException(
-      "scrub starts must arrive as GenericArrayData") // see ScrubSpansExpr.eval
+      "scrub starts must arrive as GenericArrayData") // see scrubAny
   }
 
   /** Unsafe-format-safe entry: copies the starts array into generic
     * form once per row before the merge walk (arrays arrive as
     * UnsafeArrayData from shuffles).
     */
-  def scrubAny(s: UTF8String, starts: ArrayData, elemLong: Boolean,
+  def scrubAny(s: UTF8String, starts: ArrayData, elem: DataType,
       k: Int, minSpan: Int): InternalRow = {
     if (starts == null || starts.numElements() == 0) return scrub(s, null, k, minSpan)
     val n = starts.numElements()
     val copy = new Array[Any](n)
     var i = 0
-    if (elemLong) while (i < n) { copy(i) = java.lang.Long.valueOf(starts.getLong(i)); i += 1 }
+    if (elem == LongType) while (i < n) { copy(i) = java.lang.Long.valueOf(starts.getLong(i)); i += 1 }
     else while (i < n) { copy(i) = java.lang.Integer.valueOf(starts.getInt(i)); i += 1 }
     scrub(s, new GenericArrayData(copy), k, minSpan)
   }
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
-
   /** `(text, n)` → position-aligned shingle hashes; null text → empty array. */
   val PositionedShingles: NativeKernel = NativeKernel("graft_positioned_shingles",
-    "graft.functions.SpanScrub", "positionedShingleHashes", Seq(StringType),
+    "graft.functions.SpanScrub", "positionedShingleHashes", Seq(Seq(StringType)),
     ArrayType(LongType, containsNull = false), propagateNull = false)
 
   def positionedShinglesCol(text: Column, n: Int): Column = {
@@ -172,58 +168,20 @@ object SpanScrub {
     PositionedShingles.colWith(n)(text)
   }
 
-  def scrubCol(text: Column, starts: Column, k: Int, minSpan: Int): Column =
-    ncol(ScrubSpansExpr(ex(text), ex(starts), k, minSpan))
-}
+  /** `(text, starts)` with embedded (k, minSpan) → struct(text, n_cut):
+    * see [[scrub]]. Null starts (left-join miss: the doc has no flagged
+    * spans) passes the text through re-joined, n_cut = 0. */
+  val ScrubSpans: NativeKernel = NativeKernel("graft_scrub_spans",
+    "graft.functions.SpanScrub", "scrubAny",
+    Seq(Seq(StringType), Seq(ArrayType(IntegerType), ArrayType(LongType))),
+    StructType(Seq(
+      StructField("text", StringType, nullable = false),
+      StructField("n_cut", LongType, nullable = false))),
+    propagateNull = false)
 
-/** `(text, starts)` with embedded (k, minSpan) → struct(text, n_cut):
-  * see [[SpanScrub.scrub]]. Null starts (left-join miss: the doc has
-  * no flagged spans) passes the text through re-joined, n_cut = 0.
-  */
-case class ScrubSpansExpr(left: Expression, right: Expression,
-    k: Int, minSpan: Int) extends BinaryExpression {
-  require(k >= 1, s"span width must be >= 1, got $k")
-  require(minSpan >= 1, s"minSpan must be >= 1, got $minSpan")
-
-  private def elemLong: Boolean = right.dataType match {
-    case ArrayType(LongType, _) => true
-    case _                      => false
+  def scrubCol(text: Column, starts: Column, k: Int, minSpan: Int): Column = {
+    require(k >= 1, s"span width must be >= 1, got $k")
+    require(minSpan >= 1, s"minSpan must be >= 1, got $minSpan")
+    ScrubSpans.colWith(NativeCall.ElementType(1), k, minSpan)(text, starts)
   }
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, ArrayType(IntegerType | LongType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"scrub spans require (STRING, ARRAY<INT|BIGINT>), got (${l.sql}, ${r.sql})")
-  }
-  override def dataType: DataType = StructType(Seq(
-    StructField("text", StringType, nullable = false),
-    StructField("n_cut", LongType, nullable = false)))
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_scrub_spans"
-
-  override def eval(input: InternalRow): Any =
-    SpanScrub.scrubAny(left.eval(input).asInstanceOf[UTF8String],
-      right.eval(input).asInstanceOf[ArrayData], elemLong, k, minSpan)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val t = left.genCode(ctx)
-    val st = right.genCode(ctx)
-    val fin = s"InternalRow ${ev.value} = " +
-      s"graft.functions.SpanScrub.scrubAny(" +
-      s"${t.isNull} ? null : ${t.value}, " +
-      s"${st.isNull} ? null : ${st.value}, $elemLong, $k, $minSpan);"
-    ev.copy(code =
-      code"""
-        ${t.code}
-        ${st.code}
-        $fin""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ScrubSpansExpr =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
@@ -20,20 +17,24 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * `dim`×256 lookup table and the scan reuses [[PqFunctions.adc]]
   * (codegen'd, table-lookup-only) with nsub=dim, k=256.
   *
-  * Native codegen'd expression for the same reason as [[PqEncodeExpr]]:
+  * Native codegen'd kernel for the same reason as [[PqFunctions.Encode]]:
   * encode runs once per corpus row inside the index build's scan, and
   * a UDF there would break the whole-stage pipeline.
   */
 object SqFunctions {
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  import NativeCall.{ElementType, Model}
+
+  /** `graft_sq_encode(vec)` → binary: the vector's `dim`-byte SQ8 code. */
+  val Encode: NativeKernel = NativeKernel("graft_sq_encode", "graft.functions.SqFunctions",
+    "encode", Seq(NativeKernel.NumericArrays), BinaryType, returnNullable = true)
 
   /** Encode a numeric-array column to its `dim`-byte SQ8 code. */
   def sqEncode(v: Column, mins: Array[Double], scales: Array[Double],
       normalize: Boolean): Column =
-    ncol(SqEncodeExpr(ex(v), mins, scales, normalize))
+    Encode.colWith(ElementType(0), Model(mins), Model(scales), normalize)(v)
 
-  /** JVM kernel behind [[SqEncodeExpr]]: affine quantize + clamp per
+  /** JVM kernel behind [[Encode]]: affine quantize + clamp per
     * dimension. Null element → boxed null (same contract as
     * [[PqFunctions.encode]]); a wrong-width vector RAISES — silently
     * emitting null would let a mis-dimensioned corpus search as
@@ -41,29 +42,17 @@ object SqFunctions {
     * constant fit sample) encodes to byte 0 and dequantizes exactly to
     * its min — no division happens.
     */
-  def encode(arr: ArrayData, kind: Int, elem: DataType,
+  def encode(arr: ArrayData, elem: DataType,
       mins: Array[Double], scales: Array[Double],
       normalize: Boolean): Array[Byte] = {
     val dim = mins.length
     val n = arr.numElements()
     if (n != dim) throw new IllegalArgumentException(
       s"graft_sq_encode: vector has $n elements, model expects $dim")
-    val v = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (arr.isNullAt(i)) return null
-      v(i) = PqFunctions.readDoubleAt(arr, i, kind, elem)
-      i += 1
-    }
-    if (normalize) {
-      var ss = 0.0
-      i = 0
-      while (i < dim) { ss += v(i) * v(i); i += 1 }
-      val nrm = math.sqrt(ss)
-      if (nrm > 0) { i = 0; while (i < dim) { v(i) /= nrm; i += 1 } }
-    }
+    val v = VectorFunctions.toDoubles(arr, elem, normalize)
+    if (v == null) return null
     val code = new Array[Byte](dim)
-    i = 0
+    var i = 0
     while (i < dim) {
       val s = scales(i)
       val b =
@@ -77,42 +66,4 @@ object SqFunctions {
     }
     code
   }
-}
-
-/** `graft_sq_encode(vec)` → binary: the vector's `dim`-byte SQ8 code. */
-case class SqEncodeExpr(child: Expression, mins: Array[Double],
-    scales: Array[Double], normalize: Boolean)
-    extends UnaryExpression {
-
-  private lazy val kind = VectorFunctions.elementKind(child.dataType)
-  private lazy val elem = VectorFunctions.elementTypeOf(child.dataType)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VectorFunctions.elementKind(child.dataType) >= 0)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_sq_encode requires a numeric array, got ${child.dataType.sql}")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true // null element → null code
-  override def prettyName: String = "graft_sq_encode"
-
-  protected override def nullSafeEval(v: Any): Any =
-    SqFunctions.encode(v.asInstanceOf[ArrayData], kind, elem, mins, scales,
-      normalize)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val r = ctx.freshName("sqCode")
-      val mn = ctx.addReferenceObj("sqMins", mins, "double[]")
-      val sc = ctx.addReferenceObj("sqScales", scales, "double[]")
-      val el = ctx.addReferenceObj("sqElem", elem)
-      s"""
-         |byte[] $r = graft.functions.SqFunctions.encode(
-         |  $v, $kind, $el, $mn, $sc, $normalize);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SqEncodeExpr =
-    copy(child = newChild)
 }

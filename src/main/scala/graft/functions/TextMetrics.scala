@@ -145,7 +145,7 @@ object TextMetrics {
   }
 
   private def metric(name: String, method: String, dataType: DataType): NativeKernel =
-    NativeKernel(name, "graft.functions.TextMetrics", method, Seq(StringType), dataType)
+    NativeKernel(name, "graft.functions.TextMetrics", method, Seq(Seq(StringType)), dataType)
   val CollapseWs: NativeKernel = metric("graft_collapse_ws", "collapseWs", StringType)
   val WsTokenCount: NativeKernel = metric("graft_ws_token_count", "wsTokenCount", IntegerType)
   val BpeTokenCount: NativeKernel = metric("graft_bpe_token_count", "bpeTokenCount", IntegerType)

@@ -200,14 +200,15 @@ object TextSignatures {
   private val T = "graft.functions.TextSignatures"
   private val Longs = ArrayType(LongType, containsNull = false)
   val ShingleHashes: NativeKernel =
-    NativeKernel("graft_shingle_hashes", T, "shingleHashes", Seq(StringType), Longs)
+    NativeKernel("graft_shingle_hashes", T, "shingleHashes", Seq(Seq(StringType)), Longs)
   val ShingleStrings: NativeKernel = NativeKernel("graft_shingle_strings", T, "shingleStrings",
-    Seq(StringType), ArrayType(StringType, containsNull = false))
+    Seq(Seq(StringType)), ArrayType(StringType, containsNull = false))
   val MinHashSig: NativeKernel =
-    NativeKernel("graft_minhash_sig", T, "minHashSig", Seq(Longs), Longs)
+    NativeKernel("graft_minhash_sig", T, "minHashSig", Seq(Seq(Longs)), Longs)
   val MinHashBands: NativeKernel =
-    NativeKernel("graft_minhash_bands", T, "minHashBands", Seq(Longs), Longs)
-  val SimHash64: NativeKernel = NativeKernel("graft_simhash64", T, "simHash64", Seq(StringType), LongType)
+    NativeKernel("graft_minhash_bands", T, "minHashBands", Seq(Seq(Longs)), Longs)
+  val SimHash64: NativeKernel =
+    NativeKernel("graft_simhash64", T, "simHash64", Seq(Seq(StringType)), LongType)
 
   /** `graft_shingle_hashes(text, n)` → array<bigint>: distinct hashed
     * word n-gram shingles. */

@@ -66,7 +66,7 @@ object ThetaFunctions {
   def thetaEstimate(sketch: Column): Column = Estimate.col(sketch)
 
   private def setOp(name: String, method: String): NativeKernel = NativeKernel(name,
-    "graft.functions.ThetaFunctions", method, Seq(BinaryType, BinaryType), BinaryType)
+    "graft.functions.ThetaFunctions", method, Seq(Seq(BinaryType), Seq(BinaryType)), BinaryType)
   /** `graft_theta_intersect(a, b)` — serialized intersection sketch. */
   val Intersect: NativeKernel = setOp("graft_theta_intersect", "intersect")
   /** `graft_theta_union_pair(a, b)` — serialized union sketch of two
@@ -79,7 +79,7 @@ object ThetaFunctions {
     * EXACT (the retained count) while the sketch never exceeded its
     * nominal cap. A null sketch is the empty one: 0.0. */
   val Estimate: NativeKernel = NativeKernel("graft_theta_estimate",
-    "graft.functions.ThetaFunctions", "estimate", Seq(BinaryType), DoubleType,
+    "graft.functions.ThetaFunctions", "estimate", Seq(Seq(BinaryType)), DoubleType,
     propagateNull = false)
 
   private[graft] def newUnion(nominal: Int): Union =

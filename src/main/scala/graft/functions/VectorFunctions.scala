@@ -1,12 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType}
 
 /** Vector math over `array<float>` embedding columns.
   *
@@ -16,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, D
   * replaces is CodegenFallback in Spark (every lambda application is
   * an interpreted expression-tree walk, plus an intermediate product
   * array per pair), which priced a 5k-vector cell walk in seconds.
-  * [[DotProductExpr]] is one tight JVM loop per pair, inlined into
+  * [[Dot]] is one tight JVM loop per pair, inlined into
   * whole-stage codegen — same mechanism and rationale as
   * [[TextSignatures]].
   *
@@ -28,10 +25,10 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, D
   */
 object VectorFunctions {
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  import NativeCall.ElementType
 
   /** Σ aᵢ·bᵢ between two array columns (native codegen'd loop). */
-  def dot(a: Column, b: Column): Column = ncol(DotProductExpr(ex(a), ex(b)))
+  def dot(a: Column, b: Column): Column = Dot.colWith(ElementType(0), ElementType(1))(a, b)
 
   /** Σ vᵢ·cᵢ against a constant plane (literal array side). */
   def dotConst(v: Column, plane: Array[Double]): Column =
@@ -50,110 +47,73 @@ object VectorFunctions {
   def cosineConst(v: Column, q: Array[Double]): Column =
     cosine(v, array(q.toIndexedSeq.map(lit(_)): _*))
 
-  /** JVM kernel behind [[DotProductExpr]]: boxed null on length
-    * mismatch or null element, else the left-to-right double sum.
-    * Element kinds: 0=double, 1=float, 2=long, 3=int, 4=short,
-    * 5=byte, 6=decimal (reads via `aElem`/`bElem` — the only kind
-    * that needs the element DataType).
-    */
-  def dotProduct(a: ArrayData, b: ArrayData, aKind: Int, bKind: Int,
-      aElem: DataType, bElem: DataType): java.lang.Double = {
+  /** `graft_dot(a, b)` → double over any two numeric arrays. */
+  val Dot: NativeKernel = NativeKernel("graft_dot", "graft.functions.VectorFunctions",
+    "dotProduct", Seq(NativeKernel.NumericArrays, NativeKernel.NumericArrays), DoubleType,
+    returnNullable = true)
+
+  /** JVM kernel behind [[Dot]]: boxed null on length mismatch or null
+    * element, else the left-to-right double sum. */
+  def dotProduct(a: ArrayData, b: ArrayData, aElem: DataType,
+      bElem: DataType): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
+    val aKind = kind(aElem)
+    val bKind = kind(bElem)
     var s = 0.0
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = aKind match {
-        case 0 => a.getDouble(i)
-        case 1 => a.getFloat(i).toDouble
-        case 2 => a.getLong(i).toDouble
-        case 3 => a.getInt(i).toDouble
-        case 4 => a.getShort(i).toDouble
-        case 5 => a.getByte(i).toDouble
-        case _ => a.get(i, aElem)
-          .asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
-      }
-      val y = bKind match {
-        case 0 => b.getDouble(i)
-        case 1 => b.getFloat(i).toDouble
-        case 2 => b.getLong(i).toDouble
-        case 3 => b.getInt(i).toDouble
-        case 4 => b.getShort(i).toDouble
-        case 5 => b.getByte(i).toDouble
-        case _ => b.get(i, bElem)
-          .asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
-      }
-      s += x * y
+      s += readDoubleAt(a, i, aKind, aElem) * readDoubleAt(b, i, bKind, bElem)
       i += 1
     }
     java.lang.Double.valueOf(s)
   }
 
-  private[graft] def elementKind(t: DataType): Int = t match {
-    case ArrayType(DoubleType, _) => 0
-    case ArrayType(FloatType, _) => 1
-    case ArrayType(LongType, _) => 2
-    case ArrayType(IntegerType, _) => 3
-    case ArrayType(ShortType, _) => 4
-    case ArrayType(ByteType, _) => 5
-    case ArrayType(_: DecimalType, _) => 6
-    case _ => -1
+  /** The vector as doubles, unit-normalized when `normalize` (a zero
+    * vector stays zero); null when an element is null. Callers check
+    * the width first. */
+  private[functions] def toDoubles(arr: ArrayData, elem: DataType,
+      normalize: Boolean): Array[Double] = {
+    val k = kind(elem)
+    val n = arr.numElements()
+    val v = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i)) return null
+      v(i) = readDoubleAt(arr, i, k, elem)
+      i += 1
+    }
+    if (normalize) {
+      var ss = 0.0
+      i = 0
+      while (i < n) { ss += v(i) * v(i); i += 1 }
+      val nrm = math.sqrt(ss)
+      if (nrm > 0) { i = 0; while (i < n) { v(i) /= nrm; i += 1 } }
+    }
+    v
   }
 
-  private[graft] def elementTypeOf(t: DataType): DataType = t match {
-    case ArrayType(e, _) => e
-    case other => other
-  }
-}
-
-/** `graft_dot(a, b)` → double: native dot product over numeric arrays
-  * (see [[VectorFunctions]] for the codegen rationale and the pinned
-  * null semantics).
-  */
-case class DotProductExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private lazy val leftKind = VectorFunctions.elementKind(left.dataType)
-  private lazy val rightKind = VectorFunctions.elementKind(right.dataType)
-  private lazy val leftElem = VectorFunctions.elementTypeOf(left.dataType)
-  private lazy val rightElem = VectorFunctions.elementTypeOf(right.dataType)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VectorFunctions.elementKind(left.dataType) >= 0 &&
-        VectorFunctions.elementKind(right.dataType) >= 0)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "graft_dot requires two numeric arrays, " +
-        s"got ${left.dataType.sql} and ${right.dataType.sql}")
-  override def dataType: DataType = DoubleType
-  // nullable beyond the children: length mismatch / null element → null
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_dot"
-
-  protected override def nullSafeEval(a: Any, b: Any): Any = {
-    val r = VectorFunctions.dotProduct(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], leftKind, rightKind,
-      leftElem, rightElem)
-    if (r == null) null else r.doubleValue()
+  /** Element kinds: 0=double, 1=float, 2=long, 3=int, 4=short, 5=byte,
+    * 6=decimal (the only kind that reads through `elem`). */
+  private def kind(elem: DataType): Int = elem match {
+    case DoubleType => 0
+    case FloatType => 1
+    case LongType => 2
+    case IntegerType => 3
+    case ShortType => 4
+    case ByteType => 5
+    case _ => 6
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("dotRes")
-      // the element DataTypes ride along as reference objects — only
-      // the decimal kind reads them, the primitive kinds dispatch on
-      // the embedded int alone
-      val aT = ctx.addReferenceObj("dotAElem", leftElem)
-      val bT = ctx.addReferenceObj("dotBElem", rightElem)
-      s"""
-         |java.lang.Double $r = graft.functions.VectorFunctions.dotProduct(
-         |  $a, $b, $leftKind, $rightKind, $aT, $bT);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductExpr =
-    copy(left = newLeft, right = newRight)
+  private def readDoubleAt(a: ArrayData, i: Int, kind: Int, elem: DataType): Double =
+    kind match {
+      case 0 => a.getDouble(i)
+      case 1 => a.getFloat(i).toDouble
+      case 2 => a.getLong(i).toDouble
+      case 3 => a.getInt(i).toDouble
+      case 4 => a.getShort(i).toDouble
+      case 5 => a.getByte(i).toDouble
+      case _ => a.get(i, elem).asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble
+    }
 }

@@ -118,7 +118,7 @@ object VideoMeta {
 
   /** `graft_video_meta(binary)`; null for a null input or an unrecognised header. */
   val Kernel: NativeKernel = NativeKernel("graft_video_meta", "graft.functions.VideoMeta", "probe",
-    Seq(BinaryType), outType, returnNullable = true)
+    Seq(Seq(BinaryType)), outType, returnNullable = true)
 
   /** Column API: session-free. */
   def videoMeta(c: Column): Column = Kernel.col(c)

@@ -112,17 +112,13 @@ object AnnIndex {
   final case class Bq(model: BqFit.BqModel) extends Quantizer {
     def encode(vec: Column): Column =
       BqFunctions.bqEncode(vec, model.thresholds, model.normalize)
-    def score(code: Column, query: Array[Float]): Column = {
-      val q = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-        query.map(_.toDouble))
-      BqFunctions.bqHamming(code, BqFunctions.encode(q, 0,
-        org.apache.spark.sql.types.DoubleType, model.thresholds, model.normalize))
-        .cast("double")
-    }
+    def score(code: Column, query: Array[Float]): Column =
+      BqFunctions.bqHamming(code, queryCode(query)).cast("double")
     def scoreBatch(code: Column, qIdx: Column, queries: Array[Array[Float]]): Column =
-      throw new IllegalArgumentException("bq: searchJoin needs a batch " +
-        "Hamming kernel, which does not exist yet — search per query, or " +
-        "index the corpus with a Pq or Sq8 codec")
+      BqFunctions.bqHammingBatch(code, qIdx, queries.map(queryCode)).cast("double")
+    private def queryCode(query: Array[Float]): Array[Byte] = BqFunctions.encode(
+      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(query.map(_.toDouble)),
+      org.apache.spark.sql.types.DoubleType, model.thresholds, model.normalize)
     private[operators] def props: Map[String, String] =
       Map("family" -> "bq", "normalize" -> model.normalize.toString)
     private[operators] def matrices: Seq[(String, Array[Array[Double]])] =

@@ -1,11 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** TRAINED character-n-gram language identification — the production
@@ -34,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object LangId {
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
+  import graft.functions.{NativeCall, NativeKernel}
 
   /** Hashed-n-gram NB model. `logProb(l)(b)` = log P(bucket b | lang
     * l) with add-one smoothing; `logPrior(l)` = log P(lang l) from
@@ -235,7 +232,7 @@ object LangId {
     * grams to overflow, raising rather than wrapping), argmax with the
     * same blank→"und" and tie→first-language rules.
     */
-  def classifyDecimal(m: DecimalModel, text: UTF8String): UTF8String = {
+  def classifyDecimal(text: UTF8String, m: DecimalModel): UTF8String = {
     val s = text.toString
     if (s.trim.isEmpty) return Und
     val scores = m.priorUnscaled.clone()
@@ -263,10 +260,15 @@ object LangId {
     UTF8String.fromString(m.langs(best))
   }
 
+  /** `graft_lang_id_decimal(text)` — [[classifyDecimal]] over an
+    * embedded [[DecimalModel]]. */
+  val ClassifyDecimal: NativeKernel = NativeKernel("graft_lang_id_decimal",
+    "graft.operators.LangId", "classifyDecimal", Seq(Seq(StringType)), StringType)
+
   /** Column form of [[classifyDecimal]] — one codegen'd in-row pass,
     * like [[langIdModel]]. */
   def langIdDecimal(c: Column, model: DecimalModel): Column =
-    ncol(LangClassifyDecimalExpr(ex(c), model))
+    ClassifyDecimal.colWith(NativeCall.Model(model))(c)
 
   private val Und = UTF8String.fromString("und")
 
@@ -283,7 +285,7 @@ object LangId {
     * by the gram count) so the dial is length-independent; 0.0 (the
     * default) disables the gate, preserving pure-argmax behavior.
     */
-  def classify(m: Model, text: UTF8String, undMargin: Double): UTF8String = {
+  def classify(text: UTF8String, m: Model, undMargin: Double): UTF8String = {
     val s = text.toString
     if (s.trim.isEmpty) return Und
     val scores = m.logPrior.clone()
@@ -354,8 +356,8 @@ object LangId {
     * one bounded counting aggregate, so the fit scan stays inside
     * whole-stage codegen instead of deserializing every row into a
     * Scala tuple. */
-  val FeatureBuckets: graft.functions.NativeKernel = graft.functions.NativeKernel(
-    "graft_lang_grams", "graft.operators.LangId", "featureBucketsData", Seq(StringType),
+  val FeatureBuckets: NativeKernel = NativeKernel(
+    "graft_lang_grams", "graft.operators.LangId", "featureBucketsData", Seq(Seq(StringType)),
     org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.IntegerType, containsNull = false))
 
@@ -365,67 +367,16 @@ object LangId {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       featureBuckets(text.toString, nMin, nMax, buckets))
 
+  /** `graft_lang_id_model(text)` — [[classify]] over an embedded
+    * [[Model]], which rides along as a plan reference object, never a
+    * per-row closure. */
+  val Classify: NativeKernel = NativeKernel("graft_lang_id_model",
+    "graft.operators.LangId", "classify", Seq(Seq(StringType)), StringType)
+
   /** Column form: `langIdModel(col("text"), model)` — one codegen'd
     * in-row pass, model shipped once per executor with the plan.
     * `undMargin` > 0 enables the low-evidence "und" gate (see
     * [[classify]]). */
   def langIdModel(c: Column, model: Model, undMargin: Double = 0.0): Column =
-    ncol(LangClassifyExpr(ex(c), model, undMargin))
-}
-
-/** `graft_lang_id_model(text)` — [[LangId.classify]] as a native
-  * codegen'd expression; the model rides along as a plan reference
-  * object (the NearestCellExpr pattern), never a per-row closure.
-  */
-case class LangClassifyExpr(child: Expression, model: LangId.Model,
-    undMargin: Double = 0.0)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_lang_id_model requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_lang_id_model"
-
-  protected override def nullSafeEval(input: Any): Any =
-    LangId.classify(model, input.asInstanceOf[UTF8String], undMargin)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("langIdModel", model,
-      classOf[LangId.Model].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.operators.LangId.classify($m, $c, $undMargin);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LangClassifyExpr =
-    copy(child = newChild)
-}
-
-/** `graft_lang_id_decimal(text)` — [[LangId.classifyDecimal]] as a
-  * native codegen'd expression; the quantized model rides along as a
-  * plan reference object, same pattern as [[LangClassifyExpr]].
-  */
-case class LangClassifyDecimalExpr(child: Expression,
-    model: LangId.DecimalModel) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_lang_id_decimal requires STRING, got ${child.dataType.sql}")
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_lang_id_decimal"
-
-  protected override def nullSafeEval(input: Any): Any =
-    LangId.classifyDecimal(model, input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("langIdDecimalModel", model,
-      classOf[LangId.DecimalModel].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.operators.LangId.classifyDecimal($m, $c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LangClassifyDecimalExpr =
-    copy(child = newChild)
+    Classify.colWith(NativeCall.Model(model), undMargin)(c)
 }

@@ -107,7 +107,7 @@ object Pq {
     * data it degrades gracefully to ≈ plain PQ. Driver-local on the
     * fit sample (the same shape as [[fit]] — the rotation is a MODEL,
     * corpus-sized work stays on the cluster), applied at encode time
-    * fused inside [[graft.functions.PqEncodeExpr]].
+    * fused inside [[graft.functions.PqFunctions.Encode]].
     */
   def fitOpq(df: DataFrame, idCol: String, vecCol: String,
       nsub: Int = 8, k: Int = 16, maxIter: Int = 10,

@@ -505,7 +505,7 @@ object Similarity {
     * codegen around there, so the distributed ML fit took over — and
     * at sf10's auto-sized k≈3k that fallback's ~10 driver-coordinated
     * jobs per fit owned ~17 of the query's 23 s. The assignment is now
-    * ONE reference-object expression ([[graft.functions.NearestCellExpr]],
+    * ONE reference-object kernel ([[graft.functions.CentroidFunctions.NearestCell]],
     * constant codegen size at any k) and the driver Lloyd fan-outs
     * across a fixed thread grid, so the bound now equals [[cellsFor]]'s
     * 2^16 ceiling — the sample-fit path covers every auto-sized k, and

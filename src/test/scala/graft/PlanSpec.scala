@@ -55,7 +55,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("DSIR scoring stays in whole-stage codegen — no interpreted HOF fold") {
-    // the per-gram fold is DsirScoreExpr (native doGenCode); the
+    // the per-gram fold is the DsirScore.Sum kernel (a NativeCall); the
     // ArrayAggregate HOF it replaced was CodegenFallback — an
     // interpreted expression-tree walk per gram per row, the engine's
     // per-row cost at any scale

@@ -58,23 +58,13 @@ class Bm25NativeSpec extends AnyFunSuite {
   test("kernels evaluate identically interpreted and codegen'd") {
     // force the interpreted path by evaluating the expression directly
     val terms = IndexedSeq("a", "b")
-    val ex = Bm25ContribsExpr(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq("a", "a", "c"),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        Seq(2.0, 1.0),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)),
-      org.apache.spark.sql.catalyst.expressions.Literal(5L),
-      org.apache.spark.sql.catalyst.expressions.Literal(3.0),
-      terms, 1.2, 0.75)
-    val interp = ex.eval(null)
-      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
-    // the same computation through a (codegen-planned) projection
-    val viaPlan = spark.range(1).select(
+    val df = spark.range(1).select(
       Bm25Native.contribsCol(typedlit(Seq("a", "a", "c")),
         typedlit(Seq(2.0, 1.0)), lit(5L), lit(3.0), terms, 1.2, 0.75).as("c"))
-      .head().getSeq[Double](0).toArray
+    val interp = df.queryExecution.analyzed.expressions.head.children.head.eval(null)
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray()
+    // the same computation through a (codegen-planned) projection
+    val viaPlan = df.head().getSeq[Double](0).toArray
     assert(interp.toSeq == viaPlan.toSeq)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** The native [[DotProductExpr]] must be BIT-IDENTICAL to the
+/** The native [[VectorFunctions.Dot]] kernel must be BIT-IDENTICAL to the
   * `aggregate(zip_with(...))` higher-order formulation it replaced —
   * every similarity oracle (round(cosine, 4) compares against DuckDB)
   * rides on that equivalence.

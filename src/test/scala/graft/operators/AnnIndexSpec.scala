@@ -216,15 +216,34 @@ class AnnIndexSpec extends AnyFunSuite {
       triples(Similarity.cosineTopKJoin(queries, "id", "vec", df, "id", "vec", k = 10)))
   }
 
-  test("BQ searchJoin raises naming the missing batch kernel") {
-    val df = corpus(50)
+  test("BQ searchJoin at full pool ≡ cosineTopKJoin") {
+    val df = corpus()
     val path = tmp()
     AnnIndex.build(df, "id", "vec", path, AnnIndex.Bq(Bq.fit(df, "id", "vec")))
-    val e = intercept[IllegalArgumentException] {
-      AnnIndex.searchJoin(spark, path, df.filter($"id" < 2), "id", "vec",
-        df, "id", "vec", k = 3)
-    }
-    assert(e.getMessage.contains("batch Hamming kernel"), e.getMessage)
+    val queries = df.filter($"id" < 5)
+    def triples(d: org.apache.spark.sql.DataFrame) = d
+      .orderBy($"q_id", $"cos_sim".desc, $"n_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(triples(AnnIndex.searchJoin(spark, path, queries, "id", "vec",
+        df, "id", "vec", k = 10, pool = 1000)) ==
+      triples(Similarity.cosineTopKJoin(queries, "id", "vec", df, "id", "vec", k = 10)))
+  }
+
+  test("BQ searchJoin at a pruned pool: each query's rows ≡ search for that query") {
+    val df = corpus()
+    val path = tmp()
+    AnnIndex.build(df, "id", "vec", path, AnnIndex.Bq(Bq.fit(df, "id", "vec")))
+    val queries = df.filter($"id" < 5).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val joined = AnnIndex.searchJoin(spark, path, df.filter($"id" < 5), "id", "vec",
+        df, "id", "vec", k = 5, pool = 20)
+      .collect().groupBy(_.getLong(0))
+      .map { case (q, ns) => q -> ns.map(r => (r.getLong(1), r.getDouble(2)))
+        .sortBy { case (id, cos) => (-cos, id) }.toSeq }
+    assert(joined.keySet == queries.map(_._1).toSet)
+    for ((q, v) <- queries)
+      assert(joined(q) == rows(AnnIndex.search(spark, path, df, "id", "vec", v, 5, pool = 20)),
+        s"query $q")
   }
 
   test("a directory without a model sidecar is not an index: raises naming it") {

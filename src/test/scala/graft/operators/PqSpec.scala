@@ -122,9 +122,8 @@ class PqSpec extends AnyFunSuite {
     val wide = Pq.fit(corpus(20, 9L), "id", "vec", nsub = 8, k = 8, maxIter = 2)
     val wideCodes = encode(df, wide).select($"id", $"_code")
     val e2 = intercept[Exception] {
-      import org.apache.spark.sql.graftbridge.ColumnBridge.{column => ncol, expression => ex}
-      wideCodes.select(ncol(graft.functions.PqAdcExpr(
-        ex($"_code"), new Array[Double](4 * 8), 4, 8))).collect()
+      wideCodes.select(graft.functions.PqFunctions.pqAdc(
+        $"_code", new Array[Double](4 * 8), 4, 8)).collect()
     }
     assert(messages(e2).exists(_.contains("different PQ model")))
   }

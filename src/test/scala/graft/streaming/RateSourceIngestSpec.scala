@@ -44,9 +44,15 @@ class RateSourceIngestSpec extends AnyFunSuite {
     try spark.read.parquet(lakeDir).select("doc_id").as[Long].collect().toSeq.sorted
     catch { case _: Exception => Seq.empty } // lake not created yet / torn listing
 
+  /** The checkpoint's offsets/ and commits/ listings. */
+  private def ckptListing(ckpt: String): String = Seq("offsets", "commits").map { d =>
+    s"$d/: " + Option(new java.io.File(ckpt, d).list()).fold("none")(_.sorted.mkString(" "))
+  }.mkString("; ")
+
   /** Waits until the lake holds `n` doc_ids; fails at the deadline, or
-    * as soon as the stream stops, with what the lake and stream show. */
-  private def awaitLakeAtLeast(q: StreamingQuery, lakeDir: String, n: Int,
+    * as soon as the stream stops, with what the lake, the stream and its
+    * checkpoint show. */
+  private def awaitLakeAtLeast(q: StreamingQuery, lakeDir: String, ckpt: String, n: Int,
       timeoutMs: Long): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
     var seen = lakeIds(lakeDir).size
@@ -54,7 +60,8 @@ class RateSourceIngestSpec extends AnyFunSuite {
       if (System.currentTimeMillis() >= deadline || !q.isActive)
         fail(s"lake holds $seen doc_ids, wanted $n, after ${timeoutMs / 1000} s " +
           s"(stream active: ${q.isActive}); exception: " +
-          q.exception.fold("none")(_.toString) + s"; lastProgress: ${q.lastProgress}")
+          q.exception.fold("none")(_.toString) + s"; lastProgress: ${q.lastProgress}; " +
+          ckptListing(ckpt))
       Thread.sleep(200)
       seen = lakeIds(lakeDir).size
     }
@@ -78,7 +85,7 @@ class RateSourceIngestSpec extends AnyFunSuite {
         .getOrElse(Array.empty)
         .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
     try {
-      awaitLakeAtLeast(q1, lakeDir, 6, timeoutMs = 120000L)
+      awaitLakeAtLeast(q1, lakeDir, ckpt, 6, timeoutMs = 120000L)
       val deadline = System.currentTimeMillis() + 120000L
       while (commitMarkers().length < 2 && System.currentTimeMillis() < deadline)
         Thread.sleep(100L)
@@ -93,9 +100,14 @@ class RateSourceIngestSpec extends AnyFunSuite {
     val commits = commitMarkers()
     assert(commits.length >= 2, "need at least two committed batches")
     assert(commits.last.delete())
+    // with its checksum sibling, as a lost commit has none: a stale
+    // `.N.crc` fails the replayed batch's commit (the checksum rename
+    // finds its target), which Spark reports as "Multiple streaming
+    // queries are concurrently using …/commits"
+    new java.io.File(commits.last.getParentFile, s".${commits.last.getName}.crc").delete()
 
     val q2 = CorpusIngest.ingestStream(docs(6), lakeDir, ckpt, failReason = gate)
-    try awaitLakeAtLeast(q2, lakeDir, afterPhase1.size + 3, timeoutMs = 120000L)
+    try awaitLakeAtLeast(q2, lakeDir, ckpt, afterPhase1.size + 3, timeoutMs = 120000L)
     finally q2.stop()
     val finalIds = lakeIds(lakeDir)
 
