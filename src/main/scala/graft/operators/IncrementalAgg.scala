@@ -78,15 +78,15 @@ object IncrementalAgg {
     * the sketch is ~2–4 KB per group in state.
     */
   final case class ApproxDistinct(column: String, as: String) extends Metric
-  /** Approximate q-quantile via a KLL sketch
+  /** Approximate q-quantile via Spark's KLL sketch at k=200
     * ([[graft.functions.KllFunctions]]) — the OTHER non-algebraic
     * metric worth sketch state: exact percentiles cannot merge across
     * batches, KLL sketches union within a guaranteed rank error
-    * (~1.65% at the default k=200). Unlike HLL, KLL compaction is
-    * randomized, so incremental and one-shot estimates agree within
-    * the rank bound, not bit-exactly — the metric is documented
-    * approximate and spec'd by rank tolerance. State is ~2–5 KB per
-    * group. q ∈ [0, 1]; the estimate is null for all-null groups.
+    * (~1.65%). KLL compaction is randomized, so past k values in a
+    * group incremental and one-shot estimates agree within the rank
+    * bound, not bit-exactly (spec'd by rank tolerance); below k they
+    * are exact. State is ~2–5 KB per group. q ∈ [0, 1]; the estimate
+    * is null for all-null groups.
     */
   final case class ApproxQuantile(column: String, q: Double, as: String)
       extends Metric
@@ -451,7 +451,7 @@ object IncrementalAgg {
         case Avg(c, _) => Seq(sum(col(c)).as(p(i)), count(col(c)).as(p(i) + "n"))
         case ApproxDistinct(c, _) => Seq(hll_sketch_agg(col(c)).as(p(i)))
         case ApproxQuantile(c, _, _) => Seq(
-          graft.functions.KllFunctions.kllAgg(col(c).cast("double")).as(p(i)))
+          kll_sketch_agg_double(col(c).cast("double")).as(p(i)))
         case FrequentItems(c, _, _) => Seq(
           graft.functions.FreqFunctions.freqAgg(col(c).cast("string")).as(p(i)))
       }
@@ -470,8 +470,7 @@ object IncrementalAgg {
         case Max(_, _) => Seq(re(p(i), max))
         case Avg(_, _) => Seq(re(p(i), sum), re(p(i) + "n", sum))
         case ApproxDistinct(_, _) => Seq(re(p(i), hll_union_agg(_)))
-        case ApproxQuantile(_, _, _) => Seq(
-          re(p(i), graft.functions.KllFunctions.kllMerge(_)))
+        case ApproxQuantile(_, _, _) => Seq(re(p(i), kll_merge_agg_double(_)))
         case FrequentItems(_, _, _) => Seq(
           re(p(i), graft.functions.FreqFunctions.freqMerge(_)))
       }
@@ -509,7 +508,7 @@ object IncrementalAgg {
     case Avg(c, a) => avg(col(c)).as(a)
     case ApproxDistinct(c, a) => hll_sketch_estimate(hll_sketch_agg(col(c))).as(a)
     case ApproxQuantile(c, q, a) => graft.functions.KllFunctions
-      .kllQuantile(graft.functions.KllFunctions.kllAgg(col(c).cast("double")), q).as(a)
+      .kllQuantile(kll_sketch_agg_double(col(c).cast("double")), q).as(a)
     case FrequentItems(c, limit, a) => graft.functions.FreqFunctions
       .freqTopItems(graft.functions.FreqFunctions.freqAgg(col(c).cast("string")),
         limit).as(a)

@@ -39,35 +39,19 @@ object Overlap {
     */
   def corpusOverlap(a: DataFrame, aKey: Column, b: DataFrame, bKey: Column,
       nominal: Int = DefaultNominal): DataFrame = {
-    val sa = a.agg(thetaAgg(aKey.cast("string"), nominal).as("_sa"))
-    val sb = b.agg(thetaAgg(bKey.cast("string"), nominal).as("_sb"))
+    val sa = a.agg(thetaAgg(aKey, nominal).as("_sa"))
+    val sb = b.agg(thetaAgg(bKey, nominal).as("_sb"))
+    val (x, y) = (col("_sa"), col("_sb"))
+    def n(sketch: Column): Column = thetaEstimate(sketch).cast("bigint")
     // two 1-row frames; the join is a broadcast nested loop of 1×1
     sa.crossJoin(sb)
       .select(
-        thetaEstimate(col("_sa")).as("_ea"),
-        thetaEstimate(col("_sb")).as("_eb"),
-        thetaEstimate(thetaIntersect(col("_sa"), col("_sb"))).as("_ei"),
-        thetaEstimate(thetaUnionPair(col("_sa"), col("_sb"))).as("_eu"),
-        thetaEstimate(thetaAnotB(col("_sa"), col("_sb"))).as("_eab"),
-        thetaEstimate(thetaAnotB(col("_sb"), col("_sa"))).as("_eba"))
-      .select(
-        round(col("_ea")).cast("bigint").as("n_a"),
-        round(col("_eb")).cast("bigint").as("n_b"),
-        round(col("_ei")).cast("bigint").as("n_intersect"),
-        round(col("_eu")).cast("bigint").as("n_union"),
-        round(col("_eab")).cast("bigint").as("n_a_only"),
-        round(col("_eba")).cast("bigint").as("n_b_only"))
+        n(x).as("n_a"), n(y).as("n_b"),
+        n(theta_intersection(x, y)).as("n_intersect"), n(thetaUnionScalar(x, y)).as("n_union"),
+        n(theta_difference(x, y)).as("n_a_only"), n(theta_difference(y, x)).as("n_b_only"))
       .withColumn("jaccard",
         when(col("n_union") > 0,
           col("n_intersect").cast("double") / col("n_union").cast("double"))
           .otherwise(lit(0.0)))
   }
-
-  /** Pairwise union as a scalar (sketch, sketch) → sketch: feed both
-    * through a 2-row union aggregate-free path by intersect-free
-    * algebra — |A∪B| delegated to the union aggregate would need a
-    * UNION of the two 1-row frames; a scalar keeps the plan flat.
-    */
-  private def thetaUnionPair(a: Column, b: Column): Column =
-    graft.functions.ThetaFunctions.thetaUnionScalar(a, b)
 }

@@ -50,7 +50,7 @@ class RetryIdempotenceSpec extends AnyFunSuite {
         if (poison) df.withColumn("v", trip("agg-retry")(col("v")))
         else df
       src.groupBy("g").agg(
-        KllFunctions.kllQuantile(KllFunctions.kllAgg(col("v").cast("double")), 0.5)
+        KllFunctions.kllQuantile(kll_sketch_agg_double(col("v").cast("double")), 0.5)
           .as("p50"),
         FreqFunctions.freqTopItems(FreqFunctions.freqAgg(col("s")), 3)
           .cast("string").as("top_items"),

@@ -26,7 +26,7 @@ class KllFunctionsSpec extends AnyFunSuite {
     val values = Array.fill(20000)(math.exp(rnd.nextGaussian() * 1.5))
     val sorted = values.sorted
     val df = values.toSeq.toDF("v")
-    val sk = df.agg(KllFunctions.kllAgg($"v").as("s"))
+    val sk = df.agg(kll_sketch_agg_double($"v").as("s"))
     for (q <- Seq(0.1, 0.5, 0.95, 0.99)) {
       val est = sk.select(KllFunctions.kllQuantile($"s", q)).head().getDouble(0)
       val r = rankOf(sorted, est)
@@ -42,8 +42,8 @@ class KllFunctionsSpec extends AnyFunSuite {
       .toSeq.toDF("b", "v")
     // sketch each of 7 batches separately, then union the sketches —
     // the IncrementalAgg shape
-    val merged = df.groupBy("b").agg(KllFunctions.kllAgg($"v").as("s"))
-      .agg(KllFunctions.kllMerge($"s").as("m"))
+    val merged = df.groupBy("b").agg(kll_sketch_agg_double($"v").as("s"))
+      .agg(kll_merge_agg_double($"s").as("m"))
     for (q <- Seq(0.25, 0.5, 0.9)) {
       val est = merged.select(KllFunctions.kllQuantile($"m", q)).head().getDouble(0)
       assert(math.abs(rankOf(sorted, est) - q) < 0.05, s"q=$q est=$est")
@@ -52,11 +52,11 @@ class KllFunctionsSpec extends AnyFunSuite {
 
   test("null inputs are ignored; empty / all-null sketches yield null quantile") {
     val df = Seq(Some(1.0), None, Some(3.0), None, Some(2.0)).toDF("v")
-    val est = df.agg(KllFunctions.kllAgg($"v").as("s"))
+    val est = df.agg(kll_sketch_agg_double($"v").as("s"))
       .select(KllFunctions.kllQuantile($"s", 0.5)).head().getDouble(0)
     assert(est == 2.0) // exact at n=3 (sketch stores all values)
     val empty = df.filter($"v".isNull)
-      .agg(KllFunctions.kllAgg($"v").as("s"))
+      .agg(kll_sketch_agg_double($"v").as("s"))
       .select(KllFunctions.kllQuantile($"s", 0.5)).head()
     assert(empty.isNullAt(0))
   }
@@ -64,24 +64,21 @@ class KllFunctionsSpec extends AnyFunSuite {
   test("type and parameter guards raise") {
     val df = Seq(("a", 1.0)).toDF("s", "v")
     assertThrows[Exception] {
-      df.agg(KllFunctions.kllAgg($"s")).collect() // string column
+      df.agg(kll_sketch_agg_double($"s")).collect() // string column
     }
-    // q validated by the driver-side Column builder, never in an
-    // expression constructor: a constructor require would also fire
-    // inside executor-side Java deserialization (the KllAggBase
-    // failure mode for k)
+    // q validated by the driver-side Column builder, before any job
     assertThrows[Exception] { // IllegalArgumentException: q out of range
       Seq(Array[Byte]()).toDF("s")
         .select(KllFunctions.kllQuantile($"s", 1.5)).collect()
     }
-    assertThrows[Exception] { // AnalysisException: k below MinK
-      df.agg(KllFunctions.kllAgg($"v", k = 2)).collect()
+    assertThrows[Exception] { // AnalysisException: k below 8
+      df.agg(kll_sketch_agg_double($"v", 2)).collect()
     }
   }
 
   test("the aggregate combines map-side: one partial per partition crosses the shuffle") {
     val df = spark.range(0, 100000, 1, 8).selectExpr("cast(id as double) as v")
-    val plan = df.agg(KllFunctions.kllAgg($"v").as("s"))
+    val plan = df.agg(kll_sketch_agg_double($"v").as("s"))
       .queryExecution.executedPlan.toString
     // ObjectHashAggregate partial + final split, like every sketch agg
     assert(plan.contains("ObjectHashAggregate"), plan)

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, typedLit, xxhash64}
+import org.apache.spark.sql.functions.{col, kll_sketch_agg_double, lit, typedLit, xxhash64}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{TestSessions, TestSpark}
@@ -23,11 +23,6 @@ class NativeCallSpec extends AnyFunSuite {
   private def sketch(agg: Column, values: DataFrame): Array[Byte] =
     values.agg(agg).head().getAs[Array[Byte]](0)
 
-  private lazy val thetaA = sketch(ThetaFunctions.thetaAgg($"v"), Seq("a", "b", "c").toDF("v"))
-  private lazy val thetaB = sketch(ThetaFunctions.thetaAgg($"v"), Seq("b", "c", "d", "e").toDF("v"))
-  private lazy val thetaEmpty = sketch(ThetaFunctions.thetaAgg($"v"), Seq.empty[String].toDF("v"))
-  private lazy val kll = sketch(KllFunctions.kllAgg($"v"), (1 to 50).map(_.toDouble).toDF("v"))
-  private lazy val kllEmpty = sketch(KllFunctions.kllAgg($"v"), Seq.empty[Double].toDF("v"))
   private lazy val freq = sketch(FreqFunctions.freqAgg($"v"), Seq("x", "y", "x", "z", "x").toDF("v"))
   private lazy val freqEmpty = sketch(FreqFunctions.freqAgg($"v"), Seq.empty[String].toDF("v"))
 
@@ -41,8 +36,7 @@ class NativeCallSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
     StructField("t", StringType), StructField("b", BinaryType),
-    StructField("th", BinaryType), StructField("th2", BinaryType),
-    StructField("kl", BinaryType), StructField("fq", BinaryType),
+    StructField("fq", BinaryType),
     StructField("h", ArrayType(LongType)), StructField("d", ArrayType(DoubleType)),
     StructField("i", ArrayType(LongType)), StructField("si", ArrayType(IntegerType)),
     StructField("w", ArrayType(StringType)), StructField("pc", BinaryType),
@@ -76,7 +70,7 @@ class NativeCallSpec extends AnyFunSuite {
     val bins = Seq(MediaFixtures.pngGradient(1), MediaFixtures.wavClip(2), pdf,
       "not media at all".getBytes("US-ASCII"))
     val real = texts.indices.map { j =>
-      Row.fromSeq(Seq(texts(j), bins(j), thetaA, thetaB, kll, freq,
+      Row.fromSeq(Seq(texts(j), bins(j), freq,
         Seq(1L, 5L, -3L, j.toLong), Seq(1.0, 2.5, -0.5, j * 0.1), Seq(1L, 0L, 3L, 2L),
         Seq(0, 2, j), texts(j).toLowerCase.split(" ").toSeq,
         Array(j.toByte, (3 - j).toByte), Array((j * 37).toByte), j % 2,
@@ -84,7 +78,7 @@ class NativeCallSpec extends AnyFunSuite {
         vector(Seq(1.0 + j, -2.0, 0.5 * j, 3.0).map(Some(_))))
     }
     Row.fromSeq(Seq.fill(schema.size)(null)) +:
-      Row.fromSeq(Seq("", Array.emptyByteArray, thetaEmpty, thetaEmpty, kllEmpty, freqEmpty,
+      Row.fromSeq(Seq("", Array.emptyByteArray, freqEmpty,
         Seq.empty[Long], Seq.empty[Double], Seq.empty[Long], Seq.empty[Int], Seq.empty[String],
         Array[Byte](0, 1), Array[Byte](5), 0, Seq(0.0, 0.0, 0.0), 1L, 1.0) ++
         vector(Seq(Some(1.0), None, Some(3.0), Some(4.0)))) +: real
@@ -128,7 +122,7 @@ class NativeCallSpec extends AnyFunSuite {
     * the kernels replaced. */
   private def kernels: Seq[(String, Column, String, String)] = {
     val (t, b, h) = (col("t"), col("b"), col("h"))
-    val (th, th2, kl, fq, d, i) = (col("th"), col("th2"), col("kl"), col("fq"), col("d"), col("i"))
+    val (fq, d, i) = (col("fq"), col("d"), col("i"))
     def k(label: String, c: Column, sql: String, str: String) = (label, c, sql, str)
     Seq(
       k("collapse_ws", TextMetrics.collapseWsCol(t), "graft_collapse_ws(t)", "graft_collapse_ws(t)"),
@@ -165,16 +159,6 @@ class NativeCallSpec extends AnyFunSuite {
       k("chunks", ChunkDocs.chunksCol(t, 4, 2), "graft_chunks(t)", "graft_chunks(t, 4, 2)"),
       k("positioned_shingles", SpanScrub.positionedShinglesCol(t, 3),
         "graft_positioned_shingles(t)", "graft_positioned_shingles(t, 3)"),
-      k("theta_intersect", ThetaFunctions.thetaIntersect(th, th2),
-        "graft_theta_intersect(th, th2)", "graft_theta_intersect(th, th2)"),
-      k("theta_union_pair", ThetaFunctions.thetaUnionScalar(th, th2),
-        "graft_theta_union_pair(th, th2)", "graft_theta_union_pair(th, th2)"),
-      k("theta_anotb", ThetaFunctions.thetaAnotB(th, th2),
-        "graft_theta_anotb(th, th2)", "graft_theta_anotb(th, th2)"),
-      k("theta_estimate", ThetaFunctions.thetaEstimate(th),
-        "graft_theta_estimate(th)", "graft_theta_estimate(th)"),
-      k("kll_quantile", KllFunctions.kllQuantile(kl, 0.5),
-        "graft_kll_quantile(kl)", "graft_kll_quantile(kl, 0.5)"),
       k("freq_top", FreqFunctions.freqTopItems(fq, 3), "graft_freq_top(fq)", "graft_freq_top(fq, 3)"),
       k("array_fsum", Bm25Native.sumOrderedCol(d), "graft_array_fsum(d)", "graft_array_fsum(d)"),
       k("array_picksum", Bm25Native.pickSumCol(d, i),
@@ -321,10 +305,9 @@ class NativeCallSpec extends AnyFunSuite {
       assert(interpreted.length == 6, label)
       assert(interpreted.toSeq == generated.toSeq, label)
     }
-    // the documented `kllQuantile(kllAgg(x))`: the aggregate's sketch
-    // is non-nullable
+    // the documented `kllQuantile(kll_sketch_agg_double(x))`
     val q = (1 to 9).map(_.toDouble).toDF("v")
-      .agg(KllFunctions.kllQuantile(KllFunctions.kllAgg($"v"), 0.5))
+      .agg(KllFunctions.kllQuantile(kll_sketch_agg_double($"v"), 0.5))
     assert(withCodegen(on = false)(q.collect()).toSeq == withCodegen(on = true)(q.collect()).toSeq)
   }
 

@@ -19,10 +19,10 @@ class ThetaFunctionsSpec extends AnyFunSuite {
     val r = sa.crossJoin(sb.withColumnRenamed("s", "t")).select(
       thetaEstimate($"s").as("ea"),
       thetaEstimate($"t").as("eb"),
-      thetaEstimate(thetaIntersect($"s", $"t")).as("ei"),
+      thetaEstimate(theta_intersection($"s", $"t")).as("ei"),
       thetaEstimate(thetaUnionScalar($"s", $"t")).as("eu"),
-      thetaEstimate(thetaAnotB($"s", $"t")).as("eab"),
-      thetaEstimate(thetaAnotB($"t", $"s")).as("eba")).head()
+      thetaEstimate(theta_difference($"s", $"t")).as("eab"),
+      thetaEstimate(theta_difference($"t", $"s")).as("eba")).head()
     assert((0 until 6).map(r.getDouble) ==
       Seq(600.0, 600.0, 200.0, 1000.0, 400.0, 400.0))
   }
@@ -56,9 +56,8 @@ class ThetaFunctionsSpec extends AnyFunSuite {
 
   test("scalar union never caps an exact result below its inputs") {
     // two exact 3000-entry sketches (nominal 8192): a union built at
-    // the default nominal 4096 would downsample; unionPair sizes the
-    // union from the inputs' retained entries instead, so the result
-    // stays exact
+    // the default nominal 4096 would downsample; the scalar union is
+    // built at the largest nominal instead, so the result stays exact
     val a = spark.range(0, 3000).select($"id".cast("string").as("v"))
     val b = spark.range(3000, 6000).select($"id".cast("string").as("v"))
     val eu = a.agg(thetaAgg($"v", 8192).as("s"))
@@ -75,16 +74,23 @@ class ThetaFunctionsSpec extends AnyFunSuite {
     val empty = df.filter($"v".isNull && $"v".isNotNull)
       .agg(thetaAgg($"v").as("s"))
       .select(thetaEstimate($"s"),
-        thetaEstimate(thetaIntersect($"s", $"s")),
-        thetaEstimate(thetaAnotB($"s", $"s"))).head()
+        thetaEstimate(theta_intersection($"s", $"s")),
+        thetaEstimate(theta_difference($"s", $"s"))).head()
     assert((0 until 3).map(empty.getDouble) == Seq(0.0, 0.0, 0.0))
+  }
+
+  test("an INT key sketches as its string cast") {
+    val ints = spark.range(0, 500).select($"id".cast("int").as("n"))
+    val si = ints.agg(thetaAgg($"n").as("s"))
+    val ss = ints.agg(thetaAgg($"n".cast("string")).as("t"))
+    val r = si.crossJoin(ss).select(
+      thetaEstimate($"s"), thetaEstimate($"t"),
+      thetaEstimate(theta_intersection($"s", $"t"))).head()
+    assert((0 until 3).map(r.getDouble) == Seq(500.0, 500.0, 500.0))
   }
 
   test("type and parameter guards raise at analysis") {
     val df = Seq((1, Array[Byte]())).toDF("n", "b")
-    assertThrows[Exception] { // INT input needs a cast
-      df.agg(thetaAgg($"n")).collect()
-    }
     assertThrows[Exception] { // nominal not a power of 2
       df.agg(thetaAgg($"n".cast("string"), 1000)).collect()
     }

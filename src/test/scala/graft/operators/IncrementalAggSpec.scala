@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -645,5 +645,34 @@ class IncrementalAggSpec extends AnyFunSuite {
     append(state, corpus.filter($"n" > 4), "b1")
     val r = result(spark, state).head()
     assert(r.getLong(0) == 8L && r.getLong(1) == 36L)
+  }
+
+  test("a KLL state written by the hand-written aggregates stays readable and foldable") {
+    // src/test/resources/graft/operators/incr_kll_state: fit "b0" =
+    // kllRows(0, 120), append "b1" = kllRows(120, 180), written by the
+    // graft-owned KLL aggregate that Spark's kll_*_double built-ins
+    // replaced; below k=200 values per group a KLL sketch keeps every
+    // value, so the quantiles are exact and must read back unchanged
+    def kllRows(from: Int, until: Int) = (from until until).map { i =>
+      val g = Seq("a", "b", "c")(i % 3)
+      (g, if (g == "c") None else Some(((i * 37) % 101) + 0.5), s"u${i % 17}")
+    }.toDF("g", "latency", "user")
+    import java.nio.file.{Files, Paths}
+    val fixture = Paths.get(
+      getClass.getResource("/graft/operators/incr_kll_state/_meta.json").toURI).getParent
+    val state = Paths.get(tmp(), "state")
+    Files.walk(fixture).forEach { f =>
+      val to = state.resolve(fixture.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+    }
+    // the values the hand-written aggregates' result() gave on this state
+    assert(result(spark, state.toString).orderBy("g").collect().toSeq == Seq(
+      Row("a", 49.5, 97.5, 17L), Row("b", 47.5, 94.5, 17L), Row("c", null, null, 17L)))
+    append(state.toString, kllRows(180, 210), "b2")
+    compact(spark, state.toString)
+    val oneShot = tmp()
+    fit(kllRows(0, 210), Seq("g"), Seq(ApproxQuantile("latency", 0.5, "p50"),
+      ApproxQuantile("latency", 0.95, "p95"), ApproxDistinct("user", "users")), oneShot)
+    assertSame(result(spark, state.toString), result(spark, oneShot))
   }
 }
