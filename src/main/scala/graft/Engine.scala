@@ -32,8 +32,8 @@ object Engine {
     *
     * The exact total (reference parity, duckdb_engine.py:45) is an
     * `Observation` on the ordered take when that is a
-    * `TakeOrderedAndProject` reading every row: 2 jobs on parquet and
-    * json, 3 on csv. Else it is a `count()`, 2 more jobs: no `orderBy`
+    * `TakeOrderedAndProject` reading every row: 1 job on parquet (its
+    * schema is one footer read on the driver), 2 on json, 3 on csv. Else it is a `count()`, 2 more jobs: no `orderBy`
     * (the take stops early), `limit <= 0` (no scan), a sort past
     * `spark.sql.execution.topKSortFallbackThreshold` (its sampling job
     * counts rows twice), or no metric in time. `approxTotal = true`

@@ -31,7 +31,7 @@ object Tables {
       if (it.hasNext) { it.next(); it.remove() }
     }
     cache.computeIfAbsent((spark, s"$sfDir/$name.parquet"), { case (sp, path) =>
-      val df = sp.read.parquet(path)
+      val df = graft.sources.Readers.parquet(sp, path)
       // events.ts is parquet TIMESTAMP(NANOS) → read as int64 nanos (see
       // Sessions), restored here to a microsecond timestamp.
       df.schema.fields.find(f => f.name == "ts" && f.dataType.typeName == "long") match {

@@ -89,7 +89,7 @@ object Dedup {
         .map(base => s"$base/stage_${java.util.UUID.randomUUID()}")) match {
       case Some(dir) =>
         d.write.mode("overwrite").parquet(dir)
-        d.sparkSession.read.parquet(dir)
+        graft.sources.Readers.parquet(d.sparkSession, dir)
       case None =>
         val p = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         if (eager) p.count()
@@ -109,7 +109,7 @@ object Dedup {
         .map(base => s"$base/stage_${java.util.UUID.randomUUID()}")) match {
       case Some(dir) =>
         d.write.mode("overwrite").parquet(dir)
-        val back = d.sparkSession.read.parquet(dir)
+        val back = graft.sources.Readers.parquet(d.sparkSession, dir)
         (back, back.count()) // parquet: metadata-only footer count
       case None =>
         val p = d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -138,7 +138,7 @@ object Dedup {
         graft.LocalFs.tempDir(s"graft_$name"), "stage").toString
       staged.write.mode("overwrite").parquet(dir)
       staged.unpersist(false)
-      spark.read.parquet(dir)
+      graft.sources.Readers.parquet(spark, dir)
     } else {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"$name: table exceeds its broadcast cap and no stage dir is " +

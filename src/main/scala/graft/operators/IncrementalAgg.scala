@@ -257,7 +257,7 @@ object IncrementalAgg {
     */
   def syncFromLake(spark: SparkSession, statePath: String,
       lakePath: String): Seq[String] = {
-    readMeta(spark, statePath) // state must be fitted (type contract)
+    val (stateFs, _) = readMeta(spark, statePath) // state must be fitted (type contract)
     val lakeRoot = new Path(lakePath)
     val fs = lakeRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs = fs.listStatus(lakeRoot)
@@ -293,11 +293,14 @@ object IncrementalAgg {
           s"incrementalAgg: lake partitions ${ps.map(_._1.getPath.getName).mkString(", ")} " +
             s"collide to batch id '$id' — rename the partitions")
       }
-    withIds.flatMap { case (st, id) =>
-      val batch = spark.read.option("basePath", lakePath)
-        .parquet(st.getPath.toString)
-      if (appendCommitted(statePath, batch, id)) Some(id) else None
-    }
+    // a committed partition is skipped before its frame is built:
+    // building one reads a footer of the partition
+    withIds.filterNot { case (_, id) => isCommitted(stateFs, statePath, id) }
+      .flatMap { case (st, id) =>
+        val batch = graft.sources.Readers.parquet(
+          spark, Map("basePath" -> lakePath), st.getPath.toString)
+        if (appendCommitted(statePath, batch, id)) Some(id) else None
+      }
   }
 
   /** Retract one batch's contribution in O(1): delete its partial
@@ -620,8 +623,8 @@ object IncrementalAgg {
   private def readBatchDirs(spark: SparkSession, statePath: String,
       lay: Generations.Layout, genDirs: Seq[Path], tailDirs: Seq[Path]): DataFrame = {
     def read(base: Path, dirs: Seq[Path]) =
-      spark.read.option("basePath", base.toString)
-        .parquet(dirs.map(_.toString): _*).drop("batch")
+      graft.sources.Readers.parquet(spark, Map("basePath" -> base.toString),
+        dirs.map(_.toString): _*).drop("batch")
     Seq(
       if (genDirs.nonEmpty) Some(read(lay.dataDir, genDirs)) else None,
       if (tailDirs.nonEmpty) Some(read(new Path(statePath), tailDirs)) else None)

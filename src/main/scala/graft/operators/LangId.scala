@@ -341,7 +341,7 @@ object LangId {
   }
 
   def load(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val rows = spark.read.parquet(path).orderBy("lang").collect()
+    val rows = graft.sources.Readers.parquet(spark, path).orderBy("lang").collect()
     require(rows.nonEmpty, s"langId: no model rows under $path")
     val h = rows.head
     Model(

@@ -330,7 +330,7 @@ object UnigramLm {
   }
 
   def load(spark: SparkSession, path: String): Model = {
-    val rows = spark.read.parquet(path).collect()
+    val rows = graft.sources.Readers.parquet(spark, path).collect()
     val unk = rows.find(_.getAs[Boolean]("is_unk"))
       .map(_.getAs[Double]("logp"))
       .getOrElse(throw new IllegalArgumentException(

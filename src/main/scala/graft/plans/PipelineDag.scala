@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Quality, TransformStep}
+import graft.sources.Readers
 
 /** DAG pipeline executor, re-expressed from the reference's
   * `PipelineExecutor` (executor/engine.py:21-353).
@@ -195,9 +196,9 @@ object PipelineDag {
       fs.exists(new Path(stagePath(id) + "/_SUCCESS"))
     def writeStage(id: String, df: DataFrame): DataFrame = {
       df.write.mode("overwrite").parquet(stagePath(id))
-      df.sparkSession.read.parquet(stagePath(id))
+      Readers.parquet(df.sparkSession, stagePath(id))
     }
-    def readStage(id: String): DataFrame = spark.read.parquet(stagePath(id))
+    def readStage(id: String): DataFrame = Readers.parquet(spark, stagePath(id))
   }
 
   private def executeCore(

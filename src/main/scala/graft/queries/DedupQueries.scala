@@ -639,7 +639,7 @@ object DedupQueries {
         .write.mode("overwrite").parquet(lakeDir)
       graft.operators.IncrementalDedup.dropExisting(
           batch = docs.filter(col("doc_id") % 10 === 7),
-          corpus = s.read.parquet(lakeDir),
+          corpus = graft.sources.Readers.parquet(s, lakeDir),
           key = fp,
           corpusKey = Some(col(graft.streaming.CorpusIngest.FingerprintCol)))
         .select("doc_id").orderBy("doc_id")

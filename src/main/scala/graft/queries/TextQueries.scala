@@ -34,7 +34,7 @@ object TextQueries {
       graft.sources.Writers.write(
         t(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_quantity"),
         out, "parquet")
-      s.read.parquet(out).orderBy("l_orderkey", "l_linenumber")
+      graft.sources.Readers.parquet(s, out).orderBy("l_orderkey", "l_linenumber")
     }),
 
     // infer_schema: the schema itself as a result set.

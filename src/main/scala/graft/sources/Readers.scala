@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** File-format readers — the reference's `_read_function`
@@ -10,9 +10,15 @@ import org.apache.spark.sql.types.StructType
   * reference either shells out to DuckDB st_read or silently
   * misparses xml as csv.
   *
-  * Scale defaults: schema inference is opt-in (at 100 TB an inference
-  * pass is a full extra scan — callers pass a schema); csv/json are
-  * splittable here because multiLine stays off.
+  * Schema inference runs whenever the caller passes no schema, and its
+  * cost depends on the format:
+  *  - parquet and orc: one footer, read on the driver (for parquet by
+  *    [[FooterParquet]]; Spark's orc source does so itself), so no
+  *    Spark job; `mergeSchema` reads every footer in one job;
+  *  - csv/txt and json: a Spark job that scans the input (at 100 TB a
+  *    full extra scan, so large callers pass a schema);
+  *  - xlsx/xls: parsed on the driver, the inference is the read.
+  * csv/json are splittable here because multiLine stays off.
   */
 object Readers {
 
@@ -38,8 +44,12 @@ object Readers {
       case "json" =>
         val r = spark.read.options(options)
         schema.fold(r)(r.schema).json(path)
-      case "parquet" => spark.read.options(options).parquet(path)
-      case "orc" => spark.read.options(options).orc(path)
+      case "parquet" =>
+        val r = parquetReader(spark).options(options)
+        schema.fold(r)(r.schema).load(path)
+      case "orc" =>
+        val r = spark.read.options(options)
+        schema.fold(r)(r.schema).orc(path)
       case "xlsx" =>
         // the reference reads Excel via DuckDB's spatial st_read
         // (duckdb_engine.py:258); here a JDK-only zip+StAX reader
@@ -89,6 +99,20 @@ object Readers {
     }
     base
   }
+
+  /** Every graft parquet read: Spark's parquet source, with the schema
+    * taken from one footer on the driver instead of an inference job
+    * ([[FooterParquet]]). `options` are Spark's parquet read options
+    * (`basePath`, `mergeSchema`, ...).
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    parquet(spark, Map.empty[String, String], paths: _*)
+
+  def parquet(spark: SparkSession, options: Map[String, String], paths: String*): DataFrame =
+    parquetReader(spark).options(options).load(paths: _*)
+
+  private def parquetReader(spark: SparkSession): DataFrameReader =
+    spark.read.format(classOf[FooterParquet].getName)
 
   /** infer_schema (duckdb_engine.py:66-86): name/type/nullable rows. */
   def inferSchema(spark: SparkSession, path: String, format: String): Seq[(String, String, Boolean)] =

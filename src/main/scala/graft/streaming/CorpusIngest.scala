@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.TextFunctions
 import graft.operators.IncrementalDedup
+import graft.sources.Readers
 
 /** Streaming corpus ingestion — the full training-data intake loop as
   * one reusable operator: each microbatch of raw documents is
@@ -70,7 +71,7 @@ object CorpusIngest {
   val TailDirName = "_tail"
 
   /** Read the lake's live layout. A never-compacted lake is a plain
-    * parquet directory (`spark.read.parquet` works identically); once
+    * parquet directory (a plain parquet read works identically); once
     * [[compactLake]] has installed a generation, the data lives in a
     * manifest-named `_gen-NNNNN-<suffix>/` directory plus
     * referenced-in-place files ([[Generations]]), so the lake MUST be
@@ -82,12 +83,12 @@ object CorpusIngest {
     val (fs, lakePath) = fileSystem(spark, lakeDir)
     val lay = Generations.resolve(fs, lakePath)
     lay.gen match {
-      case None => spark.read.parquet(lakeDir)
+      case None => Readers.parquet(spark, lakeDir)
       case Some(_) =>
         val roots = lay.dataDir.toString +:
           (lay.keep ++ liveTail(fs, lakePath, lay).map(_.getPath))
             .map(_.toString)
-        spark.read.parquet(roots: _*)
+        Readers.parquet(spark, roots: _*)
     }
   }
 

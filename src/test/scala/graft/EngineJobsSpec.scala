@@ -1,14 +1,18 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.TextFunctions
+import graft.operators.IncrementalAgg
 import graft.operators.TransformStep._
 import graft.sources.{Readers, Writers}
+import graft.streaming.CorpusIngest
 
-/** Spark jobs per [[Engine]] call on multi-file inputs, and the exactness
-  * of `previewFile`'s total wherever it comes from: the preview's own
-  * observed scan, or the `count()` it falls back to.
+/** Spark jobs per [[Engine]] call on multi-file inputs and per ingest
+  * step, and the exactness of `previewFile`'s total wherever it comes
+  * from: the preview's own observed scan, or the `count()` it falls back
+  * to.
   */
 class EngineJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -28,17 +32,8 @@ class EngineJobsSpec extends AnyFunSuite {
   }
 
   /** Jobs scheduled while `f` runs. */
-  private def jobs[A](f: => A): (Int, A) = {
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain.drain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try { val out = f; org.apache.spark.ListenerBusDrain.drain(sc); (n.get, out) }
-    finally sc.removeSparkListener(listener)
-  }
+  private def jobs[A](f: => A): (Int, A) =
+    org.apache.spark.ListenerBusDrain.jobsDuring(spark.sparkContext)(f)
 
   private def withConf[A](key: String, value: String)(f: => A): A = {
     val old = spark.conf.getOption(key)
@@ -51,22 +46,49 @@ class EngineJobsSpec extends AnyFunSuite {
     val (quality, q) = jobs(Engine.dataQualityScore(spark, csv, "csv"))
     assert(q.totalRows == 300L && q.columnCount == 3)
     assert(quality <= 5, s"dataQualityScore: $quality jobs")
-    for ((format, budget) <- Seq("parquet" -> 2, "json" -> 2, "csv" -> 3)) {
+    // parquet: the schema comes from one footer read on the driver
+    for ((format, budget) <- Seq("parquet" -> 1, "json" -> 2, "csv" -> 3)) {
       val (n, p) = jobs(Engine.previewFile(spark, inputs(format), format, 10, Seq("id")))
       assert(p.totalCount == 300L && p.rows.size == 10)
-      assert(n <= budget, s"previewFile $format: $n jobs")
+      assert(n == budget, s"previewFile $format: $n jobs")
     }
     // the other calls, pinned at their current counts
     val parquet = inputs("parquet")
     assert(jobs(Engine.inferSchema(spark, csv, "csv"))._1 == 2)
-    assert(jobs(Engine.inferSchema(spark, parquet, "parquet"))._1 == 1)
+    assert(jobs(Engine.inferSchema(spark, parquet, "parquet"))._1 == 0)
     assert(jobs(Engine.executeSql(spark, "SELECT tag, count(*) AS n FROM {{t}} GROUP BY tag",
-      Map("t" -> (parquet, "parquet"))).collect())._1 == 3)
+      Map("t" -> (parquet, "parquet"))).collect())._1 == 2)
     assert(jobs(Engine.applyTransforms(spark, parquet, "parquet",
       Seq(FilterRows("v > 10"), AddDerivedColumn("w", "v * 2")))
-      .orderBy("id").limit(20).collect())._1 == 2)
+      .orderBy("id").limit(20).collect())._1 == 1)
     assert(jobs(Engine.exportToFile(spark, csv, "csv", Seq(FilterRows("v > 10")),
       dir.resolve("export.csv").toString, "csv"))._1 == 3)
+  }
+
+  test("ingest pins: readLake and IncrementalAgg.result frames in 0 jobs, " +
+      "ingestBatch on a stamped lake in 7") {
+    val gate = (c: org.apache.spark.sql.Column) =>
+      TextFunctions.gopherFailReason(c, minTokens = 3, maxDupWordRatio = 1.0)
+    val docs = (1 to 60).map(i => (i.toLong, s"w${i % 45} alpha beta gamma ${i % 45}", s"s${i % 4}"))
+      .toDF("doc_id", "text", "source")
+    val lake = dir.resolve("lake").toString
+    CorpusIngest.ingestBatch(docs.filter(col("doc_id") <= 30), 0L, lake,
+      failReason = gate, scope = "pin")
+    assert(CorpusIngest.readLake(spark, lake).columns.contains(CorpusIngest.FingerprintCol))
+    val (ingest, _) = jobs(CorpusIngest.ingestBatch(docs.filter(col("doc_id") > 30), 1L, lake,
+      failReason = gate, scope = "pin"))
+    assert(ingest == 7, s"ingestBatch: $ingest jobs")
+    val (read, lakeDf) = jobs(CorpusIngest.readLake(spark, lake))
+    assert(read == 0 && lakeDf.count() == 45L)
+    val state = dir.resolve("agg").toString
+    val metrics = Seq(IncrementalAgg.Count("docs"), IncrementalAgg.Max("doc_id", "top"))
+    IncrementalAgg.fit(docs.filter(col("doc_id") <= 30), Seq("source"), metrics, state, "b0")
+    IncrementalAgg.append(state, docs.filter(col("doc_id") > 30), "b1")
+    IncrementalAgg.compact(spark, state, "c1")
+    IncrementalAgg.append(state, docs.filter(col("doc_id") > 50), "b2")
+    val (result, agg) = jobs(IncrementalAgg.result(spark, state))
+    assert(result == 0, s"IncrementalAgg.result: $result jobs")
+    assert(agg.count() == 4L)
   }
 
   test("previewFile's total equals df.count() on every route") {

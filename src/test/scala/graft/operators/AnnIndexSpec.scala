@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -40,18 +39,8 @@ class AnnIndexSpec extends AnyFunSuite {
     "bq" -> AnnIndex.Bq(Bq.fit(df, "id", "vec")))
 
   /** Jobs scheduled while `f` runs. */
-  private def jobs(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain.drain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try { f; org.apache.spark.ListenerBusDrain.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
-  }
+  private def jobs(f: => Unit): Int =
+    org.apache.spark.ListenerBusDrain.jobsDuring(spark.sparkContext)(f)._1
 
   test("job counts: build, append and search per codec on Flat and on Ivf") {
     val df = corpus()

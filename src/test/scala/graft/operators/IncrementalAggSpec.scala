@@ -280,13 +280,23 @@ class IncrementalAggSpec extends AnyFunSuite {
     // via basePath), then sync commits every lake partition
     fit(spark.read.option("basePath", lake).parquet(s"$lake/day=d0").limit(0),
       Seq("day"), ms, state, "bootstrap")
-    val first = syncFromLake(spark, state, lake)
+    // the lake is read through a scheme that counts the files it opens
+    graft.OpenCountingFs.install(spark.sparkContext.hadoopConfiguration)
+    val counted = s"${graft.OpenCountingFs.Scheme}://$lake"
+    val first = syncFromLake(spark, state, counted)
     assert(first == Seq("day-d0", "day-d1"))
     // a new day lands in the lake: sync reads ONLY it
     df.filter($"day" === "d2").write.mode("append").partitionBy("day").parquet(lake)
-    assert(syncFromLake(spark, state, lake) == Seq("day-d2"))
-    // and a third sync is a no-op
-    assert(syncFromLake(spark, state, lake).isEmpty)
+    val opensBefore = graft.OpenCountingFs.readOps
+    assert(syncFromLake(spark, state, counted) == Seq("day-d2"))
+    assert(graft.OpenCountingFs.readOps > opensBefore)
+    // and a third sync is a no-op: no job, no partition file opened
+    val opensBeforeNoOp = graft.OpenCountingFs.readOps
+    val (jobs, third) = org.apache.spark.ListenerBusDrain.jobsDuring(spark.sparkContext)(
+      syncFromLake(spark, state, counted))
+    assert(third.isEmpty)
+    assert(jobs == 0, s"no-op sync: $jobs jobs")
+    assert(graft.OpenCountingFs.readOps == opensBeforeNoOp)
     val got = result(spark, state).orderBy("day").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val want = df.groupBy("day").agg(count(lit(1)), sum("n")).orderBy("day")

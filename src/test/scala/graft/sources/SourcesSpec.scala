@@ -46,6 +46,20 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  test("Readers.read applies a caller's schema to parquet and orc") {
+    val df = Seq((1, "a", 0.5), (2, "b", 1.5)).toDF("id", "tag", "v")
+    val dir = graft.TestDirs.create("graft_rd_schema")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, tag STRING")
+    for (fmt <- Seq("parquet", "orc")) {
+      val p = dir.resolve(fmt).toString
+      Writers.write(df, p, fmt)
+      val back = Readers.read(spark, p, fmt, schema = Some(schema))
+      assert(back.schema == schema, fmt)
+      assert(back.orderBy("id").collect().map(r => (r.getInt(0), r.getString(1))).toSeq ==
+        Seq(1 -> "a", 2 -> "b"), fmt)
+    }
+  }
+
   test("pdf format reads files as (path, length, text) via binaryFile") {
     val dir = graft.TestDirs.create("graft_pdf")
     Files.write(dir.resolve("a.pdf"),
